@@ -118,10 +118,7 @@ object SparkEntry {
     * insertion-order dependence never reaches an oracle (NOTES #17).
     */
   val ObjAggFallbackThreshold: String =
-    sys.env.get("SPARK_GRAFT_OBJ_AGG_FALLBACK")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ > 0).map(_.toString)
-      .getOrElse("65536")
+    EnvKnob.positive("SPARK_GRAFT_OBJ_AGG_FALLBACK", 65536, Int.MaxValue).toString
 
   /** The SPARK_GRAFT_ONLY / --only subset spec — comma-separated names,
     * trailing '*' = prefix match — defined ONCE so the same spec can

@@ -39,9 +39,7 @@ private[graft] object IterCache {
     * probe's ~4 GB frames. Env-overridable for probes.
     */
   private val DefaultMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_ITERCACHE_BYTES")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .getOrElse(4L << 30)
+    graft.EnvKnob.positive("SPARK_GRAFT_ITERCACHE_BYTES", 4L << 30)
 
   /** Test seam (IterCacheSpec): shrink the budget to force byte
     * eviction on KB-sized fixtures. Reset in a finally.

@@ -825,9 +825,7 @@ object StreamingQueries {
     * query start), so every lane prices the same deliberate sizing.
     */
   private[graft] val StreamStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ > 0).getOrElse(8)
+    graft.EnvKnob.positive("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8, Int.MaxValue).toInt
 
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     // ONE source stream split into both join sides by filtering — a

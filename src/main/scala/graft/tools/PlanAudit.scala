@@ -363,9 +363,16 @@ object PlanAudit {
       // join (the 100 TB flip past broadcastability is a term-keyed
       // shuffle join, documented, not this plan)
       "text_lm_train" -> Seq(
-        ("broadcast-model-no-smj", m => m("smj") == 0 && m("bhj") >= 1)),
+        ("broadcast-model-no-smj", m => m("smj") == 0 && m("bhj") >= 1),
+        // c_ab, c_a and V all come from ONE aggregate over ONE corpus
+        // scan (the per-`a` branch reuses its exchange); a second scan
+        // means Catalyst split the shared aggregate, a cached scan means
+        // the model was memoised across lanes
+        ("one-corpus-scan", m => m("scans") == 1 && m("cached") == 0)),
       "text_lm_perplexity" -> Seq(
-        ("broadcast-model-no-smj", m => m("smj") == 0 && m("bhj") >= 2)),
+        ("broadcast-model-no-smj", m => m("smj") == 0 && m("bhj") >= 2),
+        // one scan trains the model (as in text_lm_train), one scores
+        ("train-scan-plus-score-scan", m => m("scans") == 2 && m("cached") == 0)),
       "mm_scene_cuts" -> Seq(
         ("narrow-decode-no-shuffle",
           m => m("scans") == 1 && m("hx") == 0 && m("smj") == 0 &&
@@ -506,10 +513,6 @@ object PlanAudit {
       // the bitemporal snapshot attaches the one-row max(event_id)
       // transaction horizon via broadcast — a bounded scalar attach
       "q116_point_in_time",
-      // the LM-filter tier attaches the one-row vocabulary size to the
-      // model table via broadcast — the same bounded scalar attach as
-      // its analysis twin pipeline_lm_score
-      "text_lm_train", "text_lm_perplexity",
       // KMV joins its two 1-row aggregates (min-k fold × exact count)
       // — a 1×1 scalar attach
       "sketch_kmv_distinct",
@@ -563,6 +566,7 @@ object PlanAudit {
         .map(_.group(1)).toSet.size
       val m = Map(
         "scans" -> count("Scan parquet"),
+        "cached" -> count("InMemoryTableScan"),
         "bhj" -> count("BroadcastHashJoin"),
         "smj" -> count("SortMergeJoin"),
         "shj" -> count("ShuffledHashJoin"),

@@ -14,9 +14,12 @@ Two divergence classes slipped through the old 1e-9-rounding replica:
      type: 'numpy.ndarray'". We detect list/struct/ndarray cells and
      fail the query with ARRAY-COLUMN the way the driver would ERR.
 
+With SPARK_GRAFT_ONLY set (the same spec graft.Verify reads), only the
+selected queries are compared, so a subset run can come back green.
+
 Usage: python3 tools/local_verify.py [sfdir] [outdir] [--skip-spark]
 """
-import json, subprocess, sys
+import json, os, subprocess, sys
 from pathlib import Path
 
 import duckdb
@@ -35,6 +38,16 @@ def run_spark():
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines() if "[error]" in l or "failed" in l.lower()) + "\n")
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-2000:]); sys.exit(1)
+
+
+def only_filter(spec):
+    """SparkEntry.onlyFilter in Python: comma-separated names, a trailing
+    '*' is a prefix match; None selects every name."""
+    if spec is None:
+        return lambda name: True
+    pats = [p.strip() for p in spec.split(",") if p.strip()]
+    return lambda name: any(
+        name.startswith(p[:-1]) if p.endswith("*") else name == p for p in pats)
 
 
 class ArrayColumn(Exception):
@@ -81,13 +94,15 @@ def canon(tbl: pa.Table):
 def main():
     if "--skip-spark" not in sys.argv:
         run_spark()
-    oracle = json.loads(Path(f"{OUTDIR}/oracle_sql.json").read_text())
+    selected = only_filter(os.environ.get("SPARK_GRAFT_ONLY"))
+    oracle = {n: q for n, q in json.loads(Path(f"{OUTDIR}/oracle_sql.json").read_text()).items()
+              if selected(n)}
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SFDIR}/{t}.parquet'")
 
     results = {}
-    spark_dirs = [p for p in Path(OUTDIR).iterdir() if p.is_dir()]
+    spark_dirs = [p for p in Path(OUTDIR).iterdir() if p.is_dir() and selected(p.name)]
     for qdir in sorted(spark_dirs):
         name = qdir.name
         files = list(qdir.glob("*.parquet"))
