@@ -26,6 +26,7 @@ object ReferenceUdfs extends Serializable {
 class MapReduceSpec extends AnyFunSuite with SparkTestBase {
 
   test("mapReduce word count matches golden corpus facts") {
+    assumeReferenceCorpus()
     import spark.implicits._
     val docs = spark.read.option("wholetext", "true")
       .text(SparkEntry.ReferenceCorpusDir).as[String]
@@ -37,6 +38,7 @@ class MapReduceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("mapReduceAgg (combiner form) agrees with the no-combiner form") {
+    assumeReferenceCorpus()
     import spark.implicits._
     val docs = spark.read.option("wholetext", "true")
       .text(SparkEntry.ReferenceCorpusDir).as[String]

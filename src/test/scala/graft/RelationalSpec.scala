@@ -32,17 +32,37 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     // chunk when sequential. Streaming lanes stay SEQUENTIAL: they pin
     // memory-sink queryNames and toggle shuffle.partitions around their
     // runs, both process-global.
-    val (streamQs, batchQs) = SparkEntry.registry.partition(
-      _.name.startsWith("stream_"))
+    // wordcount_reference ignores the data dir and reads the reference
+    // corpus, which lies outside this repository (FIXTURES.md §1)
+    val lanes =
+      if (SparkTestBase.referenceCorpusPresent) SparkEntry.registry
+      else {
+        info("wordcount_reference not run: no reference corpus at " +
+          SparkEntry.ReferenceCorpusDir)
+        SparkEntry.registry.filterNot(_.name == "wordcount_reference")
+      }
+    val (streamQs, batchQs) = lanes.partition(_.name.startsWith("stream_"))
+    def run(q: QueryDef): (String, scala.util.Try[Unit]) =
+      q.name -> scala.util.Try(check(q))
+    // every lane runs to the end so one failure cannot hide another
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
+    val batchResults = try {
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = batchQs.map(q =>
-        scala.concurrent.Future(check(q))(ec))
+      val futures = batchQs.map(q => scala.concurrent.Future(run(q))(ec))
       import scala.concurrent.duration._
-      futures.foreach(f => scala.concurrent.Await.result(f, 20.minutes))
+      futures.map(f => scala.concurrent.Await.result(f, 20.minutes))
     } finally pool.shutdown()
-    streamQs.foreach(check)
+    val failures = (batchResults ++ streamQs.map(run)).collect {
+      case (name, scala.util.Failure(e)) => name -> e
+    }
+    if (failures.nonEmpty) {
+      val lines = failures.map { case (name, e) =>
+        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        s"  $name: ${e.getClass.getSimpleName}: ${msg.getOrElse("")}"
+      }
+      fail(s"${failures.length} of ${lanes.length} lanes failed:\n" +
+        lines.mkString("\n"), failures.head._2)
+    }
   }
 
   test("q6 top-k per group: rn within group is 1..3 and prices non-increasing") {

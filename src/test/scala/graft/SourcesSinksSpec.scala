@@ -18,6 +18,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
 
   test("binaryFile source reads raw payloads with metadata (multimodal ingest path)") {
+    assumeReferenceCorpus()
     // the ingestion shape for image/audio/video corpora: opaque bytes +
     // path/length metadata, no decode at scan time
     val df = spark.read.format("binaryFile")

@@ -8,9 +8,22 @@ trait SparkTestBase { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkTestBase.session
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Cancels the calling test where the reference corpus is absent. The
+    * corpus lies outside this repository (FIXTURES.md §1) and its golden
+    * facts hold only for its exact bytes, so there is nothing to stand in.
+    */
+  def assumeReferenceCorpus(): Unit =
+    assume(SparkTestBase.referenceCorpusPresent,
+      s"; reference corpus not found at ${SparkEntry.ReferenceCorpusDir}; " +
+        "it lies outside this repository (FIXTURES.md §1)")
 }
 
 object SparkTestBase {
+  def referenceCorpusPresent: Boolean =
+    java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get(SparkEntry.ReferenceCorpusDir))
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       // local[4] measured BETTER than local[8] for suite wall: doubling

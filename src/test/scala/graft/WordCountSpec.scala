@@ -10,7 +10,12 @@ import graft.operators.WordCount
   */
 class WordCountSpec extends AnyFunSuite with SparkTestBase {
 
-  lazy val result = WordCount.referenceJob(spark, SparkEntry.ReferenceCorpusDir).cache()
+  // every test reads the corpus through `result`, so the guard sits in
+  // its initializer: each test cancels where the corpus is absent
+  lazy val result = {
+    assumeReferenceCorpus()
+    WordCount.referenceJob(spark, SparkEntry.ReferenceCorpusDir).cache()
+  }
 
   test("286 distinct words (golden)") {
     assert(result.count() === 286L)
