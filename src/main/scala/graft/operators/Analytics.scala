@@ -36,8 +36,9 @@ object Analytics {
     * correctly rounded (identical), and only the summation order
     * differs, whose ~1e-17 drift cannot reach a 0.5e-8 boundary.
     */
-  /** Undirected co-purchase edge set (parts sharing an order),
-    * materialized BOTH directions and cached — ONE definition
+  /** Undirected co-purchase edge set (parts sharing an order), BOTH
+    * directions, partitioned and sorted on `u` for the loop that caches
+    * it — ONE definition
     * shared by [[pagerank]] and [[Analytics2.kHopReach]] so a tuning
     * change (degree cap, checkpoint policy) cannot silently diverge
     * between them. The matching oracle text is [[CoPurchaseEdgesCte]].
@@ -71,47 +72,44 @@ object Analytics {
     // instead of two (plan-asserted in PLANS.md, hx 2 → 1 on this
     // subtree).
     val und = orderPairs(li)
-    // Partition AND sort by the join key, then CACHE (not checkpoint):
-    // an InMemoryTableScan reports the cached plan's outputPartitioning
-    // and outputOrdering, so every iteration's rank⋈edges join reuses
-    // them — per round only the small rank frame shuffles and sorts,
-    // never |E|. localCheckpoint CANNOT do this: in Spark 4 the
-    // LogicalRDD it leaves behind reports UnknownPartitioning (measured,
-    // SCALE.md round 11), so the edge set re-shuffled and re-sorted
-    // EVERY round — at the 100× probe volume ~240M avoidable exchange
-    // rows per round, the dominant cost before this change. The
-    // partition count is pinned explicitly (REPARTITION_BY_NUM) so AQE
-    // cannot coalesce the cached layout away from what the per-round
-    // join requires; eager count() materializes once. Lineage stays
-    // flat: the cache IS the truncation for this build-once frame (the
-    // per-round rank/label frames still localCheckpoint — those genuinely
-    // accumulate lineage).
-    // IterCache bounds how many of these stay resident (LRU unpersist —
-    // always safe: an evicted cache recomputes from its logical plan)
-    IterCache.getOrBuild(s"copurchase:$dir") {
-      val n = spark.sessionState.conf.numShufflePartitions
-      // both directions in one pass (explode, not self-union — the
-      // union form executes the distinct branch twice)
-      und.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .repartition(n, col("u"))
-        .dropDuplicates("u", "v")
-        .sortWithinPartitions(col("u"))
-        .persist()
-    }
+    // Partition AND sort by the join key: the caller caches this frame
+    // for its loop ([[LoopCache.withCached]]), and the InMemoryTableScan
+    // reports the cached plan's outputPartitioning and outputOrdering,
+    // so every iteration's rank⋈edges join reuses them — per round only
+    // the small rank frame shuffles and sorts, never |E|. localCheckpoint
+    // CANNOT do this: in Spark 4 the LogicalRDD it leaves behind reports
+    // UnknownPartitioning (measured, SCALE.md round 11), so the edge set
+    // re-shuffled and re-sorted EVERY round — at the 100× probe volume
+    // ~240M avoidable exchange rows per round. The partition count is
+    // pinned explicitly (REPARTITION_BY_NUM) so AQE cannot coalesce the
+    // cached layout away from what the per-round join requires. Lineage
+    // stays flat: the cache IS the truncation for this build-once frame
+    // (the per-round rank/label frames still localCheckpoint — those
+    // genuinely accumulate lineage).
+    val n = spark.sessionState.conf.numShufflePartitions
+    // both directions in one pass (explode, not self-union — the
+    // union form executes the distinct branch twice)
+    und.select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .repartition(n, col("u"))
+      .dropDuplicates("u", "v")
+      .sortWithinPartitions(col("u"))
   }
 
-  /** Degree frame beside [[coPurchaseEdges]] — cached (not
-    * checkpointed) so it inherits the edges' hash(u) partitioning and
-    * the per-round deg join side needs no exchange; registry-bounded
-    * like the edges.
+  /** Runs `body` over the cached [[coPurchaseEdges]] and their cached
+    * degree frame. Read from the cached edges, the degrees inherit
+    * their hash(u) partitioning, so the per-round deg join side needs no
+    * exchange. The degrees are freed before the edges, both before this
+    * returns.
     */
-  private def coPurchaseDeg(spark: SparkSession, dir: String,
-      edges: DataFrame): DataFrame =
-    IterCache.getOrBuild(s"copurchase-deg:$dir") {
-      edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
+  private def withEdgesAndDeg[T](spark: SparkSession, dir: String)(
+      body: (DataFrame, DataFrame) => T): T =
+    LoopCache.withCached(coPurchaseEdges(spark, dir)) { edges =>
+      LoopCache.withCached(edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))) {
+        deg => body(edges, deg)
+      }
     }
 
   /** The co-purchase edge set as oracle CTEs (`und`, `edges`) — the SQL
@@ -124,26 +122,25 @@ object Analytics {
       |    AND a.l_partkey < b.l_partkey),
       |edges AS (SELECT u, v FROM und UNION ALL SELECT v, u FROM und)""".stripMargin
 
-  def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, dir)
-    val deg = coPurchaseDeg(spark, dir, edges)
-    val n = deg.count() // bounded driver state: one long (node count)
+  def pagerank(spark: SparkSession, dir: String): DataFrame =
+    withEdgesAndDeg(spark, dir) { (edges, deg) =>
+      val n = deg.count() // bounded driver state: one long (node count)
 
-    var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to Iters) {
-      rank = edges
-        .join(rank.withColumnRenamed("node", "u"), Seq("u"))
-        .join(deg, Seq("u"))
-        .groupBy(col("v"))
-        .agg((lit(0.15 / n) + lit(Damping) * sum(col("rank") / col("deg")))
-          .as("rank"))
-        .select(col("v").as("node"), col("rank"))
-        .localCheckpoint()
+      var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
+      for (_ <- 1 to Iters) {
+        rank = edges
+          .join(rank.withColumnRenamed("node", "u"), Seq("u"))
+          .join(deg, Seq("u"))
+          .groupBy(col("v"))
+          .agg((lit(0.15 / n) + lit(Damping) * sum(col("rank") / col("deg")))
+            .as("rank"))
+          .select(col("v").as("node"), col("rank"))
+          .localCheckpoint()
+      }
+      rank
+        .select(col("node"), (floor(col("rank") * 1e8 + 0.5) / 1e8).as("rank_r8"))
+        .orderBy(col("node"))
     }
-    rank
-      .select(col("node"), (floor(col("rank") * 1e8 + 0.5) / 1e8).as("rank_r8"))
-      .orderBy(col("node"))
-  }
 
   /** PageRank iterated to CONVERGENCE — the production entry, where the
     * round count follows the data instead of a constant: stop when the
@@ -161,79 +158,78 @@ object Analytics {
     * 10 rounds, comfortably under the 20-round ceiling.
     */
   private[graft] def pagerankConverged(spark: SparkSession, dir: String,
-      eps: Double = 1e-9, maxIters: Int = 20): (DataFrame, Int) = {
-    val edges = coPurchaseEdges(spark, dir)
-    val deg = coPurchaseDeg(spark, dir, edges)
-    val n = deg.count()
-    var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
-      .localCheckpoint()
-    var rounds = 0
-    var delta = Double.MaxValue
-    while (rounds < maxIters && delta >= eps) {
-      // r16 (guide §1.2 — fewer passes): the previous rank rides INTO
-      // the round aggregate as a null-padded SELF-MESSAGE per node
-      // (contrib NULL so sum() ignores it — the rank sum sees the
-      // identical message multiset as before; prev via max() over the
-      // one self row, no float addition). Node set unchanged:
-      // every rank node has out-edges (rank0 = deg keys; the graph is
-      // materialized both directions), so each appears as a target too.
-      // The L1-delta itself rides on the checkpoint action as an
-      // observe() metric (CollectMetrics accumulator — localCheckpoint
-      // goes through withAction, so the listener fires; pinned by
-      // ObservationCheckpointSpec), collapsing each round to ONE job:
-      // the per-round delta job this replaces measured ~0.1 s × 7
-      // rounds of the lane's 4.6 s steady-state. The sum's partition
-      // accumulation order can differ from the old aggregate job's by
-      // ~1e-17 — nine orders under the smallest observed
-      // delta-to-boundary gap (the ConvergedEps non-exposure analysis
-      // below), and the drill's A/B reproduced identical rows and
-      // round count at sf0.1.
-      val msgs = edges
-        .join(rank.withColumnRenamed("node", "u"), Seq("u"))
-        .join(deg, Seq("u"))
-        .select(col("v"), (col("rank") / col("deg")).as("contrib"),
-          lit(null).cast("double").as("prev"))
-      val self = rank.select(col("node").as("v"),
-        lit(null).cast("double").as("contrib"), col("rank").as("prev"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = msgs.union(self)
-        .groupBy(col("v"))
-        .agg((lit(0.15 / n) + lit(Damping) * sum(col("contrib"))).as("rank"),
-          max(col("prev")).as("prev"))
-        .select(col("v").as("node"), col("rank"), col("prev"))
-        .observe(obs, sum(abs(col("rank") - col("prev"))).as("d"))
+      eps: Double = 1e-9, maxIters: Int = 20): (DataFrame, Int) =
+    withEdgesAndDeg(spark, dir) { (edges, deg) =>
+      val n = deg.count()
+      var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
         .localCheckpoint()
-      // The checkpoint action above is synchronous, so the metric is
-      // normally available immediately; the bounded wait + explicit
-      // fallback job guard against a listener that never fires (a hang
-      // here would strand the bench watchdog, which can only cancel
-      // JOBS — the r14 lesson). The fallback recomputes the identical
-      // sum from the checkpointed frame.
-      // A dedicated DAEMON thread, not the global ExecutionContext
-      // (review r16): on timeout the abandoned obs.get blocks forever,
-      // and a parked global-pool thread per timed-out round would
-      // starve the shared pool — a parked daemon thread leaks nothing
-      // the JVM cares about and cannot delay exit.
-      delta = {
-        val got = new java.util.concurrent.atomic.AtomicReference[Option[Double]](None)
-        val t = new Thread(() =>
-          try got.set(Some(obs.get("d").asInstanceOf[Double]))
-          catch { case _: Throwable => () })
-        t.setDaemon(true)
-        t.start()
-        t.join(120000L)
-        got.get().getOrElse {
-          next.agg(sum(abs(col("rank") - col("prev"))).as("d"))
-            .head.getDouble(0)
+      var rounds = 0
+      var delta = Double.MaxValue
+      while (rounds < maxIters && delta >= eps) {
+        // r16 (guide §1.2 — fewer passes): the previous rank rides INTO
+        // the round aggregate as a null-padded SELF-MESSAGE per node
+        // (contrib NULL so sum() ignores it — the rank sum sees the
+        // identical message multiset as before; prev via max() over the
+        // one self row, no float addition). Node set unchanged:
+        // every rank node has out-edges (rank0 = deg keys; the graph is
+        // materialized both directions), so each appears as a target too.
+        // The L1-delta itself rides on the checkpoint action as an
+        // observe() metric (CollectMetrics accumulator — localCheckpoint
+        // goes through withAction, so the listener fires; pinned by
+        // ObservationCheckpointSpec), collapsing each round to ONE job:
+        // the per-round delta job this replaces measured ~0.1 s × 7
+        // rounds of the lane's 4.6 s steady-state. The sum's partition
+        // accumulation order can differ from the old aggregate job's by
+        // ~1e-17 — nine orders under the smallest observed
+        // delta-to-boundary gap (the ConvergedEps non-exposure analysis
+        // below), and the drill's A/B reproduced identical rows and
+        // round count at sf0.1.
+        val msgs = edges
+          .join(rank.withColumnRenamed("node", "u"), Seq("u"))
+          .join(deg, Seq("u"))
+          .select(col("v"), (col("rank") / col("deg")).as("contrib"),
+            lit(null).cast("double").as("prev"))
+        val self = rank.select(col("node").as("v"),
+          lit(null).cast("double").as("contrib"), col("rank").as("prev"))
+        val obs = org.apache.spark.sql.Observation()
+        val next = msgs.union(self)
+          .groupBy(col("v"))
+          .agg((lit(0.15 / n) + lit(Damping) * sum(col("contrib"))).as("rank"),
+            max(col("prev")).as("prev"))
+          .select(col("v").as("node"), col("rank"), col("prev"))
+          .observe(obs, sum(abs(col("rank") - col("prev"))).as("d"))
+          .localCheckpoint()
+        // The checkpoint action above is synchronous, so the metric is
+        // normally available immediately; the bounded wait + explicit
+        // fallback job guard against a listener that never fires (a hang
+        // here would strand the bench watchdog, which can only cancel
+        // JOBS — the r14 lesson). The fallback recomputes the identical
+        // sum from the checkpointed frame.
+        // A dedicated DAEMON thread, not the global ExecutionContext
+        // (review r16): on timeout the abandoned obs.get blocks forever,
+        // and a parked global-pool thread per timed-out round would
+        // starve the shared pool — a parked daemon thread leaks nothing
+        // the JVM cares about and cannot delay exit.
+        delta = {
+          val got = new java.util.concurrent.atomic.AtomicReference[Option[Double]](None)
+          val t = new Thread(() =>
+            try got.set(Some(obs.get("d").asInstanceOf[Double]))
+            catch { case _: Throwable => () })
+          t.setDaemon(true)
+          t.start()
+          t.join(120000L)
+          got.get().getOrElse {
+            next.agg(sum(abs(col("rank") - col("prev"))).as("d"))
+              .head.getDouble(0)
+          }
         }
+        rank = next.select(col("node"), col("rank"))
+        rounds += 1
       }
-      rank = next.select(col("node"), col("rank"))
-      rounds += 1
+      (rank
+        .select(col("node"), (floor(col("rank") * 1e8 + 0.5) / 1e8).as("rank_r8"))
+        .orderBy(col("node")), rounds)
     }
-    (rank
-      .select(col("node"), (floor(col("rank") * 1e8 + 0.5) / 1e8).as("rank_r8"))
-      .orderBy(col("node")), rounds)
-  }
 
   /** Convergence parameters of the REGISTERED converged entry
     * ([[pagerankConvergedQuery]]): eps = 1e-6 stops in exactly

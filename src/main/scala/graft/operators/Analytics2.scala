@@ -65,37 +65,36 @@ object Analytics2 {
     * distributed; nothing is collected. The oracle unrolls the same
     * three frontiers as CTEs with EXCEPT (never NOT IN — NOTES.md #12).
     */
-  def kHopReach(spark: SparkSession, dir: String): DataFrame = {
-    val edges = Analytics.coPurchaseEdges(spark, dir)
-
-    var frontier = edges.select(col("u").as("node")).distinct()
-      .filter(col("node") % SeedMod === 0)
-      .localCheckpoint()
-    var visited = frontier
-    var out = frontier.withColumn("hops", lit(0))
-    for (h <- 1 to 3) {
-      // convergence guard, provably output-preserving: an empty frontier
-      // makes every later frontier empty (each is a join against it), so
-      // skipping the remaining hops changes nothing — the oracle's full
-      // 3-hop unroll agrees by the same argument. The probe is a take(1)
-      // over the CHECKPOINTED frontier: cheap here, and at sparse-seed
-      // production scale it is what stops BFS paying for hops past
-      // exhaustion.
-      if (!frontier.isEmpty) {
-        frontier = edges.join(frontier.withColumnRenamed("node", "u"), Seq("u"))
-          .select(col("v").as("node")).distinct()
-          .except(visited)
-          .localCheckpoint()
-        // r16: visited is a UNION of already-checkpointed frontiers —
-        // lineage stays flat without its own checkpoint, so the
-        // per-hop materialization job it used to pay is gone (the
-        // next hop's except() reads the same checkpointed pieces)
-        visited = visited.union(frontier)
-        out = out.union(frontier.withColumn("hops", lit(h)))
+  def kHopReach(spark: SparkSession, dir: String): DataFrame =
+    LoopCache.withCached(Analytics.coPurchaseEdges(spark, dir)) { edges =>
+      var frontier = edges.select(col("u").as("node")).distinct()
+        .filter(col("node") % SeedMod === 0)
+        .localCheckpoint()
+      var visited = frontier
+      var out = frontier.withColumn("hops", lit(0))
+      for (h <- 1 to 3) {
+        // convergence guard, provably output-preserving: an empty frontier
+        // makes every later frontier empty (each is a join against it), so
+        // skipping the remaining hops changes nothing — the oracle's full
+        // 3-hop unroll agrees by the same argument. The probe is a take(1)
+        // over the CHECKPOINTED frontier: cheap here, and at sparse-seed
+        // production scale it is what stops BFS paying for hops past
+        // exhaustion.
+        if (!frontier.isEmpty) {
+          frontier = edges.join(frontier.withColumnRenamed("node", "u"), Seq("u"))
+            .select(col("v").as("node")).distinct()
+            .except(visited)
+            .localCheckpoint()
+          // r16: visited is a UNION of already-checkpointed frontiers —
+          // lineage stays flat without its own checkpoint, so the
+          // per-hop materialization job it used to pay is gone (the
+          // next hop's except() reads the same checkpointed pieces)
+          visited = visited.union(frontier)
+          out = out.union(frontier.withColumn("hops", lit(h)))
+        }
       }
+      out.orderBy(col("node"))
     }
-    out.orderBy(col("node"))
-  }
 
   private val KHopOracle: String =
     s"""WITH ${Analytics.CoPurchaseEdgesCte},

@@ -27,9 +27,9 @@ object Analytics5 {
     * volume this frame is ~120M rows and materializing it cost
     * 83–108 s per query invocation — while components' thresholded
     * graph kept just 200 of those rows. Each consumer instead caches
-    * the (much smaller, partition-pinned) frame IT iterates on, inside
-    * IterCache, so warm invocations skip this build entirely and the
-    * full-volume intermediate is never stored anywhere.
+    * the (much smaller, partition-pinned) frame IT iterates on, for its
+    * own loop only ([[LoopCache.withCached]]), so the full-volume
+    * intermediate is never stored anywhere.
     */
   private def weightedEdges(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
@@ -108,35 +108,34 @@ object Analytics5 {
   def shortestPath(spark: SparkSession, dir: String): DataFrame = {
     val wed = weightedEdges(spark, dir)
     val w = when(col("n") >= 3, 1).when(col("n") === 2, 2).otherwise(4)
-    // partition+sort by the relaxation join key and CACHE — the
-    // InMemoryTableScan keeps |E| out of every round's exchange and
-    // sort (see Analytics.coPurchaseEdges for why cache, not
+    // partition+sort by the relaxation join key and CACHE for the loop
+    // — the InMemoryTableScan keeps |E| out of every round's exchange
+    // and sort (see Analytics.coPurchaseEdges for why cache, not
     // localCheckpoint, is the partitioning-preserving truncation)
-    val ew = IterCache.getOrBuild(s"sssp-ew:$dir") {
-      val np = spark.sessionState.conf.numShufflePartitions
-      // both directions in ONE pass over the (now-lazy) wed: a
-      // self-union would execute the aggregate branch twice
-      wed.select(explode(array(
-          struct(col("u"), col("v"), w.as("w")),
-          struct(col("v").as("u"), col("u").as("v"), w.as("w")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
-        .repartition(np, col("u"))
-        .sortWithinPartitions(col("u"))
-        .persist()
-    }
-    // checkpoint the seed too: it derives from ew, and the relaxation
-    // join would otherwise be an ambiguous self-join
-    var dist = ew.agg(min(col("u")).as("node"))
-      .withColumn("dist", lit(0))
-      .localCheckpoint()
-    for (_ <- 1 to SsspHops) {
-      val step = dist.as("d").join(ew.as("e"), col("d.node") === col("e.u"))
-        .select(col("e.v").as("node"), (col("d.dist") + col("e.w")).as("dist"))
-      dist = dist.union(step)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    val np = spark.sessionState.conf.numShufflePartitions
+    // both directions in ONE pass over the (now-lazy) wed: a
+    // self-union would execute the aggregate branch twice
+    val edges = wed.select(explode(array(
+        struct(col("u"), col("v"), w.as("w")),
+        struct(col("v").as("u"), col("u").as("v"), w.as("w")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
+      .repartition(np, col("u"))
+      .sortWithinPartitions(col("u"))
+    LoopCache.withCached(edges) { ew =>
+      // checkpoint the seed too: it derives from ew, and the relaxation
+      // join would otherwise be an ambiguous self-join
+      var dist = ew.agg(min(col("u")).as("node"))
+        .withColumn("dist", lit(0))
         .localCheckpoint()
+      for (_ <- 1 to SsspHops) {
+        val step = dist.as("d").join(ew.as("e"), col("d.node") === col("e.u"))
+          .select(col("e.v").as("node"), (col("d.dist") + col("e.w")).as("dist"))
+        dist = dist.union(step)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+          .localCheckpoint()
+      }
+      dist.orderBy(col("node"))
     }
-    dist.orderBy(col("node"))
   }
 
   private val ShortestPathOracle: String =
@@ -178,36 +177,35 @@ object Analytics5 {
     val wed = weightedEdges(spark, dir).filter(col("n") >= CompThreshold)
     // same partition-preserving CACHE discipline as shortestPath's ew:
     // the label-propagation join re-keys on u every round
-    val e = IterCache.getOrBuild(s"components-e:$dir") {
-      val np = spark.sessionState.conf.numShufflePartitions
-      wed.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .repartition(np, col("u"))
-        .sortWithinPartitions(col("u"))
-        .persist()
-    }
-    var labels = e.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < 12) {
-      val prop = labels.join(e, labels("node") === e("u"))
-        .select(e("v").as("node"), col("label"))
-      val next = labels.union(prop)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
+    val np = spark.sessionState.conf.numShufflePartitions
+    val edges = wed.select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .repartition(np, col("u"))
+      .sortWithinPartitions(col("u"))
+    LoopCache.withCached(edges) { e =>
+      var labels = e.select(col("u").as("node")).distinct()
+        .withColumn("label", col("node"))
         .localCheckpoint()
-      // bounded driver state: one count — rows whose label still moves
-      converged = next.as("n").join(labels.as("p"),
-        col("n.node") === col("p.node") && col("n.label") =!= col("p.label"))
-        .isEmpty
-      labels = next
-      round += 1
+      var converged = false
+      var round = 0
+      while (!converged && round < 12) {
+        val prop = labels.join(e, labels("node") === e("u"))
+          .select(e("v").as("node"), col("label"))
+        val next = labels.union(prop)
+          .groupBy(col("node")).agg(min(col("label")).as("label"))
+          .localCheckpoint()
+        // bounded driver state: one count — rows whose label still moves
+        converged = next.as("n").join(labels.as("p"),
+          col("n.node") === col("p.node") && col("n.label") =!= col("p.label"))
+          .isEmpty
+        labels = next
+        round += 1
+      }
+      labels.select(col("node"), col("label").as("component"))
+        .orderBy(col("node"))
     }
-    labels.select(col("node"), col("label").as("component"))
-      .orderBy(col("node"))
   }
 
   private val ComponentsOracle: String =

@@ -145,33 +145,11 @@ object Dedup {
 
   /** MinHash-LSH verified pair stream from a documents frame — the
     * shared substrate of `dedup_minhash_lsh` / `dedup_clusters` /
-    * `dedup_survivors`: each caller in the chain builds it exactly ONCE
-    * and passes DataFrames down, never (spark, dir) pairs that would
-    * silently rebuild the pipeline.
+    * `dedup_survivors` / `dedup_tier_recall`: each lane builds it
+    * exactly ONCE and passes DataFrames down, never (spark, dir) pairs
+    * that would silently rebuild the pipeline.
     */
-  private[graft] def verifiedPairs(docs: DataFrame): DataFrame =
-    verifiedPairsUncached(docs)
-
-  /** [[verifiedPairs]] keyed on the corpus dir and held in IterCache —
-    * r16, the round-11 graph-edge-frame discipline: FIVE lanes
-    * (minhash_lsh, clusters, survivors, tier_recall, and the
-    * leakage-split/preference-pairs compositions over clusters) each
-    * rebuilt the identical shingle → minhash → band → capped-pair →
-    * exact-verify pipeline from the scan up (~1.1 s apiece at sf0.1).
-    * The pair stream is deterministic (FNV hashing, documented), tiny
-    * (output-sized), and session-scoped: the first lane to touch it
-    * pays the build, warm lanes amortize it, eviction is always safe
-    * (recompute from the logical plan), and nothing persists across
-    * JVMs — every bench/oracle invocation still computes it from the
-    * parquet inputs.
-    */
-  private[graft] def verifiedPairsCached(spark: SparkSession,
-      dir: String): DataFrame =
-    IterCache.getOrBuild(s"lsh-vp:$dir") {
-      verifiedPairsUncached(Tables.documents(spark, dir)).persist()
-    }
-
-  private def verifiedPairsUncached(docs: DataFrame): DataFrame = {
+  private[graft] def verifiedPairs(docs: DataFrame): DataFrame = {
     // materialize the signature stream once: it feeds BOTH sides of the
     // candidate self-join, and uncheckpointed lineage recomputes the
     // shingle+minhash scan per side (measured 2 extra scans; the table
@@ -195,7 +173,7 @@ object Dedup {
 
   /** MinHash-LSH near-dup pairs, exact-Jaccard-verified (≥ 0.2). */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    verifiedPairsCached(spark, dir)
+    verifiedPairs(Tables.documents(spark, dir))
       .orderBy(col("id_a"), col("id_b"))
 
   /** SimHash near-dup pairs: banded blocking (capped buckets) + Hamming ≤ 6.
@@ -331,20 +309,8 @@ object Dedup {
     * Output: (doc_id, cluster_rep) for every doc in some pair.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersCached(spark, dir).orderBy(col("doc_id"))
-
-  /** [[clustersOf]] over [[verifiedPairsCached]], itself IterCache-held
-    * (r16): the cluster labels are consumed by FOUR lanes (clusters,
-    * survivors, leakage_split, preference_pairs) and the propagation
-    * loop's per-round actions are pure rebuild cost for every lane
-    * after the first. Deterministic (min-label fixpoint over the
-    * deterministic pair stream), output-sized, session-scoped.
-    */
-  private[graft] def clustersCached(spark: SparkSession,
-      dir: String): DataFrame =
-    IterCache.getOrBuild(s"lsh-clusters:$dir") {
-      clustersOf(verifiedPairsCached(spark, dir)).persist()
-    }
+    clustersOf(verifiedPairs(Tables.documents(spark, dir)))
+      .orderBy(col("doc_id"))
 
   private def clustersOf(pairs0: DataFrame): DataFrame = {
     val pairs = pairs0.select(col("id_a"), col("id_b"))
@@ -404,10 +370,9 @@ object Dedup {
   def dedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val exactKeep = dedupExact(spark, dir).select(col("keep_id").as("doc_id"))
-    // share the substrate: the IterCache-held cluster labels (one LSH
-    // pipeline + one propagation loop per session, not per lane), so
-    // survivors costs two broadcastable joins on top
-    val nearDupLosers = clustersCached(spark, dir)
+    // the cluster labels over this lane's own LSH pair stream; survivors
+    // adds two broadcastable joins on top
+    val nearDupLosers = clustersOf(verifiedPairs(docs))
       .filter(col("doc_id") =!= col("cluster_rep"))
       .select(col("doc_id"))
     docs.join(exactKeep, Seq("doc_id"), "left_semi")
@@ -512,18 +477,6 @@ object Dedup {
       .distinct()
     (shRows, cand)
   }
-
-  /** [[dedupPrefixJaccard]] held in IterCache (r16): the exact pair
-    * stream is the ground truth of dedup_tier_recall AND the
-    * dedup_prefix_jaccard output itself — two lanes, one deterministic
-    * output-sized frame; same session-scoped discipline as
-    * [[verifiedPairsCached]].
-    */
-  private[graft] def prefixPairsCached(spark: SparkSession,
-      dir: String): DataFrame =
-    IterCache.getOrBuild(s"prefix-pairs:$dir") {
-      dedupPrefixJaccard(spark, dir).persist()
-    }
 
   def dedupPrefixJaccard(spark: SparkSession, dir: String): DataFrame = {
     val (shRows, cand) = prefixJaccardStage(spark, dir)
@@ -673,8 +626,8 @@ object Dedup {
     * the shared-double argument, no knife edge.
     */
   def dedupTierRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = prefixPairsCached(spark, dir)
-    val lsh = verifiedPairsCached(spark, dir)
+    val exact = dedupPrefixJaccard(spark, dir)
+    val lsh = verifiedPairs(Tables.documents(spark, dir))
       .select(col("id_a"), col("id_b"), lit(1L).as("found"))
     exact.join(lsh, Seq("id_a", "id_b"), "left")
       .withColumn("bucket",
@@ -726,7 +679,7 @@ object Dedup {
 
   val registry: Seq[QueryDef] = Seq(
     QueryDef("dedup_tier_recall", dedupTierRecall _, TierRecallOracle),
-    QueryDef("dedup_prefix_jaccard", prefixPairsCached _,
+    QueryDef("dedup_prefix_jaccard", dedupPrefixJaccard _,
       PrefixJaccardOracle),
     // components over the (now SQL-expressible) verified pairs: the
     // recursive closure is the oracle's approach, label propagation the

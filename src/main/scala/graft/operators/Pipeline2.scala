@@ -160,14 +160,11 @@ object Pipeline2 {
   def pipelineContaminationBloom(spark: SparkSession,
       dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // cached (IterCache byte budget): the SAME frame feeds the
-    // driver-side Bloom build AND the broadcast verify side — without
-    // the cache the scan+explode+distinct would run twice
-    val evalShingles = IterCache.getOrBuild(s"bloom-eval-sh:$dir") {
-      docs.filter(col("doc_id") % 50 === 0)
-        .select(explode(Dedup.shinglesPublic(col("text"))).as("sh"))
-        .distinct()
-    }
+    // the SAME frame feeds the driver-side Bloom build AND the broadcast
+    // verify side, so its scan+explode+distinct runs once for each
+    val evalShingles = docs.filter(col("doc_id") % 50 === 0)
+      .select(explode(Dedup.shinglesPublic(col("text"))).as("sh"))
+      .distinct()
     // bounded driver state: the filter bytes themselves (BloomBits/8).
     // NOTE this is an EAGER Spark job at DataFrame-construction time —
     // bench timings for this lane include the build, as a production

@@ -69,8 +69,7 @@ object Pipeline5 {
       .select(trim(regexp_replace(col("word"), "(.)", "$1 ")).as("sym"), col("n"))
       .localCheckpoint(true)
 
-  private def train(spark: SparkSession, dir: String,
-      dict: DataFrame): (DataFrame, Seq[(Int, String, Long)]) = {
+  private def train(dict: DataFrame): (DataFrame, Seq[(Int, String, Long)]) = {
     var syms = dict
     val merges = Seq.newBuilder[(Int, String, Long)]
     for (it <- 1 to BpeMerges) {
@@ -90,32 +89,15 @@ object Pipeline5 {
     (syms, merges.result())
   }
 
-  /** The trained merge table as a SESSION-SCOPED substrate (r16, the
-    * dedup-family IterCache discipline): it is the tokenizer MODEL —
-    * the one output-sized deterministic artifact both registered lanes
-    * consume. Before this cache each lane re-ran the full
-    * [[BpeMerges]]-round argmax loop the other had just run. ONLY the
-    * merge table is cached (a first cut also cached the merged dict,
-    * which made the first toucher pay a second materialization for a
-    * frame [[pipelineBpeApply]] can derive from the merges in one
-    * narrow pass — see its scaladoc). Evict-safe: rebuilds from the
-    * logical inputs. Nothing persists across JVMs.
-    */
-  private def bpeMergesCached(spark: SparkSession, dir: String,
-      dict: () => DataFrame): DataFrame = {
-    import spark.implicits._
-    IterCache.getOrBuild(s"bpe-merges:$dir") {
-      train(spark, dir, dict())._2.toDF("it", "pair", "cnt").persist()
-    }
-  }
-
   /** Train [[BpeMerges]] BPE merges over the document corpus; result is
     * the ordered merge table (it, pair, cnt) — cnt the weighted count of
     * the chosen pair at the time it was merged. Ties break
     * lexicographically on the pair so the argmax is deterministic.
     */
-  def pipelineBpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeMergesCached(spark, dir, () => dictOf(spark, dir)).orderBy(col("it"))
+  def pipelineBpeMerges(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    train(dictOf(spark, dir))._2.toDF("it", "pair", "cnt").orderBy(col("it"))
+  }
 
   /** Vocabulary size emitted by [[pipelineBpeApply]]. */
   val BpeVocabTop = 32
@@ -129,21 +111,9 @@ object Pipeline5 {
     * merge whose side was itself a merge output).
     */
   def pipelineBpeApply(spark: SparkSession, dir: String): DataFrame = {
-    // ENCODE = fold the trained merge list over the dict: the final
-    // merged dict is a pure function of (dict, ordered merges) — the
-    // training loop's syms IS dict through mergeStep(pair_1)…(pair_k) —
-    // so applying the CACHED model needs no argmax jobs at all. The
-    // collect is the broadcast-the-merge-table production shape:
-    // BpeMerges rows of bounded driver state.
-    // one dict build whether or not the model cache is warm (review
-    // r16): a cold-cache apply previously scanned + checkpointed the
-    // corpus dict twice — once inside train, once as the fold base
-    lazy val dict = dictOf(spark, dir)
-    val pairs = bpeMergesCached(spark, dir, () => dict).orderBy(col("it"))
-      .select(col("pair")).collect().map(_.getString(0))
-    val syms = pairs.foldLeft(dict) { (df, p) =>
-      df.select(mergeStep(col("sym"), p).as("sym"), col("n"))
-    }
+    // ENCODE = the training loop's merged dict: dict folded through
+    // mergeStep(pair_1)…(pair_k), one narrow pass per trained merge
+    val syms = train(dictOf(spark, dir))._1
     syms
       .select(explode(split(col("sym"), " ", -1)).as("token"), col("n"))
       .groupBy(col("token")).agg(sum(col("n")).as("cnt"))

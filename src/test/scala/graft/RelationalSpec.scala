@@ -63,6 +63,10 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
       fail(s"${failures.length} of ${lanes.length} lanes failed:\n" +
         lines.mkString("\n"), failures.head._2)
     }
+    // the cache rule (operators.LoopCache): a lane frees what it cached
+    // before it returns, so no lane's result outlives it in the session
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a lane left a cached frame in the session's cache manager")
   }
 
   test("q6 top-k per group: rn within group is 1..3 and prices non-increasing") {

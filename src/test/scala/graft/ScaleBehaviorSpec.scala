@@ -137,6 +137,32 @@ class ScaleBehaviorSpec extends AnyFunSuite with SparkTestBase {
     } finally cached.unpersist()
   }
 
+  test("LoopCache.withCached: the body reads the cache; it is freed on return and on throw") {
+    import org.apache.spark.storage.StorageLevel
+    def frame = Tables.lineitem(spark, sf0001)
+      .groupBy(col("l_returnflag"))
+      .count()
+    val plan = operators.LoopCache.withCached(frame) { cached =>
+      cached.count() // the loop's first action materialises the cache
+      // a freshly planned frame over the same logical plan (see above)
+      val again = frame
+      again.collect()
+      again.queryExecution.executedPlan.toString
+    }
+    assert(plan.contains("InMemoryTableScan"),
+      s"inside the body a fresh plan must scan the in-memory relation, got:\n$plan")
+    assert(frame.storageLevel === StorageLevel.NONE, "cache outlived the body")
+    val thrown = intercept[IllegalStateException] {
+      operators.LoopCache.withCached(frame) { cached =>
+        cached.count()
+        assert(frame.storageLevel !== StorageLevel.NONE)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(thrown.getMessage === "body failed")
+    assert(frame.storageLevel === StorageLevel.NONE, "cache outlived a failed body")
+  }
+
   test("AQE splits a skewed shuffle partition (skew=true in final SMJ)") {
     import spark.implicits._
     // 95% of rows share one key — the classic straggler shape

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.WordCount
 
@@ -8,14 +10,24 @@ import graft.operators.WordCount
   * exact reference tokenization semantics over
   * /root/reference/worker-fs/map-task-input.
   */
-class WordCountSpec extends AnyFunSuite with SparkTestBase {
+class WordCountSpec extends AnyFunSuite with SparkTestBase
+    with BeforeAndAfterAll {
+
+  private var cached: Option[DataFrame] = None
 
   // every test reads the corpus through `result`, so the guard sits in
   // its initializer: each test cancels where the corpus is absent
   lazy val result = {
     assumeReferenceCorpus()
-    WordCount.referenceJob(spark, SparkEntry.ReferenceCorpusDir).cache()
+    val df = WordCount.referenceJob(spark, SparkEntry.ReferenceCorpusDir).cache()
+    cached = Some(df)
+    df
   }
+
+  // the session is shared by every suite: free the cache, so a later
+  // suite starts with an empty cache manager
+  override def afterAll(): Unit =
+    try cached.foreach(_.unpersist()) finally super.afterAll()
 
   test("286 distinct words (golden)") {
     assert(result.count() === 286L)
