@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR (default sf0.1).
   *
@@ -412,7 +410,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // default 1 warm pass since round 13: at 262 lanes the median-of-3
     // methodology (right at 110 lanes) no longer fits the driver's
     // bench timeout — r12's driver run was killed at rc=124 with no
@@ -422,41 +419,15 @@ object Bench {
     // and the top regression flags are auto-adjudicated with isolated
     // extra passes at the end of the run (below). Pricing runs that
     // want the old median set SPARK_GRAFT_WARM_PASSES=3 explicitly.
-    val warmPasses = sys.env.get("SPARK_GRAFT_WARM_PASSES")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption.orElse {
-        System.err.println(
-          s"[bench] ignoring unparseable SPARK_GRAFT_WARM_PASSES='$s', using 1")
-        None
-      }).map(math.max(1, _)).getOrElse(1)
+    val warmPasses =
+      EnvKnob.positive("SPARK_GRAFT_WARM_PASSES", 1, Int.MaxValue).toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // optional comma-separated subset (prefix match with a trailing '*'),
     // e.g. SPARK_GRAFT_ONLY='stream_*' to time the streaming family in
     // isolation — used to adjudicate whether a cross-round delta is a
     // plan regression or machine-load noise from the other lanes
-    val onlyFilter = SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
-    val benchQueries = SparkEntry.queries.filter { case (n, _) => onlyFilter(n) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the default 100-entry codegen class cache thrashes under a
-      // 262-query workload: the r10 diag lane measured ~4,050 Janino
-      // compiles in EVERY pass, warm included — driver-thread time paid
-      // serially inside each query. 8192 holds the whole suite's
-      // generated classes (~4k), so warm passes compile ~nothing. The
-      // same sizing applies to any long-lived production driver running
-      // a wide query mix (static conf — must be set before the session
-      // exists; metaspace cost is a few KB per cached class).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // keep object aggregation hash-based at this suite's per-task
-      // group counts (see SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val benchQueries = SparkEntry.queries.filter { case (n, _) => SparkEntry.only(n) }
+    val spark = GraftSession()
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -471,9 +442,7 @@ object Bench {
     // happen even (especially) on a budget-exhausted run — r13 shipped
     // 54 un-adjudicated flags because the drill was disabled past 90%
     // budget, precisely when flags are least trustworthy.
-    val budgetS = sys.env.get("SPARK_GRAFT_TIME_BUDGET_S")
-      .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
-      .filter(_ > 0).getOrElse(1020.0)
+    val budgetS = EnvKnob.positiveDouble("SPARK_GRAFT_TIME_BUDGET_S", 1020.0)
     val adjudReserveS = math.min(60.0, 0.10 * budgetS)
     // RETRY RESERVE (r15, the round's headline fix): the min-of-2 retry
     // pass gets its own pre-carved slice, exactly like the adjudication
@@ -537,7 +506,7 @@ object Bench {
     // a legitimate no-prior (first run at this SF); a file that exists
     // but doesn't parse must FAIL the bench loudly — see parseBaseline.
     val baselinePath = s"bench_baseline.${new java.io.File(sfDir).getName}.json"
-    val subsetRun = sys.env.contains("SPARK_GRAFT_ONLY")
+    val subsetRun = SparkEntry.onlySpec.isDefined
     def readWarm(path: String): Map[String, Double] = {
       val p = java.nio.file.Paths.get(path)
       if (!java.nio.file.Files.exists(p)) Map.empty
@@ -578,7 +547,7 @@ object Bench {
     // a query error) and the lane prices later or keeps its prior.
     def pass(tag: String, names: Seq[String],
         errors: scala.collection.mutable.ListBuffer[String],
-        deadlineS: Double = Double.MaxValue,
+        deadlineS: Double,
         skipped: scala.collection.mutable.ListBuffer[String] = null,
         capped: scala.collection.mutable.ListBuffer[String] = null)
         : Map[String, Double] = names.flatMap { name =>

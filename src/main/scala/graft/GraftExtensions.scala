@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * graft function surface at build time:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *   // or: spark.sql.extensions=graft.GraftExtensions
+  *   builder.withExtensions(new GraftExtensions)
+  *   // or: spark.sql.extensions=graft.GraftExtensions (GraftSession's way)
   * }}}
   *
   * (The `VectorExpressions.register` path does the same for an

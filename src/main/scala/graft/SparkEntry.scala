@@ -30,6 +30,13 @@ object SparkEntry {
     */
   val ReferenceCorpusDir = "/root/reference/worker-fs/map-task-input"
 
+  /** The corpus lies outside this repository (FIXTURES.md §1). Where it
+    * is absent, `wordcount_reference` cannot run: the tests cancel what
+    * reads it and the registry smoke and PlanAudit skip the lane.
+    */
+  def referenceCorpusPresent: Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ReferenceCorpusDir))
+
   private val core: Seq[QueryDef] = Seq(
     QueryDef("q1_agg", Queries.q1PricingSummary _,
       """SELECT l_returnflag, l_linestatus,
@@ -111,20 +118,25 @@ object SparkEntry {
     * dataset — a 100 TB deployment sizes it to executor memory ÷ buffer
     * size, and past it the conservative sort fallback is exactly the
     * right behavior). Env-overridable so probes can restore the engine
-    * default. Defined once so Bench, Verify, PlanAudit and the tests
-    * price the same execution mode. Output-hash neutral: the only
-    * order-sensitive consumers of these aggregates are sort_array /
-    * explode / count shaped (audited), and the KLL estimate's
-    * insertion-order dependence never reaches an oracle (NOTES #17).
+    * default. [[GraftSession]] sets it on every session, so Bench,
+    * Verify, the tools and the tests price the same execution mode.
+    * Output-hash neutral: the only order-sensitive consumers of these
+    * aggregates are sort_array / explode / count shaped (audited), and
+    * the KLL estimate's insertion-order dependence never reaches an
+    * oracle (NOTES #17).
     */
   val ObjAggFallbackThreshold: String =
     EnvKnob.positive("SPARK_GRAFT_OBJ_AGG_FALLBACK", 65536, Int.MaxValue).toString
 
-  /** The SPARK_GRAFT_ONLY / --only subset spec — comma-separated names,
-    * trailing '*' = prefix match — defined ONCE so the same spec can
-    * never select different query sets in Verify, Bench, and PlanAudit
-    * (the adjudication workflow depends on them agreeing).
+  /** The `SPARK_GRAFT_ONLY` subset spec, read here once, so Verify,
+    * Bench, PlanAudit and ScaleProbe can never select different query
+    * sets (the adjudication workflow depends on them agreeing). Unset
+    * means every lane.
     */
+  val onlySpec: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")
+  val only: String => Boolean = onlyFilter(onlySpec)
+
+  /** A subset spec: comma-separated names, trailing '*' = prefix match. */
   def onlyFilter(spec: Option[String]): String => Boolean = spec match {
     case Some(s) =>
       val pats = s.split(",").map(_.trim).filter(_.nonEmpty)

@@ -1,31 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // hold the full suite's generated classes (see graft.Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // same execution mode as Bench (SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    // optional subset (SparkEntry.onlyFilter, shared with Bench): lets a
+    // optional subset (SparkEntry.only, shared with Bench): lets a
     // local iteration dump one new query in seconds instead of the full
     // registry; the driver sets no filter and always gets the full dump
-    val onlyFilter = SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
-    SparkEntry.queries.filter(kv => onlyFilter(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => SparkEntry.only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{QueryDef, Tables}
-import graft.functions.{TopKByScore, VectorExpressions}
 
 /** Round-9 analytics batch: the model-evaluation family — exact AUC by
   * tie-corrected rank-sum, a calibration/ECE reliability table, and a

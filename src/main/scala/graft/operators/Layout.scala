@@ -16,9 +16,6 @@ import graft.functions.BitInterleave
   */
 object Layout {
 
-  /** Z-value bucket count (top 5 bits of the 32-bit Morton key). */
-  private val ZBuckets = 32
-
   /** Z-order clustering diagnostics over (l_partkey, l_suppkey): each
     * key is first normalized to the full 16-bit domain by EXACT integer
     * scaling against its column max — `(key · 65535) div max` — so the

@@ -34,7 +34,6 @@ object Sketches3 {
     * aggregation and 512·log₂(n/512) longs of state.
     */
   def kllQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val cents = Tables.lineitem(spark, dir)
       .select(col("l_extendedprice").cast(DecimalType(12, 2)).*(100)
         .cast("long").as("v"))

@@ -45,10 +45,14 @@ object StreamingQueries {
   /** One micro-batch's progress snapshot for the scale probe: the
     * 100×-cliff shape of the streaming tier is STATE-STORE growth, not
     * wall time, so the probe reads rows/bytes per batch, not just the
-    * lane total.
+    * lane total. `phaseMs` is the batch's time split
+    * (`StreamingQueryProgress.durationMs`: queryPlanning, getBatch,
+    * addBatch, walCommit, commitOffsets, triggerExecution, ...), which
+    * says where inside a batch the time went.
     */
   final case class BatchProgress(batchId: Long, durationMs: Long,
-      rowsProcessed: Long, stateRows: Long, stateBytes: Long)
+      rowsProcessed: Long, stateRows: Long, stateBytes: Long,
+      phaseMs: Map[String, Long])
 
   /** Probe seam (ScaleProbe streaming sweep): when set, [[runToMemory]]
     * records every micro-batch's duration + state-operator totals from
@@ -56,14 +60,6 @@ object StreamingQueries {
     */
   @volatile private[graft] var captureProgress: Boolean = false
   @volatile private[graft] var lastRunProgress: Seq[BatchProgress] = Nil
-
-  /** Full-fidelity twin of [[captureProgress]] for the StreamDiag
-    * attribution tool: keeps each micro-batch's raw progress JSON
-    * (`durationMs` breakdown + state-operator commit times), which the
-    * compact [[BatchProgress]] rows deliberately drop.
-    */
-  @volatile private[graft] var captureProgressJson: Boolean = false
-  @volatile private[graft] var lastRunProgressJson: Seq[String] = Nil
 
   /** Create a temp checkpoint dir that is recursively deleted at JVM
     * exit. The statestore-introspection queries must OUTLIVE their
@@ -230,9 +226,6 @@ object StreamingQueries {
         } catch { case _: Throwable => () }
         lastMicroBatchPlan = bos.toString("UTF-8")
       }
-      if (captureProgressJson) {
-        lastRunProgressJson = q.recentProgress.toSeq.map(_.json)
-      }
       if (captureProgress) {
         lastRunProgress = q.recentProgress.toSeq.map { p =>
           val ops = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
@@ -244,8 +237,11 @@ object StreamingQueries {
               .map(_.longValue).getOrElse(0L)
             so.memoryUsedBytes + rocks
           }.sum
+          import scala.jdk.CollectionConverters._
+          val phaseMs = Option(p.durationMs).map(_.asScala.toMap).getOrElse(Map.empty)
+            .map { case (k, v) => k -> v.longValue }
           BatchProgress(p.batchId, p.batchDuration, p.numInputRows,
-            ops.map(_.numRowsTotal).sum, bytes)
+            ops.map(_.numRowsTotal).sum, bytes, phaseMs)
         }
       }
     } finally q.stop()

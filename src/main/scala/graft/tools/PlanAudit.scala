@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.streaming.StreamingQueries
@@ -29,31 +28,24 @@ import graft.streaming.StreamingQueries
   * shapes); every row is additionally checked for cart=0 and bnlj=0,
   * and every batch row for no cached (InMemoryTableScan) scan.
   * Any violation prints `ASSERT-FAIL` and the run exits nonzero, so a
-  * plan regression cannot produce a quietly-wrong PLANS.md.
+  * plan regression cannot produce a quietly-wrong PLANS.md. A lane that
+  * throws is recorded as `LANE-FAIL` and the audit goes on to the next
+  * lane; `wordcount_reference` is skipped where the reference corpus is
+  * absent, as in the registry smoke.
   *
-  * Run: sbt "runMain graft.tools.PlanAudit [sfDir] [--full] [--only=a,b]"
+  * Run: sbt "runMain graft.tools.PlanAudit [sfDir] [--full]"
+  * (`--full` prints each lane's final plan; `SPARK_GRAFT_ONLY` selects a
+  * subset, as in Verify and Bench).
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
-    // same spec syntax as SPARK_GRAFT_ONLY (comma list, trailing '*' =
-    // prefix) so a subset named here selects the identical query set in
-    // Verify and Bench
-    val only: String => Boolean =
-      graft.SparkEntry.onlyFilter(args.find(_.startsWith("--only="))
-        .map(_.stripPrefix("--only=")))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // hold the full suite's generated classes (see graft.Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores whatever SPARK_GRAFT_CPUS says: shuffle partitions = cores,
+    // and the rows (aqeRead, exchange reuse) depend on the partition
+    // count, so an audit on any machine compares byte for byte with
+    // PLANS.md
+    val spark = graft.GraftSession(cpus = 4)
 
     // shape assertions: name -> (label, metrics => ok). `ex` = exchanges
     // excluding broadcast+reused (true shuffles), split into `hx` (hash —
@@ -521,111 +513,127 @@ object PlanAudit {
       "text_bm25")
 
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(only)
+      .filter(graft.SparkEntry.only)
     val failures = scala.collection.mutable.ListBuffer.empty[String]
+    val laneFails = scala.collection.mutable.ListBuffer.empty[String]
+    var skipped = 0
 
     StreamingQueries.capturePlans = true
     names.foreach { name =>
-      val streaming = name.startsWith("stream_")
-      // cleared per query: plan capture failures are swallowed inside
-      // runToMemory, and auditing a STALE plan from the previous
-      // streaming query would silently misattribute its shape
-      if (streaming) StreamingQueries.lastMicroBatchPlan = ""
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      val (plan, finalTag) = if (streaming) {
-        // the query already ran (drained to the memory sink); audit the
-        // captured micro-batch plan, not the sink table's local scan
-        if (StreamingQueries.lastMicroBatchPlan.isEmpty)
-          failures += s"$name:no-microbatch-plan-captured"
-        (StreamingQueries.lastMicroBatchPlan, "stream")
-      } else {
-        val qe = df.queryExecution
-        // execute through THIS QueryExecution so AQE finalizes in place;
-        // df.write would build a separate QueryExecution and leave this
-        // one at its initial plan
-        qe.executedPlan.executeCollect()
-        val isFinal = qe.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.isFinalPlan
-          case _ => true // non-adaptive plans are what they are
+      // wordcount_reference reads the reference corpus, not `dir`; it
+      // lies outside this repository (FIXTURES.md §1)
+      if (name == "wordcount_reference" && !graft.SparkEntry.referenceCorpusPresent) {
+        println(s"SKIP $name (corpus absent at ${graft.SparkEntry.ReferenceCorpusDir})")
+        skipped += 1
+      } else try {
+        val streaming = name.startsWith("stream_")
+        // cleared per query: plan capture failures are swallowed inside
+        // runToMemory, and auditing a STALE plan from the previous
+        // streaming query would silently misattribute its shape
+        if (streaming) StreamingQueries.lastMicroBatchPlan = ""
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val (plan, finalTag) = if (streaming) {
+          // the query already ran (drained to the memory sink); audit the
+          // captured micro-batch plan, not the sink table's local scan
+          if (StreamingQueries.lastMicroBatchPlan.isEmpty)
+            failures += s"$name:no-microbatch-plan-captured"
+          (StreamingQueries.lastMicroBatchPlan, "stream")
+        } else {
+          val qe = df.queryExecution
+          // execute through THIS QueryExecution so AQE finalizes in place;
+          // df.write would build a separate QueryExecution and leave this
+          // one at its initial plan
+          qe.executedPlan.executeCollect()
+          val isFinal = qe.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.isFinalPlan
+            case _ => true // non-adaptive plans are what they are
+          }
+          (qe.executedPlan.toString.split("== Initial Plan ==")(0), isFinal.toString)
         }
-        (qe.executedPlan.toString.split("== Initial Plan ==")(0), isFinal.toString)
+        // A ReusedExchange node prints its reused child INLINE
+        // ("ReusedExchange [...], Exchange hashpartitioning(...)"), so
+        // counting raw plan text would tally the same physical exchange
+        // twice (probe-verified: a self-joined aggregate with ONE real
+        // shuffle counts hx=2). Truncate those lines to the bare node name
+        // before counting: `reused` still counts them, hx/ex/rx/bex only
+        // count exchanges that actually move data.
+        val counted = plan.replaceAll("ReusedExchange \\[[^\\]]*\\][^\\n]*", "ReusedExchange")
+        def count(s: String) = s.r.findAllIn(counted).length
+        // codegen spans print as "*(n)" operator prefixes in toString
+        // (the literal WholeStageCodegen node only appears in formatted
+        // explain); distinct span ids = number of fused pipelines
+        val codegenSpans = """\*\((\d+)\)""".r.findAllMatchIn(plan)
+          .map(_.group(1)).toSet.size
+        val m = Map(
+          "scans" -> count("Scan parquet"),
+          "cached" -> count("InMemoryTableScan"),
+          "bhj" -> count("BroadcastHashJoin"),
+          "smj" -> count("SortMergeJoin"),
+          "shj" -> count("ShuffledHashJoin"),
+          "bnlj" -> count("BroadcastNestedLoopJoin"),
+          "cart" -> count("CartesianProduct"),
+          // total Exchange nodes minus reused (historical metric), plus the
+          // broadcast/true-shuffle split the assertions need
+          "shuffles" -> count("(?<!Reused)Exchange"),
+          "bex" -> count("BroadcastExchange"),
+          "ex" -> count("(?<!Broadcast)(?<!Reused)Exchange"),
+          "hx" -> count("Exchange hashpartitioning"),
+          "rx" -> count("Exchange rangepartitioning"),
+          "reused" -> count("ReusedExchange"),
+          "aqeRead" -> count("AQEShuffleRead"),
+          "wholeStage" -> codegenSpans,
+          "takeOrdered" -> count("TakeOrderedAndProject"),
+          "wgl" -> count("WindowGroupLimit"),
+          // single-partition exchanges (a global Window funnels ALL rows
+          // through one task) and the window functions whose global forms
+          // the r9 rewrites removed — the q118/q120 assertions pin them
+          "spx" -> count("Exchange SinglePartition"),
+          // multi-distinct row multiplication — the q74/q74b cost split
+          "expand" -> count("\\bExpand\\b"),
+          "ntile" -> count("ntile\\("),
+          "rownum" -> count("row_number\\("),
+          "stateOps" -> count("StateStore|SessionWindowStateStore|StreamingDeduplicate|TransformWithState|FlatMapGroupsWithState|StreamingSymmetricHashJoin"))
+        println(s"== $name")
+        println(s"   final=$finalTag scans=${m("scans")} " +
+          s"pushedFilters=${plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []")} " +
+          s"bhj=${m("bhj")} smj=${m("smj")} " +
+          s"bnlj=${m("bnlj")} cart=${m("cart")} " +
+          s"shuffles=${m("shuffles")} ex=${m("ex")} hx=${m("hx")} rx=${m("rx")} bex=${m("bex")} reused=${m("reused")} " +
+          s"aqeRead=${m("aqeRead")} wholeStage=${m("wholeStage")} " +
+          s"takeOrdered=${m("takeOrdered")} wgl=${m("wgl")}" +
+          (if (streaming) s" stateOps=${m("stateOps")}" else ""))
+        val bnljCheck: (String, Map[String, Int] => Boolean) =
+          if (boundedBnlj.contains(name))
+            ("bounded-bnlj", mm => mm("cart") == 0 && mm("bnlj") <= 1)
+          else ("no-cartesian", mm => mm("cart") == 0 && mm("bnlj") == 0)
+        // the cache rule (operators.LoopCache): a lane frees what it
+        // cached before it returns, so its final plan never reads an
+        // in-memory relation — one would be a frame another lane left
+        val cacheCheck: Seq[(String, Map[String, Int] => Boolean)] =
+          if (streaming) Nil else Seq(("no-cached-scan", mm => mm("cached") == 0))
+        val checks = asserts.getOrElse(name, Nil) ++ cacheCheck :+ bnljCheck
+        checks.foreach { case (label, ok) =>
+          if (!ok(m)) {
+            println(s"   ASSERT-FAIL $label")
+            failures += s"$name:$label"
+          } else if (asserts.contains(name)) println(s"   assert-ok $label")
+        }
+        if (args.contains("--full")) println(plan)
+      } catch { case scala.util.control.NonFatal(e) =>
+        // one throwing lane must not hide the rows and asserts after it
+        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+          .getOrElse(e.getClass.getSimpleName)
+        println(s"LANE-FAIL $name: $msg")
+        laneFails += s"$name: $msg"
       }
-      // A ReusedExchange node prints its reused child INLINE
-      // ("ReusedExchange [...], Exchange hashpartitioning(...)"), so
-      // counting raw plan text would tally the same physical exchange
-      // twice (probe-verified: a self-joined aggregate with ONE real
-      // shuffle counts hx=2). Truncate those lines to the bare node name
-      // before counting: `reused` still counts them, hx/ex/rx/bex only
-      // count exchanges that actually move data.
-      val counted = plan.replaceAll("ReusedExchange \\[[^\\]]*\\][^\\n]*", "ReusedExchange")
-      def count(s: String) = s.r.findAllIn(counted).length
-      // codegen spans print as "*(n)" operator prefixes in toString
-      // (the literal WholeStageCodegen node only appears in formatted
-      // explain); distinct span ids = number of fused pipelines
-      val codegenSpans = """\*\((\d+)\)""".r.findAllMatchIn(plan)
-        .map(_.group(1)).toSet.size
-      val m = Map(
-        "scans" -> count("Scan parquet"),
-        "cached" -> count("InMemoryTableScan"),
-        "bhj" -> count("BroadcastHashJoin"),
-        "smj" -> count("SortMergeJoin"),
-        "shj" -> count("ShuffledHashJoin"),
-        "bnlj" -> count("BroadcastNestedLoopJoin"),
-        "cart" -> count("CartesianProduct"),
-        // total Exchange nodes minus reused (historical metric), plus the
-        // broadcast/true-shuffle split the assertions need
-        "shuffles" -> count("(?<!Reused)Exchange"),
-        "bex" -> count("BroadcastExchange"),
-        "ex" -> count("(?<!Broadcast)(?<!Reused)Exchange"),
-        "hx" -> count("Exchange hashpartitioning"),
-        "rx" -> count("Exchange rangepartitioning"),
-        "reused" -> count("ReusedExchange"),
-        "aqeRead" -> count("AQEShuffleRead"),
-        "wholeStage" -> codegenSpans,
-        "takeOrdered" -> count("TakeOrderedAndProject"),
-        "wgl" -> count("WindowGroupLimit"),
-        // single-partition exchanges (a global Window funnels ALL rows
-        // through one task) and the window functions whose global forms
-        // the r9 rewrites removed — the q118/q120 assertions pin them
-        "spx" -> count("Exchange SinglePartition"),
-        // multi-distinct row multiplication — the q74/q74b cost split
-        "expand" -> count("\\bExpand\\b"),
-        "ntile" -> count("ntile\\("),
-        "rownum" -> count("row_number\\("),
-        "stateOps" -> count("StateStore|SessionWindowStateStore|StreamingDeduplicate|TransformWithState|FlatMapGroupsWithState|StreamingSymmetricHashJoin"))
-      println(s"== $name")
-      println(s"   final=$finalTag scans=${m("scans")} " +
-        s"pushedFilters=${plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []")} " +
-        s"bhj=${m("bhj")} smj=${m("smj")} " +
-        s"bnlj=${m("bnlj")} cart=${m("cart")} " +
-        s"shuffles=${m("shuffles")} ex=${m("ex")} hx=${m("hx")} rx=${m("rx")} bex=${m("bex")} reused=${m("reused")} " +
-        s"aqeRead=${m("aqeRead")} wholeStage=${m("wholeStage")} " +
-        s"takeOrdered=${m("takeOrdered")} wgl=${m("wgl")}" +
-        (if (streaming) s" stateOps=${m("stateOps")}" else ""))
-      val bnljCheck: (String, Map[String, Int] => Boolean) =
-        if (boundedBnlj.contains(name))
-          ("bounded-bnlj", mm => mm("cart") == 0 && mm("bnlj") <= 1)
-        else ("no-cartesian", mm => mm("cart") == 0 && mm("bnlj") == 0)
-      // the cache rule (operators.LoopCache): a lane frees what it
-      // cached before it returns, so its final plan never reads an
-      // in-memory relation — one would be a frame another lane left
-      val cacheCheck: Seq[(String, Map[String, Int] => Boolean)] =
-        if (streaming) Nil else Seq(("no-cached-scan", mm => mm("cached") == 0))
-      val checks = asserts.getOrElse(name, Nil) ++ cacheCheck :+ bnljCheck
-      checks.foreach { case (label, ok) =>
-        if (!ok(m)) {
-          println(s"   ASSERT-FAIL $label")
-          failures += s"$name:$label"
-        } else if (asserts.contains(name)) println(s"   assert-ok $label")
-      }
-      if (args.contains("--full")) println(plan)
     }
     StreamingQueries.capturePlans = false
-    if (failures.nonEmpty) {
-      println(s"ASSERT-FAILURES: ${failures.mkString(", ")}")
-      spark.stop()
-      sys.exit(1)
-    } else println(s"ASSERT: all plan assertions passed (${names.length} queries)")
+    if (failures.nonEmpty) println(s"ASSERT-FAILURES: ${failures.mkString(", ")}")
+    if (laneFails.nonEmpty) println(s"LANE-FAILURES: ${laneFails.mkString("; ")}")
+    if (failures.isEmpty && laneFails.isEmpty) println(
+      s"ASSERT: all plan assertions passed (${names.length - skipped} queries" +
+        (if (skipped > 0) s", $skipped skipped)" else ")"))
     spark.stop()
+    if (failures.nonEmpty || laneFails.nonEmpty) sys.exit(1)
   }
 }

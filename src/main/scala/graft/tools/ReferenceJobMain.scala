@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.WordCount
 
 /** The reference's one job, end to end, as a runnable binary:
@@ -14,12 +13,7 @@ object ReferenceJobMain {
   def main(args: Array[String]): Unit = {
     val in = args.headOption.getOrElse(graft.SparkEntry.ReferenceCorpusDir)
     val out = args.lift(1).getOrElse("/tmp/graft_wordcount_out")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val result = WordCount.referenceJob(spark, in)
     WordCount.writePartitioned(result, out)
     val n = spark.read.csv(out).count()

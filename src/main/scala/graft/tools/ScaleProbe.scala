@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.SparkEntry
+import graft.{EnvKnob, GraftSession, SparkEntry}
 
 /** One-off scale validation: replicate the sf0.1 tables N× (default 10)
   * and time the repo's five most expensive plans at both volumes, so the
@@ -182,28 +182,12 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
+    val factor = EnvKnob.positive("SPARK_GRAFT_SCALE_FACTOR", 10, Int.MaxValue).toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_probe_${factor}x")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_SCALE_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // scaled-volume runs may override this per-volume via
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS (see the `time` helper); the
-      // session default stays = CPUS so base numbers remain comparable
-      // with every historical sweep
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // hold the full suite's generated classes (see graft.Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        graft.SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val passes = EnvKnob.positive("SPARK_GRAFT_SCALE_PASSES", 2, Int.MaxValue).toInt
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession(cpus)
 
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -211,29 +195,24 @@ object ScaleProbe {
       val s = xs.sorted; val n = s.length
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS applies ONLY to the SCALED volume:
-    // a deployment sizes shuffle partitions to data (at 100× a
-    // 32-partition hash aggregate OOMs — each task holds 1/32 of a
-    // 100×-volume build), while the base lane must keep the bench's 32
-    // so its numbers stay comparable with every historical sweep. The
-    // probed builders read numShufflePartitions at plan time, so the
-    // per-volume conf switch reaches their repartition calls too.
-    val scaledParts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    val baseParts = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS (default: one per core, as on the
+    // base volume) applies ONLY to the SCALED volume: a deployment sizes
+    // shuffle partitions to data (at 100× a 32-partition hash aggregate
+    // OOMs — each task holds 1/32 of a 100×-volume build), while the base
+    // lane keeps the bench's one-per-core setting. The probed builders
+    // read numShufflePartitions at plan time, so the per-volume conf
+    // switch reaches their repartition calls too.
+    val scaledParts =
+      EnvKnob.positive("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus, Int.MaxValue)
     // ONE conf-discipline seam for every lane (timed or instrumented):
     // the round-12 review found the set/restore copy-pasted into three
     // timers while the streaming capture runs missed it entirely —
     // metrics measured under a different conf than the wall times they
     // sit beside are attribution poison
     def withVolumeConf[A](dir: String)(body: => A): A = {
-      if (dir != baseDir)
-        scaledParts.foreach(p =>
-          spark.conf.set("spark.sql.shuffle.partitions", p))
+      if (dir != baseDir) spark.conf.set("spark.sql.shuffle.partitions", scaledParts)
       try body
-      finally {
-        if (dir != baseDir && scaledParts.nonEmpty)
-          spark.conf.set("spark.sql.shuffle.partitions", baseParts)
-      }
+      finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toLong)
     }
     def timeBody(run: () => Unit): Double = {
       run() // untimed cold: codegen + fixture builds
@@ -339,7 +318,8 @@ object ScaleProbe {
       // growth (per-key state in RocksDB for TWS/row-pattern, symmetric
       // join buffers bounded only by the watermark for the outer join),
       // so beside wall time the probe reads every micro-batch's
-      // duration + state rows/bytes from the progress events
+      // duration, its phase split (summed over batches) and state
+      // rows/bytes from the progress events
       // ([[graft.streaming.StreamingQueries.captureProgress]]). The
       // scaled events table grows keys AND events ×factor (key-shifted
       // replicas), which is the state-growth path — more keys, not
@@ -365,10 +345,14 @@ object ScaleProbe {
             val ps = graft.streaming.StreamingQueries.lastRunProgress
             if (ps.nonEmpty) {
               val durs = ps.map(_.durationMs.toDouble)
+              val phaseMs = ps.flatMap(_.phaseMs).groupMapReduce(_._1)(_._2)(_ + _)
+                .toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
+                .mkString("{", ",", "}")
               println(s"""{"q":"$q","stream":true,"vol":"$tag",""" +
                 s""""n_batches":${ps.length},""" +
                 f""""batch_ms_median":${median(durs)}%.1f,""" +
                 f""""batch_ms_max":${durs.max}%.1f,""" +
+                s""""phase_ms":$phaseMs,""" +
                 s""""rows_in":${ps.map(_.rowsProcessed).sum},""" +
                 s""""state_rows_max":${ps.map(_.stateRows).max},""" +
                 s""""state_bytes_max":${ps.map(_.stateBytes).max}}""")
@@ -405,10 +389,9 @@ object ScaleProbe {
 
     buildScaled(spark, baseDir, outDir, factor)
 
-    // SPARK_GRAFT_SCALE_ONLY: same comma/prefix spec as everywhere else
-    // — re-measure a subset without paying for the full sweep
-    val only = graft.SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_SCALE_ONLY"))
-    Queries.filter(only).foreach { q =>
+    // SPARK_GRAFT_ONLY re-measures a subset without paying for the full
+    // sweep
+    Queries.filter(SparkEntry.only).foreach { q =>
       val b = time(q, baseDir)
       val s = time(q, outDir)
       println(f"""{"q":"$q","base_warm":$b%.3f,"scaled_warm":$s%.3f,""" +

@@ -24,4 +24,18 @@ class EnvKnobSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
+
+  private def parseSeconds(raw: Option[String]): Double =
+    EnvKnob.parsePositiveDouble("SPARK_GRAFT_TIME_BUDGET_S", raw, 1020.0)
+
+  test("a seconds budget takes the default, a positive number, or throws") {
+    assert(parseSeconds(None) === 1020.0)
+    assert(parseSeconds(Some(" 90 ")) === 90.0)
+    assert(parseSeconds(Some("2.5")) === 2.5)
+    for (bad <- Seq("", "abc", "0", "-5", "NaN", "Infinity")) {
+      val e = intercept[IllegalArgumentException](parseSeconds(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_TIME_BUDGET_S"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Relational
 
@@ -35,7 +34,7 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     // wordcount_reference ignores the data dir and reads the reference
     // corpus, which lies outside this repository (FIXTURES.md §1)
     val lanes =
-      if (SparkTestBase.referenceCorpusPresent) SparkEntry.registry
+      if (SparkEntry.referenceCorpusPresent) SparkEntry.registry
       else {
         info("wordcount_reference not run: no reference corpus at " +
           SparkEntry.ReferenceCorpusDir)
@@ -123,7 +122,6 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     val got = Relational.q18AsofJoin(spark, sf0001).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size === expected.size)
-    val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss.SSSSSS")
     expected.foreach { case (id, ts) =>
       val want = if (ts == null) null
       else {

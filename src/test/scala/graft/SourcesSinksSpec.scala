@@ -239,4 +239,19 @@ class SourcesSinksSpec extends AnyFunSuite with SparkTestBase {
       SparkSession.setActiveSession(prev)
     }
   }
+
+  test("the shared test session has the settings Bench prices (GraftSession)") {
+    def conf(k: String) = spark.conf.get(k)
+    assert(conf("spark.sql.adaptive.enabled") === "true")
+    assert(conf("spark.sql.codegen.cache.maxEntries") === "8192")
+    assert(conf("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") ===
+      SparkEntry.ObjAggFallbackThreshold)
+    assert(conf("spark.sql.session.timeZone") === "UTC")
+    assert(conf("spark.sql.shuffle.partitions") === "4")
+    assert(spark.sparkContext.master === "local[4]")
+    // a graft SQL function resolves: GraftExtensions is installed
+    val mh = spark.sql("SELECT minhash_signature(array('a','b')) AS m")
+      .head().getSeq[Long](0)
+    assert(mh.length === 32)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession per suite (lazy, UTC, UI off). */
+/** One shared local SparkSession per suite, built by [[GraftSession]]. */
 trait SparkTestBase { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkTestBase.session
   val sf0001 = "/root/testdata/sf0.001"
@@ -14,38 +14,19 @@ trait SparkTestBase { self: AnyFunSuite =>
     * facts hold only for its exact bytes, so there is nothing to stand in.
     */
   def assumeReferenceCorpus(): Unit =
-    assume(SparkTestBase.referenceCorpusPresent,
+    assume(SparkEntry.referenceCorpusPresent,
       s"; reference corpus not found at ${SparkEntry.ReferenceCorpusDir}; " +
         "it lies outside this repository (FIXTURES.md §1)")
 }
 
 object SparkTestBase {
-  def referenceCorpusPresent: Boolean =
-    java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(SparkEntry.ReferenceCorpusDir))
-
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[4] measured BETTER than local[8] for suite wall: doubling
-      // executor threads tripled kernel time (sys 4m → 17m on the full
-      // suite — tiny-task scheduling churn), swamping any parallelism
-      // gain. The registry smoke instead overlaps jobs via futures on
-      // this 4-thread session (RelationalSpec 6m26s → 4m33s).
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // hold the full suite's generated classes (see graft.Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // same execution mode as Bench (SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        SparkEntry.ObjAggFallbackThreshold)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4] measured BETTER than local[8] for suite wall: doubling
+  // executor threads tripled kernel time (sys 4m → 17m on the full
+  // suite — tiny-task scheduling churn), swamping any parallelism
+  // gain. The registry smoke instead overlaps jobs via futures on
+  // this 4-thread session (RelationalSpec 6m26s → 4m33s).
+  lazy val session: SparkSession = GraftSession(cpus = 4, extra = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
