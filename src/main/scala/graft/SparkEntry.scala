@@ -56,7 +56,7 @@ object SparkEntry {
     QueryDef("wordcount_documents",
       (s, d) => WordCount.wordCount(Tables.documents(s, d), "text"),
       """SELECT word, count(*) AS cnt FROM (
-        |  SELECT lower(regexp_replace(unnest(string_split(text, ' ')), '[^\w]', '', 'g')) AS word
+        |  SELECT regexp_replace(lower(unnest(string_split(text, ' '))), '[^\w]', '', 'g') AS word
         |  FROM documents
         |) WHERE word <> '' GROUP BY word ORDER BY word""".stripMargin),
     // the reference corpus job itself is oracle-verified: DuckDB re-reads
@@ -65,7 +65,7 @@ object SparkEntry {
       (s, _) => WordCount.referenceJob(s, ReferenceCorpusDir),
       s"""SELECT word, count(*) AS cnt, upper(substring(word, 1, 1)) AS pkey
          |FROM (
-         |  SELECT lower(regexp_replace(unnest(string_split(content, ' ')), '[^\\w]', '', 'g')) AS word
+         |  SELECT regexp_replace(lower(unnest(string_split(content, ' '))), '[^\\w]', '', 'g') AS word
          |  FROM read_text('$ReferenceCorpusDir/*.txt')
          |) WHERE word <> '' GROUP BY word ORDER BY word""".stripMargin)
   )

@@ -161,10 +161,12 @@ object Pipeline2 {
       dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // the SAME frame feeds the driver-side Bloom build AND the broadcast
-    // verify side, so its scan+explode+distinct runs once for each
+    // verify side: checkpointed, so its scan+explode+distinct runs once
+    // (an eager job) and both consumers read the stored rows
     val evalShingles = docs.filter(col("doc_id") % 50 === 0)
       .select(explode(Dedup.shinglesPublic(col("text"))).as("sh"))
       .distinct()
+      .localCheckpoint()
     // bounded driver state: the filter bytes themselves (BloomBits/8).
     // NOTE this is an EAGER Spark job at DataFrame-construction time —
     // bench timings for this lane include the build, as a production

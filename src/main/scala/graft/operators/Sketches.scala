@@ -83,13 +83,13 @@ object Sketches {
   }
 
   /** Documents tokenized the corpus-standard way — the reference's own
-    * tokenize/normalize kernel ([[WordCount]]), so a change to the
-    * corpus tokenization propagates here instead of silently diverging.
+    * per-document kernel ([[WordCount.words]]: fold, strip, split), so a
+    * change to the corpus tokenization propagates here instead of
+    * silently diverging.
     */
   private[graft] def tokens(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(WordCount.tokenize(col("text")).as("raw"))
-      .select(WordCount.normalize(col("raw")).as("tok"))
+      .select(explode(WordCount.words(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
 
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
@@ -126,12 +126,15 @@ object Sketches {
   }
 
   /** Shared with the streaming twin (`stream_heavy_hitters`), whose
-    * result must equal the batch query's by the MG superset law.
+    * result must equal the batch query's by the MG superset law. Like
+    * the approx-top-k oracle below, it replays the reference normalizer
+    * in the reference's own order — lowercase, then strip `[^\w]` —
+    * which [[WordCount.words]] matches exactly.
     */
   private[graft] val HeavyHittersOracle: String =
     s"""WITH toks AS (
-       |  SELECT lower(regexp_replace(unnest(string_split(text, ' ')),
-       |    '[^\\w]', '', 'g')) AS tok
+       |  SELECT regexp_replace(lower(unnest(string_split(text, ' '))),
+       |    '[^\\w]', '', 'g') AS tok
        |  FROM documents),
        |clean AS (SELECT tok FROM toks WHERE tok <> ''),
        |total AS (SELECT count(*) AS n FROM clean)
@@ -163,8 +166,8 @@ object Sketches {
 
   private val ApproxTopKOracle: String =
     """WITH toks AS (
-      |  SELECT lower(regexp_replace(unnest(string_split(text, ' ')),
-      |    '[^\w]', '', 'g')) AS tok
+      |  SELECT regexp_replace(lower(unnest(string_split(text, ' '))),
+      |    '[^\w]', '', 'g') AS tok
       |  FROM documents),
       |clean AS (SELECT tok FROM toks WHERE tok <> '')
       |SELECT tok, count(*) AS est

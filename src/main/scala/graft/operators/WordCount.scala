@@ -12,10 +12,25 @@ import org.apache.spark.sql.functions._
   *     whitespace regex. Newlines/tabs stay inside tokens, so words
   *     adjacent across a line break merge after normalization (118 such
   *     merged tokens in the reference corpus).
-  *   - normalize = `toLowerCase` + delete `[^\w]` (keeps `[A-Za-z0-9_]`).
+  *   - normalize = `toLowerCase`, THEN delete `[^\w]` (keeps
+  *     `[A-Za-z0-9_]`). The order matters on exactly two code points:
+  *     U+0130 'İ' lowercases to `i` + U+0307 and KELVIN SIGN U+212A to
+  *     `k`, so the reference keeps them as `i` and `k`; a strip-first
+  *     normalizer would drop them.
   *   - empty tokens are dropped (the reference would CRASH on `"".head` in
   *     `partitionBy`; we guard instead — quirk 5).
   *   - partition key = first character of the word, uppercased.
+  *
+  * The map normalizes each DOCUMENT once ([[words]]): one `translate`
+  * folds case, one regex pass strips, then the single-space split. Only
+  * `[A-Za-z0-9_]` survives the strip, and the only code points whose
+  * lowercase leaves one of those behind are `A–Z`, U+0130 and U+212A, so
+  * folding exactly those before the strip equals the reference's
+  * lower-then-strip; the space is kept by the strip and is the only
+  * separator, so splitting after it yields the reference's tokens. No
+  * per-token regex, and no `lower`/`upper`: Spark 4.1's ICU case mapping
+  * initializes a table over every code point on its first call in a JVM
+  * (NOTES.md, 2026-10-19).
   *
   * Scale: one narrow tokenize stage (whole-stage codegen: Project +
   * Generate(explode)) feeding one hash-aggregate shuffle keyed on `word`.
@@ -26,23 +41,34 @@ import org.apache.spark.sql.functions._
   */
 object WordCount {
 
-  /** op #2 — single-space split of a whole document string. */
-  def tokenize(doc: Column): Column = explode(split(doc, " ", -1))
+  private val AsciiUpper = ('A' to 'Z').mkString
+  private val AsciiLower = ('a' to 'z').mkString
 
-  /** op #3 — `lower` + delete all non-word chars (Java `\w` = ASCII). */
-  def normalize(tok: Column): Column =
-    lower(regexp_replace(tok, "[^\\w]", ""))
+  /** Case fold applied before the strip: `A–Z`, U+0130 and U+212A to
+    * their reference lowercase (see the object doc).
+    */
+  private val FoldFrom = AsciiUpper + "\u0130\u212A"
+  private val FoldTo = AsciiLower + "ik"
 
-  /** op #4 — reference `partitionBy`: first char, uppercased. */
-  def partitionKey(word: Column): Column = upper(substring(word, 1, 1))
+  /** ops #2–#3 — a document's normalized tokens, empties included: fold,
+    * strip every non-word character but the space, split on `" "`.
+    */
+  def words(doc: Column): Column =
+    split(regexp_replace(translate(doc, FoldFrom, FoldTo), "[^\\w ]", ""),
+      " ", -1)
+
+  /** op #4 — reference `partitionBy`: first char, uppercased. The word
+    * is already `[a-z0-9_]`, so an ASCII fold is the whole rule.
+    */
+  def partitionKey(word: Column): Column =
+    translate(substring(word, 1, 1), AsciiLower, AsciiUpper)
 
   /** Core pipeline over any corpus exposed as a one-string-per-document
     * column. Returns `(word, cnt)` sorted by word for deterministic output.
     */
   def wordCount(docs: DataFrame, textCol: String): DataFrame =
     docs
-      .select(tokenize(col(textCol)).as("tok"))
-      .select(normalize(col("tok")).as("word"))
+      .select(explode(words(col(textCol))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))

@@ -1057,8 +1057,7 @@ object StreamingQueries {
     val q = DocumentsFileSource(dir, slices).stream(spark).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val mg = batch
-          .select(WordCount.tokenize(col("text")).as("raw"))
-          .select(WordCount.normalize(col("raw")).as("tok"))
+          .select(explode(WordCount.words(col("text"))).as("tok"))
           .filter(col("tok") =!= "")
           .as[String](Encoders.STRING)
           .select(new Sketches.MisraGriesMapAgg().toColumn.name("m"))

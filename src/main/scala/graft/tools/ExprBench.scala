@@ -6,7 +6,9 @@ import graft.functions.VectorExpressions
 
 /** Micro-benchmark: custom codegen expressions vs the semantically
   * identical built-in higher-order-function formulations (which Spark
-  * evaluates interpreted, per element). Medians of 3 runs after warmup.
+  * evaluates interpreted, per element), and the word-count map's
+  * per-document normalizer vs its per-token form. Medians of 3 runs
+  * after warmup.
   * Run: sbt "runMain graft.tools.ExprBench [sfDir]"
   */
 object ExprBench {
@@ -94,11 +96,23 @@ object ExprBench {
           i => concat_ws(" ", (0 until 8).map(j => element_at(toks, i + j)): _*)))
         .otherwise(array().cast("array<string>"))).as("w")))
 
+    // 6. word-count map: the per-token normalize (one regex Matcher and
+    //    one ICU lower per token) vs WordCount.words (one fold, one
+    //    strip per document); both drop the empty tokens
+    val wcToken = timeMedian(docs
+      .select(explode(split(col("text"), " ", -1)).as("tok"))
+      .select(lower(regexp_replace(col("tok"), "[^\\w]", "")).as("word"))
+      .filter(col("word") =!= ""))
+    val wcDoc = timeMedian(docs
+      .select(explode(graft.operators.WordCount.words(col("text"))).as("word"))
+      .filter(col("word") =!= ""))
+
     println(f"[exprbench] shingles: codegen=$shingleExpr%.2fs hof=$shingleHof%.2fs speedup=${shingleHof / shingleExpr}%.1fx")
     println(f"[exprbench] minhash32: codegen=$mhExpr%.2fs hof=$mhHof%.2fs speedup=${mhHof / mhExpr}%.1fx")
     println(f"[exprbench] cosine: codegen=$cosExpr%.2fs hof=$cosHof%.2fs speedup=${cosHof / cosExpr}%.1fx")
     println(f"[exprbench] int8quant: codegen=$quantExpr%.2fs hof=$quantHof%.2fs speedup=${quantHof / quantExpr}%.1fx")
     println(f"[exprbench] ngrams8: codegen=$ngramExpr%.2fs hof=$ngramHof%.2fs speedup=${ngramHof / ngramExpr}%.1fx")
+    println(f"[exprbench] wordcount-map: per-doc=$wcDoc%.2fs per-token=$wcToken%.2fs speedup=${wcToken / wcDoc}%.1fx")
     spark.stop()
   }
 }

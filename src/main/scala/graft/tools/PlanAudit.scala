@@ -402,10 +402,14 @@ object PlanAudit {
           m => m("bhj") >= 1 && m("smj") == 0)),
       // Bloom decontamination (r12): the broadcast exact-verify join is
       // the only join; the might_contain prefilter lives INSIDE the
-      // scan stage (no exchange of its own — spec-pinned via plan text)
+      // scan stage (no exchange of its own — spec-pinned via plan text).
+      // The eval shingles are checkpointed for the Bloom build, so the
+      // broadcast side reads them (scans=1: only the corpus side reads
+      // parquet; a second scan would be the eval side recomputed)
       "pipeline_contamination_bloom" -> Seq(
         ("broadcast-verify-no-smj",
-          m => m("bhj") >= 1 && m("smj") == 0)),
+          m => m("bhj") >= 1 && m("smj") == 0),
+        ("single-eval-scan", m => m("scans") == 1 && m("bex") == 1)),
       // snapshot diff (r12): the ONE lane where a sort-merge join is
       // the honest plan and asserted PRESENT — both sides corpus-sized
       // on the primary key, broadcast impossible by definition

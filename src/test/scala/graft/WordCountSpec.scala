@@ -79,4 +79,32 @@ class WordCountSpec extends AnyFunSuite with SparkTestBase
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
   }
+
+  // the two tests below read no corpus, so they run everywhere
+
+  test("the map normalizes once per document: no Lower/Upper, one strip under the Generate") {
+    import org.apache.spark.sql.catalyst.expressions.{Lower, RegExpReplace, Upper}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val plan = WordCount.wordCountPartitioned(
+      Tables.documents(spark, sf0001), "text").queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    assert(!exprs.exists(_.exists {
+      case _: Lower | _: Upper => true
+      case _ => false
+    }), s"case mapping left in the plan:\n$plan")
+    val gens = plan.collect { case g: Generate => g }
+    assert(gens.length === 1, s"one explode expected:\n$plan")
+    // the plan's only regex runs inside the generator's input: once per
+    // document, not once per token
+    assert(gens.head.generator.exists(_.isInstanceOf[RegExpReplace]))
+    assert(exprs.map(_.collect { case r: RegExpReplace => r }.length).sum === 1,
+      s"a regex outside the generator:\n$plan")
+  }
+
+  test("partitionKey upper-folds a letter and keeps a digit and '_'") {
+    import spark.implicits._
+    val keys = Seq("9lives", "_under", "apple", "zebra").toDF("word")
+      .select(WordCount.partitionKey(col("word"))).collect().map(_.getString(0))
+    assert(keys.toSeq === Seq("9", "_", "A", "Z"))
+  }
 }
