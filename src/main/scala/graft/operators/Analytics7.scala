@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Round-8 analytics batch: the dataset datasheet and multi-touch
   * attribution.
@@ -44,9 +45,9 @@ object Analytics7 {
     val docs = Tables.documents(spark, dir)
     val perDoc = docs.select(col("doc_id"), col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"),
-        size(filter(split(lower(col("text")), " ", -1), w => w =!= ""))
+        size(filter(CaseFold.tokens(col("text")), w => w =!= ""))
           .cast("long").as("n_toks"),
-        md5(lower(trim(col("text")))).as("digest"))
+        md5(CaseFold.lower(trim(col("text")))).as("digest"))
     val dupDocs = perDoc
       .withColumn("grp", count(lit(1))
         .over(Window.partitionBy(col("digest"))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.functions.VectorExpressions
+import graft.functions.{CaseFold, VectorExpressions}
 
 /** Deduplication family over `documents` — the training-data-pipeline
   * core. Four tiers:
@@ -34,7 +34,7 @@ object Dedup {
   private[graft] def shinglesPublic(text: Column): Column = shingles(text)
 
   private def shingles(text: Column): Column =
-    VectorExpressions.wordShingles3(split(lower(text), " ", -1))
+    VectorExpressions.wordShingles3(CaseFold.tokens(text))
 
   private def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /
@@ -43,7 +43,7 @@ object Dedup {
   /** Exact dedup: survivors + multiplicity per normalized-text digest. */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .groupBy(md5(lower(trim(col("text")))).as("h"))
+      .groupBy(md5(CaseFold.lower(trim(col("text")))).as("h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy(col("keep_id"))
 
@@ -191,7 +191,7 @@ object Dedup {
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     val sigs = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        VectorExpressions.simhash64(split(lower(col("text")), " ", -1)).as("sig"))
+        VectorExpressions.simhash64(CaseFold.tokens(col("text"))).as("sig"))
     val banded = sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band_idx"),
@@ -239,7 +239,7 @@ object Dedup {
   def dedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     val wins = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(
-        VectorExpressions.wordNgrams(split(lower(col("text")), " ", -1),
+        VectorExpressions.wordNgrams(CaseFold.tokens(col("text")),
           SpanTokens)).as("w"))
     // windows are distinct per doc, so a per-window row count IS its
     // document frequency; the window shuffle is reused by the join

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Round-10 dedup additions: the two corpus-hygiene tiers a web-scale
   * training pipeline runs BEFORE content-level dedup —
@@ -94,7 +95,7 @@ object Dedup2 {
     val hostPort = regexp_extract(loc, "^[^/]*", 0)
     val rawPath = loc.substr(length(hostPort) + lit(1), length(loc))
     val host = regexp_replace(
-      regexp_replace(lower(hostPort), ":(80|443)$", ""), "^www\\.", "")
+      regexp_replace(CaseFold.lower(hostPort), ":(80|443)$", ""), "^www\\.", "")
     val path = regexp_replace(rawPath, "/+$", "")
     val params = array_sort(filter(split(query, "&", -1),
       p => p =!= "" && !p.rlike("^(utm_[a-z]+|fbclid|gclid)=")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Composite training-data pipelines — the north-star use case, each as
   * ONE oracle-verified query chaining the operator families end to end.
@@ -12,7 +13,6 @@ import graft.{QueryDef, Tables}
   */
 object Pipeline {
 
-  private def toks(c: org.apache.spark.sql.Column) = split(lower(c), " ", -1)
   private def r4(c: org.apache.spark.sql.Column) = Tables.r4(c)
 
   /** Quality-filter pipeline: score every document (token count,
@@ -22,7 +22,7 @@ object Pipeline {
     * source and only top-k survive per partition.
     */
   def pipelineQualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val t = toks(col("text"))
+    val t = CaseFold.tokens(col("text"))
     val nToks = size(t)
     val stopRatio = size(filter(t, s => s.isInCollection(
       Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on"))))
@@ -48,12 +48,12 @@ object Pipeline {
     val docs = Tables.documents(spark, dir)
       .filter(col("lang").isin("en", "de", "fr"))
     val survivors = docs
-      .groupBy(md5(lower(trim(col("text")))).as("h"))
+      .groupBy(md5(CaseFold.lower(trim(col("text")))).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
     docs.join(survivors, Seq("doc_id"), "left_semi")
       .select(col("lang"), col("source"),
-        size(filter(toks(col("text")), s => s =!= "")).cast("long").as("n_toks"),
+        size(filter(CaseFold.tokens(col("text")), s => s =!= "")).cast("long").as("n_toks"),
         col("n_chars"))
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),

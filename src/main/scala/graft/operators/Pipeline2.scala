@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Second wave of training-data pipeline operators (round 2): sequence
   * packing, benchmark decontamination, PII-style redaction, and
@@ -13,7 +14,6 @@ import graft.{QueryDef, Tables}
   */
 object Pipeline2 {
 
-  private def toks(c: Column) = split(lower(c), " ", -1)
   private def r4(c: Column) = Tables.r4(c)
 
   /** Tokens per training bin (≈ a shard of packed sequences). */
@@ -36,7 +36,7 @@ object Pipeline2 {
     * exactly that), linear parallelism in the bucket count.
     */
   def pipelinePackSequences(spark: SparkSession, dir: String): DataFrame = {
-    val nToks = size(filter(toks(col("text")), s => s =!= "")).cast("long")
+    val nToks = size(filter(CaseFold.tokens(col("text")), s => s =!= "")).cast("long")
     packByBudget(Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), nToks.as("n_toks")))
   }
@@ -89,7 +89,7 @@ object Pipeline2 {
     * bucket-window shuffle.
     */
   def pipelineCorpusBuild(spark: SparkSession, dir: String): DataFrame = {
-    val t = filter(toks(col("text")), s => s =!= "")
+    val t = filter(CaseFold.tokens(col("text")), s => s =!= "")
     val nToks = size(t).cast("long")
     val stopHits = size(filter(t, s => s.isInCollection(
       Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on"))))
@@ -99,7 +99,7 @@ object Pipeline2 {
         nToks.as("n_toks"), stopHits.as("stop_hits"))
       .filter(col("n_toks") >= 20 && col("stop_hits") >= 1)
     val survivors = base
-      .groupBy(md5(lower(trim(col("text")))).as("h"))
+      .groupBy(md5(CaseFold.lower(trim(col("text")))).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
     packByBudget(base.join(survivors, Seq("doc_id"), "left_semi")
@@ -227,7 +227,8 @@ object Pipeline2 {
     */
   def textRepetition(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(filter(toks(col("text")), s => s =!= "")).as("tok"))
+      .select(col("doc_id"),
+        explode(filter(CaseFold.tokens(col("text")), s => s =!= "")).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_tokens"),

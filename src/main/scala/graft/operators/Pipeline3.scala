@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Third training-pipeline batch: the corpus-assembly primitives that
   * sit between "cleaned documents" and "training shards" — deterministic
@@ -15,8 +16,6 @@ import graft.{QueryDef, Tables}
   * builds auditable and resumable.
   */
 object Pipeline3 {
-
-  private def toks(c: Column) = split(lower(c), " ", -1)
 
   /** First 8 md5 hex digits of a salted doc id as a long — the shared
     * deterministic-hash idiom (pipeline_train_split uses the 1-byte
@@ -93,7 +92,7 @@ object Pipeline3 {
     */
   def pipelineDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
+      .select(col("doc_id"), md5(CaseFold.lower(trim(col("text")))).as("h"))
     val index = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       .select(col("h")).distinct()
     docs.filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -111,7 +110,7 @@ object Pipeline3 {
     */
   private def tokenStats(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+      .select(col("doc_id"), explode(CaseFold.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
@@ -191,7 +190,7 @@ object Pipeline3 {
     */
   def pipelineVocab(spark: SparkSession, dir: String): DataFrame = {
     val counts = Tables.documents(spark, dir)
-      .select(explode(toks(col("text"))).as("w"))
+      .select(explode(CaseFold.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("total"))
@@ -223,7 +222,7 @@ object Pipeline3 {
     */
   def pipelineLmScore(spark: SparkSession, dir: String): DataFrame = {
     val bi = Tables.documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), CaseFold.tokens(col("text")).as("t"))
       .select(col("doc_id"), explode(arrays_zip(
         slice(col("t"), lit(1), size(col("t")) - 1).as("w1"),
         slice(col("t"), lit(2), size(col("t")) - 1).as("w2"))).as("z"))

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Fourth training-pipeline batch: context-window chunking and corpus
   * term weighting — the two steps between "clean documents" and "model
@@ -15,8 +16,6 @@ import graft.{QueryDef, Tables}
   * to a 1000-executor corpus build without a new shuffle pattern.
   */
 object Pipeline4 {
-
-  private def toks(c: Column) = split(lower(c), " ", -1)
 
   /** Chunk window (tokens) and stride. W > S ⇒ consecutive chunks
     * overlap by W − S tokens, the standard long-document treatment so a
@@ -41,7 +40,7 @@ object Pipeline4 {
     * the scan.
     */
   def pipelineChunk(spark: SparkSession, dir: String): DataFrame = {
-    val t = toks(col("text"))
+    val t = CaseFold.tokens(col("text"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), t.as("t"))
       .select(col("doc_id"),
@@ -73,7 +72,7 @@ object Pipeline4 {
     */
   def textTfidf(spark: SparkSession, dir: String): DataFrame = {
     val tf = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+      .select(col("doc_id"), explode(CaseFold.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))

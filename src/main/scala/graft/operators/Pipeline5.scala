@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Fifth training-pipeline batch: BPE tokenizer TRAINING — learning the
   * merge table itself, the one tokenizer artifact earlier batches only
@@ -63,7 +64,7 @@ object Pipeline5 {
     */
   private def dictOf(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(split(lower(col("text")), " ", -1)).as("word"))
+      .select(explode(CaseFold.tokens(col("text"))).as("word"))
       .filter(col("word").rlike("^[a-z]+$") && length(col("word")) <= MaxWordLen)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .select(trim(regexp_replace(col("word"), "(.)", "$1 ")).as("sym"), col("n"))
@@ -143,7 +144,7 @@ object Pipeline5 {
     */
   def pipelineCurriculum(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(lower(col("text")), " ", -1)).as("w"))
+      .select(col("doc_id"), explode(CaseFold.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
       .groupBy(col("doc_id"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Round-8 training-corpus operators: leakage-safe splitting and
   * deterministic exact-k sampling.
@@ -131,7 +132,7 @@ object Pipeline6 {
     val docs = Tables.documents(spark, dir)
     val toks = docs
       .select(col("doc_id"),
-        explode(split(lower(col("text")), " ", -1)).as("w"))
+        explode(CaseFold.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w")).limit(CoverageVocabN)

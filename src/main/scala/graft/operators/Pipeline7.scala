@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Round-9 corpus-mixing operators: temperature-scaled mixture weights
   * and the deterministic repeat-factor upsampler that materializes
@@ -34,7 +35,7 @@ object Pipeline7 {
   private def stratumToks(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("lang"), col("source"),
-        size(filter(split(lower(col("text")), " ", -1), w => w =!= ""))
+        size(filter(CaseFold.tokens(col("text")), w => w =!= ""))
           .cast("long").as("n_toks"))
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_toks"))
@@ -172,7 +173,7 @@ object Pipeline7 {
     * replay; ties break on doc_id.
     */
   def preferencePairs(spark: SparkSession, dir: String): DataFrame = {
-    val t = split(lower(col("text")), " ", -1)
+    val t = CaseFold.tokens(col("text"))
     val nToks = size(t)
     val stopRatio = size(filter(t, s => s.isInCollection(
       Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on"))))

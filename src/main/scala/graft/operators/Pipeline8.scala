@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Pipeline tier 8: corpus GOVERNANCE — the operations a training-data
   * platform runs around the corpus rather than over it: right-to-be-
@@ -65,7 +66,7 @@ object Pipeline8 {
     val requests = docs
       .filter(pmod(col("doc_id"), lit(ForgetEvery)) === 0)
       .select(col("doc_id"), lit(1L).as("del"))
-    val nTok = size(split(lower(col("text")), " ", -1)).cast("long")
+    val nTok = size(CaseFold.tokens(col("text"))).cast("long")
     val purged = when(col("del").isNotNull, lit(true)).otherwise(lit(false))
     docs
       .select(col("doc_id"),

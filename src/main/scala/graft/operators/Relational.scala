@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Relational operator surface over the star schema (FIXTURES.md §2).
   *
@@ -141,7 +142,7 @@ object Relational {
   def q12StringFns(spark: SparkSession, dir: String): DataFrame =
     Tables.part(spark, dir)
       .select(col("p_partkey"),
-        upper(col("p_name")).as("uname"),
+        CaseFold.upper(col("p_name")).as("uname"),
         substring(col("p_type"), 1, 6).as("type6"),
         length(col("p_name")).cast("long").as("name_len"),
         concat_ws("#", col("p_brand"), col("p_type")).as("brand_type"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Third relational wave (round 2): queries that close remaining harness
   * gaps — starting with the supplier table, the one test table round 1
@@ -85,7 +86,7 @@ object Relational3 {
     val S = 8
     val events = Tables.events(spark, dir)
     val dim = events.select(col("event_type")).distinct()
-      .withColumn("type_tag", upper(substring(col("event_type"), 1, 3)))
+      .withColumn("type_tag", CaseFold.upper(substring(col("event_type"), 1, 3)))
     val dimSalted = dim.withColumn("salt",
       explode(array((0 until S).map(lit): _*)))
     events

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Text-analysis operators over `documents` — quality scoring, token
   * counting, fingerprinting, language ID. Everything except language ID
@@ -13,8 +14,6 @@ import graft.{QueryDef, Tables}
   */
 object TextAnalysis {
 
-  private def toks(c: Column): Column = split(lower(c), " ", -1)
-
   private def r4(c: Column): Column = Tables.r4(c)
 
   private val Stopwords =
@@ -24,7 +23,7 @@ object TextAnalysis {
     * stopword ratio, and a composite quality score.
     */
   def textStats(spark: SparkSession, dir: String): DataFrame = {
-    val t = toks(col("text"))
+    val t = CaseFold.tokens(col("text"))
     val nToks = size(t)
     val meanLen = aggregate(transform(t, s => length(s)), lit(0),
       (acc, x) => acc + x).cast("double") / nToks.cast("double")
@@ -84,11 +83,10 @@ object TextAnalysis {
   private val langidUdf = udf { text: String =>
     if (text == null || text.isEmpty) "und"
     else {
-      // Locale.ROOT: match Spark's locale-independent lower() (the SQL
-      // oracle replays this udf) — default-locale toLowerCase turns 'I'
-      // into dotless 'ı' on tr-TR JVMs and breaks stopword hits
-      val ts = text.toLowerCase(java.util.Locale.ROOT)
-        .split(" ", -1).filter(_.nonEmpty)
+      // the engine's root-locale fold, as in every tokenizer lane (the
+      // SQL oracle replays this udf); a default-locale fold turns 'I'
+      // into dotless 'ı' on a tr JVM and breaks stopword hits
+      val ts = CaseFold.lower(text).split(" ", -1).filter(_.nonEmpty)
       if (ts.isEmpty) "und"
       else {
         val scores = langStopwords.view.mapValues(sw => ts.count(sw)).toMap
@@ -105,7 +103,7 @@ object TextAnalysis {
   def textNgramProfile(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tris = Tables.documents(spark, dir)
-      .select(col("lang"), lower(col("text")).as("lt"), length(col("text")).as("n"))
+      .select(col("lang"), CaseFold.lower(col("text")).as("lt"), length(col("text")).as("n"))
       .filter(col("n") >= 3)
       .select(col("lang"), explode(sequence(lit(1), col("n") - 2)).as("i"), col("lt"))
       .select(col("lang"), col("lt").substr(col("i"), lit(3)).as("tri"))

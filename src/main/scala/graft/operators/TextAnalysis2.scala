@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Second text-analysis batch: co-occurrence statistics for embedding /
   * language-model feature pipelines — skip-gram context pairs (the
@@ -28,7 +29,7 @@ object TextAnalysis2 {
     */
   private def toks(c: Column): Column =
     filter(
-      transform(slice(split(lower(c), " ", -1), 1, MaxToks),
+      transform(slice(CaseFold.tokens(c), 1, MaxToks),
         t => regexp_replace(t, "[^\\w]", "")),
       t => t =!= "")
 
@@ -158,7 +159,7 @@ object TextAnalysis2 {
     * contract artifact).
     */
   def readability(spark: SparkSession, dir: String): DataFrame = {
-    val words = filter(split(lower(col("text")), " ", -1), w => w =!= "")
+    val words = filter(CaseFold.tokens(col("text")), w => w =!= "")
     val nw = size(words)
     val ns = greatest(lit(1), regexp_count(col("text"), lit("[.!?]+")))
     val syl = aggregate(

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Fifth text batch: STATISTICAL-LM QUALITY FILTERING as a PRODUCTION
   * GATE — the registered-twin complement of `pipeline_lm_score`
@@ -61,18 +62,17 @@ object TextAnalysis5 {
     */
   private[graft] val FlagMicroNats = 3430000L
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), " ", -1), w => w =!= "")
-
   /** Successor stream: one row per token, `a`, with the next token of
-    * the same document, `b` — null after a document's last token. A
+    * the same document, `b` — null after a document's last token. Tokens
+    * are [[graft.functions.CaseFold.tokens]] minus the empties: the fold
+    * never reaches Spark's `lower` or its one-time title-case table. A
     * document without tokens keeps one all-null row (posexplode_outer),
     * so the scoring lane still gives it a verdict. Adjacent pairs come
     * from the array already in the row: no self-join, no shuffle.
     */
   private def successors(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), filter(CaseFold.tokens(col("text")), w => w =!= "").as("t"))
       .select(col("doc_id"), col("t"), posexplode_outer(col("t")).as(Seq("i", "a")))
       .select(col("doc_id"), col("a"), get(col("t"), col("i") + 1).as("b"))
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.CaseFold
 
 /** Text tier 6: subword TOKENIZER APPLY — the greedy longest-match
   * (WordPiece-style) segmenter, the family member BPE train/apply
@@ -67,7 +68,7 @@ object TextAnalysis6 {
     */
   def textWordpiece(spark: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(spark, dir)
-      .select(explode(split(lower(col("text")), " ", -1)).as("w0"))
+      .select(explode(CaseFold.tokens(col("text"))).as("w0"))
       .select(regexp_replace(col("w0"), "[^a-z]", "").as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
@@ -129,7 +130,7 @@ object TextAnalysis6 {
   def textTokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(spark, dir)
       .select(col("source"),
-        explode(split(lower(col("text")), " ", -1)).as("w0"))
+        explode(CaseFold.tokens(col("text"))).as("w0"))
       .select(col("source"), regexp_replace(col("w0"), "[^a-z]", "").as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("cnt"))
@@ -252,7 +253,7 @@ object TextAnalysis6 {
     */
   def textUnigramLm(spark: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(spark, dir)
-      .select(explode(split(lower(col("text")), " ", -1)).as("w0"))
+      .select(explode(CaseFold.tokens(col("text"))).as("w0"))
       .select(regexp_replace(col("w0"), "[^a-z]", "").as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))

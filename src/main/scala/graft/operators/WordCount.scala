@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   * folding exactly those before the strip equals the reference's
   * lower-then-strip; the space is kept by the strip and is the only
   * separator, so splitting after it yields the reference's tokens. No
-  * per-token regex, and no `lower`/`upper`: Spark 4.1's ICU case mapping
-  * initializes a table over every code point on its first call in a JVM
-  * (NOTES.md, 2026-10-19).
+  * per-token regex and no full case fold: the other lanes fold through
+  * [[graft.functions.CaseFold]], and this map needs only the three folds
+  * above (NOTES.md, 2026-10-19).
   *
   * Scale: one narrow tokenize stage (whole-stage codegen: Project +
   * Generate(explode)) feeding one hash-aggregate shuffle keyed on `word`.

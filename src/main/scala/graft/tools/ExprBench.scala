@@ -2,13 +2,14 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExpressions
+import graft.functions.{CaseFold, VectorExpressions}
 
 /** Micro-benchmark: custom codegen expressions vs the semantically
   * identical built-in higher-order-function formulations (which Spark
-  * evaluates interpreted, per element), and the word-count map's
-  * per-document normalizer vs its per-token form. Medians of 3 runs
-  * after warmup.
+  * evaluates interpreted, per element), the word-count map's
+  * per-document normalizer vs its per-token form, and the case-fold
+  * kernel vs Spark's `lower`. Medians of 3 runs after warmup (row 7: of
+  * 6 runs, alternating which side goes first).
   * Run: sbt "runMain graft.tools.ExprBench [sfDir]"
   */
 object ExprBench {
@@ -16,20 +17,33 @@ object ExprBench {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession()
 
+    def once(df: DataFrame): Double = {
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+
     def timeMedian(df: => DataFrame): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+      once(df) // warmup
+      median(Seq.fill(3)(once(df)))
+    }
+
+    /** Both warmed up, then 6 pairs, each side first in 3 of them: the
+      * first run of a pair measured up to 30% slower, whichever it was.
+      */
+    def timeAlternating(a: DataFrame, b: DataFrame): (Double, Double) = {
+      once(a); once(b)
+      val runs = (0 until 6).map { i =>
+        if (i % 2 == 0) { val ta = once(a); (ta, once(b)) }
+        else { val tb = once(b); (once(a), tb) }
       }
-      once() // warmup
-      val runs = Seq.fill(3)(once()).sorted
-      runs(1)
+      (median(runs.map(_._1)), median(runs.map(_._2)))
     }
 
     val docs = graft.Tables.documents(spark, dir)
     val emb = graft.Tables.embeddings(spark, dir)
-    val toks = split(lower(col("text")), " ", -1)
+    val toks = CaseFold.tokens(col("text"))
 
     // 1. shingles: codegen kernel vs transform+concat_ws+array_distinct
     val shingleExpr = timeMedian(
@@ -97,15 +111,29 @@ object ExprBench {
         .otherwise(array().cast("array<string>"))).as("w")))
 
     // 6. word-count map: the per-token normalize (one regex Matcher and
-    //    one ICU lower per token) vs WordCount.words (one fold, one
+    //    one case fold per token) vs WordCount.words (one fold, one
     //    strip per document); both drop the empty tokens
     val wcToken = timeMedian(docs
       .select(explode(split(col("text"), " ", -1)).as("tok"))
-      .select(lower(regexp_replace(col("tok"), "[^\\w]", "")).as("word"))
+      .select(CaseFold.lower(regexp_replace(col("tok"), "[^\\w]", "")).as("word"))
       .filter(col("word") =!= ""))
     val wcDoc = timeMedian(docs
       .select(explode(graft.operators.WordCount.words(col("text"))).as("word"))
       .filter(col("word") =!= ""))
+
+    // 7. case fold, warm: the kernel vs Spark's `lower`, every document
+    //    20 times over so the fold outweighs the scan. The warmup pays
+    //    each one-time init (Spark's title-case table), so the medians
+    //    price only the per-row fold. The corpus is all ASCII; an
+    //    appended 'É' sends every row down ICU's path
+    val docs20 = docs.select(col("text"), explode(sequence(lit(1), lit(20))).as("rep"))
+    val nonAscii = concat(col("text"), lit("\u00C9"))
+    val (foldKernel, foldSpark) = timeAlternating(
+      docs20.select(CaseFold.lower(col("text")).as("lt")),
+      docs20.select(lower(col("text")).as("lt")))
+    val (foldKernelIcu, foldSparkIcu) = timeAlternating(
+      docs20.select(CaseFold.lower(nonAscii).as("lt")),
+      docs20.select(lower(nonAscii).as("lt")))
 
     println(f"[exprbench] shingles: codegen=$shingleExpr%.2fs hof=$shingleHof%.2fs speedup=${shingleHof / shingleExpr}%.1fx")
     println(f"[exprbench] minhash32: codegen=$mhExpr%.2fs hof=$mhHof%.2fs speedup=${mhHof / mhExpr}%.1fx")
@@ -113,6 +141,8 @@ object ExprBench {
     println(f"[exprbench] int8quant: codegen=$quantExpr%.2fs hof=$quantHof%.2fs speedup=${quantHof / quantExpr}%.1fx")
     println(f"[exprbench] ngrams8: codegen=$ngramExpr%.2fs hof=$ngramHof%.2fs speedup=${ngramHof / ngramExpr}%.1fx")
     println(f"[exprbench] wordcount-map: per-doc=$wcDoc%.2fs per-token=$wcToken%.2fs speedup=${wcToken / wcDoc}%.1fx")
+    println(f"[exprbench] lower-ascii: kernel=$foldKernel%.2fs spark=$foldSpark%.2fs ratio=${foldSpark / foldKernel}%.2fx")
+    println(f"[exprbench] lower-icu: kernel=$foldKernelIcu%.2fs spark=$foldSparkIcu%.2fs ratio=${foldSparkIcu / foldKernelIcu}%.2fx")
     spark.stop()
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+import org.apache.spark.sql.catalyst.util.CollationFactory
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Relational
 
@@ -16,6 +19,11 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     assert(df.columns.contains("sum_qty"))
   }
 
+  private def utf8Binary(t: DataType): Boolean = t match {
+    case st: StringType => st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID
+    case _ => false
+  }
+
   test("every registered query executes and is non-degenerate at sf0.001") {
     def check(q: QueryDef): Unit = {
       val df = q.fn(spark, sf0001)
@@ -23,6 +31,16 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
       assert(n >= 0, s"${q.name} failed")
       assert(df.columns.nonEmpty, s"${q.name} has no columns")
       withClue(s"${q.name}: ") { assert(df.columns.distinct.length === df.columns.length) }
+      // a UTF8_BINARY string folds through graft.functions.CaseFold: the
+      // first Spark Lower/Upper in a JVM builds ICU's title-case table
+      // (a collated string keeps Spark's fold: it needs the collation)
+      val sparkFolds = df.queryExecution.optimizedPlan
+        .collectWithSubqueries { case p => p.expressions }.flatten
+        .flatMap(_.collect {
+          case f @ (_: Lower | _: Upper) if utf8Binary(f.children.head.dataType) => f
+        })
+      assert(sparkFolds.isEmpty,
+        s"${q.name} folds a UTF8_BINARY string with Spark's $sparkFolds")
     }
     // batch lanes run CONCURRENTLY on the shared session (a SparkSession
     // schedules concurrent jobs safely; the only session-conf writes on
