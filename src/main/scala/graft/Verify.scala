@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,24 +8,28 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
+    // wordcount_reference reads the reference corpus, not `sfDir`, and
+    // it lies outside this repository (FIXTURES.md §1): where it is
+    // absent the lane is skipped by name, and skipped.json says why
+    val skipped =
+      if (SparkEntry.referenceCorpusPresent) Map.empty[String, String]
+      else Map("wordcount_reference" -> "reference corpus absent")
     // optional subset (SparkEntry.only, shared with Bench): lets a
     // local iteration dump one new query in seconds instead of the full
     // registry; the driver sets no filter and always gets the full dump
     SparkEntry.queries.filter(kv => SparkEntry.only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // stale output from a previous run is removed: a regressed or
+      // skipped query must surface as missing or skipped, not silently
+      // pass on old results
+      val out = new java.io.File(s"$outDir/$name")
+      if (skipped.contains(name)) {
+        System.err.println(
+          s"[verify] SKIP $name (${skipped(name)} at ${SparkEntry.ReferenceCorpusDir})")
+        FileUtils.deleteQuietly(out)
+      } else try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.getPath)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // remove any stale output from a previous run: a regressed query
-        // must surface as missing, not silently pass on old results
-        val dir = new java.io.File(s"$outDir/$name")
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete(); ()
-          }
-          rm(dir)
-        }
+        FileUtils.deleteQuietly(out)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,6 +55,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__DUMP__", dumpRoot))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/skipped.json"),
+      skipped.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -125,17 +125,15 @@ object Analytics {
   def pagerank(spark: SparkSession, dir: String): DataFrame =
     withEdgesAndDeg(spark, dir) { (edges, deg) =>
       val n = deg.count() // bounded driver state: one long (node count)
-
-      var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
-      for (_ <- 1 to Iters) {
-        rank = edges
+      val rank0 = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
+      val (rank, _) = Rounds.iterate(rank0, Iters) { rank =>
+        edges
           .join(rank.withColumnRenamed("node", "u"), Seq("u"))
           .join(deg, Seq("u"))
           .groupBy(col("v"))
           .agg((lit(0.15 / n) + lit(Damping) * sum(col("rank") / col("deg")))
             .as("rank"))
           .select(col("v").as("node"), col("rank"))
-          .localCheckpoint()
       }
       rank
         .select(col("node"), (floor(col("rank") * 1e8 + 0.5) / 1e8).as("rank_r8"))
@@ -150,40 +148,32 @@ object Analytics {
     * ranks). The REGISTERED q78 stays the fixed-[[Iters]]-round form
     * because its DuckDB oracle unrolls exactly those rounds — an
     * ε-stopped run is only boundedly close to it, and the hash gate
-    * needs bit-equality. The convergence probe is one scalar action per
-    * round (join on node + global L1 sum) — bounded driver state, and
-    * the per-round `localCheckpoint` keeps lineage flat exactly as in
-    * the fixed loop. Measured round count (pinned deterministic by
-    * AnalyticsSpec "pagerank converges"): sf0.001 reaches eps=1e-9 in
-    * 10 rounds, comfortably under the 20-round ceiling.
+    * needs bit-equality. Both loops run through [[Rounds]]: here the L1
+    * delta is observed on each round's checkpoint, so a round is ONE
+    * action, and bounded driver state (one double per round). No thread
+    * of this loop waits on the metric: [[Rounds]] waits a bounded time
+    * and, if the metric never arrives, recomputes the same sum exactly
+    * from the checkpointed round. Measured round count (pinned
+    * deterministic by AnalyticsSpec "pagerank converges"): sf0.001
+    * reaches eps=1e-9 in 10 rounds, comfortably under the 20-round
+    * ceiling.
     */
   private[graft] def pagerankConverged(spark: SparkSession, dir: String,
       eps: Double = 1e-9, maxIters: Int = 20): (DataFrame, Int) =
     withEdgesAndDeg(spark, dir) { (edges, deg) =>
       val n = deg.count()
-      var rank = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
+      val rank0 = deg.select(col("u").as("node"), lit(1.0 / n).as("rank"))
         .localCheckpoint()
-      var rounds = 0
-      var delta = Double.MaxValue
-      while (rounds < maxIters && delta >= eps) {
-        // r16 (guide §1.2 — fewer passes): the previous rank rides INTO
-        // the round aggregate as a null-padded SELF-MESSAGE per node
-        // (contrib NULL so sum() ignores it — the rank sum sees the
-        // identical message multiset as before; prev via max() over the
-        // one self row, no float addition). Node set unchanged:
-        // every rank node has out-edges (rank0 = deg keys; the graph is
-        // materialized both directions), so each appears as a target too.
-        // The L1-delta itself rides on the checkpoint action as an
-        // observe() metric (CollectMetrics accumulator — localCheckpoint
-        // goes through withAction, so the listener fires; pinned by
-        // ObservationCheckpointSpec), collapsing each round to ONE job:
-        // the per-round delta job this replaces measured ~0.1 s × 7
-        // rounds of the lane's 4.6 s steady-state. The sum's partition
-        // accumulation order can differ from the old aggregate job's by
-        // ~1e-17 — nine orders under the smallest observed
-        // delta-to-boundary gap (the ConvergedEps non-exposure analysis
-        // below), and the drill's A/B reproduced identical rows and
-        // round count at sf0.1.
+      val l1 = Rounds.Probe(sum(abs(col("rank") - col("prev"))), _ < eps)
+      val (last, rounds) = Rounds.iterate(rank0, maxIters, Some(l1)) { prev =>
+        val rank = prev.select(col("node"), col("rank"))
+        // the previous rank rides INTO the round aggregate as a
+        // null-padded SELF-MESSAGE per node (contrib NULL so sum()
+        // ignores it — the rank sum sees the identical message multiset;
+        // prev via max() over the one self row, no float addition). Node
+        // set unchanged: every rank node has out-edges (rank0 = deg keys;
+        // the graph is materialized both directions), so each appears as
+        // a target too.
         val msgs = edges
           .join(rank.withColumnRenamed("node", "u"), Seq("u"))
           .join(deg, Seq("u"))
@@ -191,42 +181,13 @@ object Analytics {
             lit(null).cast("double").as("prev"))
         val self = rank.select(col("node").as("v"),
           lit(null).cast("double").as("contrib"), col("rank").as("prev"))
-        val obs = org.apache.spark.sql.Observation()
-        val next = msgs.union(self)
+        msgs.union(self)
           .groupBy(col("v"))
           .agg((lit(0.15 / n) + lit(Damping) * sum(col("contrib"))).as("rank"),
             max(col("prev")).as("prev"))
           .select(col("v").as("node"), col("rank"), col("prev"))
-          .observe(obs, sum(abs(col("rank") - col("prev"))).as("d"))
-          .localCheckpoint()
-        // The checkpoint action above is synchronous, so the metric is
-        // normally available immediately; the bounded wait + explicit
-        // fallback job guard against a listener that never fires (a hang
-        // here would strand the bench watchdog, which can only cancel
-        // JOBS — the r14 lesson). The fallback recomputes the identical
-        // sum from the checkpointed frame.
-        // A dedicated DAEMON thread, not the global ExecutionContext
-        // (review r16): on timeout the abandoned obs.get blocks forever,
-        // and a parked global-pool thread per timed-out round would
-        // starve the shared pool — a parked daemon thread leaks nothing
-        // the JVM cares about and cannot delay exit.
-        delta = {
-          val got = new java.util.concurrent.atomic.AtomicReference[Option[Double]](None)
-          val t = new Thread(() =>
-            try got.set(Some(obs.get("d").asInstanceOf[Double]))
-            catch { case _: Throwable => () })
-          t.setDaemon(true)
-          t.start()
-          t.join(120000L)
-          got.get().getOrElse {
-            next.agg(sum(abs(col("rank") - col("prev"))).as("d"))
-              .head.getDouble(0)
-          }
-        }
-        rank = next.select(col("node"), col("rank"))
-        rounds += 1
       }
-      (rank
+      (last
         .select(col("node"), (floor(col("rank") * 1e8 + 0.5) / 1e8).as("rank_r8"))
         .orderBy(col("node")), rounds)
     }

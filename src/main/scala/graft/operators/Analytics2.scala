@@ -58,42 +58,33 @@ object Analytics2 {
 
   /** K-hop reachability (BFS, 3 hops) from a deterministic seed set
     * over the part co-purchase graph: every node labeled with its
-    * minimum hop distance ≤ 3. Frontier-at-a-time BFS — each hop is
-    * one join frontier⋈edges + one `except` against the visited set,
-    * with the frontier `localCheckpoint`ed per hop (NOTES.md #10:
-    * iterative lineage must be truncated). The visited set stays
-    * distributed; nothing is collected. The oracle unrolls the same
-    * three frontiers as CTEs with EXCEPT (never NOT IN — NOTES.md #12).
+    * minimum hop distance ≤ 3. Each [[Rounds]] round holds every node
+    * reached so far, `fresh` marking the frontier, and is one join
+    * frontier⋈edges + one anti-join against the reached set. The probe
+    * counts fresh rows: an empty frontier makes every later one empty,
+    * so stopping there changes nothing (the oracle's full unroll agrees
+    * by the same argument), and at sparse-seed scale it stops BFS
+    * paying for hops past exhaustion. Nothing is collected. The oracle
+    * unrolls the same three frontiers as CTEs with EXCEPT (never NOT IN
+    * — NOTES.md #12).
     */
   def kHopReach(spark: SparkSession, dir: String): DataFrame =
     LoopCache.withCached(Analytics.coPurchaseEdges(spark, dir)) { edges =>
-      var frontier = edges.select(col("u").as("node")).distinct()
+      val seed = edges.select(col("u").as("node")).distinct()
         .filter(col("node") % SeedMod === 0)
+        .select(col("node"), lit(0).as("hops"), lit(true).as("fresh"))
         .localCheckpoint()
-      var visited = frontier
-      var out = frontier.withColumn("hops", lit(0))
-      for (h <- 1 to 3) {
-        // convergence guard, provably output-preserving: an empty frontier
-        // makes every later frontier empty (each is a join against it), so
-        // skipping the remaining hops changes nothing — the oracle's full
-        // 3-hop unroll agrees by the same argument. The probe is a take(1)
-        // over the CHECKPOINTED frontier: cheap here, and at sparse-seed
-        // production scale it is what stops BFS paying for hops past
-        // exhaustion.
-        if (!frontier.isEmpty) {
-          frontier = edges.join(frontier.withColumnRenamed("node", "u"), Seq("u"))
-            .select(col("v").as("node")).distinct()
-            .except(visited)
-            .localCheckpoint()
-          // r16: visited is a UNION of already-checkpointed frontiers —
-          // lineage stays flat without its own checkpoint, so the
-          // per-hop materialization job it used to pay is gone (the
-          // next hop's except() reads the same checkpointed pieces)
-          visited = visited.union(frontier)
-          out = out.union(frontier.withColumn("hops", lit(h)))
-        }
+      val (reached, _) = Rounds.iterate(seed, 3, Some(Rounds.fixpoint(col("fresh")))) {
+        reached =>
+          val frontier = reached.filter(col("fresh"))
+            .select(col("node").as("u"), col("hops"))
+          val next = edges.join(frontier, Seq("u"))
+            .select(col("v").as("node"), (col("hops") + 1).as("hops")).distinct()
+            .join(reached, Seq("node"), "left_anti")
+          reached.select(col("node"), col("hops"), lit(false).as("fresh"))
+            .union(next.withColumn("fresh", lit(true)))
       }
-      out.orderBy(col("node"))
+      reached.select(col("node"), col("hops")).orderBy(col("node"))
     }
 
   private val KHopOracle: String =

@@ -124,15 +124,14 @@ object Analytics5 {
     LoopCache.withCached(edges) { ew =>
       // checkpoint the seed too: it derives from ew, and the relaxation
       // join would otherwise be an ambiguous self-join
-      var dist = ew.agg(min(col("u")).as("node"))
+      val seed = ew.agg(min(col("u")).as("node"))
         .withColumn("dist", lit(0))
         .localCheckpoint()
-      for (_ <- 1 to SsspHops) {
+      val (dist, _) = Rounds.iterate(seed, SsspHops) { dist =>
         val step = dist.as("d").join(ew.as("e"), col("d.node") === col("e.u"))
           .select(col("e.v").as("node"), (col("d.dist") + col("e.w")).as("dist"))
-        dist = dist.union(step)
+        dist.union(step)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint()
       }
       dist.orderBy(col("node"))
     }
@@ -185,23 +184,12 @@ object Analytics5 {
       .repartition(np, col("u"))
       .sortWithinPartitions(col("u"))
     LoopCache.withCached(edges) { e =>
-      var labels = e.select(col("u").as("node")).distinct()
+      val labels0 = e.select(col("u").as("node")).distinct()
         .withColumn("label", col("node"))
         .localCheckpoint()
-      var converged = false
-      var round = 0
-      while (!converged && round < 12) {
-        val prop = labels.join(e, labels("node") === e("u"))
-          .select(e("v").as("node"), col("label"))
-        val next = labels.union(prop)
-          .groupBy(col("node")).agg(min(col("label")).as("label"))
-          .localCheckpoint()
-        // bounded driver state: one count — rows whose label still moves
-        converged = next.as("n").join(labels.as("p"),
-          col("n.node") === col("p.node") && col("n.label") =!= col("p.label"))
-          .isEmpty
-        labels = next
-        round += 1
+      val (labels, _) = Rounds.iterate(labels0, 12, Some(Rounds.LabelsSettled)) {
+        labels => Rounds.minLabelRound(labels,
+          labels.join(e, labels("node") === e("u")).select(e("v").as("node"), col("label")))
       }
       labels.select(col("node"), col("label").as("component"))
         .orderBy(col("node"))
@@ -337,23 +325,13 @@ object Analytics5 {
     val e = pairs.union(pairs.select(col("name_b").as("name_a"),
         col("name_a").as("name_b")))
       .localCheckpoint()
-    var labels = names.select(col("p_name").as("node"), col("cnt"))
+    val labels0 = names.select(col("p_name").as("node"), col("cnt"))
       .withColumn("label", col("node"))
       .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < 12) {
-      val prop = labels.join(e, labels("node") === e("name_a"))
-        .select(e("name_b").as("node"), col("label"))
-      val next = labels.select(col("node"), col("label")).union(prop)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .join(names.select(col("p_name").as("node"), col("cnt")), "node")
-        .localCheckpoint()
-      converged = next.as("n").join(labels.as("p"),
-        col("n.node") === col("p.node") && col("n.label") =!= col("p.label"))
-        .isEmpty
-      labels = next
-      round += 1
+    val (labels, _) = Rounds.iterate(labels0, 12, Some(Rounds.LabelsSettled)) {
+      labels => Rounds.minLabelRound(labels,
+        labels.join(e, labels("node") === e("name_a")).select(e("name_b").as("node"), col("label")),
+        "cnt")
     }
     labels.groupBy(col("label").as("canonical"))
       .agg(count(lit(1)).as("n_members"), sum(col("cnt")).as("total_cnt"))

@@ -315,48 +315,25 @@ object Dedup {
   private def clustersOf(pairs0: DataFrame): DataFrame = {
     val pairs = pairs0.select(col("id_a"), col("id_b"))
     // undirected edges both ways, CHECKPOINTED: the propagation loop
-    // joins edges every round, and without truncation each round — and
-    // the convergence probe's action — would re-execute the entire LSH
-    // candidate pipeline (shingle → minhash → band → join → verify)
-    // from the scan up. One materialization instead of an
-    // iteration-count multiplier on the most expensive subplan here.
+    // joins edges every round, and without truncation each round would
+    // re-execute the entire LSH candidate pipeline (shingle → minhash →
+    // band → join → verify) from the scan up. One materialization
+    // instead of an iteration-count multiplier on the most expensive
+    // subplan here.
     val edges = pairs
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .distinct()
       .localCheckpoint()
-    var labels = edges.select(col("id_a").as("doc_id")).distinct()
-      .withColumn("rep", col("doc_id"))
-    // convergence probe: min-label propagation only ever DECREASES a
-    // doc's rep, so the label sum is strictly monotone — unchanged sum
-    // ⟺ fixpoint. One aggregation per round instead of a self-join
-    // (decimal sum: a long sum of 10^12-scale ids would overflow, and
-    // ANSI mode makes that a runtime error, not a wrap)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      // sum over an EMPTY labels frame (no candidate pairs at all) is
-      // null — normalize so the probe converges instead of NPEing
-      Option(df.agg(sum(col("rep").cast("decimal(20,0)")).as("s"))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 10) {
-      val viaEdges = edges
-        .join(labels, edges("id_b") === labels("doc_id"))
-        .select(edges("id_a").as("doc_id"), col("rep"))
-      // localCheckpoint truncates lineage: each round references the
-      // previous labels twice (union + convergence probe), so without
-      // it the recomputed plan doubles per iteration
-      val next = labels.select(col("doc_id"), col("rep"))
-        .union(viaEdges)
-        .groupBy(col("doc_id")).agg(min(col("rep")).as("rep"))
-        .localCheckpoint()
-      val nextSum = labelSum(next)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      iter += 1
+    // no candidate pairs leaves these labels empty: the first round's
+    // probe then counts 0 moved labels and the loop stops there
+    val labels0 = edges.select(col("id_a").as("node")).distinct()
+      .withColumn("label", col("node"))
+    val (labels, _) = Rounds.iterate(labels0, 10, Some(Rounds.LabelsSettled)) {
+      labels => Rounds.minLabelRound(labels,
+        edges.join(labels, edges("id_b") === labels("node"))
+          .select(edges("id_a").as("node"), col("label")))
     }
-    labels.select(col("doc_id"), col("rep").as("cluster_rep"))
+    labels.select(col("node").as("doc_id"), col("label").as("cluster_rep"))
   }
 
   /** The end product of the dedup family: the corpus with BOTH exact

@@ -416,9 +416,11 @@ object Multimodal {
   /** WAV fixture synthesis for the audio CONTENT tier: a genuine
     * RIFF/WAVE container whose data chunk is REAL 16-bit PCM — sample i
     * carries ((i·37 + 13·doc_id) mod 2001) − 1000 as a little-endian
-    * int16, the formula the oracle replays. Mono, 16 kHz.
+    * int16, the formula the oracle replays. Mono, 16 kHz. Shared with
+    * [[Multimodal2.mmAudioResample]], so the resample lane decodes the
+    * same containers the rest of the audio family does.
     */
-  private val wavPcmContainer = udf { (docId: Long, bytes: Array[Byte]) =>
+  private[operators] val wavPcmContainer = udf { (docId: Long, bytes: Array[Byte]) =>
     val n = bytes.length
     val ns = 64 + n % 193
     val pcm = new Array[Byte](ns * 2)

@@ -171,25 +171,6 @@ object Multimodal2 {
   /** Decimation factor for [[mmAudioResample]]. */
   val ResampleBy = 4
 
-  /** The mm_wav_samples/mm_audio_features PCM synthesis, shared so the
-    * resample lane decodes the SAME containers the rest of the audio
-    * family does: ns = 64 + n % 193 int16 samples, v(i) =
-    * (i·37 + doc_id·13) mod 2001 − 1000, 16 kHz mono.
-    */
-  private val wavPcmContainer = udf { (docId: Long, bytes: Array[Byte]) =>
-    val n = bytes.length
-    val ns = 64 + n % 193
-    val pcm = new Array[Byte](ns * 2)
-    var i = 0
-    while (i < ns) {
-      val v = ((i * 37 + docId * 13) % 2001 - 1000).toInt
-      pcm(2 * i) = (v & 0xff).toByte
-      pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-      i += 1
-    }
-    graft.functions.MediaHeaders.wavWrap(pcm, 16000, 1, 16)
-  }
-
   /** AUDIO resampling on decoded content — the transform member of the
     * audio family (decode: mm_wav_samples, features: mm_audio_features):
     * boxcar-average-and-decimate by [[ResampleBy]] — output sample j is
@@ -206,7 +187,7 @@ object Multimodal2 {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        wavPcmContainer(col("doc_id"), col("text").cast("binary")).as("payload"))
+        Multimodal.wavPcmContainer(col("doc_id"), col("text").cast("binary")).as("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, payload) =>

@@ -13,8 +13,6 @@ import graft.functions.CaseFold
   */
 object Pipeline {
 
-  private def r4(c: org.apache.spark.sql.Column) = Tables.r4(c)
-
   /** Quality-filter pipeline: score every document (token count,
     * stopword ratio), rank within source, keep the top 10 per source.
     * Plan: one scan → scoring projection (codegen) → one window shuffle
@@ -32,7 +30,7 @@ object Pipeline {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("q").desc, col("doc_id"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("lang"), r4(score).as("q"))
+      .select(col("doc_id"), col("source"), col("lang"), Tables.r4(score).as("q"))
       .withColumn("rank_in_source", row_number().over(w).cast("long"))
       .filter(col("rank_in_source") <= 10)
       .orderBy(col("source"), col("rank_in_source"))

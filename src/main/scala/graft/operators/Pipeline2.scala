@@ -14,8 +14,6 @@ import graft.functions.CaseFold
   */
 object Pipeline2 {
 
-  private def r4(c: Column) = Tables.r4(c)
-
   /** Tokens per training bin (≈ a shard of packed sequences). */
   val PackBudget = 2048
 
@@ -235,8 +233,8 @@ object Pipeline2 {
         count(lit(1)).as("n_distinct"),
         max(col("c")).as("top_freq"))
       .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-        r4(col("n_distinct").cast("double") / col("n_tokens").cast("double")).as("ttr"),
-        r4(col("top_freq").cast("double") / col("n_tokens").cast("double")).as("top_token_ratio"))
+        Tables.r4(col("n_distinct").cast("double") / col("n_tokens").cast("double")).as("ttr"),
+        Tables.r4(col("top_freq").cast("double") / col("n_tokens").cast("double")).as("top_token_ratio"))
       .orderBy(col("doc_id"))
 
   /** Shared by the exact lane and its Bloom-prefiltered flip. */

@@ -222,10 +222,11 @@ object Relational6 {
         sum(Tables.money(col("l_extendedprice"))).cast("double").as("sum_price"),
         date_format(max(col("l_shipdate")), "yyyy-MM-dd").as("max_ship"))
       .write.format("noop").mode("overwrite").save()
-    val m = obs.get
-    Seq((m("n_rows").asInstanceOf[Long],
-        m("sum_price").asInstanceOf[Double],
-        m("max_ship").asInstanceOf[String]))
+    // a bounded wait that throws Rounds.ObservationTimeout: no fallback
+    // value, since this lane exists to show observe() loses nothing
+    val m = Rounds.awaitObserved(obs)
+    Seq((m.getAs[Long]("n_rows"), m.getAs[Double]("sum_price"),
+        m.getAs[String]("max_ship")))
       .toDF("n_rows", "sum_price", "max_ship")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.CaseFold
@@ -13,8 +13,6 @@ import graft.functions.CaseFold
   * argmax), with determinism pinned by test.
   */
 object TextAnalysis {
-
-  private def r4(c: Column): Column = Tables.r4(c)
 
   private val Stopwords =
     Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -36,10 +34,10 @@ object TextAnalysis {
     Tables.documents(spark, dir).select(
       col("doc_id"),
       nToks.cast("long").as("n_tokens"),
-      r4(meanLen).as("mean_token_len"),
-      r4(punctRatio).as("punct_ratio"),
-      r4(stopRatio).as("stopword_ratio"),
-      r4(least(nToks.cast("double") / 100.0, lit(1.0)) * 0.3
+      Tables.r4(meanLen).as("mean_token_len"),
+      Tables.r4(punctRatio).as("punct_ratio"),
+      Tables.r4(stopRatio).as("stopword_ratio"),
+      Tables.r4(least(nToks.cast("double") / 100.0, lit(1.0)) * 0.3
         + (lit(1.0) - punctRatio) * 0.4
         + least(stopRatio * 5.0, lit(1.0)) * 0.3).as("quality_score"))
       .orderBy(col("doc_id"))

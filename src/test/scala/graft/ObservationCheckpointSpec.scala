@@ -8,12 +8,13 @@ import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the engine contract the r16 pagerank-converged delta probe
-  * rides on: `observe()` metrics ARE collected by the action that
-  * `localCheckpoint()` runs internally (Dataset.checkpoint goes through
-  * withAction, which fires the QueryExecutionListener that feeds
-  * Observation). If a Spark upgrade ever broke this, pagerankConverged
-  * would silently fall back to its explicit per-round delta job — this
+/** Pins the engine contract every probed round of
+  * [[graft.operators.Rounds]] rides on: `observe()` metrics ARE
+  * collected by the action that `localCheckpoint()` runs internally
+  * (Dataset.checkpoint goes through withAction, which fires the
+  * QueryExecutionListener that feeds Observation). If a Spark upgrade
+  * ever broke this, every probed round would wait out
+  * `Rounds.ObserveWait` and then fall back to its exact probe job — this
   * spec turns that silent perf regression into a loud test failure.
   */
 class ObservationCheckpointSpec extends AnyFunSuite with SparkTestBase {
