@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -41,106 +43,105 @@ final case class FileEventSource(dir: String,
   }
 }
 
-/** Rate-limited multi-batch replay: `events.parquet` split once into
-  * `slices` contiguous event-time slices — separate parquet files with
-  * strictly increasing modification times under `target/stream_replay`
-  * — and streamed with `maxFilesPerTrigger=1`, so every trigger
-  * processes exactly one slice, arriving in event-time order like a
-  * drained broker backlog. This is what makes watermark advancement
-  * REAL across a replay: the single-file replay is one micro-batch
-  * whose watermark never moves while data flows, so append-mode
-  * windowed aggregation emits nothing and the micro-batch floor is
-  * invisible to the bench. The slice build is one-time setup cost
-  * (idempotent via a `_READY` marker), NOT part of any measured plan.
+/** A sliced replay fixture: the rows of one table split once into
+  * parquet files, one per slice id, under `base`, and streamed with
+  * `maxFilesPerTrigger=1`, so every trigger processes exactly one slice.
+  * `sliceOf` is the slicing rule, a column that evaluates to a slice id
+  * in `ids`. Each slice file gets a fixed modification time that grows
+  * with its id; oldest-first is the FileStreamSource default
+  * (latestFirst=false), so slices replay in id order. The build is
+  * one-time setup cost, NOT part of any measured plan: a `_READY`
+  * marker records the (length, mtime) fingerprint of the `source`
+  * file, so a testdata REGEN (same path, new bytes) rebuilds the slices
+  * instead of silently replaying stale data — that exact staleness bit
+  * 35 queries in round 5. Slices are written from `rows`, so a table
+  * loader that normalizes (µs TimestampType `ts` via
+  * [[graft.Tables.events]]) leaves the stream needing no adapter.
   */
-final case class MultiBatchFileSource(dir: String, slices: Int = 4)
-    extends EventSource {
+private final class Replay(base: String, source: String,
+    rows: SparkSession => DataFrame, sliceOf: Column, ids: Seq[Int],
+    fileName: Int => String) {
+
   def stream(spark: SparkSession): DataFrame = {
-    val replayDir = MultiBatchFileSource.prepare(spark, dir, slices)
-    // slices are written ALREADY normalized (µs TimestampType ts), so the
-    // stream schema comes from the slices themselves and needs no adapter
-    val schema = spark.read.parquet(s"$replayDir/slice-01.parquet").schema
+    val dir = prepare(spark)
+    val schema = spark.read.parquet(s"$dir/${fileName(ids.head)}").schema
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
-      // oldest-modification-time-first is the FileStreamSource default
-      // (latestFirst=false), so slices replay in event-time order
-      .parquet(s"$replayDir/slice-*.parquet")
+      .parquet(s"$dir/slice-*.parquet")
+  }
+
+  /** Build the slices unless the marker records the current source,
+    * and return the fixture's path.
+    */
+  def prepare(spark: SparkSession): String = Replay.lock.synchronized {
+    val dir = new java.io.File(base)
+    val marker = new java.io.File(dir, "_READY")
+    val src = new java.io.File(source)
+    val fp = s"${src.length}:${src.lastModified}"
+    val fresh = marker.exists() &&
+      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
+    if (!fresh) {
+      FileUtils.deleteDirectory(dir)
+      dir.mkdirs()
+      val sliced = rows(spark).withColumn("_slice", sliceOf).cache()
+      try ids.foreach { i =>
+        val tmp = new java.io.File(dir, s"_tmp-$i")
+        sliced.filter(col("_slice") === i).drop("_slice")
+          .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+        val part = tmp.listFiles()
+          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+          .getOrElse(sys.error(s"no parquet part written for slice $i of $base"))
+        val dest = new java.io.File(dir, fileName(i))
+        java.nio.file.Files.move(part.toPath, dest.toPath)
+        // fixed, strictly increasing mtimes pin the replay order
+        dest.setLastModified(1000000000000L + i * 60000L)
+        FileUtils.deleteDirectory(tmp)
+      } finally { sliced.unpersist(); () }
+      java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8"))
+    }
+    dir.getPath
   }
 }
 
-object MultiBatchFileSource {
+private object Replay {
   private val lock = new Object
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
+  /** `dir` made safe to use as a directory-name component. */
+  def safe(dir: String): String = dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  private[streaming] def rmTreePublic(f: java.io.File): Unit = rmTree(f)
+  /** `slice-01.parquet`, `slice-02.parquet`, … */
+  def twoDigit(i: Int): String = f"slice-$i%02d.parquet"
+}
 
-  /** (length, mtime) fingerprint of the source `events.parquet` — stored
-    * in the fixture's `_READY` marker so a testdata REGEN (same path, new
-    * bytes) invalidates the cached slices instead of silently replaying
-    * stale data. That exact staleness bit 35 queries in round 5.
-    */
-  private[streaming] def fingerprint(path: String): String = {
-    val f = new java.io.File(path)
-    s"${f.length}:${f.lastModified}"
-  }
+/** Rate-limited multi-batch replay: `events.parquet` split once into
+  * `slices` contiguous event-time slices under `target/stream_replay`,
+  * one per trigger, arriving in event-time order like a drained broker
+  * backlog. This is what makes watermark advancement REAL across a
+  * replay: the single-file replay is one micro-batch whose watermark
+  * never moves while data flows, so append-mode windowed aggregation
+  * emits nothing and the micro-batch floor is invisible to the bench.
+  * The slicing is ntile over (ts, event_id) — a global sort, but a
+  * one-time fixture build; at broker scale the "slices" are what the
+  * broker already provides as time-ordered log segments.
+  */
+final case class MultiBatchFileSource(dir: String, slices: Int = 4)
+    extends EventSource {
+  def stream(spark: SparkSession): DataFrame =
+    MultiBatchFileSource.replay(dir, slices).stream(spark)
+}
 
-  /** True iff the marker exists and records the CURRENT source bytes. */
-  private[streaming] def fresh(marker: java.io.File, fp: String): Boolean =
-    marker.exists() && {
-      val recorded = new String(
-        java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-      recorded == fp
-    }
+object MultiBatchFileSource {
+  private def replay(dir: String, n: Int): Replay =
+    new Replay(s"target/stream_replay/${Replay.safe(dir)}-$n",
+      s"$dir/events.parquet", graft.Tables.events(_, dir),
+      ntile(n).over(Window.orderBy(col("ts"), col("event_id"))),
+      1 to n, Replay.twoDigit)
 
-  private[streaming] def writeMarker(marker: java.io.File, fp: String): Unit = {
-    java.nio.file.Files.write(marker.toPath, fp.getBytes("UTF-8")); ()
-  }
-
-  /** Build (once per (dir, slices, source-fingerprint)) the sliced replay
-    * directory and return its path. The slicing is ntile over
-    * (ts, event_id) — a global sort, but a ONE-TIME setup of a test
-    * replay fixture, never a per-query cost; at broker scale the
-    * "slices" are what the broker already provides as time-ordered log
-    * segments. Slices are written in the NORMALIZED events schema
-    * (µs TimestampType ts via [[graft.Tables.events]]), so downstream
-    * plans never see the physical encoding of the source file.
+  /** Build (once per (dir, slices, source fingerprint)) the sliced
+    * replay directory and return its path.
     */
   private[graft] def prepare(spark: SparkSession, dir: String, n: Int): String =
-    lock.synchronized {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = new java.io.File(s"target/stream_replay/$safe-$n")
-      val marker = new java.io.File(base, "_READY")
-      val fp = fingerprint(s"$dir/events.parquet")
-      if (!fresh(marker, fp)) {
-        if (base.exists()) rmTree(base)
-        base.mkdirs()
-        val raw = graft.Tables.events(spark, dir)
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("event_id"))
-        val sliced = raw.withColumn("_slice", ntile(n).over(w)).cache()
-        try {
-          (1 to n).foreach { i =>
-            val tmp = new java.io.File(base, s"_tmp-$i")
-            sliced.filter(col("_slice") === i).drop("_slice")
-              .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-            val part = tmp.listFiles()
-              .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-              .getOrElse(sys.error(s"no parquet part written for slice $i"))
-            val dest = new java.io.File(base, f"slice-$i%02d.parquet")
-            java.nio.file.Files.move(part.toPath, dest.toPath)
-            // fixed, strictly increasing mtimes pin the replay order
-            dest.setLastModified(1000000000000L + i * 60000L)
-            rmTree(tmp)
-          }
-        } finally { sliced.unpersist(); () }
-        writeMarker(marker, fp)
-      }
-      base.getPath
-    }
+    replay(dir, n).prepare(spark)
 }
 
 /** OUT-OF-ORDER three-batch replay: slice k = event_ids ≡ k (mod 3),
@@ -158,45 +159,11 @@ object MultiBatchFileSource {
   * nothing is ever late there.) Same one-time fixture build.
   */
 final case class OutOfOrderFileSource(dir: String) extends EventSource {
-  def stream(spark: SparkSession): DataFrame = {
-    val replayDir = OutOfOrderFileSource.prepare(spark, dir)
-    // slices are written pre-normalized, same as MultiBatchFileSource
-    val schema = spark.read.parquet(s"$replayDir/slice-0.parquet").schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$replayDir/slice-*.parquet")
-  }
-}
-
-object OutOfOrderFileSource {
-  private val lock = new Object
-
-  private[graft] def prepare(spark: SparkSession, dir: String): String =
-    lock.synchronized {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = new java.io.File(s"target/stream_replay_ooo/$safe")
-      val marker = new java.io.File(base, "_READY")
-      val fp = MultiBatchFileSource.fingerprint(s"$dir/events.parquet")
-      if (!MultiBatchFileSource.fresh(marker, fp)) {
-        if (base.exists()) MultiBatchFileSource.rmTreePublic(base)
-        base.mkdirs()
-        val raw = graft.Tables.events(spark, dir)
-        Seq(0, 1, 2).foreach { par =>
-          val tmp = new java.io.File(base, s"_tmp-$par")
-          raw.filter(pmod(col("event_id"), lit(3)) === par)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-          val part = tmp.listFiles()
-            .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-            .getOrElse(sys.error(s"no parquet part written for parity $par"))
-          val dest = new java.io.File(base, s"slice-$par.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(1000000000000L + par * 60000L)
-          MultiBatchFileSource.rmTreePublic(tmp)
-        }
-        MultiBatchFileSource.writeMarker(marker, fp)
-      }
-      base.getPath
-    }
+  def stream(spark: SparkSession): DataFrame =
+    new Replay(s"target/stream_replay_ooo/${Replay.safe(dir)}",
+      s"$dir/events.parquet", graft.Tables.events(_, dir),
+      pmod(col("event_id"), lit(3)), Seq(0, 1, 2),
+      i => s"slice-$i.parquet").stream(spark)
 }
 
 /** The Kafka wire shape and its codec. A Kafka record is
@@ -278,54 +245,13 @@ final case class KafkaEventSource(bootstrapServers: String, topic: String)
 /** Rate-limited multi-batch replay of the DOCUMENTS table — the corpus
   * twin of [[MultiBatchFileSource]] for streaming text/sketch pipelines:
   * `documents.parquet` split once into `slices` contiguous doc_id
-  * ranges (separate parquet files, strictly increasing mtimes) and
-  * streamed with `maxFilesPerTrigger=1`, so every trigger carries one
-  * corpus shard — the shape of a backfill draining a document store.
-  * Same idempotent `_READY`-marker fixture discipline (fingerprint
-  * invalidation on testdata regen).
+  * ranges (ntile over doc_id), one corpus shard per trigger — the shape
+  * of a backfill draining a document store. Same one-time fixture build.
   */
 final case class DocumentsFileSource(dir: String, slices: Int = 4) {
-  def stream(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    val replayDir = DocumentsFileSource.prepare(spark, dir, slices)
-    val schema = spark.read.parquet(s"$replayDir/slice-01.parquet").schema
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$replayDir/slice-*.parquet")
-  }
-}
-
-object DocumentsFileSource {
-  private val lock = new Object
-
-  private[graft] def prepare(spark: org.apache.spark.sql.SparkSession,
-      dir: String, n: Int): String = lock.synchronized {
-    import org.apache.spark.sql.functions.{col, ntile}
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = new java.io.File(s"target/stream_replay/docs-$safe-$n")
-    val marker = new java.io.File(base, "_READY")
-    val fp = MultiBatchFileSource.fingerprint(s"$dir/documents.parquet")
-    if (!MultiBatchFileSource.fresh(marker, fp)) {
-      if (base.exists()) MultiBatchFileSource.rmTreePublic(base)
-      base.mkdirs()
-      val raw = graft.Tables.documents(spark, dir)
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
-      val sliced = raw.withColumn("_slice", ntile(n).over(w)).cache()
-      try {
-        (1 to n).foreach { i =>
-          val tmp = new java.io.File(base, s"_tmp-$i")
-          sliced.filter(col("_slice") === i).drop("_slice")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-          val part = tmp.listFiles()
-            .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-            .getOrElse(sys.error(s"no parquet part written for doc slice $i"))
-          val dest = new java.io.File(base, f"slice-$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(1000000000000L + i * 60000L)
-          MultiBatchFileSource.rmTreePublic(tmp)
-        }
-      } finally { sliced.unpersist(); () }
-      MultiBatchFileSource.writeMarker(marker, fp)
-    }
-    base.getPath
-  }
+  def stream(spark: SparkSession): DataFrame =
+    new Replay(s"target/stream_replay/docs-${Replay.safe(dir)}-$slices",
+      s"$dir/documents.parquet", graft.Tables.documents(_, dir),
+      ntile(slices).over(Window.orderBy(col("doc_id"))),
+      1 to slices, Replay.twoDigit).stream(spark)
 }

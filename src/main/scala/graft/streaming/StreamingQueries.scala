@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.QueryDef
 
 /** Structured Streaming surface over the `events` table, replayed as a
@@ -11,8 +12,8 @@ import graft.QueryDef
   * capability).
   *
   * Each query runs a real `readStream → transform → writeStream` pipeline
-  * into a memory sink, drains it with `processAllAvailable()`, and
-  * returns the sink table — so the driver's batch-shaped contract
+  * into a memory sink (or a foreachBatch sink), drains it through
+  * [[StreamingQueries.drain]], and returns the sink table — so the driver's batch-shaped contract
   * (`(SparkSession, dir) ⇒ DataFrame`) still holds. Aggregations use
   * COMPLETE output mode: with a single replay batch, append mode would
   * emit nothing until the watermark advances past a next batch that
@@ -32,174 +33,25 @@ object StreamingQueries {
   private def eventsStream(spark: SparkSession, dir: String): DataFrame =
     FileEventSource(dir).stream(spark)
 
-  /** When true (set only by `graft.tools.PlanAudit`), [[runToMemory]]
-    * captures the last micro-batch's physical plan into
-    * [[lastMicroBatchPlan]] so the plan audit can inspect the STREAMING
-    * execution (state operators, join strategy on the static side) —
-    * the returned memory table's own plan is just a local scan. Off by
-    * default: bench/verify pay nothing.
+  /** The query the last [[drain]] ran, stopped, whether or not its drain
+    * threw. A stopped query still answers `explain()` with its last
+    * micro-batch's physical plan and `recentProgress` with its batches,
+    * so PlanAudit reads the STREAMING execution here (the memory sink
+    * table's own plan is a local scan) and ScaleProbe reads per-batch
+    * time and state size. Holding it costs the drain nothing: only a
+    * reader formats the plan.
     */
-  @volatile private[graft] var capturePlans: Boolean = false
-  @volatile private[graft] var lastMicroBatchPlan: String = ""
+  @volatile private[graft] var lastDrained: Option[StreamingQuery] = None
 
-  /** One micro-batch's progress snapshot for the scale probe: the
-    * 100×-cliff shape of the streaming tier is STATE-STORE growth, not
-    * wall time, so the probe reads rows/bytes per batch, not just the
-    * lane total. `phaseMs` is the batch's time split
-    * (`StreamingQueryProgress.durationMs`: queryPlanning, getBatch,
-    * addBatch, walCommit, commitOffsets, triggerExecution, ...), which
-    * says where inside a batch the time went.
+  /** The one way a stream runs here: start `writer` with an AvailableNow
+    * trigger, process everything available, stop the query and record it
+    * in [[lastDrained]].
     */
-  final case class BatchProgress(batchId: Long, durationMs: Long,
-      rowsProcessed: Long, stateRows: Long, stateBytes: Long,
-      phaseMs: Map[String, Long])
-
-  /** Probe seam (ScaleProbe streaming sweep): when set, [[runToMemory]]
-    * records every micro-batch's duration + state-operator totals from
-    * the query's progress events into [[lastRunProgress]].
-    */
-  @volatile private[graft] var captureProgress: Boolean = false
-  @volatile private[graft] var lastRunProgress: Seq[BatchProgress] = Nil
-
-  /** Create a temp checkpoint dir that is recursively deleted at JVM
-    * exit. The statestore-introspection queries must OUTLIVE their
-    * streaming run (the returned DataFrame reads the checkpoint
-    * lazily), so the dir cannot be deleted inline — but without any
-    * cleanup every verify/bench/audit execution would leak a full
-    * state-store checkpoint (RocksDB SSTs included) into /tmp.
-    */
-  private def rmTree(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Checkpoint dirs awaiting JVM-exit cleanup, drained by ONE shared
-    * shutdown hook (a hook per invocation would accumulate an unbounded
-    * thread list over a long bench/verify JVM). `pendingCheckpoints`
-    * holds the LIVE generation per query prefix; `staleCheckpoints`
-    * holds superseded generations, which are NOT reclaimed inline —
-    * see [[tempCheckpointDir]].
-    */
-  private val pendingCheckpoints =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private val staleCheckpoints = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.ArrayDeque[java.nio.file.Path]]()
-  /** Superseded generations kept per prefix before inline reclamation
-    * kicks in. >1 so a deferred lazy read of the IMMEDIATELY-superseded
-    * checkpoint stays safe; small enough that a long-lived JVM
-    * re-invoking streaming queries holds O(prefixes·K) dirs, not
-    * O(invocations).
-    */
-  private val StaleGenerationsKept = 3
-  /** Orphaned checkpoints from killed JVMs (shutdown hooks never run on
-    * SIGKILL/OOM-kill) are reclaimed by this startup sweep. Two guards
-    * make the sweep safe against OTHER live JVMs: (1) scope — only dir
-    * names matching [[OwnedCheckpointPrefixes]], the exact prefixes
-    * [[tempCheckpointDir]] itself creates, are candidates (a `graft_wh`
-    * warehouse dir from the test harness is never touched, however old
-    * its top-level mtime — nested RocksDB writes don't refresh it);
-    * (2) liveness — every dir this module creates carries a
-    * [[OwnerPidFile]] marker, and a dir whose recorded owner process is
-    * still alive is skipped regardless of age. The age cutoff remains
-    * as a backstop for marker-less dirs from pre-marker generations.
-    */
-  private val OrphanSweepHours = 12L
-
-  /** Checkpoint-dir name prefixes THIS module creates — must list every
-    * [[tempCheckpointDir]] call-site prefix. The orphan sweep deletes
-    * only these.
-    */
-  private val OwnedCheckpointPrefixes = Seq("graft_tws_state", "graft_state_ins")
-  private val OwnerPidFile = "GRAFT_OWNER_PID"
-
-  private def writeOwnerPid(dir: java.nio.file.Path): Unit =
-    try {
-      // pid:startMillis — the start instant disambiguates PID REUSE: a
-      // recycled pid on an unrelated long-lived process would otherwise
-      // keep an orphaned checkpoint dir alive forever
-      val self = ProcessHandle.current
-      val start = self.info.startInstant
-        .map[Long](_.toEpochMilli).orElse(0L)
-      java.nio.file.Files.write(dir.resolve(OwnerPidFile),
-        s"${self.pid}:$start".getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-
-  /** True when the dir carries a pid marker whose process is alive AND
-    * (when the marker records a start instant) was started at the
-    * recorded time — a live process on a REUSED pid does not count as
-    * the owner. Unreadable markers return true (keep, be safe);
-    * marker-less dirs return false: they predate the marker scheme and
-    * age alone decides.
-    */
-  private def ownerAlive(dir: java.io.File): Boolean = {
-    val f = new java.io.File(dir, OwnerPidFile)
-    if (!f.exists) false
-    else try {
-      val parts = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.split(':')
-      val pid = parts(0).toLong
-      if (pid == ProcessHandle.current.pid) false
-      else {
-        val h = ProcessHandle.of(pid)
-        if (!h.isPresent) false
-        else if (parts.length < 2 || parts(1).toLong == 0L) true // legacy marker
-        else {
-          val liveStart = h.get.info.startInstant
-            .map[Long](_.toEpochMilli).orElse(0L)
-          // a missing live start instant can't refute ownership — keep
-          liveStart == 0L || liveStart == parts(1).toLong
-        }
-      }
-    } catch { case _: Throwable => true }
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      pendingCheckpoints.values.forEach { p =>
-        try rmTree(p.toFile) catch { case _: Throwable => () }
-      }
-      staleCheckpoints.values.forEach { dq =>
-        dq.forEach(p => try rmTree(p.toFile) catch { case _: Throwable => () })
-      }
-    }))
-    try {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      val cutoff = System.currentTimeMillis - OrphanSweepHours * 3600 * 1000L
-      val orphans = tmp.listFiles()
-      if (orphans != null) orphans.foreach { f =>
-        if (f.isDirectory &&
-          OwnedCheckpointPrefixes.exists(f.getName.startsWith) &&
-          f.lastModified < cutoff && !ownerAlive(f))
-          try rmTree(f) catch { case _: Throwable => () }
-      }
-    } catch { case _: Throwable => () }
-  }
-
-  /** A fresh checkpoint dir for `prefix`. The PREVIOUS generation for
-    * the same query is moved to the stale list, which keeps the last
-    * [[StaleGenerationsKept]] generations per prefix: a still-unconsumed
-    * lazily-read statestore DataFrame from an earlier invocation of the
-    * same query (e.g. a plan-capture pass that defers evaluation) must
-    * not hit FileNotFound on its deferred read just because the query
-    * ran again — but a generation K invocations old has no live reader
-    * by construction, so reclaiming IT inline bounds /tmp growth for a
-    * long-lived JVM (previously every superseded checkpoint survived to
-    * the shutdown hook, which never runs on SIGKILL — the startup sweep
-    * above catches those).
-    */
-  private def tempCheckpointDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    writeOwnerPid(dir)
-    val prev = pendingCheckpoints.put(prefix, dir)
-    if (prev != null) {
-      val dq = staleCheckpoints.computeIfAbsent(prefix,
-        _ => new java.util.ArrayDeque[java.nio.file.Path]())
-      val evicted = dq.synchronized {
-        dq.addLast(prev)
-        if (dq.size > StaleGenerationsKept) Some(dq.pollFirst()) else None
-      }
-      evicted.foreach(p => try rmTree(p.toFile) catch { case _: Throwable => () })
-    }
-    dir.toString
+  private[graft] def drain(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try q.processAllAvailable()
+    finally { q.stop(); lastDrained = Some(q) }
+    q
   }
 
   /** Run a streaming DF to a memory sink, drain, return the table.
@@ -210,42 +62,36 @@ object StreamingQueries {
   private[graft] def runToMemory(spark: SparkSession, streamed: DataFrame,
       name: String, mode: String, checkpoint: Option[String] = None)
       : DataFrame = withStatePartitions(spark, StreamStatePartitions) {
-    val w0 = streamed.writeStream
-      .format("memory").queryName(name).outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-    val q = checkpoint.fold(w0)(c => w0.option("checkpointLocation", c))
-      .start()
-    try {
-      q.processAllAvailable()
-      if (capturePlans) {
-        // StreamingQuery.explain() prints the last executed micro-batch
-        // plan via Console.out — redirect to grab it as a string
-        val bos = new java.io.ByteArrayOutputStream()
-        try Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        } catch { case _: Throwable => () }
-        lastMicroBatchPlan = bos.toString("UTF-8")
-      }
-      if (captureProgress) {
-        lastRunProgress = q.recentProgress.toSeq.map { p =>
-          val ops = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
-          val bytes = ops.map { so =>
-            // HDFS-backed stores report memoryUsedBytes; RocksDB
-            // reports its footprint via a custom metric instead
-            val rocks = Option(so.customMetrics)
-              .flatMap(m => Option(m.get("rocksdbTotalMemoryUsage")))
-              .map(_.longValue).getOrElse(0L)
-            so.memoryUsedBytes + rocks
-          }.sum
-          import scala.jdk.CollectionConverters._
-          val phaseMs = Option(p.durationMs).map(_.asScala.toMap).getOrElse(Map.empty)
-            .map { case (k, v) => k -> v.longValue }
-          BatchProgress(p.batchId, p.batchDuration, p.numInputRows,
-            ops.map(_.numRowsTotal).sum, bytes, phaseMs)
-        }
-      }
-    } finally q.stop()
+    val w = streamed.writeStream.format("memory").queryName(name).outputMode(mode)
+    drain(checkpoint.fold(w)(c => w.option("checkpointLocation", c)))
     spark.table(name)
+  }
+
+  /** Drain `stream` through a foreachBatch sink that computes each
+    * batch's partial with `perBatch` and returns the partials in batchId
+    * order. The in-JVM map stands in for an external store KEYED BY
+    * batchId, so a re-delivered batch overwrites its own earlier write
+    * instead of counting twice.
+    */
+  private def batchPartials[V](stream: DataFrame)(perBatch: DataFrame => V): Seq[V] = {
+    val store = new java.util.concurrent.ConcurrentHashMap[Long, V]()
+    drain(stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      store.put(batchId, perBatch(batch)); ()
+    })
+    import scala.jdk.CollectionConverters._
+    store.asScala.toSeq.sortBy(_._1).map(_._2)
+  }
+
+  /** A state-store read `read(checkpoint)` over a query `run(checkpoint)`
+    * drained to a fresh checkpoint dir, materialized with
+    * `localCheckpoint()` so the returned frame no longer reads the dir,
+    * which is deleted before the lane returns.
+    */
+  private def readStateAfter(prefix: String)(run: String => Unit)(
+      read: String => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try { run(dir.getPath); read(dir.getPath).localCheckpoint() }
+    finally FileUtils.deleteQuietly(dir)
   }
 
   /** LATE-DATA accounting under an OUT-OF-ORDER replay
@@ -307,39 +153,20 @@ object StreamingQueries {
   private[graft] def streamForeachBatchImpl(spark: SparkSession,
       src: EventSource): (DataFrame, Int) = {
     import spark.implicits._
-    val store = new java.util.concurrent.ConcurrentHashMap[
-      Long, Seq[(String, Long, java.math.BigDecimal)]]()
-    val q = src.stream(spark).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batch
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(graft.Tables.money(col("value"))).as("sv"))
-          .collect().toSeq
-          .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2)))
-        store.put(batchId, partial)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      q.processAllAvailable()
-      if (capturePlans) {
-        val bos = new java.io.ByteArrayOutputStream()
-        try Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        } catch { case _: Throwable => () }
-        lastMicroBatchPlan = bos.toString("UTF-8")
-      }
-    } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val out = store.asScala.values.flatten.toSeq
-      .map { case (t, n, sv) => (t, n, BigDecimal(sv)) }
+    val partials = batchPartials(src.stream(spark)) { batch =>
+      batch
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(graft.Tables.money(col("value"))).as("sv"))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), BigDecimal(r.getDecimal(2))))
+    }
+    val out = partials.flatten
       .toDF("event_type", "n", "sv")
       .groupBy(col("event_type"))
       .agg(sum(col("n")).as("n"), sum(col("sv")).cast("double").as("sum_value"))
       .orderBy(col("event_type"))
-    (out, store.size())
+    (out, partials.length)
   }
 
   /** Tumbling 1-hour windows per event_type (count + exact-decimal sum). */
@@ -573,34 +400,35 @@ object StreamingQueries {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.types.DecimalType
     import spark.implicits._
-    val ckpt = tempCheckpointDir("graft_tws_state")
     withRocksDB(spark) {
-      val ds = FileEventSource(dir).stream(spark)
-        .select(col("user_id"),
-          col("value").cast(DecimalType(12, 2)).*(100).cast("long").as("cents"),
-          unix_micros(col("ts")).as("ts_us"))
-        .as[(Long, Long, Long)]
-      val updated = ds.groupByKey(_._1)
-        .transformWithState(new UserSpendProcessor,
-          TimeMode.None(), OutputMode.Append())
-      runToMemory(spark, updated.toDF("user_id", "n_events", "cents", "l_us"),
-        "stream_tws_state_inspect_sink", "append", Some(ckpt))
-      val st = spark.read.format("statestore")
-        .option("path", ckpt)
-        .option("stateVarName", "acc")
-        .load()
-      // resolve the value struct's field names from the ACTUAL schema
-      // the statestore source reports instead of hard-coding the tuple
-      // encoder's _1/_2/_3 — field ORDER is the processor's contract
-      // (count, cents, last-ts), the names are an encoder detail
-      val vf = st.schema("value").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
-      st.select(col("key.value").as("user_id"),
+      readStateAfter("graft_tws_state") { ckpt =>
+        val ds = FileEventSource(dir).stream(spark)
+          .select(col("user_id"),
+            col("value").cast(DecimalType(12, 2)).*(100).cast("long").as("cents"),
+            unix_micros(col("ts")).as("ts_us"))
+          .as[(Long, Long, Long)]
+        val updated = ds.groupByKey(_._1)
+          .transformWithState(new UserSpendProcessor,
+            TimeMode.None(), OutputMode.Append())
+        runToMemory(spark, updated.toDF("user_id", "n_events", "cents", "l_us"),
+          "stream_tws_state_inspect_sink", "append", Some(ckpt))
+      } { ckpt =>
+        val st = spark.read.format("statestore")
+          .option("path", ckpt)
+          .option("stateVarName", "acc")
+          .load()
+        // resolve the value struct's field names from the ACTUAL schema
+        // the statestore source reports instead of hard-coding the tuple
+        // encoder's _1/_2/_3 — field ORDER is the processor's contract
+        // (count, cents, last-ts), the names are an encoder detail
+        val vf = st.schema("value").dataType
+          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+        st.select(col("key.value").as("user_id"),
           col(s"value.${vf(0)}").as("n_events"),
           col(s"value.${vf(1)}").as("cents"),
           date_format(timestamp_micros(col(s"value.${vf(2)}")),
             "yyyy-MM-dd HH:mm:ss.SSSSSS").as("last_ts"))
-        .orderBy(col("user_id"))
+      }.orderBy(col("user_id"))
     }
   }
 
@@ -733,27 +561,25 @@ object StreamingQueries {
     * partition) and is the basis for state audits/repairs without
     * replaying the stream.
     */
-  def streamStateInspect(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = tempCheckpointDir("graft_state_ins")
-    val agg = MultiBatchFileSource(dir).stream(spark)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    runToMemory(spark, agg, "stream_state_inspect_sink", "append",
-      Some(ckpt))
-    val store = spark.read.format("statestore").option("path", ckpt).load()
-    // the value struct carries the AGG BUFFER's internal field names
-    // (`count` for a lone count today) — an internal Spark schema
-    // detail that can shift across versions, so resolve the single
-    // numeric buffer field FROM the schema instead of hardcoding it
-    store
-      .select(
+  def streamStateInspect(spark: SparkSession, dir: String): DataFrame =
+    readStateAfter("graft_state_ins") { ckpt =>
+      val agg = MultiBatchFileSource(dir).stream(spark)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      runToMemory(spark, agg, "stream_state_inspect_sink", "append", Some(ckpt))
+    } { ckpt =>
+      val store = spark.read.format("statestore").option("path", ckpt).load()
+      // the value struct carries the AGG BUFFER's internal field names
+      // (`count` for a lone count today) — an internal Spark schema
+      // detail that can shift across versions, so resolve the single
+      // numeric buffer field FROM the schema instead of hardcoding it
+      store.select(
         date_format(col("key.window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("key.event_type").as("event_type"),
         col(s"value.${singleNumericField(store, "value")}").as("n"))
-      .orderBy(col("window_start"), col("event_type"))
-  }
+    }.orderBy(col("window_start"), col("event_type"))
 
   /** Name of the single numeric field inside struct column `name` —
     * fails with an explicit message if the struct is missing or holds
@@ -781,12 +607,6 @@ object StreamingQueries {
     }
   }
 
-  /** Stream-stream inner join with event-time bounds: purchases within
-    * 5 minutes after a signup by the same user — the streaming twin of
-    * the batch range join (q17), sharing its oracle shape. Watermarks on
-    * BOTH sides + the time-bound condition let Spark evict join state;
-    * without them stream-stream state grows forever.
-    */
   /** Run `f` with `spark.sql.shuffle.partitions` overridden, restoring
     * the previous value. Stateful streaming cost is dominated by
     * per-micro-batch STATE STORE COMMITS — every trigger commits every
@@ -823,6 +643,12 @@ object StreamingQueries {
   private[graft] val StreamStatePartitions: Int =
     graft.EnvKnob.positive("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8, Int.MaxValue).toInt
 
+  /** Stream-stream inner join with event-time bounds: purchases within
+    * 5 minutes after a signup by the same user — the streaming twin of
+    * the batch range join (q17), sharing its oracle shape. Watermarks on
+    * BOTH sides + the time-bound condition let Spark evict join state;
+    * without them stream-stream state grows forever.
+    */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     // ONE source stream split into both join sides by filtering — a
     // second eventsStream() call would register an independent file
@@ -994,31 +820,13 @@ object StreamingQueries {
   private[graft] def streamForgetImpl(spark: SparkSession, dir: String,
       slices: Int): (DataFrame, Int) = {
     import spark.implicits._
-    val store = new java.util.concurrent.ConcurrentHashMap[
-      Long, Seq[(Long, Long, Long, Long, Long, Long, Long)]]()
-    val q = DocumentsFileSource(dir, slices).stream(spark).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.operators.Pipeline8.forgetAccounting(batch)
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5), r.getLong(6)))
-        store.put(batchId, partial)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      q.processAllAvailable()
-      if (capturePlans) {
-        val bos = new java.io.ByteArrayOutputStream()
-        try Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        } catch { case _: Throwable => () }
-        lastMicroBatchPlan = bos.toString("UTF-8")
-      }
-    } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val merged = store.asScala.values.flatten.toSeq
+    val partials = batchPartials(DocumentsFileSource(dir, slices).stream(spark)) { batch =>
+      graft.operators.Pipeline8.forgetAccounting(batch)
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6)))
+    }
+    val merged = partials.flatten
       .toDF("shard", "n_docs", "n_docs_purged", "n_chunks",
         "n_chunks_purged", "n_tokens", "n_tokens_purged")
       .groupBy(col("shard"))
@@ -1029,7 +837,7 @@ object StreamingQueries {
         sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_tokens_purged")).as("n_tokens_purged"))
     (graft.operators.Pipeline8.withForgetAction(merged)
-      .orderBy(col("shard")), store.size())
+      .orderBy(col("shard")), partials.length)
   }
 
   /** Streaming heavy hitters — the Misra–Gries sketch deployed the way
@@ -1053,33 +861,15 @@ object StreamingQueries {
       slices: Int): (DataFrame, Int) = {
     import graft.operators.{Sketches, WordCount}
     import org.apache.spark.sql.Encoders
-    val store = new java.util.concurrent.ConcurrentHashMap[Long, Sketches.MG]()
-    val q = DocumentsFileSource(dir, slices).stream(spark).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mg = batch
-          .select(explode(WordCount.words(col("text"))).as("tok"))
-          .filter(col("tok") =!= "")
-          .as[String](Encoders.STRING)
-          .select(new Sketches.MisraGriesMapAgg().toColumn.name("m"))
-          .head()
-        store.put(batchId, mg.toMap)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      q.processAllAvailable()
-      if (capturePlans) {
-        val bos = new java.io.ByteArrayOutputStream()
-        try Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        } catch { case _: Throwable => () }
-        lastMicroBatchPlan = bos.toString("UTF-8")
-      }
-    } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val merged = store.asScala.toSeq.sortBy(_._1).map(_._2)
-      .reduceLeft(Sketches.mgMerge)
+    val partials = batchPartials(DocumentsFileSource(dir, slices).stream(spark)) { batch =>
+      batch
+        .select(explode(WordCount.words(col("text"))).as("tok"))
+        .filter(col("tok") =!= "")
+        .as[String](Encoders.STRING)
+        .select(new Sketches.MisraGriesMapAgg().toColumn.name("m"))
+        .head().toMap
+    }
+    val merged = partials.reduceLeft(Sketches.mgMerge)
     val candidates = merged.keys.toSeq.sorted
     val toks = Sketches.tokens(spark, dir).localCheckpoint()
     val n = toks.count()
@@ -1088,7 +878,7 @@ object StreamingQueries {
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * Sketches.ThetaDen > n)
       .orderBy(col("cnt").desc, col("tok"))
-    (out, store.size())
+    (out, partials.length)
   }
 
   /** Bracket half-width (percentage points) shared with the oracle. */
@@ -1109,32 +899,13 @@ object StreamingQueries {
   def streamKllQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.KllSketch
     import org.apache.spark.sql.Encoders
-    val store = new java.util.concurrent.ConcurrentHashMap[Long, KllSketch.Buf]()
-    val q = MultiBatchFileSource(dir).stream(spark).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val buf = batch
-          .select(col("value").cast("decimal(12,2)").*(100).cast("long").as("v"))
-          .as[Long](Encoders.scalaLong)
-          .select(new KllSketch.KllBufAgg().toColumn.name("b"))
-          .head()
-        store.put(batchId, buf)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      q.processAllAvailable()
-      if (capturePlans) {
-        val bos = new java.io.ByteArrayOutputStream()
-        try Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        } catch { case _: Throwable => () }
-        lastMicroBatchPlan = bos.toString("UTF-8")
-      }
-    } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val merged = store.asScala.toSeq.sortBy(_._1).map(_._2)
-      .reduceLeft(KllSketch.merge)
+    val merged = batchPartials(MultiBatchFileSource(dir).stream(spark)) { batch =>
+      batch
+        .select(col("value").cast("decimal(12,2)").*(100).cast("long").as("v"))
+        .as[Long](Encoders.scalaLong)
+        .select(new KllSketch.KllBufAgg().toColumn.name("b"))
+        .head()
+    }.reduceLeft(KllSketch.merge)
     val est = KllSketch.quantiles(merged, KllSketch.Ps)
     val ps = KllSketch.Ps.map(p => (p * 100).toInt)
     val estRows = ps.zip(est).toSeq
@@ -1181,32 +952,13 @@ object StreamingQueries {
   private[graft] def streamKmvDistinctImpl(spark: SparkSession,
       dir: String): (DataFrame, Int) = {
     import graft.operators.Sketches3.{KmvDomain, KmvK}
-    val store =
-      new java.util.concurrent.ConcurrentHashMap[Long, Vector[Long]]()
-    val q = MultiBatchFileSource(dir).stream(spark).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val mink = batch
-          .select(graft.Tables.saltedHash("kmv:", col("user_id"), 13).as("h"))
-          .distinct().orderBy(col("h")).limit(KmvK)
-          .collect().map(_.getLong(0)).toVector
-        store.put(batchId, mink)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      q.processAllAvailable()
-      if (capturePlans) {
-        val bos = new java.io.ByteArrayOutputStream()
-        try Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        } catch { case _: Throwable => () }
-        lastMicroBatchPlan = bos.toString("UTF-8")
-      }
-    } finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val merged = store.asScala.values.flatten.toVector
-      .distinct.sorted.take(KmvK)
+    val partials = batchPartials(MultiBatchFileSource(dir).stream(spark)) { batch =>
+      batch
+        .select(graft.Tables.saltedHash("kmv:", col("user_id"), 13).as("h"))
+        .distinct().orderBy(col("h")).limit(KmvK)
+        .collect().map(_.getLong(0)).toVector
+    }
+    val merged = partials.flatten.distinct.sorted.take(KmvK)
     require(merged.nonEmpty, "stream_kmv_distinct: no events streamed")
     val nUsed = merged.length.toLong
     val kth = merged.last
@@ -1219,7 +971,7 @@ object StreamingQueries {
         lit(kth).as("kth_hash"), lit(est).as("est_distinct"),
         col("exact_distinct"),
         (abs(lit(est) - col("exact_distinct")) * 16 <=
-          col("exact_distinct") * 3).as("in_bracket")) -> store.size()
+          col("exact_distinct") * 3).as("in_bracket")) -> partials.length
   }
 
   private val StreamKmvOracle: String = {

@@ -17,9 +17,10 @@ import graft.streaming.StreamingQueries
   *
   * Streaming queries (`stream_*`) return a drained memory-sink table
   * whose own plan is a local scan — auditing that would say nothing.
-  * For those, `StreamingQueries.capturePlans` makes the runner record
-  * the last MICRO-BATCH physical plan (via `StreamingQuery.explain()`),
-  * and the audit counts nodes in that instead (`final=stream` rows).
+  * For those, the audit reads the stopped query the lane drained last,
+  * `StreamingQueries.lastDrained`, and counts nodes in its last
+  * MICRO-BATCH physical plan (`StreamingQuery.explain()`) instead
+  * (`final=stream` rows).
   *
   * A small assertion table pins the scale-critical shapes (e.g.
   * `pipeline_chunk` is shuffle-free, `q70_scd2` reuses ONE exchange for
@@ -38,6 +39,18 @@ import graft.streaming.StreamingQueries
   * subset, as in Verify and Bench).
   */
 object PlanAudit {
+
+  /** The last micro-batch's physical plan of a drained query, or "" when
+    * no micro-batch ran. `StreamingQuery.explain()` prints it to
+    * Console.out, so it is redirected into a string.
+    */
+  private def microBatchPlan(q: org.apache.spark.sql.streaming.StreamingQuery): String = {
+    val bos = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(bos, true, "UTF-8"))(q.explain())
+    val plan = bos.toString("UTF-8")
+    if (plan.startsWith("No physical plan")) "" else plan
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
@@ -522,7 +535,6 @@ object PlanAudit {
     val laneFails = scala.collection.mutable.ListBuffer.empty[String]
     var skipped = 0
 
-    StreamingQueries.capturePlans = true
     names.foreach { name =>
       // wordcount_reference reads the reference corpus, not `dir`; it
       // lies outside this repository (FIXTURES.md §1)
@@ -531,17 +543,16 @@ object PlanAudit {
         skipped += 1
       } else try {
         val streaming = name.startsWith("stream_")
-        // cleared per query: plan capture failures are swallowed inside
-        // runToMemory, and auditing a STALE plan from the previous
-        // streaming query would silently misattribute its shape
-        if (streaming) StreamingQueries.lastMicroBatchPlan = ""
+        // cleared per query: auditing a STALE query from the previous
+        // streaming lane would silently misattribute its shape
+        if (streaming) StreamingQueries.lastDrained = None
         val df = graft.SparkEntry.queries(name)(spark, dir)
         val (plan, finalTag) = if (streaming) {
-          // the query already ran (drained to the memory sink); audit the
-          // captured micro-batch plan, not the sink table's local scan
-          if (StreamingQueries.lastMicroBatchPlan.isEmpty)
-            failures += s"$name:no-microbatch-plan-captured"
-          (StreamingQueries.lastMicroBatchPlan, "stream")
+          // the query already ran (drained to its sink); audit its last
+          // micro-batch plan, not the sink table's local scan
+          val plan = StreamingQueries.lastDrained.fold("")(microBatchPlan)
+          if (plan.isEmpty) failures += s"$name:no-microbatch-plan-captured"
+          (plan, "stream")
         } else {
           val qe = df.queryExecution
           // execute through THIS QueryExecution so AQE finalizes in place;
@@ -631,7 +642,6 @@ object PlanAudit {
         laneFails += s"$name: $msg"
       }
     }
-    StreamingQueries.capturePlans = false
     if (failures.nonEmpty) println(s"ASSERT-FAILURES: ${failures.mkString(", ")}")
     if (laneFails.nonEmpty) println(s"LANE-FAILURES: ${laneFails.mkString("; ")}")
     if (failures.isEmpty && laneFails.isEmpty) println(

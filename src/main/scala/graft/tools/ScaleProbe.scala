@@ -35,6 +35,37 @@ import graft.{EnvKnob, GraftSession, SparkEntry}
   */
 object ScaleProbe {
 
+  /** One micro-batch's progress snapshot for the stream sweep: the
+    * 100×-cliff shape of the streaming tier is STATE-STORE growth, not
+    * wall time, so the probe reads rows/bytes per batch, not just the
+    * lane total. `phaseMs` is the batch's time split
+    * (`StreamingQueryProgress.durationMs`: queryPlanning, getBatch,
+    * addBatch, walCommit, commitOffsets, triggerExecution, ...), which
+    * says where inside a batch the time went.
+    */
+  final case class BatchProgress(batchId: Long, durationMs: Long,
+      rowsProcessed: Long, stateRows: Long, stateBytes: Long,
+      phaseMs: Map[String, Long])
+
+  object BatchProgress {
+    def apply(p: org.apache.spark.sql.streaming.StreamingQueryProgress): BatchProgress = {
+      import scala.jdk.CollectionConverters._
+      val ops = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
+      val bytes = ops.map { so =>
+        // HDFS-backed stores report memoryUsedBytes; RocksDB reports its
+        // footprint via a custom metric instead
+        val rocks = Option(so.customMetrics)
+          .flatMap(m => Option(m.get("rocksdbTotalMemoryUsage")))
+          .map(_.longValue).getOrElse(0L)
+        so.memoryUsedBytes + rocks
+      }.sum
+      val phaseMs = Option(p.durationMs).map(_.asScala.toMap).getOrElse(Map.empty)
+        .map { case (k, v) => k -> v.longValue }
+      BatchProgress(p.batchId, p.batchDuration, p.numInputRows,
+        ops.map(_.numRowsTotal).sum, bytes, phaseMs)
+    }
+  }
+
   private val Queries = Seq("dedup_minhash_lsh", "q77_triangle_count",
     "q78_pagerank", "q74_dq_profile", "stream_outer_join",
     // round-7 additions: the KLL sketch scan, the iterative ER composite
@@ -319,8 +350,8 @@ object ScaleProbe {
       // join buffers bounded only by the watermark for the outer join),
       // so beside wall time the probe reads every micro-batch's
       // duration, its phase split (summed over batches) and state
-      // rows/bytes from the progress events
-      // ([[graft.streaming.StreamingQueries.captureProgress]]). The
+      // rows/bytes from the progress of the stopped query the lane
+      // drained ([[graft.streaming.StreamingQueries.lastDrained]]). The
       // scaled events table grows keys AND events ×factor (key-shifted
       // replicas), which is the state-growth path — more keys, not
       // hotter keys.
@@ -339,10 +370,11 @@ object ScaleProbe {
         println(f"""{"q":"$q","stream":true,"base_warm":$b%.3f,""" +
           f""""scaled_warm":$s%.3f,"ratio":${s / b}%.3f,"factor":$factor}""")
         Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
-          graft.streaming.StreamingQueries.captureProgress = true
-          try withVolumeConf(d) {
+          withVolumeConf(d) {
+            graft.streaming.StreamingQueries.lastDrained = None
             force(SparkEntry.queries(q)(spark, d))
-            val ps = graft.streaming.StreamingQueries.lastRunProgress
+            val ps = graft.streaming.StreamingQueries.lastDrained.toSeq
+              .flatMap(_.recentProgress.toSeq).map(BatchProgress(_))
             if (ps.nonEmpty) {
               val durs = ps.map(_.durationMs.toDouble)
               val phaseMs = ps.flatMap(_.phaseMs).groupMapReduce(_._1)(_._2)(_ + _)
@@ -358,7 +390,6 @@ object ScaleProbe {
                 s""""state_bytes_max":${ps.map(_.stateBytes).max}}""")
             }
           }
-          finally graft.streaming.StreamingQueries.captureProgress = false
         }
       }
       spark.stop()

@@ -13,33 +13,27 @@ import graft.operators.{Multimodal, Pipeline8}
 class StreamMmDecodeSpec extends AnyFunSuite with SparkTestBase {
 
   test("stream_mm_decode: multi-batch replay, output equals the batch twin") {
-    StreamingQueries.captureProgress = true
-    try {
-      val streamed = StreamingQueries.streamMmDecode(spark, sf0001).collect()
-      val batches = StreamingQueries.lastRunProgress
-      assert(batches.count(_.rowsProcessed > 0) === 4,
-        s"expected 4 data micro-batches, saw ${batches.map(_.rowsProcessed)}")
-      val batch = Multimodal.mmDecodeMixed(spark, sf0001).collect()
-      assert(streamed.length === batch.length)
-      streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
-    } finally StreamingQueries.captureProgress = false
+    val streamed = StreamingQueries.streamMmDecode(spark, sf0001).collect()
+    val batches = StreamingQueries.lastDrained.get.recentProgress
+    assert(batches.count(_.numInputRows > 0) === 4,
+      s"expected 4 data micro-batches, saw ${batches.map(_.numInputRows).toSeq}")
+    val batch = Multimodal.mmDecodeMixed(spark, sf0001).collect()
+    assert(streamed.length === batch.length)
+    streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
   }
 
   test("stream_warc_ingest: multi-batch replay equals the batch twin's page fields") {
-    StreamingQueries.captureProgress = true
-    try {
-      val streamed = StreamingQueries.streamWarcIngest(spark, sf0001).collect()
-      val batches = StreamingQueries.lastRunProgress
-      assert(batches.count(_.rowsProcessed > 0) === 4,
-        s"expected 4 data micro-batches, saw ${batches.map(_.rowsProcessed)}")
-      // the batch twin minus the two archive-layout columns (functions
-      // of the batching, excluded from the streaming contract)
-      val batch = graft.operators.Pipeline9.pipelineWarcIngest(spark, sf0001)
-        .drop("shard_id", "member_index").collect()
-      assert(streamed.length === batch.length)
-      assert(streamed.length > 0, "empty ingest — fixture broke")
-      streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
-    } finally StreamingQueries.captureProgress = false
+    val streamed = StreamingQueries.streamWarcIngest(spark, sf0001).collect()
+    val batches = StreamingQueries.lastDrained.get.recentProgress
+    assert(batches.count(_.numInputRows > 0) === 4,
+      s"expected 4 data micro-batches, saw ${batches.map(_.numInputRows).toSeq}")
+    // the batch twin minus the two archive-layout columns (functions
+    // of the batching, excluded from the streaming contract)
+    val batch = graft.operators.Pipeline9.pipelineWarcIngest(spark, sf0001)
+      .drop("shard_id", "member_index").collect()
+    assert(streamed.length === batch.length)
+    assert(streamed.length > 0, "empty ingest — fixture broke")
+    streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
   }
 
   test("stream_forget: partials from a genuinely multi-batch replay merge to the batch answer") {
@@ -59,5 +53,21 @@ class StreamMmDecodeSpec extends AnyFunSuite with SparkTestBase {
         r.getLong(2) > 0
       assert(r.getString(7) === (if (rewrite) "rewrite" else "tombstone"))
     }
+  }
+
+  test("lastDrained holds the query of the lane that drained last, foreachBatch lanes included") {
+    StreamingQueries.streamMmDecode(spark, sf0001).collect()
+    val decodeId = StreamingQueries.lastDrained.get.id
+    val (_, nBatches) = StreamingQueries.streamForgetImpl(spark, sf0001, 4)
+    val q = StreamingQueries.lastDrained.get
+    assert(q.id !== decodeId, "lastDrained still holds stream_mm_decode's query")
+    assert(!q.isActive, "a drained query must be stopped")
+    val ps = q.recentProgress
+    // forgetAccounting reads its batch twice (the documents and the
+    // delete requests drawn from them), and progress counts both scans
+    assert(ps.map(_.numInputRows).sum === 2 * Tables.documents(spark, sf0001).count())
+    assert(ps.count(_.numInputRows > 0) === nBatches)
+    assert(ps.last.sink.description.contains("ForeachBatchSink"),
+      s"not the forget lane's sink: ${ps.last.sink.description}")
   }
 }

@@ -514,6 +514,23 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(state.toSeq === emitted.toSeq)
   }
 
+  test("state-inspect lanes delete their checkpoint dirs before they return") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts(): Set[String] = Option(tmp.list()).toSeq.flatten
+      .filter(n => n.startsWith("graft_tws_state") || n.startsWith("graft_state_ins"))
+      .toSet
+    val before = ckpts()
+    val tws = StreamingQueries.streamTwsStateInspect(spark, sf0001)
+    val windows = StreamingQueries.streamStateInspect(spark, sf0001)
+    assert((ckpts() -- before).isEmpty, "a state-inspect checkpoint dir outlived its lane")
+    // the returned frames no longer read the deleted checkpoint
+    Seq(tws, windows).foreach { df =>
+      val first = df.collect().map(_.toSeq).toSeq
+      assert(first.nonEmpty)
+      assert(df.collect().map(_.toSeq).toSeq === first)
+    }
+  }
+
   test("stream_session: session count and event conservation") {
     val sessions = StreamingQueries.streamSession(spark, sf0001).collect()
     val totalEvents = sessions.map(_.getLong(2)).sum
