@@ -12,9 +12,7 @@ package graft
   *     host shows >30% steal during it, the cold pass is skipped
   *     entirely (cold is ungraded; on a contended epoch every second
   *     belongs to warm coverage);
-  *   - each query is forced through the `noop` sink, which evaluates
-  *     every output row and column — `.count()` would let Catalyst
-  *     prune projection-only queries down to a row count;
+  *   - each query is forced through [[Lanes.force]];
   *   - the COLD lane runs only the ~14-query headline subset: nothing
   *     grades cold (baselines, the regression gate and the re-price
   *     path all read warm), and r13 measured a full cold pass at 45%
@@ -53,6 +51,9 @@ package graft
   *     would masquerade as a fast run and deflate the totals); it is
   *     listed in the errors arrays and counted in n_failed, and totals
   *     are sums over successes only;
+  *   - a lane whose external input is absent on this machine is split
+  *     off before any timer starts and listed with its reason under
+  *     lanes_skipped — not a failure, not a regression, prior kept;
   *   - a fixed ADJUDICATION RESERVE is carved out of the budget before
   *     the passes start, so the top regression flags get isolated
   *     re-runs even on a budget-exhausted run — exactly the runs whose
@@ -212,6 +213,17 @@ object Bench {
       catch { case e: Throwable => Left(e) }
       finally { timer.cancel(false); sc.clearJobGroup() }
     (res, fired.get)
+  }
+
+  /** The selected lanes split into the ones this machine skips (name ->
+    * reason) and the ones it runs, by name. A skipped lane never runs, so
+    * it can reach neither `errors` nor the regression gate, and the
+    * baseline merge keeps its prior. BenchBaselineSpec pins the split.
+    */
+  private[graft] def splitRunnable(lanes: Seq[QueryDef])
+      : (Map[String, String], Map[String, QueryDef]) = {
+    val skips = lanes.flatMap(l => Lanes.skipReason(l).map(l.name -> _)).toMap
+    (skips, lanes.filterNot(l => skips.contains(l.name)).map(l => l.name -> l).toMap)
   }
 
   /** Sum of the baseline priors for the lanes that actually priced this
@@ -426,11 +438,11 @@ object Bench {
     // e.g. SPARK_GRAFT_ONLY='stream_*' to time the streaming family in
     // isolation — used to adjudicate whether a cross-round delta is a
     // plan regression or machine-load noise from the other lanes
-    val benchQueries = SparkEntry.queries.filter { case (n, _) => SparkEntry.only(n) }
+    val lanes = Lanes.selected()
+    val (laneSkips, benchQueries) = splitRunnable(lanes)
+    laneSkips.foreach { case (n, reason) =>
+      System.err.println(s"[bench] SKIP $n ($reason)") }
     val spark = GraftSession()
-
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     // TIME BUDGET (r13) + ADJUDICATION RESERVE (r14): r12's driver
     // bench was killed at its timeout with NO number produced —
@@ -471,8 +483,8 @@ object Bench {
     // its budget at all
     val warmupJ0 = cpuJiffies()
     try {
-      force(Queries.q1PricingSummary(spark, sfDir))
-      force(SparkEntry.queries("sim_topk_bruteforce")(spark, sfDir))
+      Lanes.force(Queries.q1PricingSummary(spark, sfDir))
+      Lanes.force(SparkEntry.queries("sim_topk_bruteforce")(spark, sfDir))
     } catch { case _: Throwable => () }
     val warmupStealPct = stealShare(warmupJ0, cpuJiffies())
     // steal-conditioned degrade (r13 lesson): >30% steal during warmup
@@ -506,7 +518,7 @@ object Bench {
     // a legitimate no-prior (first run at this SF); a file that exists
     // but doesn't parse must FAIL the bench loudly — see parseBaseline.
     val baselinePath = s"bench_baseline.${new java.io.File(sfDir).getName}.json"
-    val subsetRun = SparkEntry.onlySpec.isDefined
+    val subsetRun = lanes.size != SparkEntry.registry.size
     def readWarm(path: String): Map[String, Double] = {
       val p = java.nio.file.Paths.get(path)
       if (!java.nio.file.Files.exists(p)) Map.empty
@@ -551,7 +563,7 @@ object Bench {
         skipped: scala.collection.mutable.ListBuffer[String] = null,
         capped: scala.collection.mutable.ListBuffer[String] = null)
         : Map[String, Double] = names.flatMap { name =>
-      val fn = benchQueries(name)
+      val lane = benchQueries(name)
       if (elapsedS > deadlineS) {
         if (skipped != null && !skipped.contains(name)) skipped += name
         None
@@ -560,7 +572,7 @@ object Bench {
       val j0 = cpuJiffies()
       val capS =
         if (capped != null) laneCapS(prevWarm.get(name)) else Double.MaxValue / 2e3
-      val (res, fired) = watched(name, capS)(force(fn(spark, sfDir)))
+      val (res, fired) = watched(name, capS)(Lanes.force(lane.fn(spark, sfDir)))
       val st = stealShare(j0, cpuJiffies())
       if (st >= 0) laneSteal(name) = math.max(laneSteal.getOrElse(name, 0.0), st)
       res match {
@@ -726,7 +738,7 @@ object Bench {
         var i = 0
         while (i < 3 && !drillCapped && elapsedS <= budgetS) {
           val (res, fired) = watched(s"adjud-$name", 30.0)(
-            force(benchQueries(name)(spark, sfDir)))
+            Lanes.force(benchQueries(name).fn(spark, sfDir)))
           res match {
             case Right(sec) => samples += sec
             case Left(e) => if (fired && isCancellation(e)) drillCapped = true
@@ -799,6 +811,8 @@ object Bench {
       keys.flatMap(k => m.get(k).map(v => "\"" + k + "\":" + r3(v)))
         .mkString("{", ",", "}")
     def fmtE(e: Seq[String]) = e.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def fmtS(m: Map[String, String]) = m.toSeq.sorted
+      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     // "failed" = GRADED failures (warm lane only, matching the gate);
     // cold and retry errors are reported in their own arrays — a lane
     // that priced warm but stumbled in an ungraded pass is not a
@@ -833,9 +847,9 @@ object Bench {
     // changes every batch, so generated source never repeats); surfacing
     // the tier's share keeps its budget weight visible
     val streamCold = results.collect {
-      case (n, v) if n.startsWith("stream_") => v }.sum
+      case (n, v) if Lanes.streaming(n) => v }.sum
     val streamWarm = warm.collect {
-      case (n, v) if n.startsWith("stream_") => v }.sum
+      case (n, v) if Lanes.streaming(n) => v }.sum
     // full detail (every query, both lanes) — file only. The warm map
     // appears under BOTH "queries" (the driver contract's key) and
     // "queries_warm" (the key parseBaseline's readWarm(outPath)
@@ -857,7 +871,7 @@ object Bench {
     // getting the wrong lane; "errors_warm" stays as an alias of
     // "errors" for old consumers (ADVICE r14)
     val fullJson =
-      s"""{"metric":"total_warm","value":${r3(totalWarm)},"unit":"sec","bench_schema":2,"queries":$warmJson,"queries_warm":$warmJson,"total_warm":${r3(totalWarm)},"cold_scope":"headline","cold_total":${r3(total)},"cold_skipped_high_steal":$coldSkippedHighSteal,"queries_cold":${fmt(results, results.keys.toSeq.sorted)},"n_warm_priced":${warm.size},"baseline_sum_priced":${r3(baselineSumPriced)},"warm_sum_priced":${r3(warmSumPriced)},"warm_vs_baseline":${r3(warmVsBaseline)},"tier_stream_cold":${r3(streamCold)},"tier_stream_warm":${r3(streamWarm)},"warm_passes":$warmPasses,"n_retried":${retried.size},"retries":$retriesJson,"calib_ms":$calibMs,"steal_pct":${r3(stealPct)},"warmup_steal_pct":${r3(warmupStealPct)},"n_queries":${benchQueries.size},"n_failed":${failed.length},"errors":${fmtE(failed)},"errors_warm":${fmtE(failed)},"errors_cold":${fmtE(errCold.distinct.toSeq)},"errors_retry":${fmtE(errRetry.distinct.toSeq)},"budget_s":${r3(budgetS)},"adjud_reserve_s":${r3(adjudReserveS)},"retry_reserve_s":${r3(retryReserveS)},"budget_exceeded":$budgetExceeded,"n_skipped":${skipped.length},"skipped":${fmtE(skipped)},"n_capped":${cappedWarm.distinct.size},"capped":${fmtE(cappedWarm.distinct.toSeq.sorted)},"capped_unresolved":${fmtE(cappedUnresolved)},"regressions":$regJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total_warm","value":${r3(totalWarm)},"unit":"sec","bench_schema":2,"queries":$warmJson,"queries_warm":$warmJson,"total_warm":${r3(totalWarm)},"cold_scope":"headline","cold_total":${r3(total)},"cold_skipped_high_steal":$coldSkippedHighSteal,"queries_cold":${fmt(results, results.keys.toSeq.sorted)},"n_warm_priced":${warm.size},"baseline_sum_priced":${r3(baselineSumPriced)},"warm_sum_priced":${r3(warmSumPriced)},"warm_vs_baseline":${r3(warmVsBaseline)},"tier_stream_cold":${r3(streamCold)},"tier_stream_warm":${r3(streamWarm)},"warm_passes":$warmPasses,"n_retried":${retried.size},"retries":$retriesJson,"calib_ms":$calibMs,"steal_pct":${r3(stealPct)},"warmup_steal_pct":${r3(warmupStealPct)},"n_queries":${lanes.size},"n_failed":${failed.length},"lanes_skipped":${fmtS(laneSkips)},"errors":${fmtE(failed)},"errors_warm":${fmtE(failed)},"errors_cold":${fmtE(errCold.distinct.toSeq)},"errors_retry":${fmtE(errRetry.distinct.toSeq)},"budget_s":${r3(budgetS)},"adjud_reserve_s":${r3(adjudReserveS)},"retry_reserve_s":${r3(retryReserveS)},"budget_exceeded":$budgetExceeded,"n_skipped":${skipped.length},"skipped":${fmtE(skipped)},"n_capped":${cappedWarm.distinct.size},"capped":${fmtE(cappedWarm.distinct.toSeq.sorted)},"capped_unresolved":${fmtE(cappedUnresolved)},"regressions":$regJson,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (fullJson + "\n").getBytes("UTF-8"))
@@ -874,7 +888,7 @@ object Bench {
     // (round 7's driver run was ~1.26x inflated across all lanes and a
     // last-run-wins merge rewrote 195 of 199 entries upward).
     if (!subsetRun) try {
-      val acceptFn = SparkEntry.onlyFilter(Some(
+      val acceptFn = Lanes.onlyFilter(Some(
         sys.env.getOrElse("SPARK_GRAFT_BASELINE_ACCEPT", "")))
       // an ACCEPTED lane re-prices to the min across ALL of this run's
       // samples (cold + every warm pass), not the warm median alone: a
@@ -888,8 +902,8 @@ object Bench {
         k -> (if (!acceptFn(k)) v else
           (results.get(k).toSeq ++ warmSamples.flatMap(_.get(k)) :+ v).min)
       }
-      val merged = mergeBaseline(prevWarm, acceptWarm, benchQueries.contains,
-        acceptFn)
+      val merged = mergeBaseline(prevWarm, acceptWarm,
+        lanes.map(_.name).toSet, acceptFn)
       val bj = baselineJson(sfDir, merged)
       java.nio.file.Files.write(java.nio.file.Paths.get(baselinePath),
         (bj + "\n").getBytes("UTF-8"))
@@ -906,7 +920,7 @@ object Bench {
     // still parsed:null; a small line is the cheapest remaining lever
     // against whatever the driver's tail/parse window is.
     val json =
-      s"""{"metric":"total_warm","value":${r3(totalWarm)},"unit":"sec","queries":${fmt(warm, headline.take(6))},"total_warm":${r3(totalWarm)},"cold_total":${r3(total)},"n_queries":${benchQueries.size},"n_warm_priced":${warm.size},"baseline_sum_priced":${r3(baselineSumPriced)},"warm_vs_baseline":${r3(warmVsBaseline)},"warm_passes":$warmPasses,"n_retried":${retried.size},"n_capped":${cappedWarm.distinct.size},"calib_ms":$calibMs,"steal_pct":${r3(stealPct)},"n_failed":${failed.length},"budget_exceeded":$budgetExceeded,"n_skipped":${skipped.length},"n_regressions":${regressions.length + cappedEntries.length},"detail":"$outPath","sf":"$sfDir"}"""
+      s"""{"metric":"total_warm","value":${r3(totalWarm)},"unit":"sec","queries":${fmt(warm, headline.take(6))},"total_warm":${r3(totalWarm)},"cold_total":${r3(total)},"n_queries":${lanes.size},"n_warm_priced":${warm.size},"baseline_sum_priced":${r3(baselineSumPriced)},"warm_vs_baseline":${r3(warmVsBaseline)},"warm_passes":$warmPasses,"n_retried":${retried.size},"n_capped":${cappedWarm.distinct.size},"calib_ms":$calibMs,"steal_pct":${r3(stealPct)},"n_failed":${failed.length},"budget_exceeded":$budgetExceeded,"n_skipped":${skipped.length},"n_regressions":${regressions.length + cappedEntries.length},"detail":"$outPath","sf":"$sfDir"}"""
     println(json)
     spark.stop()
     // re-printed AFTER spark.stop(): the driver keeps only the TAIL of

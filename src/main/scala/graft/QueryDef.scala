@@ -6,11 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is SQL-expressible) a DuckDB oracle with identical column names and
   * deterministic ordering. Modules expose a `Seq[QueryDef]`; SparkEntry
   * concatenates them into the driver's `queries`/`oracleSql` maps.
+  * `external` names the one input a lane reads outside its data dir;
+  * where that path is absent, [[Lanes.run]] skips the lane.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    external: Option[String] = None)
 
 object QueryDef {
   def apply(name: String, fn: (SparkSession, String) => DataFrame,

@@ -30,13 +30,6 @@ object SparkEntry {
     */
   val ReferenceCorpusDir = "/root/reference/worker-fs/map-task-input"
 
-  /** The corpus lies outside this repository (FIXTURES.md §1). Where it
-    * is absent, `wordcount_reference` cannot run: the tests cancel what
-    * reads it and the registry smoke and PlanAudit skip the lane.
-    */
-  def referenceCorpusPresent: Boolean =
-    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ReferenceCorpusDir))
-
   private val core: Seq[QueryDef] = Seq(
     QueryDef("q1_agg", Queries.q1PricingSummary _,
       """SELECT l_returnflag, l_linestatus,
@@ -60,7 +53,9 @@ object SparkEntry {
         |  FROM documents
         |) WHERE word <> '' GROUP BY word ORDER BY word""".stripMargin),
     // the reference corpus job itself is oracle-verified: DuckDB re-reads
-    // the 13 text files and replays the exact tokenization semantics
+    // the 13 text files and replays the exact tokenization semantics.
+    // The corpus lies outside this repository (FIXTURES.md §1), so the
+    // lane names it as its external input and is skipped where it is absent
     QueryDef("wordcount_reference",
       (s, _) => WordCount.referenceJob(s, ReferenceCorpusDir),
       s"""SELECT word, count(*) AS cnt, upper(substring(word, 1, 1)) AS pkey
@@ -68,6 +63,7 @@ object SparkEntry {
          |  SELECT regexp_replace(lower(unnest(string_split(content, ' '))), '[^\\w]', '', 'g') AS word
          |  FROM read_text('$ReferenceCorpusDir/*.txt')
          |) WHERE word <> '' GROUP BY word ORDER BY word""".stripMargin)
+      .copy(external = Some(ReferenceCorpusDir))
   )
 
   /** Full registry: reference parity + relational/scalar surface (+ the
@@ -127,23 +123,6 @@ object SparkEntry {
     */
   val ObjAggFallbackThreshold: String =
     EnvKnob.positive("SPARK_GRAFT_OBJ_AGG_FALLBACK", 65536, Int.MaxValue).toString
-
-  /** The `SPARK_GRAFT_ONLY` subset spec, read here once, so Verify,
-    * Bench, PlanAudit and ScaleProbe can never select different query
-    * sets (the adjudication workflow depends on them agreeing). Unset
-    * means every lane.
-    */
-  val onlySpec: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")
-  val only: String => Boolean = onlyFilter(onlySpec)
-
-  /** A subset spec: comma-separated names, trailing '*' = prefix match. */
-  def onlyFilter(spec: Option[String]): String => Boolean = spec match {
-    case Some(s) =>
-      val pats = s.split(",").map(_.trim).filter(_.nonEmpty)
-      name => pats.exists(p =>
-        if (p.endsWith("*")) name.startsWith(p.dropRight(1)) else name == p)
-    case None => _ => true
-  }
 }
 
 /** Flagship query, kept separate so `entry` stays a one-liner. */

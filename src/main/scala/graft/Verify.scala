@@ -6,30 +6,28 @@ import org.apache.commons.io.FileUtils
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional subset (SPARK_GRAFT_ONLY, shared with Bench): a local
+    // iteration dumps one new query in seconds instead of the full
+    // registry; with no filter set, the dump covers every lane
+    val lanes = Lanes.selected()
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    // wordcount_reference reads the reference corpus, not `sfDir`, and
-    // it lies outside this repository (FIXTURES.md §1): where it is
-    // absent the lane is skipped by name, and skipped.json says why
-    val skipped =
-      if (SparkEntry.referenceCorpusPresent) Map.empty[String, String]
-      else Map("wordcount_reference" -> "reference corpus absent")
-    // optional subset (SparkEntry.only, shared with Bench): lets a
-    // local iteration dump one new query in seconds instead of the full
-    // registry; the driver sets no filter and always gets the full dump
-    SparkEntry.queries.filter(kv => SparkEntry.only(kv._1)).foreach { case (name, fn) =>
+    val skipped = lanes.flatMap { lane =>
       // stale output from a previous run is removed: a regressed or
       // skipped query must surface as missing or skipped, not silently
       // pass on old results
-      val out = new java.io.File(s"$outDir/$name")
-      if (skipped.contains(name)) {
-        System.err.println(
-          s"[verify] SKIP $name (${skipped(name)} at ${SparkEntry.ReferenceCorpusDir})")
-        FileUtils.deleteQuietly(out)
-      } else try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.getPath)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        FileUtils.deleteQuietly(out)
+      val out = new java.io.File(s"$outDir/${lane.name}")
+      FileUtils.deleteQuietly(out)
+      Lanes.run(spark, lane, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(out.getPath)) match {
+        case Lanes.Ran => None
+        case Lanes.Skipped(reason) =>
+          System.err.println(s"[verify] SKIP ${lane.name} ($reason)")
+          Some(lane.name -> reason)
+        case Lanes.Failed(e) =>
+          System.err.println(s"[verify] ${lane.name} failed: ${e.getMessage}")
+          FileUtils.deleteQuietly(out) // a partial write is not an output
+          None
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -51,8 +49,10 @@ object Verify {
     // the exact per-id values from the corpus tables in DuckDB. The
     // token is substituted here because only Verify knows the outDir.
     val dumpRoot = new java.io.File(outDir).getAbsolutePath
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__DUMP__", dumpRoot))}" }
+    // the selected lanes only: the compare walks these names, so the
+    // stale output dirs of unselected lanes are never read
+    val json = lanes.flatMap(l => l.oracle.map(v =>
+        s"${q(l.name)}: ${q(v.replace("__DUMP__", dumpRoot))}"))
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/skipped.json"),

@@ -10,18 +10,16 @@ import graft.functions.CaseFold
   * forgotten deletion propagation (which derived artifacts must be
   * rewritten when source documents are deleted) and crawl-frontier
   * selection (which undiscovered hosts the next crawl wave should
-  * fetch). Both are exact-integer decisions over one corpus scan plus
-  * broadcast-sized side frames — the corpus never shuffles for a join
-  * in either lane.
+  * fetch). Both are exact-integer decisions over one corpus scan (plus,
+  * for the frontier, broadcast-sized side frames) — the corpus never
+  * shuffles for a join in either lane.
   */
 object Pipeline8 {
 
   // ------------------------------------------------- deletion propagation
 
   /** Every doc_id divisible by this is a standing delete request — the
-    * deterministic stand-in for an external request table (the operator
-    * still routes it through a broadcast join, the shape a real request
-    * feed would use).
+    * deterministic stand-in for an external request table.
     */
   val ForgetEvery = 37
 
@@ -45,8 +43,8 @@ object Pipeline8 {
     * integer-ratio rewrite rule, so the decision column can never flip
     * on float drift.
     *
-    * Scale: requests are tiny vs the corpus (deletes are rare events) —
-    * they ride a BROADCAST left join onto the one corpus scan; the only
+    * Scale: the delete flag is a function of each row's own doc_id, so
+    * the accounting reads the corpus once with no join; the only
     * shuffle is the 8-row shard aggregate. At 100 TB this is one pass
     * over the corpus manifest, which is exactly what a deletion audit
     * costs.
@@ -58,32 +56,27 @@ object Pipeline8 {
   /** The per-shard purge accounting over ANY (doc_id, text) frame — all
     * six measures are SUMS, so partials over corpus slices re-aggregate
     * to the one-shot answer (the property [[graft.streaming
-    * .StreamingQueries]]'s streaming twin rides). The request feed is
-    * derived from the same frame and broadcast back — the join shape a
-    * real external request table would use.
+    * .StreamingQueries]]'s streaming twin rides). Each row carries its
+    * own delete flag, so the frame is read once.
     */
   private[graft] def forgetAccounting(docs: DataFrame): DataFrame = {
-    val requests = docs
-      .filter(pmod(col("doc_id"), lit(ForgetEvery)) === 0)
-      .select(col("doc_id"), lit(1L).as("del"))
     val nTok = size(CaseFold.tokens(col("text"))).cast("long")
-    val purged = when(col("del").isNotNull, lit(true)).otherwise(lit(false))
     docs
-      .select(col("doc_id"),
+      .select(
         pmod(Tables.saltedHash("shuf:", col("doc_id"), 8),
           lit(Pipeline3.NumShards)).as("shard"),
-        nTok.as("n_tok"))
+        nTok.as("n_tok"),
+        (pmod(col("doc_id"), lit(ForgetEvery)) === 0).as("del"))
       .withColumn("n_chunks",
         (floor((col("n_tok") - 1) / Pipeline4.ChunkS) + 1).cast("long"))
-      .join(broadcast(requests), Seq("doc_id"), "left")
       .groupBy(col("shard"))
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(when(purged, 1L).otherwise(0L)).as("n_docs_purged"),
+        sum(when(col("del"), 1L).otherwise(0L)).as("n_docs_purged"),
         sum(col("n_chunks")).as("n_chunks"),
-        sum(when(purged, col("n_chunks")).otherwise(0L)).as("n_chunks_purged"),
+        sum(when(col("del"), col("n_chunks")).otherwise(0L)).as("n_chunks_purged"),
         sum(col("n_tok")).as("n_tokens"),
-        sum(when(purged, col("n_tok")).otherwise(0L)).as("n_tokens_purged"))
+        sum(when(col("del"), col("n_tok")).otherwise(0L)).as("n_tokens_purged"))
   }
 
   /** The integer rewrite-vs-tombstone rule, applied AFTER all partials

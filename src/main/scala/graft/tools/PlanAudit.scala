@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
+import graft.Lanes
 import graft.streaming.StreamingQueries
 
 /** Prints the EXECUTED-plan audit for EVERY registered query: scan
@@ -15,10 +16,10 @@ import graft.streaming.StreamingQueries
   * showed wholeStage=0). The `== Initial Plan ==` section AQE appends
   * is stripped before counting.
   *
-  * Streaming queries (`stream_*`) return a drained memory-sink table
-  * whose own plan is a local scan — auditing that would say nothing.
-  * For those, the audit reads the stopped query the lane drained last,
-  * `StreamingQueries.lastDrained`, and counts nodes in its last
+  * Streaming queries ([[graft.Lanes.streaming]]) return a drained
+  * memory-sink table whose own plan is a local scan — auditing that
+  * would say nothing. For those, the audit reads the stopped query the
+  * lane drained, `StreamingQueries.lastDrained`, and counts nodes in its last
   * MICRO-BATCH physical plan (`StreamingQuery.explain()`) instead
   * (`final=stream` rows).
   *
@@ -29,14 +30,15 @@ import graft.streaming.StreamingQueries
   * shapes); every row is additionally checked for cart=0 and bnlj=0,
   * and every batch row for no cached (InMemoryTableScan) scan.
   * Any violation prints `ASSERT-FAIL` and the run exits nonzero, so a
-  * plan regression cannot produce a quietly-wrong PLANS.md. A lane that
-  * throws is recorded as `LANE-FAIL` and the audit goes on to the next
-  * lane; `wordcount_reference` is skipped where the reference corpus is
-  * absent, as in the registry smoke.
+  * plan regression cannot produce a quietly-wrong PLANS.md. Every lane
+  * runs through [[graft.Lanes.run]]: a lane that throws is recorded as
+  * `LANE-FAIL` and the audit goes on to the next lane; a lane whose
+  * external input is absent prints `SKIP` with the reason and counts as
+  * skipped, not audited.
   *
   * Run: sbt "runMain graft.tools.PlanAudit [sfDir] [--full]"
   * (`--full` prints each lane's final plan; `SPARK_GRAFT_ONLY` selects a
-  * subset, as in Verify and Bench).
+  * subset, as in Verify and Bench, and one that selects no lane throws).
   */
 object PlanAudit {
 
@@ -54,6 +56,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.01")
+    val lanes = Lanes.selected().sortBy(_.name)
     // 4 cores whatever SPARK_GRAFT_CPUS says: shuffle partitions = cores,
     // and the rows (aqeRead, exchange reuse) depend on the partition
     // count, so an audit on any machine compares byte for byte with
@@ -473,13 +476,12 @@ object PlanAudit {
         ("narrow-decode-no-shuffle",
           m => m("scans") == 1 && m("hx") == 0 && m("smj") == 0 &&
             m("bhj") == 0)),
-      // governance tier (r12): delete requests ride a BROADCAST join
-      // onto the one corpus pass — the corpus is never sort-merge
-      // shuffled for the request attach; the only hash exchange is the
-      // 8-row shard aggregate
+      // governance tier: the delete flag is a function of each row's
+      // own doc_id, so the accounting is one corpus pass with no join;
+      // the only hash exchange is the 8-row shard aggregate
       "pipeline_forget" -> Seq(
-        ("broadcast-requests-no-smj",
-          m => m("bhj") >= 1 && m("smj") == 0 && m("hx") <= 2)),
+        ("single-corpus-scan",
+          m => m("scans") == 1 && m("bhj") == 0 && m("smj") == 0)),
       // crawl frontier (r12): the crawled-host set broadcasts into the
       // anti-join and the final budget cut is a TakeOrdered — page
       // rows shuffle only for the host-granular aggregate
@@ -529,24 +531,16 @@ object PlanAudit {
       // broadcast — a bounded scalar attach
       "text_bm25")
 
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(graft.SparkEntry.only)
     val failures = scala.collection.mutable.ListBuffer.empty[String]
     val laneFails = scala.collection.mutable.ListBuffer.empty[String]
     var skipped = 0
 
-    names.foreach { name =>
-      // wordcount_reference reads the reference corpus, not `dir`; it
-      // lies outside this repository (FIXTURES.md §1)
-      if (name == "wordcount_reference" && !graft.SparkEntry.referenceCorpusPresent) {
-        println(s"SKIP $name (corpus absent at ${graft.SparkEntry.ReferenceCorpusDir})")
-        skipped += 1
-      } else try {
-        val streaming = name.startsWith("stream_")
-        // cleared per query: auditing a STALE query from the previous
-        // streaming lane would silently misattribute its shape
-        if (streaming) StreamingQueries.lastDrained = None
-        val df = graft.SparkEntry.queries(name)(spark, dir)
+    lanes.foreach { lane =>
+      val name = lane.name
+      val streaming = Lanes.streaming(name)
+      // the runner clears lastDrained before a streaming lane, so the
+      // audit can never read a STALE query from the previous lane
+      Lanes.run(spark, lane, dir) { df =>
         val (plan, finalTag) = if (streaming) {
           // the query already ran (drained to its sink); audit its last
           // micro-batch plan, not the sink table's local scan
@@ -634,18 +628,23 @@ object PlanAudit {
           } else if (asserts.contains(name)) println(s"   assert-ok $label")
         }
         if (args.contains("--full")) println(plan)
-      } catch { case scala.util.control.NonFatal(e) =>
-        // one throwing lane must not hide the rows and asserts after it
-        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
-          .getOrElse(e.getClass.getSimpleName)
-        println(s"LANE-FAIL $name: $msg")
-        laneFails += s"$name: $msg"
+      } match {
+        case Lanes.Ran => ()
+        case Lanes.Skipped(reason) =>
+          println(s"SKIP $name ($reason)")
+          skipped += 1
+        case Lanes.Failed(e) =>
+          // one throwing lane must not hide the rows and asserts after it
+          val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+            .getOrElse(e.getClass.getSimpleName)
+          println(s"LANE-FAIL $name: $msg")
+          laneFails += s"$name: $msg"
       }
     }
     if (failures.nonEmpty) println(s"ASSERT-FAILURES: ${failures.mkString(", ")}")
     if (laneFails.nonEmpty) println(s"LANE-FAILURES: ${laneFails.mkString("; ")}")
     if (failures.isEmpty && laneFails.isEmpty) println(
-      s"ASSERT: all plan assertions passed (${names.length - skipped} queries" +
+      s"ASSERT: all plan assertions passed (${lanes.length - skipped} queries" +
         (if (skipped > 0) s", $skipped skipped)" else ")"))
     spark.stop()
     if (failures.nonEmpty || laneFails.nonEmpty) sys.exit(1)

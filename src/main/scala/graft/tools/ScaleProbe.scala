@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{EnvKnob, GraftSession, SparkEntry}
+import graft.{EnvKnob, GraftSession, Lanes, SparkEntry}
 
 /** One-off scale validation: replicate the sf0.1 tables N× (default 10)
   * and time the repo's five most expensive plans at both volumes, so the
@@ -32,6 +32,9 @@ import graft.{EnvKnob, GraftSession, SparkEntry}
   * one-time costs), then `SPARK_GRAFT_SCALE_PASSES` (default 2) timed
   * warm passes; the reported number is their median. The scaled tables
   * are built once and cached under a `_READY` marker.
+  *
+  * Run: sbt "runMain graft.tools.ScaleProbe [uniform|skew|semantic|stream|q97]"
+  * (default `uniform`; an unknown sweep throws).
   */
 object ScaleProbe {
 
@@ -211,17 +214,26 @@ object ScaleProbe {
   private val SkewQueries = Seq("dedup_minhash_lsh", "dedup_substring",
     "dedup_prefix_jaccard")
 
+  /** The sweeps, selected by the one argument; `uniform` is the default. */
+  private val Sweeps = Seq("uniform", "skew", "semantic", "stream", "q97")
+
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = EnvKnob.positive("SPARK_GRAFT_SCALE_FACTOR", 10, Int.MaxValue).toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_probe_${factor}x")
     val passes = EnvKnob.positive("SPARK_GRAFT_SCALE_PASSES", 2, Int.MaxValue).toInt
+    val sweep = args.headOption.getOrElse("uniform")
+    require(args.length <= 1 && Sweeps.contains(sweep), s"unknown sweep " +
+      s"'${args.mkString(" ")}': use ScaleProbe [${Sweeps.mkString("|")}]")
+    // SPARK_GRAFT_ONLY re-measures a subset of the uniform sweep without
+    // paying for all of it; selected before the session, so a spec that
+    // selects no probed lane fails at once
+    val uniform =
+      if (sweep != "uniform") Nil
+      else Lanes.selected(Queries.map(SparkEntry.registry.map(q => q.name -> q).toMap))
     val cpus = GraftSession.envCpus
     val spark = GraftSession(cpus)
-
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted; val n = s.length
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
@@ -245,20 +257,23 @@ object ScaleProbe {
       try body
       finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toLong)
     }
-    def timeBody(run: () => Unit): Double = {
-      run() // untimed cold: codegen + fixture builds
+    // every timed frame, registered lane or not, runs under the same
+    // volume conf: a SPARK_GRAFT_SHUFFLE_PARTITIONS override that reached
+    // one timer and not another would make their ratios incomparable
+    def timeAt(dir: String)(df: => DataFrame): Double = withVolumeConf(dir) {
+      Lanes.force(df) // untimed cold: codegen + fixture builds
       median((1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        run()
+        Lanes.force(df)
         (System.nanoTime() - t0) / 1e9
       })
     }
     def time(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
-      withVolumeConf(dir)(timeBody(() => force(fn(spark, dir))))
+      timeAt(dir)(fn(spark, dir))
     }
 
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SKEW")) {
+    if (sweep == "skew") {
       // SKEW SWEEP: one global hot near-dup cluster (5% of docs share a
       // template) at 1× and N× — the uniform replicas above never
       // exercise the bucket-cap/anchor-star path at bench scale because
@@ -292,11 +307,7 @@ object ScaleProbe {
           f""""candidates":$nCand,"verified":$nOut,""" +
           f""""waste":${nCand.toDouble / math.max(1L, nOut)}%.3f}""")
       }
-      spark.stop()
-      return
-    }
-
-    if (sys.env.contains("SPARK_GRAFT_SCALE_SEMANTIC")) {
+    } else if (sweep == "semantic") {
       // SEMANTIC SWEEP: dedup_semantic needs its own fixture — verbatim
       // replica vectors would make every replica an exact within-cluster
       // dup (cos = 1 ≥ τ) and measure only the k-too-small pathology.
@@ -316,14 +327,8 @@ object ScaleProbe {
       println(f"""{"q":"dedup_semantic","semantic":true,"k":16,""" +
         f""""base_warm":$b%.3f,"scaled_warm":$s%.3f,""" +
         f""""ratio":${s / b}%.3f,"factor":$factor}""")
-      def timeK(dir: String, k: Int): Double =
-        // same scaled-volume conf discipline as time(): without it a
-        // SPARK_GRAFT_SHUFFLE_PARTITIONS override would apply to the
-        // k=16 scaled lane but not this one, making ratio_vs_base
-        // incomparable
-        withVolumeConf(dir)(timeBody(() =>
-          force(graft.operators.Similarity.dedupSemanticK(spark, dir, k))))
-      val sk = timeK(semN, 16 * factor)
+      val sk = timeAt(semN)(
+        graft.operators.Similarity.dedupSemanticK(spark, semN, 16 * factor))
       println(f"""{"q":"dedup_semantic","semantic":true,"k":${16 * factor},""" +
         f""""scaled_warm":$sk%.3f,"ratio_vs_base":${sk / b}%.3f,""" +
         f""""factor":$factor}""")
@@ -340,11 +345,7 @@ object ScaleProbe {
           s""""k":$k,"n_clusters":${cs.getLong(0)},"max_cluster":${cs.getLong(1)},""" +
           s""""sum_sq":${cs.getLong(2)},"n_dropped":$dropped}""")
       }
-      spark.stop()
-      return
-    }
-
-    if (sys.env.contains("SPARK_GRAFT_SCALE_STREAM")) {
+    } else if (sweep == "stream") {
       // STREAMING SWEEP: the tier's 100×-cliff shape is STATE-STORE
       // growth (per-key state in RocksDB for TWS/row-pattern, symmetric
       // join buffers bounded only by the watermark for the outer join),
@@ -372,7 +373,7 @@ object ScaleProbe {
         Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
           withVolumeConf(d) {
             graft.streaming.StreamingQueries.lastDrained = None
-            force(SparkEntry.queries(q)(spark, d))
+            Lanes.force(SparkEntry.queries(q)(spark, d))
             val ps = graft.streaming.StreamingQueries.lastDrained.toSeq
               .flatMap(_.recentProgress.toSeq).map(BatchProgress(_))
             if (ps.nonEmpty) {
@@ -392,11 +393,7 @@ object ScaleProbe {
           }
         }
       }
-      spark.stop()
-      return
-    }
-
-    if (sys.env.contains("SPARK_GRAFT_SCALE_Q97")) {
+    } else if (sweep == "q97") {
       // EXACT-vs-SKETCH head-to-head for the rolling median: q97's
       // per-row frame array grows with rows-per-day while the lean
       // sketch form's window state is O(31·K·log) regardless — this
@@ -404,29 +401,21 @@ object ScaleProbe {
       // carries the gate's exact-verification substrate on top, so it
       // cannot show the advantage itself).
       buildScaled(spark, baseDir, outDir, factor)
-      def timeLean(dir: String): Double =
-        withVolumeConf(dir)(timeBody(() =>
-          force(graft.operators.Analytics3.rollingMedianKllLean(spark, dir))))
       Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
         val ex = time("q97_rolling_median", d)
-        val lean = timeLean(d)
+        val lean = timeAt(d)(graft.operators.Analytics3.rollingMedianKllLean(spark, d))
         println(f"""{"q":"q97_exact_vs_sketch","vol":"$tag","exact_warm":$ex%.3f,""" +
           f""""sketch_warm":$lean%.3f,"sketch_over_exact":${lean / ex}%.3f,""" +
           f""""factor":$factor}""")
       }
-      spark.stop()
-      return
-    }
-
-    buildScaled(spark, baseDir, outDir, factor)
-
-    // SPARK_GRAFT_ONLY re-measures a subset without paying for the full
-    // sweep
-    Queries.filter(SparkEntry.only).foreach { q =>
-      val b = time(q, baseDir)
-      val s = time(q, outDir)
-      println(f"""{"q":"$q","base_warm":$b%.3f,"scaled_warm":$s%.3f,""" +
-        f""""ratio":${s / b}%.3f,"factor":$factor}""")
+    } else {
+      buildScaled(spark, baseDir, outDir, factor)
+      uniform.map(_.name).foreach { q =>
+        val b = time(q, baseDir)
+        val s = time(q, outDir)
+        println(f"""{"q":"$q","base_warm":$b%.3f,"scaled_warm":$s%.3f,""" +
+          f""""ratio":${s / b}%.3f,"factor":$factor}""")
+      }
     }
     spark.stop()
   }

@@ -237,6 +237,22 @@ class BenchBaselineSpec extends AnyFunSuite {
     }
   }
 
+  test("a lane whose external input is absent is skipped, not failed or regressed") {
+    val missing = "/nonexistent/graft-bench-corpus"
+    val lanes = Seq(
+      QueryDef("wordcount_reference", (_, _) => fail("must not run"), None,
+        Some(missing)),
+      QueryDef("q1_agg", (_, _) => null, None))
+    val (skips, runnable) = Bench.splitRunnable(lanes)
+    assert(skips === Map("wordcount_reference" -> s"external input absent: $missing"))
+    assert(runnable.keySet === Set("q1_agg"))
+    // the skipped lane never runs, so no pass can book it as an error or
+    // a failed:true regression; the merge keeps its 0.106 s prior
+    val priors = Map("wordcount_reference" -> 0.106, "q1_agg" -> 0.5)
+    assert(Bench.mergeBaseline(priors, Map("q1_agg" -> 0.4),
+      lanes.map(_.name).toSet) === Map("wordcount_reference" -> 0.106, "q1_agg" -> 0.4))
+  }
+
   test("QueryDef rejects a null oracle (registry-before-oracle-val init bug)") {
     val e = intercept[IllegalArgumentException](
       QueryDef("some_query", (_, _) => null, null: String))

@@ -25,8 +25,7 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("every registered query executes and is non-degenerate at sf0.001") {
-    def check(q: QueryDef): Unit = {
-      val df = q.fn(spark, sf0001)
+    def check(q: QueryDef)(df: org.apache.spark.sql.DataFrame): Unit = {
       val n = df.count()
       assert(n >= 0, s"${q.name} failed")
       assert(df.columns.nonEmpty, s"${q.name} has no columns")
@@ -49,18 +48,10 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     // chunk when sequential. Streaming lanes stay SEQUENTIAL: they pin
     // memory-sink queryNames and toggle shuffle.partitions around their
     // runs, both process-global.
-    // wordcount_reference ignores the data dir and reads the reference
-    // corpus, which lies outside this repository (FIXTURES.md §1)
-    val lanes =
-      if (SparkEntry.referenceCorpusPresent) SparkEntry.registry
-      else {
-        info("wordcount_reference not run: no reference corpus at " +
-          SparkEntry.ReferenceCorpusDir)
-        SparkEntry.registry.filterNot(_.name == "wordcount_reference")
-      }
-    val (streamQs, batchQs) = lanes.partition(_.name.startsWith("stream_"))
-    def run(q: QueryDef): (String, scala.util.Try[Unit]) =
-      q.name -> scala.util.Try(check(q))
+    val lanes = SparkEntry.registry
+    val (streamQs, batchQs) = lanes.partition(q => Lanes.streaming(q.name))
+    def run(q: QueryDef): (String, Lanes.Outcome) =
+      q.name -> Lanes.run(spark, q, sf0001)(check(q))
     // every lane runs to the end so one failure cannot hide another
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val batchResults = try {
@@ -69,8 +60,13 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
       import scala.concurrent.duration._
       futures.map(f => scala.concurrent.Await.result(f, 20.minutes))
     } finally pool.shutdown()
-    val failures = (batchResults ++ streamQs.map(run)).collect {
-      case (name, scala.util.Failure(e)) => name -> e
+    val results = batchResults ++ streamQs.map(run)
+    // a lane whose external input is absent here (wordcount_reference
+    // without the reference corpus, FIXTURES.md §1) is reported, not run
+    results.collect { case (name, Lanes.Skipped(reason)) =>
+      info(s"$name not run: $reason") }
+    val failures = results.collect {
+      case (name, Lanes.Failed(e)) => name -> e
     }
     if (failures.nonEmpty) {
       val lines = failures.map { case (name, e) =>

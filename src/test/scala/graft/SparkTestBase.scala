@@ -14,7 +14,8 @@ trait SparkTestBase { self: AnyFunSuite =>
     * facts hold only for its exact bytes, so there is nothing to stand in.
     */
   def assumeReferenceCorpus(): Unit =
-    assume(SparkEntry.referenceCorpusPresent,
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get(SparkEntry.ReferenceCorpusDir)),
       s"; reference corpus not found at ${SparkEntry.ReferenceCorpusDir}; " +
         "it lies outside this repository (FIXTURES.md §1)")
 }

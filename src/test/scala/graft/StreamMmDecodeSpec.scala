@@ -63,9 +63,9 @@ class StreamMmDecodeSpec extends AnyFunSuite with SparkTestBase {
     assert(q.id !== decodeId, "lastDrained still holds stream_mm_decode's query")
     assert(!q.isActive, "a drained query must be stopped")
     val ps = q.recentProgress
-    // forgetAccounting reads its batch twice (the documents and the
-    // delete requests drawn from them), and progress counts both scans
-    assert(ps.map(_.numInputRows).sum === 2 * Tables.documents(spark, sf0001).count())
+    // forgetAccounting reads each batch once: the delete flag is a
+    // function of the row's own doc_id, so no request scan joins back
+    assert(ps.map(_.numInputRows).sum === 1 * Tables.documents(spark, sf0001).count())
     assert(ps.count(_.numInputRows > 0) === nBatches)
     assert(ps.last.sink.description.contains("ForeachBatchSink"),
       s"not the forget lane's sink: ${ps.last.sink.description}")

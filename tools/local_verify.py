@@ -14,8 +14,11 @@ Two divergence classes slipped through the old 1e-9-rounding replica:
      type: 'numpy.ndarray'". We detect list/struct/ndarray cells and
      fail the query with ARRAY-COLUMN the way the driver would ERR.
 
-With SPARK_GRAFT_ONLY set (the same spec graft.Verify reads), only the
-selected queries are compared, so a subset run can come back green.
+The compare walks the names in graft.Verify's oracle_sql.json, which
+lists the lanes Verify selected: with SPARK_GRAFT_ONLY set, only those
+are compared, so a subset run can come back green, and output dirs left
+by earlier runs of other lanes are never read. A spec that selects no
+lane makes graft.Verify exit non-zero, and this script with it.
 
 A lane graft.Verify lists in skipped.json (wordcount_reference where the
 reference corpus is absent) prints SKIPPED with the reason and is counted
@@ -24,7 +27,7 @@ oracle and no output prints MISSING-SPARK-OUTPUT and fails it.
 
 Usage: python3 tools/local_verify.py [sfdir] [outdir] [--skip-spark]
 """
-import json, os, subprocess, sys
+import json, subprocess, sys
 from pathlib import Path
 
 import duckdb
@@ -43,16 +46,6 @@ def run_spark():
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines() if "[error]" in l or "failed" in l.lower()) + "\n")
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-2000:]); sys.exit(1)
-
-
-def only_filter(spec):
-    """SparkEntry.onlyFilter in Python: comma-separated names, a trailing
-    '*' is a prefix match; None selects every name."""
-    if spec is None:
-        return lambda name: True
-    pats = [p.strip() for p in spec.split(",") if p.strip()]
-    return lambda name: any(
-        name.startswith(p[:-1]) if p.endswith("*") else name == p for p in pats)
 
 
 class ArrayColumn(Exception):
@@ -99,25 +92,27 @@ def canon(tbl: pa.Table):
 def main():
     if "--skip-spark" not in sys.argv:
         run_spark()
-    selected = only_filter(os.environ.get("SPARK_GRAFT_ONLY"))
-    oracle = {n: q for n, q in json.loads(Path(f"{OUTDIR}/oracle_sql.json").read_text()).items()
-              if selected(n)}
+    oracle = json.loads(Path(f"{OUTDIR}/oracle_sql.json").read_text())
+    # lanes graft.Verify could not run on this machine, with the reason
+    # (wordcount_reference where the reference corpus is absent); any
+    # other missing output still fails
+    skipped_path = Path(f"{OUTDIR}/skipped.json")
+    skipped = json.loads(skipped_path.read_text()) if skipped_path.exists() else {}
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SFDIR}/{t}.parquet'")
 
     results = {}
-    spark_dirs = [p for p in Path(OUTDIR).iterdir() if p.is_dir() and selected(p.name)]
-    for qdir in sorted(spark_dirs):
-        name = qdir.name
-        files = list(qdir.glob("*.parquet"))
-        if not files:
+    for name in sorted(oracle):
+        qdir = Path(OUTDIR) / name
+        if not qdir.is_dir():
+            results[name] = (f"SKIPPED ({skipped[name]})" if name in skipped
+                             else "MISSING-SPARK-OUTPUT")
+            continue
+        if not list(qdir.glob("*.parquet")):
             results[name] = "SPARK-EMPTY-OUTPUT"
             continue
         spark_tbl = pq.read_table(qdir)
-        if name not in oracle:
-            results[name] = f"rows-only: {spark_tbl.num_rows} rows"
-            continue
         try:
             duck_tbl = con.execute(oracle[name]).fetch_arrow_table()
         except Exception as e:
@@ -142,21 +137,12 @@ def main():
                              + (f" [dtypes: {dtinfo}]" if dtinfo else ""))
         else:
             results[name] = f"OK ({len(sr)} rows)"
-    # lanes graft.Verify could not run on this machine, with its reason
-    # (wordcount_reference where the reference corpus is absent); any
-    # other missing output still fails
-    skipped_path = Path(f"{OUTDIR}/skipped.json")
-    skipped = json.loads(skipped_path.read_text()) if skipped_path.exists() else {}
-    for name in sorted(oracle):
-        if name not in results:
-            results[name] = (f"SKIPPED ({skipped[name]})" if name in skipped
-                             else "MISSING-SPARK-OUTPUT")
 
     width = max(len(n) for n in results) if results else 0
     counts = {"ok": 0, "skipped": 0, "failed": 0}
     for name in sorted(results):
         status = results[name]
-        if status.startswith("OK") or status.startswith("rows-only"):
+        if status.startswith("OK"):
             counts["ok"] += 1
         elif status.startswith("SKIPPED"):
             counts["skipped"] += 1
