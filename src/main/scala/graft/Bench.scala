@@ -1,5 +1,9 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.JsonProcessingException
+
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR (default sf0.1).
   *
@@ -73,12 +77,12 @@ package graft
   *   - regression-gate priors live in bench_baseline.<sf>.json,
   *     written only by FULL-registry runs at that scale factor, so
   *     subset runs (SPARK_GRAFT_ONLY) and other-sf smokes never
-  *     clobber them.
+  *     clobber them;
+  *   - every JSON it writes or reads goes through [[Json]]: seconds are
+  *     rounded half-up to 3 decimals, strings (the SF dir, the output
+  *     path, skip reasons) are escaped.
   */
 object Bench {
-
-  private[graft] def r3(v: Double): String = BigDecimal(v)
-    .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
   /** The headline subset: the only lanes the cold pass runs, and the
     * lanes whose warm medians ride the compact stdout line (first 6).
@@ -256,16 +260,15 @@ object Bench {
     busy = (t1 - t0) - (i1 - i0) if busy > 0
   } yield 100.0 * (s1 - s0) / busy).getOrElse(-1.0)
 
-  /** The exact baseline-file shape [[main]] writes — serializer and
-    * parser live side by side because the parser is a REGEX over this
-    * one shape, not a JSON library ([[parseBaseline]] explains why that
-    * is safe and where it must refuse).
+  /** The baseline file [[main]] writes: the SF dir and the warm priors,
+    * lanes sorted by name, seconds rounded to 3 decimals.
     */
-  private[graft] def baselineJson(sf: String, warm: Map[String, Double]): String = {
-    val body = warm.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString(",")
-    s"""{"sf":"$sf","queries_warm":{$body}}"""
-  }
+  private[graft] def baselineJson(sf: String, warm: Map[String, Double]): String =
+    Json.write(ListMap("sf" -> sf, "queries_warm" -> seconds(warm, warm.keys.toSeq.sorted)))
+
+  /** `keys`' seconds in `m`, in `keys` order, rounded to 3 decimals. */
+  private def seconds(m: Map[String, Double], keys: Iterable[String]) =
+    ListMap.from(keys.flatMap(k => m.get(k).map(v => k -> Json.round(v))))
 
   /** Merge this run's warm medians into the baseline priors, PER-QUERY
     * MINIMA: the baseline means "best clean observation so far", so a
@@ -290,42 +293,31 @@ object Bench {
       k -> (if (accept(k)) v else math.min(prevWarm.getOrElse(k, v), v))
     }).filter { case (k, _) => registered(k) }
 
-  /** Parse a baseline/bench JSON's warm medians. A regex, not a JSON
-    * parser (no JSON library on the offline classpath) — sound ONLY
-    * because [[baselineJson]] is the writer and emits a flat
-    * string→number object. That coupling is the risk: a future nested
-    * value would make `[^}]*` truncate at the first inner `}` and the
-    * old code returned a silently-wrong/empty map, BLINDING the
-    * regression gate (the round-5 failure mode, via the missing-file
-    * path). So this parser REFUSES loudly instead: any `{` inside the
-    * extracted body, a missing `queries_warm` key, or a body whose
-    * entries don't all parse is an error, not an empty map. Absent FILE
-    * = legitimately no prior (first run at an SF); absent/denatured
-    * STRUCTURE = a bug that must not pass silently.
-    * BenchBaselineSpec pins both directions.
+  /** The warm priors in a baseline file or a `bench_out.json` (the
+    * fallback), read from its top-level `queries_warm` object. A file of
+    * another SF reads as no prior: like is only compared with like. A
+    * file at this SF that is not JSON, has no `queries_warm` object, or
+    * holds an entry that is not a number throws, naming `file`: an
+    * empty or partial prior would silently exempt lanes from the
+    * regression gate (round 5's blind gate). An absent FILE is the
+    * caller's no-prior case. BenchBaselineSpec pins both directions.
     */
-  private[graft] def parseBaseline(txt: String, sfDir: String): Map[String, Double] = {
-    // only compare like with like: a prior at a different scale factor
-    // would flag everything or nothing, both meaningless
-    val prevSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    if (!prevSf.contains(sfDir)) Map.empty
+  private[graft] def parseBaseline(txt: String, sfDir: String,
+      file: String = "baseline"): Map[String, Double] = {
+    def refuse(why: String, cause: Throwable = null) = throw new RuntimeException(
+      s"$file: $why — refusing to run the regression gate against it", cause)
+    val root = try Json.read(txt) catch {
+      case e: JsonProcessingException => refuse(s"malformed JSON (${e.getOriginalMessage})", e)
+    }
+    if (root.path("sf").asText != sfDir) Map.empty
     else {
-      val obj = """"queries_warm":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse(
-          sys.error("baseline JSON has no queries_warm object — " +
-            "refusing to run the regression gate blind"))
-      if (obj.contains("{"))
-        sys.error("baseline queries_warm is not a flat string->number " +
-          "object — the regex parser cannot read nested JSON; fix the " +
-          "writer/parser pair in graft.Bench together")
-      val entries = """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(obj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toVector
-      val segments = if (obj.trim.isEmpty) 0 else obj.split(",", -1).length
-      if (entries.length != segments)
-        sys.error(s"baseline queries_warm parsed ${entries.length} of " +
-          s"$segments entries — malformed baseline; refusing to run the " +
-          "regression gate against a partial prior")
-      entries.toMap
+      val warm = root.path("queries_warm")
+      if (!warm.isObject) refuse("no queries_warm object")
+      warm.properties.asScala.map { e =>
+        if (!e.getValue.isNumber) refuse(s"queries_warm entry '${e.getKey}' " +
+          "is not a number; the priors must be a flat string->number object")
+        e.getKey -> e.getValue.asDouble
+      }.toMap
     }
   }
 
@@ -350,41 +342,6 @@ object Bench {
     BigDecimal(s(1)).setScale(1, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  /** Per-query JVM-cost snapshot for cold-lane attribution (see the
-    * SPARK_GRAFT_BENCH_DIAG note in [[main]]). The cumulative counters
-    * (gc/jit/codegen/classes) are recorded as per-query DELTAS; heap is
-    * emitted as `heap_mb_after`, the ABSOLUTE post-query snapshot — a
-    * heap delta without a forced GC is allocation noise, while the
-    * snapshot sequence shows suite-long heap growth, which is what the
-    * diag lane attributes.
-    */
-  private[graft] final case class JvmCosts(
-      gcMs: Long, jitMs: Long, codegenCompiles: Long, classesLoaded: Long,
-      heapUsedMb: Long, codeCacheMb: Long)
-
-  private[graft] def jvmCosts(): JvmCosts = {
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    val gc = ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(0L, b.getCollectionTime)).sum
-    val jit = Option(ManagementFactory.getCompilationMXBean)
-      .filter(_.isCompilationTimeMonitoringSupported)
-      .map(_.getTotalCompilationTime).getOrElse(0L)
-    val cg = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
-    val cl = ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
-    val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
-    // JIT code cache occupancy ("CodeHeap 'non-profiled/profiled
-    // nmethods'" + legacy unsegmented "CodeCache" pools): when this
-    // approaches ReservedCodeCacheSize the JVM starts FLUSHING compiled
-    // methods and the suite degrades into recompile storms — the r12
-    // fingerprint (warm passes slower than cold, streaming hit hardest).
-    val cc = ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("CodeCache"))
-      .map(_.getUsage.getUsed).sum >> 20
-    JvmCosts(gc, jit, cg, cl, heap, cc)
-  }
-
   /** Cumulative (total, idleLike, steal) jiffies from the aggregate cpu
     * line of /proc/stat — Linux only, None elsewhere (see [[jiffiesOf]]
     * for the column accounting: busy = Δtotal − Δ(idle+iowait), guest
@@ -396,7 +353,6 @@ object Bench {
     */
   private[graft] def cpuJiffies(): Option[(Long, Long, Long)] =
     try {
-      import scala.jdk.CollectionConverters._
       Some(jiffiesOf(java.nio.file.Files
         .readAllLines(java.nio.file.Paths.get("/proc/stat")).asScala
         .find(_.startsWith("cpu ")).get))
@@ -495,16 +451,6 @@ object Bench {
       f"[bench] warmup steal ${warmupStealPct}%.1f%% > 30%% — skipping the " +
         "cold pass; every second of this epoch goes to warm coverage")
 
-    // SPARK_GRAFT_BENCH_DIAG=1: record per-query JVM-cost deltas (GC ms,
-    // JIT ms, codegen compile count, classes loaded, heap) in EVERY lane
-    // to bench_diag.json — the attribution instrument for cold-vs-warm
-    // deltas that per-query wall time alone cannot explain (round 9's
-    // +75% cold-only inflation). Off by default: reading MXBeans per
-    // query is cheap but the diag file is ~100 KB of nobody's business
-    // on a normal run.
-    val diagOn = sys.env.get("SPARK_GRAFT_BENCH_DIAG").exists(_.nonEmpty)
-    val diag = scala.collection.mutable.ListBuffer.empty[String]
-
     val skippedCold = scala.collection.mutable.ListBuffer.empty[String]
     val skippedWarm = scala.collection.mutable.ListBuffer.empty[String]
 
@@ -523,7 +469,7 @@ object Bench {
       val p = java.nio.file.Paths.get(path)
       if (!java.nio.file.Files.exists(p)) Map.empty
       else parseBaseline(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"), sfDir)
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"), sfDir, path)
     }
     val prevWarm: Map[String, Double] = {
       val b = readWarm(baselinePath)
@@ -568,7 +514,6 @@ object Bench {
         if (skipped != null && !skipped.contains(name)) skipped += name
         None
       } else {
-      val before = if (diagOn) Some(jvmCosts()) else None
       val j0 = cpuJiffies()
       val capS =
         if (capped != null) laneCapS(prevWarm.get(name)) else Double.MaxValue / 2e3
@@ -576,17 +521,7 @@ object Bench {
       val st = stealShare(j0, cpuJiffies())
       if (st >= 0) laneSteal(name) = math.max(laneSteal.getOrElse(name, 0.0), st)
       res match {
-        case Right(sec) =>
-          before.foreach { b =>
-            val a = jvmCosts()
-            diag += s"""{"q":"$name","lane":"$tag","sec":${r3(sec)},""" +
-              s""""gc_ms":${a.gcMs - b.gcMs},"jit_ms":${a.jitMs - b.jitMs},""" +
-              s""""codegen":${a.codegenCompiles - b.codegenCompiles},""" +
-              s""""classes":${a.classesLoaded - b.classesLoaded},""" +
-              s""""steal_pct":${r3(st)},""" +
-              s""""heap_mb_after":${a.heapUsedMb},"codecache_mb_after":${a.codeCacheMb}}"""
-          }
-          Some(name -> sec)
+        case Right(sec) => Some(name -> sec)
         case Left(e) if fired && capped != null && isCancellation(e) =>
           capped += name
           System.err.println(
@@ -676,14 +611,6 @@ object Bench {
     // whole-run host-contention summary: steal share of busy time
     val stealPct: Double = stealShare(jiffies0, cpuJiffies())
 
-    if (diagOn) try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_diag.json"),
-        (diag.mkString("[\n", ",\n", "\n]") + "\n").getBytes("UTF-8"))
-      System.err.println("[bench] wrote bench_diag.json")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write bench_diag.json: ${e.getMessage}")
-    }
-
     // regression gate: diff this run's warm medians against the priors
     // and flag any query whose warm median grew >1.5x round-over-round
     // (the shared `flagged` predicate — sub-50ms priors never flag).
@@ -759,32 +686,25 @@ object Bench {
           Some(name -> m)
         }
       }.toMap
-    def regEntry(n: String, p: Double, v: Double, r: Double): String =
-      if (r.isInfinity)
-        s"""{"q":"$n","prev":${r3(p)},"now":null,"ratio":-1,"failed":true}"""
-      else {
-        val iso = adjud.get(n).map(m =>
-          s""","iso_now":${r3(m)},"iso_ratio":${r3(m / p)}""").getOrElse("")
-        val isoSt = adjudSteal.get(n).map(s =>
-          s""","iso_steal_pct":${r3(s)}""").getOrElse("")
-        val ls = laneSteal.get(n).map(s =>
-          s""","lane_steal_pct":${r3(s)}""").getOrElse("")
-        s"""{"q":"$n","prev":${r3(p)},"now":${r3(v)},"ratio":${r3(r)},"failed":false$iso$isoSt$ls}"""
-      }
+    def regEntry(n: String, p: Double, v: Double, r: Double): ListMap[String, Any] =
+      if (r.isInfinity) ListMap("q" -> n, "prev" -> Json.round(p), "now" -> null,
+        "ratio" -> -1, "failed" -> true)
+      else ListMap("q" -> n, "prev" -> Json.round(p), "now" -> Json.round(v),
+          "ratio" -> Json.round(r), "failed" -> false) ++
+        adjud.get(n).toSeq.flatMap(m =>
+          Seq("iso_now" -> Json.round(m), "iso_ratio" -> Json.round(m / p))) ++
+        adjudSteal.get(n).map(s => "iso_steal_pct" -> Json.round(s)) ++
+        laneSteal.get(n).map(s => "lane_steal_pct" -> Json.round(s))
     // a lane capped in BOTH passes never priced: if it has a prior it
     // ran ≥50× over it twice — either sustained contention or a real
     // regression — and a NEW lane (no prior, "prev":null) overran the
     // 120 s no-prior ceiling twice; either way the artifact must carry
     // a flag entry (capped:true, the numeric ratio sentinel -1;
     // distinct from failed:true, which means the query THREW)
-    val cappedEntries = cappedUnresolved.map { n =>
-      val prev = prevWarm.get(n).map(r3).getOrElse("null")
-      val ls = laneSteal.get(n).map(s =>
-        s""","lane_steal_pct":${r3(s)}""").getOrElse("")
-      s"""{"q":"$n","prev":$prev,"now":null,"ratio":-1,"failed":false,"capped":true$ls}"""
-    }
-    val regJson = (regressions.map((regEntry _).tupled) ++ cappedEntries)
-      .mkString("[", ",", "]")
+    val cappedEntries = cappedUnresolved.map(n =>
+      ListMap("q" -> n, "prev" -> prevWarm.get(n).map(Json.round(_)).orNull,
+        "now" -> null, "ratio" -> -1, "failed" -> false, "capped" -> true) ++
+        laneSteal.get(n).map(s => "lane_steal_pct" -> Json.round(s)))
     // stderr flag lines: a contended run prints hundreds of ghost flags
     // that bury the signal a human needs — suppress lines whose lane
     // measured >40% steal (self-describing contention; the full entry
@@ -807,12 +727,6 @@ object Bench {
     cappedUnresolved.foreach(n => System.err.println(
       s"[bench:capped] $n hit the watchdog cap in BOTH passes — unpriced, " +
         "keeps its baseline prior (see capped_unresolved)"))
-    def fmt(m: Map[String, Double], keys: Iterable[String]) =
-      keys.flatMap(k => m.get(k).map(v => "\"" + k + "\":" + r3(v)))
-        .mkString("{", ",", "}")
-    def fmtE(e: Seq[String]) = e.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def fmtS(m: Map[String, String]) = m.toSeq.sorted
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     // "failed" = GRADED failures (warm lane only, matching the gate);
     // cold and retry errors are reported in their own arrays — a lane
     // that priced warm but stumbled in an ungraded pass is not a
@@ -860,21 +774,50 @@ object Bench {
     // sample under 1.5× — recording first+retry makes a persistent
     // near-threshold lane visible across rounds; "first":null = the lane
     // was watchdog-capped in the warm pass and has only its retry sample)
-    val retriesJson = retried.toSeq.sortBy(_._1).map { case (n, r) =>
-      val first = warmFirst.get(n).map(r3).getOrElse("null")
-      s""""$n":{"first":$first,"retry":${r3(r)}}"""
-    }.mkString("{", ",", "}")
-    val warmJson = fmt(warm, warm.keys.toSeq.sorted)
+    val retries = ListMap.from(retried.toSeq.sortBy(_._1).map { case (n, r) =>
+      n -> ListMap("first" -> warmFirst.get(n).map(Json.round(_)).orNull,
+        "retry" -> Json.round(r))
+    })
+    val warmSeconds = seconds(warm, warm.keys.toSeq.sorted)
     // bench_schema marks the r14 key migration ("queries" = warm medians,
     // cold moved to "queries_cold") plus the r15 additions — external
     // tooling reading pre-r14 keys should check it instead of silently
     // getting the wrong lane; "errors_warm" stays as an alias of
     // "errors" for old consumers (ADVICE r14)
-    val fullJson =
-      s"""{"metric":"total_warm","value":${r3(totalWarm)},"unit":"sec","bench_schema":2,"queries":$warmJson,"queries_warm":$warmJson,"total_warm":${r3(totalWarm)},"cold_scope":"headline","cold_total":${r3(total)},"cold_skipped_high_steal":$coldSkippedHighSteal,"queries_cold":${fmt(results, results.keys.toSeq.sorted)},"n_warm_priced":${warm.size},"baseline_sum_priced":${r3(baselineSumPriced)},"warm_sum_priced":${r3(warmSumPriced)},"warm_vs_baseline":${r3(warmVsBaseline)},"tier_stream_cold":${r3(streamCold)},"tier_stream_warm":${r3(streamWarm)},"warm_passes":$warmPasses,"n_retried":${retried.size},"retries":$retriesJson,"calib_ms":$calibMs,"steal_pct":${r3(stealPct)},"warmup_steal_pct":${r3(warmupStealPct)},"n_queries":${lanes.size},"n_failed":${failed.length},"lanes_skipped":${fmtS(laneSkips)},"errors":${fmtE(failed)},"errors_warm":${fmtE(failed)},"errors_cold":${fmtE(errCold.distinct.toSeq)},"errors_retry":${fmtE(errRetry.distinct.toSeq)},"budget_s":${r3(budgetS)},"adjud_reserve_s":${r3(adjudReserveS)},"retry_reserve_s":${r3(retryReserveS)},"budget_exceeded":$budgetExceeded,"n_skipped":${skipped.length},"skipped":${fmtE(skipped)},"n_capped":${cappedWarm.distinct.size},"capped":${fmtE(cappedWarm.distinct.toSeq.sorted)},"capped_unresolved":${fmtE(cappedUnresolved)},"regressions":$regJson,"sf":"$sfDir"}"""
+    val full = ListMap[String, Any]("metric" -> "total_warm",
+      "value" -> Json.round(totalWarm), "unit" -> "sec", "bench_schema" -> 2,
+      "queries" -> warmSeconds, "queries_warm" -> warmSeconds,
+      "total_warm" -> Json.round(totalWarm), "cold_scope" -> "headline",
+      "cold_total" -> Json.round(total),
+      "cold_skipped_high_steal" -> coldSkippedHighSteal,
+      "queries_cold" -> seconds(results, results.keys.toSeq.sorted),
+      "n_warm_priced" -> warm.size,
+      "baseline_sum_priced" -> Json.round(baselineSumPriced),
+      "warm_sum_priced" -> Json.round(warmSumPriced),
+      "warm_vs_baseline" -> Json.round(warmVsBaseline),
+      "tier_stream_cold" -> Json.round(streamCold),
+      "tier_stream_warm" -> Json.round(streamWarm),
+      "warm_passes" -> warmPasses, "n_retried" -> retried.size,
+      "retries" -> retries, "calib_ms" -> calibMs,
+      "steal_pct" -> Json.round(stealPct),
+      "warmup_steal_pct" -> Json.round(warmupStealPct),
+      "n_queries" -> lanes.size, "n_failed" -> failed.length,
+      "lanes_skipped" -> ListMap.from(laneSkips.toSeq.sorted),
+      "errors" -> failed, "errors_warm" -> failed,
+      "errors_cold" -> errCold.distinct.toSeq,
+      "errors_retry" -> errRetry.distinct.toSeq,
+      "budget_s" -> Json.round(budgetS),
+      "adjud_reserve_s" -> Json.round(adjudReserveS),
+      "retry_reserve_s" -> Json.round(retryReserveS),
+      "budget_exceeded" -> budgetExceeded, "n_skipped" -> skipped.length,
+      "skipped" -> skipped, "n_capped" -> cappedWarm.distinct.size,
+      "capped" -> cappedWarm.distinct.toSeq.sorted,
+      "capped_unresolved" -> cappedUnresolved,
+      "regressions" -> (regressions.map((regEntry _).tupled) ++ cappedEntries),
+      "sf" -> sfDir)
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (fullJson + "\n").getBytes("UTF-8"))
+        (Json.write(full) + "\n").getBytes("UTF-8"))
       System.err.println(s"[bench] wrote $outPath")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
@@ -918,9 +861,20 @@ object Bench {
     // annotations — lives in `outPath`. r13's 2.4 KB line (10 embedded
     // regression objects) was visibly in the captured tail TWICE and
     // still parsed:null; a small line is the cheapest remaining lever
-    // against whatever the driver's tail/parse window is.
-    val json =
-      s"""{"metric":"total_warm","value":${r3(totalWarm)},"unit":"sec","queries":${fmt(warm, headline.take(6))},"total_warm":${r3(totalWarm)},"cold_total":${r3(total)},"n_queries":${lanes.size},"n_warm_priced":${warm.size},"baseline_sum_priced":${r3(baselineSumPriced)},"warm_vs_baseline":${r3(warmVsBaseline)},"warm_passes":$warmPasses,"n_retried":${retried.size},"n_capped":${cappedWarm.distinct.size},"calib_ms":$calibMs,"steal_pct":${r3(stealPct)},"n_failed":${failed.length},"budget_exceeded":$budgetExceeded,"n_skipped":${skipped.length},"n_regressions":${regressions.length + cappedEntries.length},"detail":"$outPath","sf":"$sfDir"}"""
+    // against whatever the driver's tail/parse window is. It is a
+    // projection of the full map: every value is the full map's, except
+    // "queries" (the first 6 headline lanes) and the two keys only this
+    // line carries.
+    val json = Json.write(ListMap.from(Seq("metric", "value", "unit",
+      "queries", "total_warm", "cold_total", "n_queries", "n_warm_priced",
+      "baseline_sum_priced", "warm_vs_baseline", "warm_passes", "n_retried",
+      "n_capped", "calib_ms", "steal_pct", "n_failed", "budget_exceeded",
+      "n_skipped", "n_regressions", "detail", "sf").map(k => k -> (k match {
+        case "queries" => seconds(warm, headline.take(6))
+        case "n_regressions" => regressions.length + cappedEntries.length
+        case "detail" => outPath
+        case _ => full(k)
+      }))))
     println(json)
     spark.stop()
     // re-printed AFTER spark.stop(): the driver keeps only the TAIL of

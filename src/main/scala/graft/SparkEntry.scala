@@ -92,11 +92,10 @@ object SparkEntry {
     registry.map(q => q.name -> q.fn).toMap
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops → driver
-    * records a weaker rows-only check.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
 
   /** In-memory group cap for ObjectHashAggregate before it falls back
     * to SORT-BASED aggregation

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -30,18 +31,6 @@ object Verify {
           None
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // PARTIAL (self-referential) oracles: a query whose candidate set is
     // not SQL-replayable (float-sign LSH buckets, iterative centroids)
     // can still have its VALUES verified — the oracle SQL reads the ids
@@ -51,12 +40,9 @@ object Verify {
     val dumpRoot = new java.io.File(outDir).getAbsolutePath
     // the selected lanes only: the compare walks these names, so the
     // stale output dirs of unselected lanes are never read
-    val json = lanes.flatMap(l => l.oracle.map(v =>
-        s"${q(l.name)}: ${q(v.replace("__DUMP__", dumpRoot))}"))
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/skipped.json"),
-      skipped.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(ListMap.from(
+      lanes.map(l => l.name -> l.oracle.replace("__DUMP__", dumpRoot)))))
+    Files.writeString(Paths.get(s"$outDir/skipped.json"), Json.write(ListMap.from(skipped)))
     spark.stop()
   }
 }

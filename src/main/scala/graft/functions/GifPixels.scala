@@ -212,13 +212,23 @@ object GifPixels {
   final case class GifAnimation(width: Int, height: Int,
       palette: Array[Int], frames: Array[Array[Byte]])
 
-  /** Decode EVERY frame of a (possibly animated) GCT GIF: the loop
-    * form of [[gifRaster]] — skip extensions (GCE/comment/application
-    * blocks), decompress each image descriptor's LZW stream
-    * independently, stop at the trailer. Same documented subset:
-    * full-frame images, global table only, no interlace.
+  /** Decode EVERY frame of a (possibly animated) GCT GIF: skip
+    * extensions (GCE/comment/application blocks), decompress each image
+    * descriptor's LZW stream independently, stop at the trailer.
+    * Documented subset: full-frame images, global table only, no
+    * interlace. Left(reason) for anything outside it or any
+    * malformed/truncated LZW stream.
     */
-  def gifFrames(b: Array[Byte]): Either[String, GifAnimation] = {
+  def gifFrames(b: Array[Byte]): Either[String, GifAnimation] = walk(b, firstOnly = false)
+
+  /** Decode the first frame of a GCT GIF back to its palette + indices:
+    * the same walk as [[gifFrames]], stopped after the first image, so
+    * no trailer is needed after it.
+    */
+  def gifRaster(b: Array[Byte]): Either[String, GifRaster] =
+    walk(b, firstOnly = true).map(a => GifRaster(a.width, a.height, a.palette, a.frames(0)))
+
+  private def walk(b: Array[Byte], firstOnly: Boolean): Either[String, GifAnimation] = {
     if (b == null || b.length < 14) return Left("GIF truncated before descriptor")
     val ver = new String(b, 0, 6, "US-ASCII")
     if (ver != "GIF87a" && ver != "GIF89a") return Left(s"not a GIF: '$ver'")
@@ -282,78 +292,13 @@ object GifPixels {
               if (indices.exists(i => (i & 0xff) >= gctSize))
                 return Left("pixel index outside the color table")
               frames += indices
+              if (firstOnly) return Right(GifAnimation(width, height, palette, frames.toArray))
           }
         case other =>
           return Left(f"unexpected GIF block 0x$other%02x")
       }
     }
     Left("unreachable")
-  }
-
-  /** Decode a single-frame GCT GIF back to its palette + indices.
-    * Left(reason) for anything outside the supported subset or any
-    * malformed/truncated LZW stream.
-    */
-  def gifRaster(b: Array[Byte]): Either[String, GifRaster] = {
-    if (b == null || b.length < 14) return Left("GIF truncated before descriptor")
-    val ver = new String(b, 0, 6, "US-ASCII")
-    if (ver != "GIF87a" && ver != "GIF89a") return Left(s"not a GIF: '$ver'")
-    def leShort(off: Int) = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    val width = leShort(6)
-    val height = leShort(8)
-    if (width <= 0 || height <= 0) return Left("empty GIF geometry")
-    val packed = b(10) & 0xff
-    if ((packed & 0x80) == 0) return Left("content decode needs a global color table")
-    val gctSize = 1 << ((packed & 0x07) + 1)
-    var off = 13
-    if (off + 3 * gctSize > b.length) return Left("GCT overruns payload")
-    val palette = Array.tabulate(gctSize) { i =>
-      ((b(off + 3 * i) & 0xff) << 16) | ((b(off + 3 * i + 1) & 0xff) << 8) |
-        (b(off + 3 * i + 2) & 0xff)
-    }
-    off += 3 * gctSize
-    // skip extension blocks (0x21 label, sub-blocked) to the image
-    while (off < b.length && (b(off) & 0xff) == 0x21) {
-      off += 2 // introducer + label
-      while (off < b.length && b(off) != 0) off += 1 + (b(off) & 0xff)
-      off += 1
-    }
-    if (off >= b.length || (b(off) & 0xff) != 0x2c)
-      return Left("no image descriptor")
-    if (off + 10 > b.length) return Left("image descriptor truncated")
-    val iw = leShort(off + 5)
-    val ih = leShort(off + 7)
-    val ipacked = b(off + 9) & 0xff
-    if (iw != width || ih != height || leShort(off + 1) != 0 || leShort(off + 3) != 0)
-      return Left("sub-rectangle frames unsupported")
-    if ((ipacked & 0x80) != 0) return Left("local color tables unsupported")
-    if ((ipacked & 0x40) != 0) return Left("interlaced frames unsupported")
-    off += 10
-    if (off >= b.length) return Left("missing LZW minimum code size")
-    val minCodeSize = b(off) & 0xff
-    if (minCodeSize < 2 || minCodeSize > 11) return Left(s"implausible LZW min code size $minCodeSize")
-    off += 1
-    // collect sub-blocked code bytes
-    val raw = new java.io.ByteArrayOutputStream()
-    var done = false
-    while (!done) {
-      if (off >= b.length) return Left("LZW stream truncated mid-sub-blocks")
-      val n = b(off) & 0xff
-      off += 1
-      if (n == 0) done = true
-      else {
-        if (off + n > b.length) return Left("LZW sub-block overruns payload")
-        raw.write(b, off, n)
-        off += n
-      }
-    }
-    lzwDecode(raw.toByteArray, minCodeSize, width * height) match {
-      case Left(err) => Left(err)
-      case Right(indices) =>
-        if (indices.exists(i => (i & 0xff) >= gctSize))
-          Left("pixel index outside the color table")
-        else Right(GifRaster(width, height, palette, indices))
-    }
   }
 
   /** Standard GIF LZW decode: variable-width LSB-first codes, CLEAR

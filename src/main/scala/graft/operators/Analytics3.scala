@@ -232,9 +232,6 @@ object Analytics3 {
     * a divergence here would silently invalidate the head-to-head
     * probe) and the per-(priority, day) sketch partial CTE.
     */
-  private[graft] def registerKllUdfsPublic(spark: SparkSession): Unit =
-    registerKllUdfs(spark)
-
   private def registerKllUdfs(spark: SparkSession): Unit = {
     spark.udf.register("kll_day", org.apache.spark.sql.functions.udaf(
       new KllSketch.KllLongsAgg(), org.apache.spark.sql.Encoders.scalaLong))

@@ -31,9 +31,7 @@ object Dedup {
     * tokens: ANSI mode (Spark 4 default) makes out-of-bounds element_at
     * an error, and sequence(1, 0) would DESCEND, not return empty.
     */
-  private[graft] def shinglesPublic(text: Column): Column = shingles(text)
-
-  private def shingles(text: Column): Column =
+  private[graft] def shingles(text: Column): Column =
     VectorExpressions.wordShingles3(CaseFold.tokens(text))
 
   private def jaccard(a: Column, b: Column): Column =
@@ -55,10 +53,7 @@ object Dedup {
     * key is the raw ':'-joined tuple of its 4 consecutive minhashes
     * (replayable — see the dedup_minhash_lsh oracle).
     */
-  private[graft] def bandedMinhashPublic(docs: DataFrame): DataFrame =
-    bandedMinhash(docs)
-
-  private def bandedMinhash(docs: DataFrame): DataFrame = {
+  private[graft] def bandedMinhash(docs: DataFrame): DataFrame = {
     val sig = docs
       .withColumn("sh", shingles(col("text")))
       .filter(size(col("sh")) > 0)
@@ -106,10 +101,6 @@ object Dedup {
   /** Anchors sampled per oversized bucket (the k in the k-anchor star). */
   private[graft] val StarAnchors = 4
 
-  private[graft] def cappedBucketPairsPublic(banded: DataFrame,
-      bucketKey: String, payload: Seq[String]): DataFrame =
-    cappedBucketPairs(banded, bucketKey, payload)
-
   /** Candidate (id_a < id_b) pairs from a banded blocking-key stream,
     * pairwise within small buckets, k-anchor-star within oversized ones.
     * `payload` columns (e.g. a simhash signature) ride along as
@@ -117,7 +108,7 @@ object Dedup {
     * (band_idx, bucket_key) matches the self-join keys, so the shuffle
     * is shared across both branches.
     */
-  private def cappedBucketPairs(banded: DataFrame, bucketKey: String,
+  private[graft] def cappedBucketPairs(banded: DataFrame, bucketKey: String,
       payload: Seq[String]): DataFrame = {
     val w = Window.partitionBy(col("band_idx"), col(bucketKey))
     val sized = banded.withColumn("bsz", count(lit(1)).over(w))

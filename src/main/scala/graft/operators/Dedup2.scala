@@ -362,20 +362,20 @@ object Dedup2 {
   def pipelineContaminationFuzzy(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val evalDocs = perturbedEval(docs)
-    val banded = Dedup.bandedMinhashPublic(docs).localCheckpoint()
-    val evalBands = Dedup.bandedMinhashPublic(evalDocs)
+    val banded = Dedup.bandedMinhash(docs).localCheckpoint()
+    val evalBands = Dedup.bandedMinhash(evalDocs)
       .select(col("doc_id").as("eval_id"), col("band_idx"), col("band_hash"))
     val cand = banded
       .join(broadcast(evalBands), Seq("band_idx", "band_hash"))
       .select(col("doc_id"), col("eval_id")).distinct()
     val shC = docs
       .join(cand.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), Dedup.shinglesPublic(col("text")).as("sh_c"))
+      .select(col("doc_id"), Dedup.shingles(col("text")).as("sh_c"))
     val shE = evalDocs
       .join(cand.select(col("eval_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("eval_id"),
-        Dedup.shinglesPublic(col("text")).as("sh_e"))
+        Dedup.shingles(col("text")).as("sh_e"))
     cand
       .join(shC, "doc_id")
       .join(broadcast(shE), "eval_id")

@@ -772,7 +772,7 @@ object Multimodal {
     * block means vs the global mean, one codegen loop per row), then
     * reuse the text tier's ENTIRE banded-LSH blocking substrate
     * unchanged — 4×16-bit bands, capped buckets with the k-anchor star
-    * ([[Dedup.cappedBucketPairsPublic]]) — and emit the
+    * ([[Dedup.cappedBucketPairs]]) — and emit the
     * [[PhashTopK]] candidate pairs with the SMALLEST Hamming distance
     * (ties broken by ids): the review queue a dedup pipeline hands to
     * its exact-verification tier, most-suspicious first. A RANKING
@@ -803,7 +803,7 @@ object Multimodal {
             .as("band_key"))): _*)).as("band"))
       .select(col("doc_id"), col("sig"),
         col("band.band_idx"), col("band.band_key"))
-    Dedup.cappedBucketPairsPublic(banded, "band_key", Seq("sig"))
+    Dedup.cappedBucketPairs(banded, "band_key", Seq("sig"))
       .select(col("id_a"), col("id_b"),
         call_function("bit_count", col("sig_a").bitwiseXOR(col("sig_b")))
           .cast("long").as("hamming"))

@@ -114,10 +114,10 @@ object Pipeline2 {
   def pipelineContamination(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val evalShingles = docs.filter(col("doc_id") % 50 === 0)
-      .select(explode(Dedup.shinglesPublic(col("text"))).as("sh"))
+      .select(explode(Dedup.shingles(col("text"))).as("sh"))
       .distinct()
     docs.filter(col("doc_id") % 50 =!= 0)
-      .select(col("doc_id"), explode(Dedup.shinglesPublic(col("text"))).as("sh"))
+      .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("sh"))
       .join(broadcast(evalShingles), Seq("sh"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("sh")).as("n_shared"))
@@ -162,7 +162,7 @@ object Pipeline2 {
     // verify side: checkpointed, so its scan+explode+distinct runs once
     // (an eager job) and both consumers read the stored rows
     val evalShingles = docs.filter(col("doc_id") % 50 === 0)
-      .select(explode(Dedup.shinglesPublic(col("text"))).as("sh"))
+      .select(explode(Dedup.shingles(col("text"))).as("sh"))
       .distinct()
       .localCheckpoint()
     // bounded driver state: the filter bytes themselves (BloomBits/8).
@@ -179,7 +179,7 @@ object Pipeline2 {
       .head().getAs[Array[Byte]]("bf"))
     val corpusShingles = docs.filter(col("doc_id") % 50 =!= 0)
       .select(col("doc_id"),
-        explode(Dedup.shinglesPublic(col("text"))).as("sh"))
+        explode(Dedup.shingles(col("text"))).as("sh"))
     bloom.fold(corpusShingles)(bf =>
         corpusShingles.filter(call_function("graft_bloom_might_contain",
           lit(bf), xxhash64(col("sh")))))

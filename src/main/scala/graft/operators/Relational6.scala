@@ -112,7 +112,6 @@ object Relational6 {
     * nested addition explicitly instead of a single unordered sum().
     */
   def sqlScripting(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem_scr")
     spark.sql(
       """BEGIN

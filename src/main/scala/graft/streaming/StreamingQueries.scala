@@ -629,19 +629,18 @@ object StreamingQueries {
   /** State partitions for EVERY streaming lane (r15 — generalized from
     * the r14 join-only knob): the per-trigger cost floor of a stateful
     * query is state-store COMMITS × partitions, paid whether or not a
-    * partition saw data, so the partition count is a deployment knob
+    * partition saw data, so the partition count is a deployment choice
     * sized to key cardinality and throughput — never inherited from the
     * batch shuffle default. At the gate SFs every lane holds ≤~50k
     * watermark-bounded keys; 8 partitions keeps all cores busy at that
     * scale while quartering the per-trigger commit count vs the 32-way
     * default (measured ~0.2–0.3 s/lane at sf0.1). At 100 TB with ~1e9
-    * keys this number goes UP (hundreds), which is why it is
-    * env-overridable: SPARK_GRAFT_STREAM_STATE_PARTITIONS. Applied
-    * centrally in [[runToMemory]] (state layout pins from this conf at
-    * query start), so every lane prices the same deliberate sizing.
+    * keys this number goes UP (hundreds): a deployment at that scale
+    * changes this constant. Applied centrally in [[runToMemory]] (state
+    * layout pins from this conf at query start), so every lane prices
+    * the same deliberate sizing.
     */
-  private[graft] val StreamStatePartitions: Int =
-    graft.EnvKnob.positive("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8, Int.MaxValue).toInt
+  private[graft] val StreamStatePartitions = 8
 
   /** Stream-stream inner join with event-time bounds: purchases within
     * 5 minutes after a signup by the same user — the streaming twin of

@@ -2,7 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{EnvKnob, GraftSession, Lanes, SparkEntry}
+import scala.collection.immutable.ListMap
+import graft.{EnvKnob, GraftSession, Json, Lanes, SparkEntry}
 
 /** One-off scale validation: replicate the sf0.1 tables N× (default 10)
   * and time the repo's five most expensive plans at both volumes, so the
@@ -29,9 +30,10 @@ import graft.{EnvKnob, GraftSession, Lanes, SparkEntry}
   *
   * Methodology per (query, volume): one untimed cold pass (absorbs
   * codegen, file listing, and the streaming replay-fixture build — all
-  * one-time costs), then `SPARK_GRAFT_SCALE_PASSES` (default 2) timed
-  * warm passes; the reported number is their median. The scaled tables
-  * are built once and cached under a `_READY` marker.
+  * one-time costs), then [[WarmPasses]] timed warm passes; the reported
+  * number is their median. The scaled tables are built once and cached
+  * under a `_READY` marker. Each result is one JSON line written through
+  * [[graft.Json]], seconds and ratios rounded to 3 decimals.
   *
   * Run: sbt "runMain graft.tools.ScaleProbe [uniform|skew|semantic|stream|q97]"
   * (default `uniform`; an unknown sweep throws).
@@ -214,6 +216,9 @@ object ScaleProbe {
   private val SkewQueries = Seq("dedup_minhash_lsh", "dedup_substring",
     "dedup_prefix_jaccard")
 
+  /** Timed warm passes per (query, volume); the median is reported. */
+  private val WarmPasses = 2
+
   /** The sweeps, selected by the one argument; `uniform` is the default. */
   private val Sweeps = Seq("uniform", "skew", "semantic", "stream", "q97")
 
@@ -222,7 +227,6 @@ object ScaleProbe {
     val factor = EnvKnob.positive("SPARK_GRAFT_SCALE_FACTOR", 10, Int.MaxValue).toInt
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_probe_${factor}x")
-    val passes = EnvKnob.positive("SPARK_GRAFT_SCALE_PASSES", 2, Int.MaxValue).toInt
     val sweep = args.headOption.getOrElse("uniform")
     require(args.length <= 1 && Sweeps.contains(sweep), s"unknown sweep " +
       s"'${args.mkString(" ")}': use ScaleProbe [${Sweeps.mkString("|")}]")
@@ -262,7 +266,7 @@ object ScaleProbe {
     // one timer and not another would make their ratios incomparable
     def timeAt(dir: String)(df: => DataFrame): Double = withVolumeConf(dir) {
       Lanes.force(df) // untimed cold: codegen + fixture builds
-      median((1 to passes).map { _ =>
+      median((1 to WarmPasses).map { _ =>
         val t0 = System.nanoTime()
         Lanes.force(df)
         (System.nanoTime() - t0) / 1e9
@@ -289,8 +293,9 @@ object ScaleProbe {
       SkewQueries.foreach { q =>
         val b = time(q, skew1)
         val s = time(q, skewN)
-        println(f"""{"q":"$q","skew":true,"base_warm":$b%.3f,""" +
-          f""""scaled_warm":$s%.3f,"ratio":${s / b}%.3f,"factor":$factor}""")
+        println(Json.write(ListMap("q" -> q, "skew" -> true,
+          "base_warm" -> Json.round(b), "scaled_warm" -> Json.round(s),
+          "ratio" -> Json.round(s / b), "factor" -> factor)))
       }
       // prefix-join waste accounting: on a hot cluster the exact tier's
       // OUTPUT is quadratic by contract (every hot pair is a genuine
@@ -303,9 +308,9 @@ object ScaleProbe {
         val (_, cand) = graft.operators.Dedup.prefixJaccardStage(spark, d)
         val nCand = cand.count()
         val nOut = SparkEntry.queries("dedup_prefix_jaccard")(spark, d).count()
-        println(f"""{"q":"dedup_prefix_jaccard","skew":true,"vol":"$tag",""" +
-          f""""candidates":$nCand,"verified":$nOut,""" +
-          f""""waste":${nCand.toDouble / math.max(1L, nOut)}%.3f}""")
+        println(Json.write(ListMap("q" -> "dedup_prefix_jaccard", "skew" -> true,
+          "vol" -> tag, "candidates" -> nCand, "verified" -> nOut,
+          "waste" -> Json.round(nCand.toDouble / math.max(1L, nOut)))))
       }
     } else if (sweep == "semantic") {
       // SEMANTIC SWEEP: dedup_semantic needs its own fixture — verbatim
@@ -324,14 +329,14 @@ object ScaleProbe {
       buildSemanticScaled(spark, baseDir, semN, factor)
       val b = time("dedup_semantic", baseDir)
       val s = time("dedup_semantic", semN)
-      println(f"""{"q":"dedup_semantic","semantic":true,"k":16,""" +
-        f""""base_warm":$b%.3f,"scaled_warm":$s%.3f,""" +
-        f""""ratio":${s / b}%.3f,"factor":$factor}""")
+      println(Json.write(ListMap("q" -> "dedup_semantic", "semantic" -> true,
+        "k" -> 16, "base_warm" -> Json.round(b), "scaled_warm" -> Json.round(s),
+        "ratio" -> Json.round(s / b), "factor" -> factor)))
       val sk = timeAt(semN)(
         graft.operators.Similarity.dedupSemanticK(spark, semN, 16 * factor))
-      println(f"""{"q":"dedup_semantic","semantic":true,"k":${16 * factor},""" +
-        f""""scaled_warm":$sk%.3f,"ratio_vs_base":${sk / b}%.3f,""" +
-        f""""factor":$factor}""")
+      println(Json.write(ListMap("q" -> "dedup_semantic", "semantic" -> true,
+        "k" -> 16 * factor, "scaled_warm" -> Json.round(sk),
+        "ratio_vs_base" -> Json.round(sk / b), "factor" -> factor)))
       // attribution: cluster count / max size / Σ|c|² and the drop rate
       Seq((baseDir, 16, "1x"), (semN, 16, s"${factor}x"),
         (semN, 16 * factor, s"${factor}x")).foreach { case (d, k, tag) =>
@@ -341,9 +346,10 @@ object ScaleProbe {
           .agg(count(lit(1)), max(col("count")),
             sum(col("count") * col("count"))).head()
         val dropped = out.filter(!col("kept")).count()
-        println(s"""{"q":"dedup_semantic","semantic":true,"vol":"$tag",""" +
-          s""""k":$k,"n_clusters":${cs.getLong(0)},"max_cluster":${cs.getLong(1)},""" +
-          s""""sum_sq":${cs.getLong(2)},"n_dropped":$dropped}""")
+        println(Json.write(ListMap("q" -> "dedup_semantic", "semantic" -> true,
+          "vol" -> tag, "k" -> k, "n_clusters" -> cs.getLong(0),
+          "max_cluster" -> cs.getLong(1), "sum_sq" -> cs.getLong(2),
+          "n_dropped" -> dropped)))
       }
     } else if (sweep == "stream") {
       // STREAMING SWEEP: the tier's 100×-cliff shape is STATE-STORE
@@ -368,8 +374,9 @@ object ScaleProbe {
       streamQs.foreach { q =>
         val b = time(q, baseDir)
         val s = time(q, outDir)
-        println(f"""{"q":"$q","stream":true,"base_warm":$b%.3f,""" +
-          f""""scaled_warm":$s%.3f,"ratio":${s / b}%.3f,"factor":$factor}""")
+        println(Json.write(ListMap("q" -> q, "stream" -> true,
+          "base_warm" -> Json.round(b), "scaled_warm" -> Json.round(s),
+          "ratio" -> Json.round(s / b), "factor" -> factor)))
         Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
           withVolumeConf(d) {
             graft.streaming.StreamingQueries.lastDrained = None
@@ -379,16 +386,14 @@ object ScaleProbe {
             if (ps.nonEmpty) {
               val durs = ps.map(_.durationMs.toDouble)
               val phaseMs = ps.flatMap(_.phaseMs).groupMapReduce(_._1)(_._2)(_ + _)
-                .toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
-                .mkString("{", ",", "}")
-              println(s"""{"q":"$q","stream":true,"vol":"$tag",""" +
-                s""""n_batches":${ps.length},""" +
-                f""""batch_ms_median":${median(durs)}%.1f,""" +
-                f""""batch_ms_max":${durs.max}%.1f,""" +
-                s""""phase_ms":$phaseMs,""" +
-                s""""rows_in":${ps.map(_.rowsProcessed).sum},""" +
-                s""""state_rows_max":${ps.map(_.stateRows).max},""" +
-                s""""state_bytes_max":${ps.map(_.stateBytes).max}}""")
+              println(Json.write(ListMap("q" -> q, "stream" -> true, "vol" -> tag,
+                "n_batches" -> ps.length,
+                "batch_ms_median" -> Json.round(median(durs), 1),
+                "batch_ms_max" -> Json.round(durs.max, 1),
+                "phase_ms" -> ListMap.from(phaseMs.toSeq.sorted),
+                "rows_in" -> ps.map(_.rowsProcessed).sum,
+                "state_rows_max" -> ps.map(_.stateRows).max,
+                "state_bytes_max" -> ps.map(_.stateBytes).max)))
             }
           }
         }
@@ -404,17 +409,18 @@ object ScaleProbe {
       Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
         val ex = time("q97_rolling_median", d)
         val lean = timeAt(d)(graft.operators.Analytics3.rollingMedianKllLean(spark, d))
-        println(f"""{"q":"q97_exact_vs_sketch","vol":"$tag","exact_warm":$ex%.3f,""" +
-          f""""sketch_warm":$lean%.3f,"sketch_over_exact":${lean / ex}%.3f,""" +
-          f""""factor":$factor}""")
+        println(Json.write(ListMap("q" -> "q97_exact_vs_sketch", "vol" -> tag,
+          "exact_warm" -> Json.round(ex), "sketch_warm" -> Json.round(lean),
+          "sketch_over_exact" -> Json.round(lean / ex), "factor" -> factor)))
       }
     } else {
       buildScaled(spark, baseDir, outDir, factor)
       uniform.map(_.name).foreach { q =>
         val b = time(q, baseDir)
         val s = time(q, outDir)
-        println(f"""{"q":"$q","base_warm":$b%.3f,"scaled_warm":$s%.3f,""" +
-          f""""ratio":${s / b}%.3f,"factor":$factor}""")
+        println(Json.write(ListMap("q" -> q, "base_warm" -> Json.round(b),
+          "scaled_warm" -> Json.round(s), "ratio" -> Json.round(s / b),
+          "factor" -> factor)))
       }
     }
     spark.stop()

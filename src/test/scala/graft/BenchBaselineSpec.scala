@@ -2,18 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the Bench baseline writer/parser pair (a regex parser over the
-  * one flat shape `baselineJson` writes — no JSON library on the offline
-  * classpath). Two directions matter:
-  *   1. round trip: whatever the writer emits, the parser reads back
-  *      verbatim — the regression gate's prior is exactly the recorded
-  *      medians;
-  *   2. refusal: structure the regex CANNOT faithfully read (nested
-  *      objects, partial entries, a missing queries_warm key) must fail
-  *      LOUDLY, never degrade to an empty/partial map — an empty prior
-  *      silently disables the gate, which is how round 5's 35-query
-  *      regression initially reported "regressions":[].
-  * No SparkSession needed — pure string functions, runs in milliseconds.
+/** Pins the Bench baseline writer/reader pair (both through the one
+  * Jackson codec, [[Json]]). Two directions matter:
+  *   1. round trip: whatever the writer emits is valid JSON that the
+  *      reader reads back verbatim, escaped strings included — the
+  *      regression gate's prior is exactly the recorded medians;
+  *   2. refusal: a prior that is not a flat string->number
+  *      `queries_warm` object (a nested value, a garbage entry, a
+  *      missing key, malformed text) must fail LOUDLY, never degrade to
+  *      an empty/partial map — an empty prior silently disables the
+  *      gate, which is how round 5's 35-query regression initially
+  *      reported "regressions":[].
+  * Beside the reader and writer it pins Bench's pure helpers. No
+  * SparkSession needed — pure functions, runs in milliseconds.
   */
 class BenchBaselineSpec extends AnyFunSuite {
 
@@ -34,6 +35,19 @@ class BenchBaselineSpec extends AnyFunSuite {
     val warm = Map("a" -> 1.23456, "b" -> 12345.6789, "c" -> 0.0004)
     val parsed = Bench.parseBaseline(Bench.baselineJson(sf, warm), sf)
     assert(parsed === Map("a" -> 1.235, "b" -> 12345.679, "c" -> 0.0))
+  }
+
+  test("an sf holding a backslash, a quote and a tab is valid JSON and round-trips") {
+    // SPARK_GRAFT_SF_DIR comes from outside the program: written raw, a
+    // quote or backslash in it made a file no JSON reader accepts, and
+    // the reader then took the sf up to the first quote, so the prior
+    // came back silently empty
+    val oddSf = "/data/sf\\0.1 \"x\"\tend"
+    val warm = Map("q1_agg" -> 1.086, "tiny" -> 0.001)
+    val txt = Bench.baselineJson(oddSf, warm)
+    val root = Json.read(txt)
+    assert(root.get("sf").asText === oddSf)
+    assert(Bench.parseBaseline(txt, oddSf) === warm)
   }
 
   test("other-SF prior parses to empty (like is only compared with like)") {
@@ -68,6 +82,12 @@ class BenchBaselineSpec extends AnyFunSuite {
       s"""{"sf":"$sf","queries_warm":{"a":1.0,"b":oops}}"""
     val e = intercept[RuntimeException](Bench.parseBaseline(partial, sf))
     assert(e.getMessage.contains("malformed"))
+  }
+
+  test("a refusal names the file it read") {
+    val e = intercept[RuntimeException](Bench.parseBaseline(
+      s"""{"sf":"$sf","queries_warm":""", sf, "bench_baseline.sf0.1.json"))
+    assert(e.getMessage.startsWith("bench_baseline.sf0.1.json: malformed"), e.getMessage)
   }
 
   test("baseline merge is per-query minima: a slower run never raises a prior") {
@@ -240,9 +260,9 @@ class BenchBaselineSpec extends AnyFunSuite {
   test("a lane whose external input is absent is skipped, not failed or regressed") {
     val missing = "/nonexistent/graft-bench-corpus"
     val lanes = Seq(
-      QueryDef("wordcount_reference", (_, _) => fail("must not run"), None,
+      QueryDef("wordcount_reference", (_, _) => fail("must not run"), "SELECT 1",
         Some(missing)),
-      QueryDef("q1_agg", (_, _) => null, None))
+      QueryDef("q1_agg", (_, _) => null, "SELECT 1"))
     val (skips, runnable) = Bench.splitRunnable(lanes)
     assert(skips === Map("wordcount_reference" -> s"external input absent: $missing"))
     assert(runnable.keySet === Set("q1_agg"))
@@ -258,7 +278,7 @@ class BenchBaselineSpec extends AnyFunSuite {
       QueryDef("some_query", (_, _) => null, null: String))
     assert(e.getMessage.contains("some_query"))
     // and every REGISTERED oracle made it through init non-null
-    assert(SparkEntry.registry.forall(q => q.oracle.forall(_.trim.nonEmpty)))
+    assert(SparkEntry.registry.forall(q => q.oracle.trim.nonEmpty))
     assert(SparkEntry.oracleSql.size === SparkEntry.queries.size,
       "every registered query must carry an oracle (round-8 invariant)")
   }

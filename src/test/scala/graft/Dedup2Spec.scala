@@ -133,14 +133,14 @@ class Dedup2Spec extends AnyFunSuite with SparkTestBase {
     // and the filter genuinely prunes: rebuild it and count survivors
     val docs = Tables.documents(spark, sf0001)
     val evalSh = docs.filter(col("doc_id") % 50 === 0)
-      .select(explode(graft.operators.Dedup.shinglesPublic(col("text")))
+      .select(explode(graft.operators.Dedup.shingles(col("text")))
         .as("sh")).distinct()
     val bf = evalSh.agg(call_function("graft_bloom_agg",
       xxhash64(col("sh")), lit(graft.operators.Pipeline2.BloomItems),
       lit(graft.operators.Pipeline2.BloomBits)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
     val corpusSh = docs.filter(col("doc_id") % 50 =!= 0)
-      .select(explode(graft.operators.Dedup.shinglesPublic(col("text")))
+      .select(explode(graft.operators.Dedup.shingles(col("text")))
         .as("sh"))
     val total = corpusSh.count()
     val candidates = corpusSh

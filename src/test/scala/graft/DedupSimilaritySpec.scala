@@ -183,7 +183,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     val out = Dedup.dedupPrefixJaccard(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val sh = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), Dedup.shinglesPublic(col("text")).as("sh"))
+      .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
     val brute = (for {
       (ia, sa) <- sh; (ib, sb) <- sh
@@ -324,7 +324,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     // bound of the O(k·n) cap, pinned here so it can't regress silently.
     val banded = (0L until 40L)
       .map(i => (i, 0, 77L)).toDF("doc_id", "band_idx", "band_hash")
-    val got = Dedup.cappedBucketPairsPublic(banded, "band_hash", Seq.empty)
+    val got = Dedup.cappedBucketPairs(banded, "band_hash", Seq.empty)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val anchors = (0L until Dedup.StarAnchors.toLong)
     val expected = (for {
@@ -368,7 +368,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("bucket cap preserves recall: uncapped verified pairs stay cluster-connected") {
     // reconstruct the pre-cap candidate set: plain all-pairs self-join
     // on the banded signature stream, then the same jaccard >= 0.2 gate
-    val banded = Dedup.bandedMinhashPublic(Tables.documents(spark, sf0001))
+    val banded = Dedup.bandedMinhash(Tables.documents(spark, sf0001))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
     val byBucket = banded.groupBy(t => (t._2, t._3)).values
     val uncappedCandidates = byBucket.flatMap { rows =>
@@ -376,7 +376,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
       for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j))
     }.toSet
     val shingleSets = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), Dedup.shinglesPublic(col("text")).as("sh"))
+      .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     def jac(a: Long, b: Long): Double = {
       val (x, y) = (shingleSets(a), shingleSets(b))

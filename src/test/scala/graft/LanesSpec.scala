@@ -10,7 +10,7 @@ import graft.streaming.StreamingQueries
 class LanesSpec extends AnyFunSuite {
 
   private def lane(name: String, external: Option[String] = None) =
-    QueryDef(name, (_, _) => fail(s"$name must not run"), None, external)
+    QueryDef(name, (_, _) => fail(s"$name must not run"), "SELECT 1", external)
 
   private val lanes = Seq("q1_agg", "q10_window", "stream_tws",
     "stream_outer_join", "text_bm25").map(lane(_))
@@ -40,7 +40,7 @@ class LanesSpec extends AnyFunSuite {
     var acted = false
     try {
       val ran = Lanes.run(null,
-        QueryDef("ext_lane", (_, _) => null, None, Some(present.getPath)),
+        QueryDef("ext_lane", (_, _) => null, "SELECT 1", Some(present.getPath)),
         "unused")(_ => acted = true)
       assert(ran === Lanes.Ran && acted)
     } finally present.delete()
@@ -48,9 +48,9 @@ class LanesSpec extends AnyFunSuite {
 
   test("run: a throwing lane comes back failed, not skipped") {
     val boom = new IllegalStateException("boom")
-    val thrower = QueryDef("q_throws", (_, _) => throw boom, None)
+    val thrower = QueryDef("q_throws", (_, _) => throw boom, "SELECT 1")
     assert(Lanes.run(null, thrower, "unused")(_ => ()) === Lanes.Failed(boom))
-    val actionThrows = QueryDef("q_ok", (_, _) => null, None)
+    val actionThrows = QueryDef("q_ok", (_, _) => null, "SELECT 1")
     assert(Lanes.run(null, actionThrows, "unused")(_ => throw boom) ===
       Lanes.Failed(boom))
   }

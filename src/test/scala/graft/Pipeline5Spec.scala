@@ -92,7 +92,7 @@ class Pipeline5Spec extends AnyFunSuite with SparkTestBase {
     val (fa, fb, _) = full.head
     val sh = Tables.documents(spark, sf001)
       .filter(col("doc_id").isin(fa, fb))
-      .select(col("doc_id"), Dedup.shinglesPublic(col("text")).as("sh"))
+      .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     assert(sh(fa).subsetOf(sh(fb)), s"S($fa) must be a subset of S($fb)")
     // asymmetry is real: some pair appears in one direction with a

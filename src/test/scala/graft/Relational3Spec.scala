@@ -120,7 +120,7 @@ class Relational3Spec extends AnyFunSuite with SparkTestBase {
     }
     // driver-side ground truth on the small corpus
     val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), operators.Dedup.shinglesPublic(col("text")).as("sh"))
+      .select(col("doc_id"), operators.Dedup.shingles(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
     val evalSh = docs.filter(_._1 % 50 == 0).flatMap(_._2).toSet
     val expected = docs.filter(_._1 % 50 != 0)

@@ -42,8 +42,8 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
         s"${q.name} folds a UTF8_BINARY string with Spark's $sparkFolds")
     }
     // batch lanes run CONCURRENTLY on the shared session (a SparkSession
-    // schedules concurrent jobs safely; the only session-conf writes on
-    // these paths are idempotent same-value sets) — this test is a mini
+    // schedules concurrent jobs safely, and no batch lane writes the
+    // session conf) — this test is a mini
     // verify over all 262 lanes and was the suite's single biggest wall
     // chunk when sequential. Streaming lanes stay SEQUENTIAL: they pin
     // memory-sink queryNames and toggle shuffle.partitions around their
