@@ -27,30 +27,36 @@ import com.fasterxml.jackson.core.JsonProcessingException
   *     stops the pass, the lanes left on their baseline priors are the
   *     few heaviest, not an arbitrary registry-prefix sample (r13
   *     skipped 206 of 262 lanes prefix-ordered — unrepresentative);
-  *     the warm lane is the MEDIAN of SPARK_GRAFT_WARM_PASSES (default
-  *     1; see below) passes; on single-pass runs, lanes provisionally
-  *     flagged >1.5× their prior get ONE retry and price at the MIN of
-  *     the two samples — a host pause can inflate one sample 10-100×,
-  *     never two. The retry pass runs inside its OWN pre-carved
-  *     reserve (r15): r14 funded it from leftover warm budget, which
-  *     is empty exactly when pauses are worst — the driver's
-  *     73.8%-steal epoch got n_retried=0 and graded 12.7× while the
-  *     identical engine measured 1.70× whenever retry fired;
-  *   - every warm/retry lane runs under a WATCHDOG (r15) that cancels
-  *     its Spark job group at min(30 s, max(5 s, 50×prior)): one host
-  *     pause stranding one lane must not eat the budget 50 other lanes
-  *     needed (r14: sim_ann_ivf burned 83.9 s, 8% of the whole budget,
-  *     on a 0.505 s prior). A capped lane contributes no timing and is
-  *     handed to the retry pass; capped in BOTH passes → it keeps its
-  *     baseline prior and is listed under "capped_unresolved" with a
-  *     regression entry (capped:true) — never silently dropped.
-  *     Streaming lanes run their micro-batch jobs on stream-execution
-  *     threads the thread-local job group does not reach, so the
-  *     cancel cannot shorten the stream itself — but the AndFutureJobs
-  *     ban DOES kill the lane's subsequent driver-side batch jobs, so
-  *     a stranded streaming lane still classifies as capped (after
-  *     paying its natural stream cost) and re-prices in the retry
-  *     pass rather than writing the stranded sample into the totals;
+  *     the warm price is the MEDIAN of SPARK_GRAFT_WARM_PASSES (default
+  *     1) passes;
+  *   - every warm lane runs under a WATCHDOG (r15) that cancels its
+  *     Spark job group at min(30 s, max(5 s, 50×prior)): one host pause
+  *     stranding one lane must not eat the budget 50 other lanes needed
+  *     (r14: sim_ann_ivf burned 83.9 s, 8% of the whole budget, on a
+  *     0.505 s prior). A capped lane contributes no timing. Streaming
+  *     lanes run their micro-batch jobs on stream-execution threads the
+  *     thread-local job group does not reach, so the cancel cannot
+  *     shorten the stream itself — but the AndFutureJobs ban DOES kill
+  *     the lane's subsequent driver-side batch jobs, so a stranded
+  *     streaming lane still classifies as capped (after paying its
+  *     natural stream cost) rather than writing the stranded sample into
+  *     the totals;
+  *   - ONE RE-SAMPLE RULE ([[resample]]) for a SUSPECT lane, one whose
+  *     warm price flags against its prior ([[flagged]]) or which the
+  *     watchdog capped: suspects re-run in ascending-prior order, each
+  *     under the watchdog, inside one reserve carved out of the budget
+  *     before the passes start, so the re-runs happen even (especially)
+  *     on a budget-exhausted run, whose flags are the least trustworthy.
+  *     A suspect re-runs at most twice; it stops at the first re-run that
+  *     does not flag, or at a capped or failed one. It prices at the
+  *     LOWEST of its samples: a host pause inflates one sample 10-100×,
+  *     never all of them, while sustained contention and a real
+  *     regression inflate every sample and still flag. A suspect that
+  *     still flags is a regression entry listing all its samples; a
+  *     capped lane left with no sample keeps its baseline prior and is
+  *     listed under "capped_unresolved" with a regression entry
+  *     (capped:true) — never silently dropped. The rule is the same for
+  *     any number of warm passes;
   *   - a failed query contributes NO timing anywhere (an early throw
   *     would masquerade as a fast run and deflate the totals); it is
   *     listed in the errors arrays and counted in n_failed, and totals
@@ -58,11 +64,6 @@ import com.fasterxml.jackson.core.JsonProcessingException
   *   - a lane whose external input is absent on this machine is split
   *     off before any timer starts and listed with its reason under
   *     lanes_skipped — not a failure, not a regression, prior kept;
-  *   - a fixed ADJUDICATION RESERVE is carved out of the budget before
-  *     the passes start, so the top regression flags get isolated
-  *     re-runs even on a budget-exhausted run — exactly the runs whose
-  *     flags are least trustworthy (r13 shipped 54 un-adjudicated
-  *     ghost flags because adjudication was disabled past 90% budget);
   *   - every timed lane is bracketed with /proc/stat samples; flagged
   *     regressions carry their own lane_steal_pct so a 315×-on-74%-
   *     steal flag self-describes as unattributable without a human
@@ -109,34 +110,84 @@ object Bench {
       names: Seq[String], priors: Map[String, Double]): Seq[String] =
     names.sortBy(n => (priors.getOrElse(n, 0.0), n))
 
-  /** THE flag predicate, shared by the regression gate and the retry
-    * pass (the retry's premise is "re-sample exactly what the gate
-    * would flag" — two copies of the threshold would silently
+  /** THE flag predicate, shared by the regression gate and the
+    * re-sample rule (the rule's premise is "re-sample exactly what the
+    * gate would flag" — two copies of the threshold would silently
     * desynchronize when one is tuned). Sub-50ms priors never flag:
     * pure scheduling noise at that scale.
     */
   private[graft] def flagged(prior: Double, v: Double): Boolean =
     prior > 0.05 && v / prior > 1.5
 
-  /** Lanes whose single warm sample provisionally flags against its
-    * prior (>1.5×), in ascending-PRIOR order — the retry pass re-runs
-    * these once inside the leftover pass budget and takes the MIN of
-    * the two samples. Rationale: with warm_passes=1 (the driver
-    * default since r13 — 3 passes no longer fit the budget at 262
-    * lanes) one host-side VM pause writes a 10-100× ghost sample
-    * straight into the totals; a min-of-2 survives any single pause,
-    * the same rule the baseline accept hatch already uses. Sustained
-    * contention inflates both samples alike, so a real regression
-    * still flags. Ascending-prior keeps the order consistent with the
-    * warm pass: cheap lanes de-ghost first if the budget cuts in.
-    * BenchBaselineSpec pins selection + order.
+  /** The middle sample; the mean of the two middle ones for an even count. */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.length
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
+
+  /** How one timed run of a lane ended: its seconds, a watchdog cap (a
+    * budget decision, not a query error), or the error it threw.
     */
-  private[graft] def retryCandidates(
-      warm: Map[String, Double], priors: Map[String, Double]): Seq[String] =
-    warmOrder(
-      warm.collect { case (n, v)
-        if priors.get(n).exists(flagged(_, v)) => n }.toSeq,
-      priors)
+  private[graft] sealed trait Run
+  private[graft] final case class Took(seconds: Double) extends Run
+  private[graft] case object Capped extends Run
+  private[graft] final case class Threw(error: Throwable) extends Run
+
+  /** A suspect after re-sampling: its samples in the order taken (the
+    * warm price first, when it has one), its re-run count, and whether
+    * a re-run threw.
+    */
+  private[graft] final case class Suspect(
+      samples: Seq[Double], reruns: Int, threw: Boolean)
+
+  /** What the re-sample pass leaves: the warm prices with every priced
+    * suspect at its lowest sample, each suspect in re-sample order, and
+    * the capped lanes that are still unpriced, which keep their priors.
+    */
+  private[graft] final case class Resampled(warm: Map[String, Double],
+      suspects: ListMap[String, Suspect], cappedUnresolved: Seq[String]) {
+    /** The suspects that re-ran at least once. */
+    def retried: ListMap[String, Suspect] = suspects.filter(_._2.reruns > 0)
+    /** The suspects whose re-run threw. */
+    def errors: Seq[String] = suspects.collect { case (n, s) if s.threw => n }.toSeq
+  }
+
+  /** THE re-sample rule. A suspect is a lane whose warm price (`warm`,
+    * the median of its warm passes) flags against its prior, or one the
+    * watchdog `capped` and that has no warm price. Suspects re-run in
+    * ascending-prior order ([[warmOrder]]: cheap lanes de-ghost first if
+    * the budget cuts in) through `rerun`, which answers None once the
+    * budget is spent. A suspect re-runs at most twice, and stops at the
+    * first re-run that does not flag or at a capped or failed one. It
+    * prices at the lowest of its samples: one host-side VM pause writes
+    * a 10-100× ghost into ONE sample and a re-run clears it, while
+    * sustained contention or a real regression inflates every sample
+    * and still flags. With several warm passes the median is the first
+    * sample. BenchBaselineSpec pins the rule with a scripted `rerun`.
+    */
+  private[graft] def resample(warm: Map[String, Double], capped: Seq[String],
+      priors: Map[String, Double], rerun: String => Option[Run]): Resampled = {
+    def flags(n: String, v: Double) = priors.get(n).exists(flagged(_, v))
+    val names = warmOrder((warm.collect { case (n, v) if flags(n, v) => n } ++
+      capped.filterNot(warm.contains)).toSeq.distinct, priors)
+    val suspects = ListMap.from(names.map { n =>
+      @scala.annotation.tailrec
+      def go(s: Suspect): Suspect =
+        if (s.reruns == 2) s else rerun(n) match {
+          case None => s
+          case Some(Took(v)) =>
+            val next = Suspect(s.samples :+ v, s.reruns + 1, threw = false)
+            if (flags(n, v)) go(next) else next
+          case Some(Capped) => s.copy(reruns = s.reruns + 1)
+          case Some(Threw(_)) => s.copy(reruns = s.reruns + 1, threw = true)
+        }
+      n -> go(Suspect(warm.get(n).toSeq, 0, threw = false))
+    })
+    val priced = warm ++ suspects.collect {
+      case (n, s) if s.samples.nonEmpty => n -> s.samples.min }
+    Resampled(priced, suspects, capped.distinct.filterNot(priced.contains).sorted)
+  }
 
   /** Per-lane watchdog cap in seconds: a lane's warm sample may run at
     * most 50× its prior, clamped to [5 s, 30 s]. Rationale (r15): in
@@ -148,7 +199,7 @@ object Bench {
     * lane with NO usable prior gets a generous 120 s: without a prior
     * there is no evidence that any particular runtime is anomalous,
     * and a 30 s ceiling would permanently blind the harness to a
-    * legitimately-slow NEW lane (capped in warm, capped in retry,
+    * legitimately-slow NEW lane (capped in warm, capped in its re-run,
     * never priced, never gains a prior — review r15). 120 s is 15×
     * the heaviest current prior, pause-lottery territory only.
     * BenchBaselineSpec pins the clamps.
@@ -191,7 +242,7 @@ object Bench {
     * stream — the lane pays its natural stream cost, and then the ban
     * kills its next DRIVER-side batch job, so a stranded streaming
     * lane comes back Left(cancel) after the fact and re-prices in the
-    * retry pass (the budget saving applies to batch lanes; for
+    * re-sample pass (the budget saving applies to batch lanes; for
     * streaming lanes the watchdog only keeps the stranded sample out
     * of the totals). A body that finishes with no further jobs after
     * the timer still returns Right — `fired` alone never discards a
@@ -325,7 +376,7 @@ object Bench {
     * timed. Recorded as `calib_ms` in every bench JSON so a cross-round
     * delta can be attributed — if calib shifted with the queries, the
     * machine changed, not the code (round 8: an all-lanes 1.5× shift
-    * turned out to be a persistent VM-generation change; adjudicating
+    * turned out to be a persistent VM-generation change; attributing
     * it required re-running old code because no calibration had been
     * recorded). JIT-warmed with one untimed pass; median of 3.
     */
@@ -377,22 +428,23 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Tables.dataDir(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     // default 1 warm pass since round 13: at 262 lanes the median-of-3
     // methodology (right at 110 lanes) no longer fits the driver's
     // bench timeout — r12's driver run was killed at rc=124 with no
     // number produced, strictly worse than a noisier number. Single-
     // sample noise is handled downstream instead: the baseline merge is
     // per-query minima (a noisy-high sample can never loosen the gate)
-    // and the top regression flags are auto-adjudicated with isolated
-    // extra passes at the end of the run (below). Pricing runs that
-    // want the old median set SPARK_GRAFT_WARM_PASSES=3 explicitly.
+    // and every flagged or capped lane is re-sampled at the end of the
+    // run (see resample). Pricing runs that want the old median set
+    // SPARK_GRAFT_WARM_PASSES=3 explicitly.
     val warmPasses =
       EnvKnob.positive("SPARK_GRAFT_WARM_PASSES", 1, Int.MaxValue).toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // optional comma-separated subset (prefix match with a trailing '*'),
     // e.g. SPARK_GRAFT_ONLY='stream_*' to time the streaming family in
-    // isolation — used to adjudicate whether a cross-round delta is a
+    // isolation — used to tell whether a cross-round delta is a
     // plan regression or machine-load noise from the other lanes
     val lanes = Lanes.selected()
     val (laneSkips, benchQueries) = splitRunnable(lanes)
@@ -400,35 +452,23 @@ object Bench {
       System.err.println(s"[bench] SKIP $n ($reason)") }
     val spark = GraftSession()
 
-    // TIME BUDGET (r13) + ADJUDICATION RESERVE (r14): r12's driver
-    // bench was killed at its timeout with NO number produced —
-    // strictly worse than a partial number. The budget guard stops a
-    // pass at its deadline and lists skipped lanes explicitly — a
-    // skipped lane keeps its baseline prior and is excluded from
-    // totals, and "budget_exceeded":true marks the totals as partial.
-    // The adjudication reserve is carved out FIRST, so flag re-runs
-    // happen even (especially) on a budget-exhausted run — r13 shipped
-    // 54 un-adjudicated flags because the drill was disabled past 90%
-    // budget, precisely when flags are least trustworthy.
+    // TIME BUDGET (r13) + RE-SAMPLE RESERVE: r12's driver bench was
+    // killed at its timeout with NO number produced — strictly worse
+    // than a partial number. The budget guard stops a pass at its
+    // deadline and lists skipped lanes explicitly — a skipped lane keeps
+    // its baseline prior and is excluded from totals, and
+    // "budget_exceeded":true marks the totals as partial. The re-sample
+    // reserve is carved out FIRST and the re-sample deadline is the
+    // whole budget, so suspects re-run even (especially) on a
+    // budget-exhausted run: r13 shipped 54 unchecked flags because
+    // its drill was disabled past 90% budget, and r14 funded its retry
+    // from LEFTOVER warm budget, which is empty precisely on the
+    // high-steal epochs whose pause ghosts it existed to kill (driver
+    // r14: deadline hit at 969 s, n_retried=0, graded 12.7×; the same
+    // engine measured 1.70× whenever the retry fired).
     val budgetS = EnvKnob.positiveDouble("SPARK_GRAFT_TIME_BUDGET_S", 1020.0)
-    val adjudReserveS = math.min(60.0, 0.10 * budgetS)
-    // RETRY RESERVE (r15, the round's headline fix): the min-of-2 retry
-    // pass gets its own pre-carved slice, exactly like the adjudication
-    // reserve — r14 funded it from LEFTOVER warm budget, which is empty
-    // precisely on the high-steal epochs whose pause ghosts the retry
-    // exists to kill (driver r14: deadline hit at 969 s, n_retried=0,
-    // graded 12.7×; the same engine measured 1.70× whenever retry
-    // fired). The warm deadline shrinks by the reserve; the retry pass
-    // runs until budget − adjudReserve even when warm exhausted its
-    // own deadline. Multi-pass runs disable the flag-retry (medians
-    // already absorb single pauses), so their reserve shrinks to a
-    // watchdog-capped-lanes-only slice instead of idling 120 s of warm
-    // pricing time.
-    val retryReserveS =
-      if (warmPasses > 1) math.min(30.0, 0.05 * budgetS)
-      else math.min(120.0, 0.15 * budgetS)
-    val passBudgetS = budgetS - adjudReserveS - retryReserveS
-    val retryDeadlineS = budgetS - adjudReserveS
+    val reserveS = math.min(180.0, 0.25 * budgetS)
+    val passBudgetS = budgetS - reserveS
     val tStart = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
     val jiffies0 = cpuJiffies()
@@ -445,7 +485,7 @@ object Bench {
     val warmupStealPct = stealShare(warmupJ0, cpuJiffies())
     // steal-conditioned degrade (r13 lesson): >30% steal during warmup
     // means this epoch cannot afford ungraded work — drop straight to
-    // the minimal gradeable configuration (full warm + adjudication)
+    // the minimal gradeable configuration (full warm + re-sample)
     val coldSkippedHighSteal = warmupStealPct > 30.0
     if (coldSkippedHighSteal) System.err.println(
       f"[bench] warmup steal ${warmupStealPct}%.1f%% > 30%% — skipping the " +
@@ -498,45 +538,49 @@ object Bench {
         : (Either[Throwable, Double], Boolean) =
       underWatchdog(spark.sparkContext, watchdogExec, name, capS)(body)
 
-    // one pass = per-query seconds for SUCCESSFUL queries only; failures
-    // go to `errors` (tagged with the pass) and contribute no timing.
-    // With `capped` non-null the pass runs under the per-lane watchdog:
-    // a cancel-induced failure goes to `capped` (a budget decision, not
-    // a query error) and the lane prices later or keeps its prior.
-    def pass(tag: String, names: Seq[String],
-        errors: scala.collection.mutable.ListBuffer[String],
-        deadlineS: Double,
-        skipped: scala.collection.mutable.ListBuffer[String] = null,
-        capped: scala.collection.mutable.ListBuffer[String] = null)
-        : Map[String, Double] = names.flatMap { name =>
-      val lane = benchQueries(name)
-      if (elapsedS > deadlineS) {
-        if (skipped != null && !skipped.contains(name)) skipped += name
-        None
-      } else {
+    // one timed run of `name` under a watchdog at `capS`; the steal
+    // share while it ran goes to laneSteal
+    def sample(tag: String, name: String, capS: Double): Run = {
       val j0 = cpuJiffies()
-      val capS =
-        if (capped != null) laneCapS(prevWarm.get(name)) else Double.MaxValue / 2e3
-      val (res, fired) = watched(name, capS)(Lanes.force(lane.fn(spark, sfDir)))
+      val (res, fired) =
+        watched(name, capS)(Lanes.force(benchQueries(name).fn(spark, sfDir)))
       val st = stealShare(j0, cpuJiffies())
       if (st >= 0) laneSteal(name) = math.max(laneSteal.getOrElse(name, 0.0), st)
       res match {
-        case Right(sec) => Some(name -> sec)
-        case Left(e) if fired && capped != null && isCancellation(e) =>
-          capped += name
+        case Right(sec) => Took(sec)
+        case Left(e) if fired && isCancellation(e) =>
           System.err.println(
             f"[bench:$tag] $name watchdog-capped at ${capS}%.1f s " +
               f"(prior ${prevWarm.getOrElse(name, 0.0)}%.3f s) — no sample taken")
-          None
+          Capped
         case Left(e) =>
           // a genuine query error — even when the timer had also fired
           // (a slow lane can blow its cap AND then die of a real
           // failure; the error must reach errors/n_failed, not be
           // silently booked as a budget decision)
-          errors += name
           System.err.println(s"[bench:$tag] $name failed: ${e.getMessage}")
-          None
+          Threw(e)
       }
+    }
+
+    // one pass = per-query seconds for SUCCESSFUL queries only; failures
+    // go to `errors` and contribute no timing. With `capped` non-null
+    // the pass runs under the per-lane watchdog and a capped lane goes
+    // to `capped`: it is re-sampled, or keeps its prior.
+    def pass(tag: String, names: Seq[String],
+        errors: scala.collection.mutable.ListBuffer[String],
+        deadlineS: Double,
+        skipped: scala.collection.mutable.ListBuffer[String],
+        capped: scala.collection.mutable.ListBuffer[String] = null)
+        : Map[String, Double] = names.flatMap { name =>
+      if (elapsedS > deadlineS) {
+        if (!skipped.contains(name)) skipped += name
+        None
+      } else sample(tag, name,
+          if (capped != null) laneCapS(prevWarm.get(name)) else Double.MaxValue / 2e3) match {
+        case Took(sec) => Some(name -> sec)
+        case Capped => capped += name; None
+        case Threw(_) => errors += name; None
       }
     }.toMap
 
@@ -558,11 +602,6 @@ object Bench {
     val cappedWarm = scala.collection.mutable.ListBuffer.empty[String]
     val warmSamples = (1 to warmPasses).map(i =>
       pass(s"warm$i", warmNames, errWarm, passBudgetS, skippedWarm, cappedWarm))
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
     // a query only gets a warm median if it succeeded in EVERY warm pass
     // (partial samples would mix real timings with rethrow latencies)
     val warmFirst: Map[String, Double] = benchQueries.keys.toSeq
@@ -570,50 +609,29 @@ object Bench {
         val samples = warmSamples.flatMap(_.get(name))
         if (samples.length == warmPasses) Some(name -> median(samples)) else None
       }.toMap
-    // RETRY PASS (r14, single-warm-pass runs only; r15: funded from its
-    // own pre-carved reserve and fed the watchdog-capped lanes too):
-    // provisionally flagged lanes get ONE re-run and the warm value
-    // becomes the MIN of the two samples — a single host pause can no
-    // longer write a 10-100× ghost into the totals (see
-    // retryCandidates); a lane CAPPED in the warm pass has no first
-    // sample, so its retry sample alone prices it. The deadline is
-    // retryDeadlineS (= budget − adjudReserve), NOT the warm deadline:
-    // r14 shared the warm deadline and the retry silently no-opped on
-    // exactly the exhausted-budget epochs that needed it most.
-    // Multi-pass runs already median away single pauses, so the
-    // flag-retry would only bias them low — but capped lanes still get
-    // their re-run (they have no priced median to bias).
-    val errRetry = scala.collection.mutable.ListBuffer.empty[String]
-    val cappedRetry = scala.collection.mutable.ListBuffer.empty[String]
-    val retried: Map[String, Double] = {
-      val flaggedCands =
-        if (warmPasses > 1) Seq.empty else retryCandidates(warmFirst, prevWarm)
-      val cands = warmOrder(
-        (flaggedCands ++ cappedWarm.distinct.filterNot(warmFirst.contains))
-          .distinct, prevWarm)
-      if (cands.nonEmpty) System.err.println(
-        s"[bench:retry] ${cands.size} lanes re-sample inside the retry " +
-          f"reserve (${retryReserveS}%.0f s carved out up front): " +
-          s"${flaggedCands.size} provisionally flagged (min-of-2) + " +
-          s"${cands.size - flaggedCands.size} watchdog-capped")
-      pass("retry", cands, errRetry, retryDeadlineS, capped = cappedRetry)
-    }
-    val warm: Map[String, Double] = warmFirst.map { case (n, v) =>
-      n -> math.min(v, retried.getOrElse(n, v))
-    } ++ (retried -- warmFirst.keySet) // capped-in-warm lanes price at their retry sample
-    // capped in the warm pass and STILL unpriced after the retry pass
-    // (capped again, errored, or deadline-skipped): keeps its baseline
-    // prior, excluded from totals, listed + flagged (capped:true) below
-    val cappedUnresolved: Seq[String] =
-      cappedWarm.distinct.filterNot(warm.contains).toSeq.sorted
+    // RE-SAMPLE PASS: every flagged or capped lane through the one rule
+    // (see resample), inside the reserve and until the whole budget is
+    // spent. A capped lane still unpriced after it (capped again,
+    // errored, or out of budget) keeps its baseline prior, is excluded
+    // from totals, and is listed + flagged (capped:true) below.
+    val resampled = resample(warmFirst, cappedWarm.toSeq, prevWarm, name =>
+      if (elapsedS > budgetS) None
+      else Some(sample("resample", name, laneCapS(prevWarm.get(name)))))
+    val warm = resampled.warm
+    val cappedUnresolved = resampled.cappedUnresolved
+    val retried = resampled.retried
+    if (resampled.suspects.nonEmpty) System.err.println(
+      s"[bench:resample] ${resampled.suspects.size} suspects, ${retried.size} " +
+        f"re-run inside the ${reserveS}%.0f s reserve")
 
     val calibMs = calibrate()
     // whole-run host-contention summary: steal share of busy time
     val stealPct: Double = stealShare(jiffies0, cpuJiffies())
 
-    // regression gate: diff this run's warm medians against the priors
-    // and flag any query whose warm median grew >1.5x round-over-round
+    // regression gate: diff this run's warm prices against the priors
+    // and flag any query whose warm price grew >1.5x round-over-round
     // (the shared `flagged` predicate — sub-50ms priors never flag).
+    // Every such lane is a suspect that still flags after re-sampling.
     // A query with a prior that FAILED this run is the worst regression
     // of all — round 5's 35 events-schema failures reported
     // "regressions":[] precisely because failures were exempt. Internally
@@ -623,8 +641,8 @@ object Bench {
     // Only WARM failures feed the gate: the cold lane is ungraded in the
     // r14 structure, so a transient cold-only error on a lane whose warm
     // runs all priced must not emit a failed:true flag that contradicts
-    // the priced queries_warm entry (cold/retry errors are still listed
-    // in their own arrays below — never silently dropped).
+    // the priced queries_warm entry (cold/re-sample errors are still
+    // listed in their own arrays below — never silently dropped).
     val failedWithPrior: Seq[(String, Double, Double, Double)] =
       errWarm.distinct.toSeq.sorted.flatMap { name =>
         prevWarm.get(name).map(p => (name, p, -1.0, Double.PositiveInfinity))
@@ -634,71 +652,18 @@ object Bench {
         prevWarm.get(name).filter(flagged(_, v))
           .map(p => (name, p, v, v / p))
       }.sortBy(-_._4)
-    // AUTO-ADJUDICATION (r13, hardened r14, re-aimed r15): the top
-    // non-failed flags BY RATIO get up to 3 extra ISOLATED passes right
-    // here, while the JVM is at its warmest — a one-sample flag on a
-    // loaded moment is indistinguishable from a plan regression without
-    // a re-run (r12: q112_k_anonymity flagged 18.2×, measured 1.55×
-    // isolated). The drill runs INSIDE its own reserve (it no longer
-    // vanishes on a budget-exhausted run — r13 shipped 54 ghost flags
-    // un-adjudicated for exactly that reason). Cost is bounded by
-    // CANCELLING each isolated pass at 30 s via the watchdog, NOT by
-    // excluding expensive candidates (r14 capped candidate selection at
-    // now≤30 s, so the scariest flags — 166× sim_ann_ivf — shipped
-    // un-drilled while mid-tier flags got the reserve); the hard budget
-    // is still re-checked before EVERY isolated pass. Each drill is
-    // bracketed with /proc/stat samples and emits iso_steal_pct next to
-    // iso_ratio (ADVICE r14: a steal burst during the drill can make a
-    // ghost read as confirmed with no contention evidence).
-    val adjudSteal = scala.collection.mutable.Map.empty[String, Double]
-    val adjud: Map[String, Double] = regressions
-      .filter(r => !r._4.isInfinity).take(3)
-      .flatMap { case (name, p, _, _) =>
-        val j0 = cpuJiffies()
-        // up to 3 isolated passes, stopping at the FIRST capped pass:
-        // a lane whose true isolated runtime exceeds the 30 s drill cap
-        // would be cancelled deterministically three times, burning the
-        // whole reserve for zero samples and starving the other top
-        // flags (review r15) — one cancel proves the next two
-        val samples = scala.collection.mutable.ListBuffer.empty[Double]
-        var drillCapped = false
-        var i = 0
-        while (i < 3 && !drillCapped && elapsedS <= budgetS) {
-          val (res, fired) = watched(s"adjud-$name", 30.0)(
-            Lanes.force(benchQueries(name).fn(spark, sfDir)))
-          res match {
-            case Right(sec) => samples += sec
-            case Left(e) => if (fired && isCancellation(e)) drillCapped = true
-          }
-          i += 1
-        }
-        val st = stealShare(j0, cpuJiffies())
-        if (st >= 0) adjudSteal(name) = st
-        if (drillCapped) System.err.println(
-          s"[bench:adjudicate] $name isolated pass hit the 30 s drill cap " +
-            s"after ${samples.size} sample(s) — drill stopped early")
-        if (samples.isEmpty) None else {
-          val m = median(samples.toSeq)
-          System.err.println(
-            f"[bench:adjudicate] $name prev=${p}%.2fs iso-median=${m}%.2fs " +
-              f"(${m / p}%.2fx isolated, ${samples.size} passes, " +
-              f"iso steal ${st}%.1f%%)")
-          Some(name -> m)
-        }
-      }.toMap
     def regEntry(n: String, p: Double, v: Double, r: Double): ListMap[String, Any] =
       if (r.isInfinity) ListMap("q" -> n, "prev" -> Json.round(p), "now" -> null,
         "ratio" -> -1, "failed" -> true)
       else ListMap("q" -> n, "prev" -> Json.round(p), "now" -> Json.round(v),
           "ratio" -> Json.round(r), "failed" -> false) ++
-        adjud.get(n).toSeq.flatMap(m =>
-          Seq("iso_now" -> Json.round(m), "iso_ratio" -> Json.round(m / p))) ++
-        adjudSteal.get(n).map(s => "iso_steal_pct" -> Json.round(s)) ++
+        resampled.suspects.get(n).map(s => "samples" -> s.samples.map(Json.round(_))) ++
         laneSteal.get(n).map(s => "lane_steal_pct" -> Json.round(s))
-    // a lane capped in BOTH passes never priced: if it has a prior it
-    // ran ≥50× over it twice — either sustained contention or a real
-    // regression — and a NEW lane (no prior, "prev":null) overran the
-    // 120 s no-prior ceiling twice; either way the artifact must carry
+    // a lane capped in warm and unpriced after re-sampling: if it has a
+    // prior it ran ≥50× over it in warm and again in its re-run — either
+    // sustained contention or a real regression — and a NEW lane (no
+    // prior, "prev":null) overran the 120 s no-prior ceiling twice, or
+    // its re-run threw or found no budget; either way the artifact must carry
     // a flag entry (capped:true, the numeric ratio sentinel -1;
     // distinct from failed:true, which means the query THREW)
     val cappedEntries = cappedUnresolved.map(n =>
@@ -725,10 +690,10 @@ object Bench {
         "suppressed from stderr (contention, not code — full entries in " +
         "the regressions array of bench_out.json)")
     cappedUnresolved.foreach(n => System.err.println(
-      s"[bench:capped] $n hit the watchdog cap in BOTH passes — unpriced, " +
+      s"[bench:capped] $n was capped in warm and unpriced by its re-runs — " +
         "keeps its baseline prior (see capped_unresolved)"))
     // "failed" = GRADED failures (warm lane only, matching the gate);
-    // cold and retry errors are reported in their own arrays — a lane
+    // cold and re-sample errors are reported in their own arrays — a lane
     // that priced warm but stumbled in an ungraded pass is not a
     // failure of the run
     val failed = errWarm.distinct.toSeq
@@ -769,23 +734,22 @@ object Bench {
     // "queries_warm" (the key parseBaseline's readWarm(outPath)
     // fallback and subset-run tooling grep for — dropping it would make
     // the fallback path refuse loudly on a fresh checkout).
-    // both retry samples, auditable (ADVICE r14: min-of-2 pricing lets a
-    // genuine borderline regression escape whenever variance drops one
-    // sample under 1.5× — recording first+retry makes a persistent
-    // near-threshold lane visible across rounds; "first":null = the lane
-    // was watchdog-capped in the warm pass and has only its retry sample)
-    val retries = ListMap.from(retried.toSeq.sortBy(_._1).map { case (n, r) =>
-      n -> ListMap("first" -> warmFirst.get(n).map(Json.round(_)).orNull,
-        "retry" -> Json.round(r))
-    })
+    // every re-run suspect's samples, auditable (ADVICE r14: lowest-
+    // sample pricing lets a genuine borderline regression escape whenever
+    // variance drops one sample under 1.5× — recording every sample makes
+    // a persistent near-threshold lane visible across rounds; a lane
+    // capped in the warm pass lists only its re-run samples)
+    val retries = ListMap.from(retried.toSeq.sortBy(_._1).map { case (n, s) =>
+      n -> s.samples.map(Json.round(_)) })
     val warmSeconds = seconds(warm, warm.keys.toSeq.sorted)
     // bench_schema marks the r14 key migration ("queries" = warm medians,
-    // cold moved to "queries_cold") plus the r15 additions — external
+    // cold moved to "queries_cold"), the r15 additions and schema 3's one
+    // re-sample rule (retries = lane -> samples; the drill's median keys are gone) — external
     // tooling reading pre-r14 keys should check it instead of silently
     // getting the wrong lane; "errors_warm" stays as an alias of
     // "errors" for old consumers (ADVICE r14)
     val full = ListMap[String, Any]("metric" -> "total_warm",
-      "value" -> Json.round(totalWarm), "unit" -> "sec", "bench_schema" -> 2,
+      "value" -> Json.round(totalWarm), "unit" -> "sec", "bench_schema" -> 3,
       "queries" -> warmSeconds, "queries_warm" -> warmSeconds,
       "total_warm" -> Json.round(totalWarm), "cold_scope" -> "headline",
       "cold_total" -> Json.round(total),
@@ -805,10 +769,9 @@ object Bench {
       "lanes_skipped" -> ListMap.from(laneSkips.toSeq.sorted),
       "errors" -> failed, "errors_warm" -> failed,
       "errors_cold" -> errCold.distinct.toSeq,
-      "errors_retry" -> errRetry.distinct.toSeq,
+      "errors_retry" -> resampled.errors,
       "budget_s" -> Json.round(budgetS),
-      "adjud_reserve_s" -> Json.round(adjudReserveS),
-      "retry_reserve_s" -> Json.round(retryReserveS),
+      "retry_reserve_s" -> Json.round(reserveS),
       "budget_exceeded" -> budgetExceeded, "n_skipped" -> skipped.length,
       "skipped" -> skipped, "n_capped" -> cappedWarm.distinct.size,
       "capped" -> cappedWarm.distinct.toSeq.sorted,
@@ -857,7 +820,7 @@ object Bench {
     // compact stdout line, deliberately SMALL (~450 bytes): totals,
     // counts, environment, a 6-entry headline warm map, and the
     // self-grading warm_vs_baseline ratio. Full detail — every lane,
-    // both maps, the complete regression list with iso/steal
+    // both maps, the complete regression list with sample/steal
     // annotations — lives in `outPath`. r13's 2.4 KB line (10 embedded
     // regression objects) was visibly in the captured tail TWICE and
     // still parsed:null; a small line is the cheapest remaining lever

@@ -42,4 +42,18 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Runs `f` with the session conf `key` set to `value`, then restores
+    * the key's previous value, or unsets it if it had none, so the
+    * override never leaks into the session.
+    */
+  def withConf[T](spark: SparkSession, conf: (String, String))(f: => T): T = {
+    val (key, value) = conf
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

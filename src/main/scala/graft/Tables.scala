@@ -18,6 +18,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** `dir` as a data dir a run may read. Every table read hands its path
+    * to Hadoop as a glob pattern, so a dir holding a glob character
+    * (`\ [ ] { } * ?`) fails to parse or, worse, matches other dirs. Each
+    * main passes its data dir through here before any lane runs.
+    */
+  def dataDir(dir: String): String = {
+    require(!dir.exists("\\[]{}*?".contains(_)), s"data dir '$dir' holds a " +
+      "glob character (one of \\ [ ] { } * ?), which the table reads would " +
+      "take as a pattern; rename or link it")
+    dir
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
     spark.read.parquet(s"$dir/$name.parquet")

@@ -6,7 +6,8 @@ import org.apache.commons.io.FileUtils
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(dir, outDir) = args
+    val sfDir = Tables.dataDir(dir)
     // optional subset (SPARK_GRAFT_ONLY, shared with Bench): a local
     // iteration dumps one new query in seconds instead of the full
     // registry; with no filter set, the dump covers every lane

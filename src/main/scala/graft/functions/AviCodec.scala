@@ -147,10 +147,6 @@ object AviCodec {
 
   // ---------------------------------------------------------- decoder
 
-  private def leInt(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
   private def fourcc(b: Array[Byte], o: Int): String =
     new String(b, o, 4, "US-ASCII")
 
@@ -169,7 +165,7 @@ object AviCodec {
   def aviSpans(b: Array[Byte]): Either[String, AviSpans] = {
     if (b == null || b.length < 24) return Left("AVI truncated before RIFF header")
     if (fourcc(b, 0) != "RIFF") return Left("not a RIFF stream")
-    val riffSize = leInt(b, 4)
+    val riffSize = Bytes.le32(b, 4)
     if (riffSize < 4 || 8L + riffSize > b.length)
       return Left("RIFF size overruns the payload")
     if (fourcc(b, 8) != "AVI ") return Left("RIFF form is not AVI")
@@ -190,7 +186,7 @@ object AviCodec {
       while (off < end) {
         if (off + 8 > end) return Some("chunk header overruns its parent")
         val id = fourcc(b, off)
-        val len = leInt(b, off + 4)
+        val len = Bytes.le32(b, off + 4)
         if (len < 0 || off + 8 + len.toLong > end)
           return Some(s"chunk '$id' overruns its parent")
         val data = off + 8
@@ -202,19 +198,19 @@ object AviCodec {
             if (err.isDefined) return err
           case "avih" =>
             if (len < 56) return Some("avih shorter than 56 bytes")
-            usec = leInt(b, data)
-            declaredFrames = leInt(b, data + 16)
-            if (leInt(b, data + 24) != 1)
+            usec = Bytes.le32(b, data)
+            declaredFrames = Bytes.le32(b, data + 16)
+            if (Bytes.le32(b, data + 24) != 1)
               return Some("multi-stream AVIs are outside the subset")
-            width = leInt(b, data + 32)
-            height = leInt(b, data + 36)
+            width = Bytes.le32(b, data + 32)
+            height = Bytes.le32(b, data + 36)
           case "strh" =>
             if (len < 56) return Some("strh shorter than 56 bytes")
             val fccType = fourcc(b, data)
             if (fccType == "vids") {
               vidStreams += 1
               sawMjpg = fourcc(b, data + 4) == "MJPG"
-              strhFrames = leInt(b, data + 32)
+              strhFrames = Bytes.le32(b, data + 32)
             } else return Some(s"non-video stream '$fccType' outside the subset")
           case "00dc" if inMovi =>
             if (len == 0) return Some("empty frame chunk")

@@ -232,9 +232,8 @@ object GifPixels {
     if (b == null || b.length < 14) return Left("GIF truncated before descriptor")
     val ver = new String(b, 0, 6, "US-ASCII")
     if (ver != "GIF87a" && ver != "GIF89a") return Left(s"not a GIF: '$ver'")
-    def leShort(off: Int) = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    val width = leShort(6)
-    val height = leShort(8)
+    val width = Bytes.le16(b, 6)
+    val height = Bytes.le16(b, 8)
     if (width <= 0 || height <= 0) return Left("empty GIF geometry")
     val packed = b(10) & 0xff
     if ((packed & 0x80) == 0) return Left("content decode needs a global color table")
@@ -259,11 +258,11 @@ object GifPixels {
           off += 1
         case 0x2c =>
           if (off + 10 > b.length) return Left("image descriptor truncated")
-          val iw = leShort(off + 5)
-          val ih = leShort(off + 7)
+          val iw = Bytes.le16(b, off + 5)
+          val ih = Bytes.le16(b, off + 7)
           val ipacked = b(off + 9) & 0xff
           if (iw != width || ih != height ||
-              leShort(off + 1) != 0 || leShort(off + 3) != 0)
+              Bytes.le16(b, off + 1) != 0 || Bytes.le16(b, off + 3) != 0)
             return Left("sub-rectangle frames unsupported")
           if ((ipacked & 0x80) != 0) return Left("local color tables unsupported")
           if ((ipacked & 0x40) != 0) return Left("interlaced frames unsupported")

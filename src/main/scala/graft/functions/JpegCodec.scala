@@ -360,12 +360,11 @@ object JpegCodec {
     var acTab: HuffTable = null
     var width = 0
     var height = 0
-    def be16(o: Int) = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
     while (off + 4 <= b.length) {
       if ((b(off) & 0xff) != 0xff) return Left(f"lost marker sync at $off")
       val m = b(off + 1) & 0xff
       if (m == 0xd9) return Left("EOI before SOS")
-      val len = be16(off + 2)
+      val len = Bytes.be16(b, off + 2)
       if (off + 2 + len > b.length) return Left("segment overruns payload")
       val seg = off + 4
       m match {
@@ -383,8 +382,8 @@ object JpegCodec {
           if (tc == 0) dcTab = t else acTab = t
         case 0xc0 => // SOF0 baseline
           if ((b(seg) & 0xff) != 8) return Left("non-8-bit precision")
-          height = be16(seg + 1)
-          width = be16(seg + 3)
+          height = Bytes.be16(b, seg + 1)
+          width = Bytes.be16(b, seg + 3)
           if ((b(seg + 5) & 0xff) != 1) return Left("multi-component unsupported")
           if ((b(seg + 7) & 0xff) != 0x11) return Left("subsampling unsupported")
           if (width % 8 != 0 || height % 8 != 0)

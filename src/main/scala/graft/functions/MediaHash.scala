@@ -26,14 +26,10 @@ import org.apache.spark.sql.graftglue.{columnToExpr, exprToColumn}
   */
 object MediaHash {
 
-  private def leInt(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   /** BMP magic + a sane pixel-array offset inside the payload. */
   def isBmp(b: Array[Byte]): Boolean =
     b != null && b.length > 54 && b(0) == 'B' && b(1) == 'M' && {
-      val off = leInt(b, 10)
+      val off = Bytes.le32(b, 10)
       off >= 54 && off < b.length
     }
 
@@ -51,7 +47,7 @@ object MediaHash {
     * first [[MaxHashBytes]] of them). Call only after [[isBmp]].
     */
   def aHash64(b: Array[Byte]): Long = {
-    val off = leInt(b, 10)
+    val off = Bytes.le32(b, 10)
     val n = math.min(b.length - off, MaxHashBytes)
     val sums = new Array[Long](64)
     val cnts = new Array[Long](64)

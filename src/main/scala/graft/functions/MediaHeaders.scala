@@ -17,6 +17,8 @@ package graft.functions
   * into `mapPartitions` closures with no per-row setup cost.
   */
 object MediaHeaders {
+  import Bytes.{be16, be32, le16, le32}
+
 
   sealed trait Probe extends Product with Serializable
 
@@ -38,19 +40,8 @@ object MediaHeaders {
     */
   final case class Unsupported(reason: String) extends Probe
 
-  private def leInt(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def leShort(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
   private def tag(b: Array[Byte], off: Int): String =
     new String(b, off, 4, "US-ASCII")
-
-  private def beInt(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
 
   private val PngMagic: Array[Byte] =
     Array(0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
@@ -69,9 +60,6 @@ object MediaHeaders {
     else if ((payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8)
       parseJpeg(payload)
     else Unsupported("unrecognized magic bytes")
-
-  private def beShort(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
 
   /** SOF0–SOF15 minus the three non-frame C-row markers (DHT C4,
     * JPG C8, DAC CC) — any of these carries the frame geometry.
@@ -98,7 +86,7 @@ object MediaHeaders {
         return Left(s"JPEG marker sync lost at offset $off")
       val marker = b(off + 1) & 0xff
       if (marker == 0xd9) return Left("JPEG reached EOI before any scan")
-      val len = beShort(b, off + 2)
+      val len = be16(b, off + 2)
       if (len < 2 || off + 2 + len > b.length)
         return Left(s"JPEG segment $marker overruns payload")
       if (marker == 0xe1 && exif == null) {
@@ -111,8 +99,8 @@ object MediaHeaders {
           exif = java.util.Arrays.copyOfRange(b, off + 10, off + 2 + len)
       } else if (isSofMarker(marker)) {
         if (len < 8) return Left("JPEG SOF shorter than its geometry")
-        val height = beShort(b, off + 5)
-        val width = beShort(b, off + 7)
+        val height = be16(b, off + 5)
+        val width = be16(b, off + 7)
         if (exif == null) return Left("no Exif APP1 before the frame")
         return Right((exif, width, height))
       } else if (marker == 0xda) {
@@ -146,13 +134,13 @@ object MediaHeaders {
       val marker = b(off + 1) & 0xff
       if (marker == 0xd9)
         return Unsupported("JPEG reached EOI before any scan")
-      val len = beShort(b, off + 2)
+      val len = be16(b, off + 2)
       if (len < 2 || off + 2 + len > b.length)
         return Unsupported(s"JPEG segment $marker at $off overruns payload (len=$len)")
       if (isSofMarker(marker)) {
         if (len < 8) return Unsupported("JPEG SOF shorter than its geometry fields")
-        height = beShort(b, off + 5)
-        width = beShort(b, off + 7)
+        height = be16(b, off + 5)
+        width = be16(b, off + 7)
       } else if (marker == 0xda) {
         if (width <= 0 || height <= 0)
           return Unsupported("JPEG SOS before any usable SOF")
@@ -186,8 +174,8 @@ object MediaHeaders {
     val ver = new String(b, 0, 6, "US-ASCII")
     if (ver != "GIF87a" && ver != "GIF89a")
       return Unsupported(s"unknown GIF version '$ver'")
-    val width = leShort(b, 6)
-    val height = leShort(b, 8)
+    val width = le16(b, 6)
+    val height = le16(b, 8)
     if (width <= 0 || height <= 0)
       Unsupported(s"implausible GIF geometry w=$width h=$height")
     else ImageInfo("gif", width, height, b.length - 13)
@@ -207,14 +195,14 @@ object MediaHeaders {
     var idatBytes = 0L
     var sawIhdr = false
     while (off + 8 <= b.length) {
-      val clen = beInt(b, off)
+      val clen = be32(b, off)
       if (clen < 0 || off + 8 + clen.toLong + 4 > b.length)
         return Unsupported(s"PNG chunk at $off overruns payload (len=$clen)")
       val ctype = tag(b, off + 4)
       if (ctype == "IHDR") {
         if (clen < 13) return Unsupported("PNG IHDR shorter than 13 bytes")
-        width = beInt(b, off + 8)
-        height = beInt(b, off + 12)
+        width = be32(b, off + 8)
+        height = be32(b, off + 12)
         bitDepth = b(off + 16) & 0xff
         colorType = b(off + 17) & 0xff
         sawIhdr = true
@@ -235,18 +223,18 @@ object MediaHeaders {
     */
   private def parseBmp(b: Array[Byte]): Probe = {
     if (b.length < 54) return Unsupported("BMP truncated before DIB header")
-    val dibSize = leInt(b, 14)
+    val dibSize = le32(b, 14)
     if (dibSize < 40)
       return Unsupported(s"unsupported DIB header size $dibSize (BITMAPCOREHEADER era)")
-    val width = leInt(b, 18)
-    val heightRaw = leInt(b, 22)
-    val planes = leShort(b, 26)
+    val width = le32(b, 18)
+    val heightRaw = le32(b, 22)
+    val planes = le16(b, 26)
     if (width <= 0 || heightRaw == 0 || planes != 1)
       return Unsupported(s"implausible BMP geometry w=$width h=$heightRaw planes=$planes")
-    val biSizeImage = leInt(b, 34)
+    val biSizeImage = le32(b, 34)
     val dataBytes =
       if (biSizeImage > 0) biSizeImage
-      else leInt(b, 2) - leInt(b, 10) // fileSize − pixel-array offset (BI_RGB may leave biSizeImage 0)
+      else le32(b, 2) - le32(b, 10) // fileSize − pixel-array offset (BI_RGB may leave biSizeImage 0)
     ImageInfo("bmp", width, math.abs(heightRaw), dataBytes)
   }
 
@@ -261,7 +249,7 @@ object MediaHeaders {
     var dataSize = -1L
     while (off + 8 <= b.length && (sampleRate < 0 || dataSize < 0)) {
       val id = tag(b, off)
-      val size = leInt(b, off + 4)
+      val size = le32(b, off + 4)
       // strict content bound: the even-length PAD byte is not chunk
       // content, so a final unpadded chunk ends exactly at b.length and
       // still passes — but content past the end (e.g. a fmt chunk
@@ -269,9 +257,9 @@ object MediaHeaders {
       if (size < 0 || off + 8 + size.toLong > b.length)
         return Unsupported(s"WAV chunk '$id' overruns payload")
       if (id == "fmt " && size >= 16) {
-        channels = leShort(b, off + 10)
-        sampleRate = leInt(b, off + 12)
-        bits = leShort(b, off + 22)
+        channels = le16(b, off + 10)
+        sampleRate = le32(b, off + 12)
+        bits = le16(b, off + 22)
       } else if (id == "data") {
         dataSize = size.toLong
       }
@@ -367,19 +355,19 @@ object MediaHeaders {
   def bmpRaster(b: Array[Byte]): Either[String, Raster] = {
     if (b == null || b.length < 54) return Left("BMP truncated before DIB header")
     if (b(0) != 'B' || b(1) != 'M') return Left("not a BMP magic")
-    val dibSize = leInt(b, 14)
+    val dibSize = le32(b, 14)
     if (dibSize < 40) return Left(s"unsupported DIB header size $dibSize")
-    val width = leInt(b, 18)
-    val heightRaw = leInt(b, 22)
-    val bits = leShort(b, 28)
-    val compression = leInt(b, 30)
+    val width = le32(b, 18)
+    val heightRaw = le32(b, 22)
+    val bits = le16(b, 28)
+    val compression = le32(b, 30)
     if (width <= 0 || heightRaw == 0)
       return Left(s"implausible BMP geometry w=$width h=$heightRaw")
     if (bits != 24 || compression != 0)
       return Left(s"content decode needs 24-bit BI_RGB, got bits=$bits comp=$compression")
     val height = math.abs(heightRaw)
     val bottomUp = heightRaw > 0
-    val off = leInt(b, 10)
+    val off = le32(b, 10)
     val stride = bmpStride(width)
     if (off < 54 || off.toLong + stride.toLong * height > b.length)
       return Left(s"pixel array overruns payload (off=$off stride=$stride h=$height len=${b.length})")
@@ -505,13 +493,13 @@ object MediaHeaders {
     var dataSize = -1
     while (off + 8 <= b.length && (sampleRate < 0 || dataOff < 0)) {
       val id = tag(b, off)
-      val size = leInt(b, off + 4)
+      val size = le32(b, off + 4)
       if (size < 0 || off + 8 + size.toLong > b.length)
         return Left(s"WAV chunk '$id' overruns payload")
       if (id == "fmt " && size >= 16) {
-        channels = leShort(b, off + 10)
-        sampleRate = leInt(b, off + 12)
-        bits = leShort(b, off + 22)
+        channels = le16(b, off + 10)
+        sampleRate = le32(b, off + 12)
+        bits = le16(b, off + 22)
       } else if (id == "data") {
         dataOff = off + 8
         dataSize = size

@@ -255,8 +255,8 @@ object PngCodec {
         case 0 => // stored
           br.alignByte()
           if (br.off + 4 > end) return Left("stored block header truncated")
-          val len = (b(br.off) & 0xff) | ((b(br.off + 1) & 0xff) << 8)
-          val nlen = (b(br.off + 2) & 0xff) | ((b(br.off + 3) & 0xff) << 8)
+          val len = Bytes.le16(b, br.off)
+          val nlen = Bytes.le16(b, br.off + 2)
           if ((len ^ 0xffff) != nlen) return Left("stored LEN/NLEN mismatch")
           br.off += 4
           if (br.off + len > end) return Left("stored block overruns payload")
@@ -406,12 +406,10 @@ object PngCodec {
     var height = 0
     var seenIhdr = false
     val idat = new java.io.ByteArrayOutputStream()
-    def be32(o: Int) = ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
     var done = false
     while (!done) {
       if (off + 12 > b.length) return Left("chunk header overruns payload")
-      val len = be32(off)
+      val len = Bytes.be32(b, off)
       // Long arithmetic: a hostile 0x7FFFFFF0-ish length field would
       // wrap an Int sum negative and pass the bounds check, then crash
       // in crc.update — the wavSamples guard, ported
@@ -420,12 +418,12 @@ object PngCodec {
       val tag = new String(b, off + 4, 4, "US-ASCII")
       val crc = new java.util.zip.CRC32()
       crc.update(b, off + 4, 4 + len)
-      if (crc.getValue.toInt != be32(off + 8 + len))
+      if (crc.getValue.toInt != Bytes.be32(b, off + 8 + len))
         return Left(s"CRC mismatch in $tag")
       tag match {
         case "IHDR" =>
-          width = be32(off + 8)
-          height = be32(off + 12)
+          width = Bytes.be32(b, off + 8)
+          height = Bytes.be32(b, off + 12)
           if (width <= 0 || height <= 0) return Left("empty PNG geometry")
           // cap the pixel count BEFORE any allocation: IHDR dims are
           // 32-bit, and (width+1)*height in Int wraps for hostile
@@ -457,7 +455,7 @@ object PngCodec {
       case Right(raw) =>
         val adler = new java.util.zip.Adler32()
         adler.update(raw)
-        val stored = be32FromArray(z, z.length - 4)
+        val stored = Bytes.be32(z, z.length - 4)
         if (adler.getValue.toInt != stored) return Left("Adler-32 mismatch")
         val pixels = new Array[Byte](width * height)
         var prev: Array[Byte] = null
@@ -477,8 +475,4 @@ object PngCodec {
         Right(PngRaster(width, height, pixels))
     }
   }
-
-  private def be32FromArray(a: Array[Byte], o: Int): Int =
-    ((a(o) & 0xff) << 24) | ((a(o + 1) & 0xff) << 16) |
-      ((a(o + 2) & 0xff) << 8) | (a(o + 3) & 0xff)
 }

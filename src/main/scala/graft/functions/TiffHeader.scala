@@ -74,8 +74,7 @@ object TiffHeader {
       else if (b(0) == 'M' && b(1) == 'M') false
       else return Left("not a TIFF byte-order mark")
     def u16(o: Int): Int =
-      if (le) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+      if (le) Bytes.le16(b, o) else Bytes.be16(b, o)
     def u32(o: Int): Long =
       if (le) (u16(o).toLong) | (u16(o + 2).toLong << 16)
       else (u16(o).toLong << 16) | u16(o + 2).toLong

@@ -24,6 +24,8 @@ import java.util.zip.{CRC32, Deflater}
   * hand-written inflate runs on bytes it did not shape.
   */
 object WarcCodec {
+  import Bytes.{le16, le32}
+
 
   /** Per-member inflated size cap (hostile-stream guard). */
   val MaxMember: Int = 1 << 26
@@ -68,10 +70,6 @@ object WarcCodec {
   private val FNAME = 8
   private val FCOMMENT = 16
 
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
   /** First index past the NUL terminator's position, or -1. */
   private def zeroEnd(b: Array[Byte], from: Int): Int = {
     var i = from
@@ -103,7 +101,7 @@ object WarcCodec {
       p += 10
       if ((flg & FEXTRA) != 0) {
         if (p + 2 > b.length) return Left("FEXTRA length truncated")
-        val xlen = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+        val xlen = le16(b, p)
         p += 2 + xlen
         if (p > b.length) return Left("FEXTRA field overruns stream")
       }
@@ -126,7 +124,7 @@ object WarcCodec {
         // inflates (payload integrity stays covered by CRC-32/ISIZE)
         val hcrc = new CRC32()
         hcrc.update(b, memberStart, p - memberStart)
-        val stored = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+        val stored = le16(b, p)
         if ((hcrc.getValue & 0xffffL) != stored)
           return Left("gzip FHCRC header CRC mismatch")
         p += 2

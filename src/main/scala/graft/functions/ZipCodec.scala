@@ -22,6 +22,8 @@ import java.util.zip.{CRC32, Deflater}
   * java.util.zip.ZipInputStream as an independent reader.
   */
 object ZipCodec {
+  import Bytes.{le16, le32}
+
 
   final case class ZipDirEntry(name: String, method: Int, crc: Int,
       csize: Int, usize: Int, offset: Int)
@@ -35,12 +37,6 @@ object ZipCodec {
   private val LocalSig = 0x04034b50
   private val CentralSig = 0x02014b50
   private val EocdSig = 0x06054b50
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
 
   private def w16(out: ByteArrayOutputStream, v: Int): Unit = {
     out.write(v & 0xff); out.write((v >>> 8) & 0xff)

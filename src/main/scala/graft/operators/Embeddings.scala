@@ -146,9 +146,6 @@ object Embeddings {
   private[graft] val PcaIters = 30
   private val Dim = 64
 
-  private def stableRound(x: Double, n: Int): Double =
-    Tables.stableRound(x, n)
-
   /** Mergeable Gram-matrix partial: each partition folds its vectors'
     * outer products into ONE 64×64 double buffer, and merge is
     * elementwise add — so the corpus-wide second-moment matrix costs a
@@ -214,7 +211,7 @@ object Embeddings {
       .select(col("embedding")).as[Seq[Float]]
       .select(GramAgg.toColumn).head()
     val g = Array.tabulate(Dim, Dim)((i, j) =>
-      stableRound(gramRow(i * Dim + j), 6))
+      Tables.stableRound(gramRow(i * Dim + j), 6))
     var v = Array.fill(Dim)(0.125) // unit start, no randomness
     for (_ <- 1 to PcaIters) {
       val u = Array.tabulate(Dim) { i =>
@@ -223,13 +220,13 @@ object Embeddings {
         s
       }
       val norm = math.sqrt(u.map(x => x * x).sum)
-      v = u.map(x => stableRound(x / norm, 9))
+      v = u.map(x => Tables.stableRound(x / norm, 9))
     }
     // sign convention: the largest-|component| entry (ties: lowest dim)
     // is positive in both engines
     val pivot = v.zipWithIndex.maxBy { case (x, i) => (math.abs(x), -i) }._1
     if (pivot < 0) v = v.map(x => -x)
-    val lambda = stableRound(
+    val lambda = Tables.stableRound(
       (0 until Dim).map(i =>
         v(i) * (0 until Dim).map(j => g(i)(j) * v(j)).sum).sum, 6)
     v.toIndexedSeq.zipWithIndex

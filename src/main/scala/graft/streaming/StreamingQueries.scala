@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.QueryDef
+import graft.GraftSession.withConf
 
 /** Structured Streaming surface over the `events` table, replayed as a
   * file-source stream (the reference is strictly batch with a hard
@@ -61,7 +62,8 @@ object StreamingQueries {
     */
   private[graft] def runToMemory(spark: SparkSession, streamed: DataFrame,
       name: String, mode: String, checkpoint: Option[String] = None)
-      : DataFrame = withStatePartitions(spark, StreamStatePartitions) {
+      : DataFrame = withConf(spark,
+        "spark.sql.shuffle.partitions" -> StreamStatePartitions.toString) {
     val w = streamed.writeStream.format("memory").queryName(name).outputMode(mode)
     drain(checkpoint.fold(w)(c => w.option("checkpointLocation", c)))
     spark.table(name)
@@ -143,17 +145,9 @@ object StreamingQueries {
     * system; the bounded collect is the sink payload, not a compute
     * step (the aggregation itself is distributed per batch).
     */
-  def streamForeachBatch(spark: SparkSession, dir: String): DataFrame =
-    streamForeachBatchImpl(spark, MultiBatchFileSource(dir))._1
-
-  /** Impl returning (result, number of micro-batches) so the spec can
-    * assert the replay genuinely ran multi-batch (a single batch would
-    * make the idempotent-merge path vacuous).
-    */
-  private[graft] def streamForeachBatchImpl(spark: SparkSession,
-      src: EventSource): (DataFrame, Int) = {
+  def streamForeachBatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val partials = batchPartials(src.stream(spark)) { batch =>
+    val partials = batchPartials(MultiBatchFileSource(dir).stream(spark)) { batch =>
       batch
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -161,12 +155,11 @@ object StreamingQueries {
         .collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), BigDecimal(r.getDecimal(2))))
     }
-    val out = partials.flatten
+    partials.flatten
       .toDF("event_type", "n", "sv")
       .groupBy(col("event_type"))
       .agg(sum(col("n")).as("n"), sum(col("sv")).cast("double").as("sum_value"))
       .orderBy(col("event_type"))
-    (out, partials.length)
   }
 
   /** Tumbling 1-hour windows per event_type (count + exact-decimal sum). */
@@ -334,20 +327,11 @@ object StreamingQueries {
     * [[streamStateful]], plus TTLConfig is where per-user state expiry
     * lives in production.
     */
-  /** Run `f` with the RocksDB state store provider (required by
-    * transformWithState), restoring the previous provider — set or
-    * unset — afterwards so the override never leaks into the session.
+  /** The RocksDB state store provider, which transformWithState
+    * requires; set with [[GraftSession.withConf]] around the query.
     */
-  private[graft] def withRocksDB[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private[graft] val RocksDB = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   def streamTransformWithState(spark: SparkSession, dir: String): DataFrame =
     streamTransformWithStateFrom(spark, FileEventSource(dir), "stream_tws")
@@ -357,7 +341,7 @@ object StreamingQueries {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.types.DecimalType
     import spark.implicits._
-    withRocksDB(spark) {
+    withConf(spark, RocksDB) {
       val ds = src.stream(spark)
         .select(col("user_id"),
           col("value").cast(DecimalType(12, 2)).*(100).cast("long").as("cents"),
@@ -400,7 +384,7 @@ object StreamingQueries {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.types.DecimalType
     import spark.implicits._
-    withRocksDB(spark) {
+    withConf(spark, RocksDB) {
       readStateAfter("graft_tws_state") { ckpt =>
         val ds = FileEventSource(dir).stream(spark)
           .select(col("user_id"),
@@ -474,7 +458,7 @@ object StreamingQueries {
       pattern: String = "signup (view|click)* purchase"): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    withRocksDB(spark) {
+    withConf(spark, RocksDB) {
       val ds = src.stream(spark)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"))
@@ -607,25 +591,6 @@ object StreamingQueries {
     }
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` overridden, restoring
-    * the previous value. Stateful streaming cost is dominated by
-    * per-micro-batch STATE STORE COMMITS — every trigger commits every
-    * state partition (a stream-stream join keeps FOUR stores per
-    * partition), whether or not it saw data — so the partition count is
-    * a deployment knob sized to key cardinality and throughput, NOT
-    * inherited from the batch shuffle default. Streaming queries pin
-    * their state layout from this conf at first checkpoint; these
-    * replays use fresh checkpoints, so the override takes effect every
-    * run. At 100 TB with ~1e9 keys this number goes UP, not down — the
-    * point is that it is sized deliberately either way.
-    */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, old)
-  }
-
   /** State partitions for EVERY streaming lane (r15 — generalized from
     * the r14 join-only knob): the per-trigger cost floor of a stateful
     * query is state-store COMMITS × partitions, paid whether or not a
@@ -636,9 +601,11 @@ object StreamingQueries {
     * scale while quartering the per-trigger commit count vs the 32-way
     * default (measured ~0.2–0.3 s/lane at sf0.1). At 100 TB with ~1e9
     * keys this number goes UP (hundreds): a deployment at that scale
-    * changes this constant. Applied centrally in [[runToMemory]] (state
-    * layout pins from this conf at query start), so every lane prices
-    * the same deliberate sizing.
+    * changes this constant. Applied centrally in [[runToMemory]] as
+    * `spark.sql.shuffle.partitions` (state layout pins from this conf at
+    * first checkpoint, and these replays use fresh checkpoints, so it
+    * takes effect every run), so every lane prices the same deliberate
+    * sizing.
     */
   private[graft] val StreamStatePartitions = 8
 
@@ -813,13 +780,9 @@ object StreamingQueries {
     * `pipeline_forget` and shares its oracle verbatim. Driver state is
     * bounded: one ≤8-row partial per micro-batch.
     */
-  def streamForget(spark: SparkSession, dir: String): DataFrame =
-    streamForgetImpl(spark, dir, 4)._1
-
-  private[graft] def streamForgetImpl(spark: SparkSession, dir: String,
-      slices: Int): (DataFrame, Int) = {
+  def streamForget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val partials = batchPartials(DocumentsFileSource(dir, slices).stream(spark)) { batch =>
+    val partials = batchPartials(DocumentsFileSource(dir, 4).stream(spark)) { batch =>
       graft.operators.Pipeline8.forgetAccounting(batch)
         .collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -835,8 +798,7 @@ object StreamingQueries {
         sum(col("n_chunks_purged")).as("n_chunks_purged"),
         sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_tokens_purged")).as("n_tokens_purged"))
-    (graft.operators.Pipeline8.withForgetAction(merged)
-      .orderBy(col("shard")), partials.length)
+    graft.operators.Pipeline8.withForgetAction(merged).orderBy(col("shard"))
   }
 
   /** Streaming heavy hitters — the Misra–Gries sketch deployed the way
@@ -854,10 +816,10 @@ object StreamingQueries {
     * Driver state is bounded: one ≤K-entry map per micro-batch.
     */
   def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame =
-    streamHeavyHittersImpl(spark, dir, 4)._1
+    streamHeavyHittersImpl(spark, dir, 4)
 
   private[graft] def streamHeavyHittersImpl(spark: SparkSession, dir: String,
-      slices: Int): (DataFrame, Int) = {
+      slices: Int): DataFrame = {
     import graft.operators.{Sketches, WordCount}
     import org.apache.spark.sql.Encoders
     val partials = batchPartials(DocumentsFileSource(dir, slices).stream(spark)) { batch =>
@@ -872,12 +834,11 @@ object StreamingQueries {
     val candidates = merged.keys.toSeq.sorted
     val toks = Sketches.tokens(spark, dir).localCheckpoint()
     val n = toks.count()
-    val out = toks.filter(col("tok").isin(candidates: _*))
+    toks.filter(col("tok").isin(candidates: _*))
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * Sketches.ThetaDen > n)
       .orderBy(col("cnt").desc, col("tok"))
-    (out, partials.length)
   }
 
   /** Bracket half-width (percentage points) shared with the oracle. */
@@ -945,11 +906,7 @@ object StreamingQueries {
     * full batch-KMV replay over `events.user_id` (distinct users).
     * Driver state: one sorted ≤k-long vector per micro-batch.
     */
-  def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame =
-    streamKmvDistinctImpl(spark, dir)._1
-
-  private[graft] def streamKmvDistinctImpl(spark: SparkSession,
-      dir: String): (DataFrame, Int) = {
+  def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches3.{KmvDomain, KmvK}
     val partials = batchPartials(MultiBatchFileSource(dir).stream(spark)) { batch =>
       batch
@@ -970,7 +927,7 @@ object StreamingQueries {
         lit(kth).as("kth_hash"), lit(est).as("est_distinct"),
         col("exact_distinct"),
         (abs(lit(est) - col("exact_distinct")) * 16 <=
-          col("exact_distinct") * 3).as("in_bracket")) -> partials.length
+          col("exact_distinct") * 3).as("in_bracket"))
   }
 
   private val StreamKmvOracle: String = {

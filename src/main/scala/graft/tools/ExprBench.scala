@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Bench.median
 import graft.functions.{CaseFold, VectorExpressions}
 
 /** Micro-benchmark: custom codegen expressions vs the semantically
@@ -14,7 +15,7 @@ import graft.functions.{CaseFold, VectorExpressions}
   */
 object ExprBench {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val dir = graft.Tables.dataDir(args.headOption.getOrElse("/root/testdata/sf0.1"))
     val spark = graft.GraftSession()
 
     def once(df: DataFrame): Double = {
@@ -22,8 +23,6 @@ object ExprBench {
       graft.Lanes.force(df)
       (System.nanoTime() - t0) / 1e9
     }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-
     def timeMedian(df: => DataFrame): Double = {
       once(df) // warmup
       median(Seq.fill(3)(once(df)))

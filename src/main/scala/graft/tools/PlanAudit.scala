@@ -54,8 +54,8 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val dir = args.filterNot(_.startsWith("--")).headOption
-      .getOrElse("/root/testdata/sf0.01")
+    val dir = graft.Tables.dataDir(args.filterNot(_.startsWith("--")).headOption
+      .getOrElse("/root/testdata/sf0.01"))
     val lanes = Lanes.selected().sortBy(_.name)
     // 4 cores whatever SPARK_GRAFT_CPUS says: shuffle partitions = cores,
     // and the rows (aqeRead, exchange reuse) depend on the partition

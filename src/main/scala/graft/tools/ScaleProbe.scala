@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
-import graft.{EnvKnob, GraftSession, Json, Lanes, SparkEntry}
+import graft.{Bench, EnvKnob, GraftSession, Json, Lanes, SparkEntry, Tables}
 
 /** One-off scale validation: replicate the sf0.1 tables N× (default 10)
   * and time the repo's five most expensive plans at both volumes, so the
@@ -223,10 +223,11 @@ object ScaleProbe {
   private val Sweeps = Seq("uniform", "skew", "semantic", "stream", "q97")
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = Tables.dataDir(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val factor = EnvKnob.positive("SPARK_GRAFT_SCALE_FACTOR", 10, Int.MaxValue).toInt
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      s"/tmp/graft_scale_probe_${factor}x")
+    val outDir = Tables.dataDir(sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
+      s"/tmp/graft_scale_probe_${factor}x"))
     val sweep = args.headOption.getOrElse("uniform")
     require(args.length <= 1 && Sweeps.contains(sweep), s"unknown sweep " +
       s"'${args.mkString(" ")}': use ScaleProbe [${Sweeps.mkString("|")}]")
@@ -238,10 +239,6 @@ object ScaleProbe {
       else Lanes.selected(Queries.map(SparkEntry.registry.map(q => q.name -> q).toMap))
     val cpus = GraftSession.envCpus
     val spark = GraftSession(cpus)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted; val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
     // SPARK_GRAFT_SHUFFLE_PARTITIONS (default: one per core, as on the
     // base volume) applies ONLY to the SCALED volume: a deployment sizes
     // shuffle partitions to data (at 100× a 32-partition hash aggregate
@@ -251,27 +248,26 @@ object ScaleProbe {
     // switch reaches their repartition calls too.
     val scaledParts =
       EnvKnob.positive("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus, Int.MaxValue)
-    // ONE conf-discipline seam for every lane (timed or instrumented):
-    // the round-12 review found the set/restore copy-pasted into three
-    // timers while the streaming capture runs missed it entirely —
-    // metrics measured under a different conf than the wall times they
-    // sit beside are attribution poison
-    def withVolumeConf[A](dir: String)(body: => A): A = {
-      if (dir != baseDir) spark.conf.set("spark.sql.shuffle.partitions", scaledParts)
-      try body
-      finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toLong)
-    }
+    // ONE conf for every lane on a volume (timed or instrumented), set
+    // with GraftSession.withConf: the round-12 review found the
+    // set/restore copy-pasted into three timers while the streaming
+    // capture runs missed it entirely — metrics measured under a
+    // different conf than the wall times they sit beside are
+    // attribution poison
+    def volumeConf(dir: String) = "spark.sql.shuffle.partitions" ->
+      (if (dir == baseDir) cpus.toLong else scaledParts).toString
     // every timed frame, registered lane or not, runs under the same
     // volume conf: a SPARK_GRAFT_SHUFFLE_PARTITIONS override that reached
     // one timer and not another would make their ratios incomparable
-    def timeAt(dir: String)(df: => DataFrame): Double = withVolumeConf(dir) {
-      Lanes.force(df) // untimed cold: codegen + fixture builds
-      median((1 to WarmPasses).map { _ =>
-        val t0 = System.nanoTime()
-        Lanes.force(df)
-        (System.nanoTime() - t0) / 1e9
-      })
-    }
+    def timeAt(dir: String)(df: => DataFrame): Double =
+      GraftSession.withConf(spark, volumeConf(dir)) {
+        Lanes.force(df) // untimed cold: codegen + fixture builds
+        Bench.median((1 to WarmPasses).map { _ =>
+          val t0 = System.nanoTime()
+          Lanes.force(df)
+          (System.nanoTime() - t0) / 1e9
+        })
+      }
     def time(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
       timeAt(dir)(fn(spark, dir))
@@ -378,7 +374,7 @@ object ScaleProbe {
           "base_warm" -> Json.round(b), "scaled_warm" -> Json.round(s),
           "ratio" -> Json.round(s / b), "factor" -> factor)))
         Seq(baseDir -> "1x", outDir -> s"${factor}x").foreach { case (d, tag) =>
-          withVolumeConf(d) {
+          GraftSession.withConf(spark, volumeConf(d)) {
             graft.streaming.StreamingQueries.lastDrained = None
             Lanes.force(SparkEntry.queries(q)(spark, d))
             val ps = graft.streaming.StreamingQueries.lastDrained.toSeq
@@ -388,7 +384,7 @@ object ScaleProbe {
               val phaseMs = ps.flatMap(_.phaseMs).groupMapReduce(_._1)(_._2)(_ + _)
               println(Json.write(ListMap("q" -> q, "stream" -> true, "vol" -> tag,
                 "n_batches" -> ps.length,
-                "batch_ms_median" -> Json.round(median(durs), 1),
+                "batch_ms_median" -> Json.round(Bench.median(durs), 1),
                 "batch_ms_max" -> Json.round(durs.max, 1),
                 "phase_ms" -> ListMap.from(phaseMs.toSeq.sorted),
                 "rows_in" -> ps.map(_.rowsProcessed).sum,

@@ -165,10 +165,9 @@ class BenchBaselineSpec extends AnyFunSuite {
   }
 
   test("retry candidates are the >1.5x-flagged lanes, ascending prior") {
-    // single-warm-pass runs re-sample provisionally flagged lanes and
-    // price min-of-2: selection must match the regression gate's flag
-    // rule (prior > 0.05 s, ratio > 1.5) and order ascending by prior
-    // so cheap lanes de-ghost first if the budget cuts the retry short
+    // the re-sample pass picks its suspects by the regression gate's flag
+    // rule (prior > 0.05 s, ratio > 1.5) and re-runs them ascending by
+    // prior so cheap lanes de-ghost first if the budget cuts it short
     val priors = Map(
       "ghost_cheap" -> 0.2, "ghost_heavy" -> 4.0, "clean" -> 1.0,
       "noise_floor" -> 0.04)
@@ -178,8 +177,96 @@ class BenchBaselineSpec extends AnyFunSuite {
       "clean" -> 1.2,        // 1.2x: not flagged
       "noise_floor" -> 1.0,  // prior under 50ms: never flagged
       "new_lane" -> 9.9)     // no prior: nothing to compare
-    assert(Bench.retryCandidates(warm, priors)
-      === Seq("ghost_cheap", "ghost_heavy"))
+    val asked = scala.collection.mutable.ListBuffer.empty[String]
+    val r = Bench.resample(warm, Nil, priors, n => { asked += n; None })
+    assert(asked.toSeq === Seq("ghost_cheap", "ghost_heavy"))
+    assert(r.suspects.keys.toSeq === Seq("ghost_cheap", "ghost_heavy"))
+    // no budget left: no re-run, the warm prices stand, nothing retried
+    assert(r.warm === warm)
+    assert(r.retried.isEmpty)
+  }
+
+  /** A scripted re-run callback: each call answers the next entry of
+    * `runs` for that lane, and every call is recorded in `calls`.
+    */
+  private class Script(runs: Map[String, Seq[Bench.Run]]) {
+    val calls = scala.collection.mutable.ListBuffer.empty[String]
+    def apply(n: String): Option[Bench.Run] = {
+      calls += n
+      Some(runs(n)(calls.count(_ == n) - 1))
+    }
+  }
+
+  test("re-sample: a ghost clears after one re-run and prices at the clean sample") {
+    val script = new Script(Map("ghost" -> Seq(Bench.Took(1.05))))
+    val r = Bench.resample(Map("ghost" -> 5.0, "clean" -> 1.1), Nil,
+      Map("ghost" -> 1.0, "clean" -> 1.0), script(_))
+    assert(script.calls.toSeq === Seq("ghost"))
+    assert(r.warm === Map("ghost" -> 1.05, "clean" -> 1.1))
+    assert(r.suspects("ghost") === Bench.Suspect(Seq(5.0, 1.05), 1, threw = false))
+    assert(r.retried.keySet === Set("ghost"))
+    assert(!Bench.flagged(1.0, r.warm("ghost")))
+  }
+
+  test("re-sample: a persistent flag stops after two re-runs and lists 3 samples") {
+    val script = new Script(Map("slow" -> Seq(
+      Bench.Took(2.8), Bench.Took(2.6), Bench.Took(0.5))))
+    val r = Bench.resample(Map("slow" -> 3.0), Nil, Map("slow" -> 1.0), script(_))
+    assert(script.calls.size === 2)
+    assert(r.suspects("slow") === Bench.Suspect(Seq(3.0, 2.8, 2.6), 2, threw = false))
+    // priced at the lowest sample, which still flags: a regression entry
+    assert(r.warm("slow") === 2.6)
+    assert(Bench.flagged(1.0, r.warm("slow")))
+  }
+
+  test("re-sample: a lane capped in warm and again in its re-run keeps its prior, capped_unresolved") {
+    val script = new Script(Map("stuck" -> Seq(Bench.Capped, Bench.Took(1.0))))
+    val priors = Map("stuck" -> 0.5, "q1_agg" -> 0.2)
+    val r = Bench.resample(Map("q1_agg" -> 0.2), Seq("stuck"), priors, script(_))
+    // one cap proves the next: the lane stops at its first capped re-run
+    assert(script.calls.toSeq === Seq("stuck"))
+    assert(r.suspects("stuck") === Bench.Suspect(Nil, 1, threw = false))
+    assert(!r.warm.contains("stuck"))
+    assert(r.cappedUnresolved === Seq("stuck"))
+    assert(Bench.mergeBaseline(priors, r.warm, _ => true) === priors)
+  }
+
+  test("re-sample: a capped lane with no prior prices at its first re-run") {
+    val script = new Script(Map("new_lane" -> Seq(Bench.Took(40.0), Bench.Took(1.0))))
+    val r = Bench.resample(Map.empty, Seq("new_lane"), Map.empty, script(_))
+    assert(script.calls.size === 1)
+    assert(r.warm === Map("new_lane" -> 40.0))
+    assert(r.cappedUnresolved.isEmpty)
+  }
+
+  test("re-sample: a re-run that throws goes to errors_retry") {
+    val script = new Script(Map(
+      "broken" -> Seq(Bench.Threw(new RuntimeException("boom")), Bench.Took(1.0))))
+    val r = Bench.resample(Map("broken" -> 4.0), Nil, Map("broken" -> 1.0), script(_))
+    assert(script.calls.size === 1)
+    assert(r.errors === Seq("broken"))
+    // no new sample: the warm price stands and still flags
+    assert(r.warm("broken") === 4.0)
+    assert(r.suspects("broken") === Bench.Suspect(Seq(4.0), 1, threw = true))
+  }
+
+  test("re-sample: a multi-pass median goes through the same rule") {
+    // three warm passes: a median that flags is a suspect like any single
+    // sample, and the median is its first sample
+    val ghost = Bench.median(Seq(4.2, 1.0, 4.0))   // 4.0: flags
+    val steady = Bench.median(Seq(1.0, 9.0, 0.9))  // 1.0: one pause, absorbed
+    val script = new Script(Map("ghost" -> Seq(Bench.Took(1.2))))
+    val r = Bench.resample(Map("ghost" -> ghost, "steady" -> steady), Nil,
+      Map("ghost" -> 1.0, "steady" -> 1.0), script(_))
+    assert(script.calls.toSeq === Seq("ghost"))
+    assert(r.suspects("ghost").samples === Seq(4.0, 1.2))
+    assert(r.warm === Map("ghost" -> 1.2, "steady" -> 1.0))
+  }
+
+  test("median: the middle sample, the mean of the middle two for an even count") {
+    assert(Bench.median(Seq(3.0, 1.0, 2.0)) === 2.0)
+    assert(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) === 2.5)
+    assert(Bench.median(Seq(7.0)) === 7.0)
   }
 
   test("pricedPriorSum counts lanes with identical prior values") {

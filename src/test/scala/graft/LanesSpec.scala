@@ -66,4 +66,15 @@ class LanesSpec extends AnyFunSuite {
     assert(SparkEntry.registry.filter(_.external.nonEmpty).map(_.name) ===
       Seq("wordcount_reference"))
   }
+
+  test("data dir: a dir holding a glob character is refused, naming the dir") {
+    // every table read hands its path to Hadoop as a glob pattern: a `\`
+    // failed every lane with "Illegal file pattern", and a `[` reads as
+    // a character class that may match other dirs
+    Seq("/data/sf[0.01]", "/data/odd\\x/sf0.01").foreach { dir =>
+      val e = intercept[IllegalArgumentException](Tables.dataDir(dir))
+      assert(e.getMessage.contains(s"'$dir'"), e.getMessage)
+    }
+    assert(Tables.dataDir("/data/odd\"dir/sf 0.01") === "/data/odd\"dir/sf 0.01")
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Pipeline5, Relational6}
-import graft.streaming.{MultiBatchFileSource, StreamingQueries}
+import graft.streaming.StreamingQueries
 
 class Pipeline5Spec extends AnyFunSuite with SparkTestBase {
 
@@ -103,8 +103,8 @@ class Pipeline5Spec extends AnyFunSuite with SparkTestBase {
   }
 
   test("foreach_batch: multi-batch replay, merged partials equal the one-shot aggregate") {
-    val (out, nBatches) = StreamingQueries.streamForeachBatchImpl(
-      spark, MultiBatchFileSource(sf0001))
+    val out = StreamingQueries.streamForeachBatch(spark, sf0001)
+    val nBatches = StreamingQueries.lastDrained.get.recentProgress.count(_.numInputRows > 0)
     assert(nBatches >= 2, s"replay must be multi-batch, got $nBatches")
     val got = out.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq

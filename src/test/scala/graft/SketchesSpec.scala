@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Sketches
+import graft.streaming.StreamingQueries
 
 /** Misra–Gries sketch laws (error bound, heavy-hitter superset, merge
   * associativity under random splits) + exact recompute of the
@@ -85,8 +86,8 @@ class SketchesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("stream_heavy_hitters: multi-batch replay equals the batch query") {
-    val (streamDf, nBatches) = graft.streaming.StreamingQueries
-      .streamHeavyHittersImpl(spark, sf0001, 3)
+    val streamDf = StreamingQueries.streamHeavyHittersImpl(spark, sf0001, 3)
+    val nBatches = StreamingQueries.lastDrained.get.recentProgress.count(_.numInputRows > 0)
     assert(nBatches >= 2, "replay must genuinely run multi-batch")
     val streamRows = streamDf.collect().map(r => (r.getString(0), r.getLong(1)))
     val batchRows = graft.operators.Sketches.heavyHitters(spark, sf0001)
@@ -96,8 +97,8 @@ class SketchesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("stream_kmv_distinct: min-k of per-batch min-ks equals the batch sketch") {
-    val (streamDf, nBatches) = graft.streaming.StreamingQueries
-      .streamKmvDistinctImpl(spark, sf0001)
+    val streamDf = StreamingQueries.streamKmvDistinct(spark, sf0001)
+    val nBatches = StreamingQueries.lastDrained.get.recentProgress.count(_.numInputRows > 0)
     assert(nBatches >= 2, "replay must genuinely run multi-batch")
     val r = streamDf.collect().head
     // driver recompute of the BATCH sketch over the same table: KMV is

@@ -225,7 +225,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("timers").toString
-    try StreamingQueries.withRocksDB(spark) {
+    try GraftSession.withConf(spark, StreamingQueries.RocksDB) {
       // batch 1 = oldest half, batch 2 = newest half: batch 2's watermark
       // sweeps past batch-1 session deadlines and fires their timers
       val ev = Tables.events(spark, sf0001).select(col("user_id"), col("ts"))
