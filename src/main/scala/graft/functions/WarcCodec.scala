@@ -10,18 +10,17 @@ import java.util.zip.{CRC32, Deflater}
   * a reader can resume at any member boundary — the property that makes
   * the format splittable at scale).
   *
-  * Decode is fully hand-written: the member walk parses RFC 1952
-  * headers (incl. the FEXTRA/FNAME/FCOMMENT/FHCRC optional fields),
-  * routes the deflate body through [[PngCodec.inflateEx]] (the repo's
-  * own RFC 1951 inflate — the gzip path exercises its unknown-output-
-  * size mode), and verifies the CRC-32 + ISIZE trailer per member.
-  * The WARC parse walks the version line, the named-field block, the
-  * `Content-Length`-delimited payload, and the HTTP response inside it.
+  * Decode: the member walk parses RFC 1952 headers (incl. the
+  * FEXTRA/FNAME/FCOMMENT/FHCRC optional fields), inflates the deflate
+  * body with [[Bytes.inflate]] in its growing mode (a gzip header does
+  * not declare the output size; [[MaxMember]] bounds it), and verifies
+  * the CRC-32 + ISIZE trailer that starts at the inflater's consumed
+  * offset. The WARC parse walks the version line, the named-field
+  * block, the `Content-Length`-delimited payload, and the HTTP response
+  * inside it.
   *
   * Encode (`gzipWrap`, fixture-side only) uses the JVM's own
-  * `Deflater` — the same discipline as the PNG fixture: the stream
-  * under test is compressed by an independent implementation, so the
-  * hand-written inflate runs on bytes it did not shape.
+  * `Deflater`, as the PNG fixture does.
   */
 object WarcCodec {
   import Bytes.{le16, le32}
@@ -129,7 +128,7 @@ object WarcCodec {
           return Left("gzip FHCRC header CRC mismatch")
         p += 2
       }
-      PngCodec.inflateEx(b, p, b.length, -1, maxOut) match {
+      Bytes.inflate(b, p, b.length, -1, maxOut) match {
         case Left(e) => return Left(s"member deflate: $e")
         case Right((data, dEnd)) =>
           if (dEnd + 8 > b.length) return Left("gzip trailer truncated")

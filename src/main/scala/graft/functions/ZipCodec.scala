@@ -11,15 +11,15 @@ import java.util.zip.{CRC32, Deflater}
   * inspection at scale, where unsampled entries must never be read at
   * all (the mm_video_frames posture, applied to archives).
   *
-  * Decode is hand-written: EOCD located by scanning back from the end
-  * for its signature (comment-tolerant), central-directory walk
-  * (signatures, name/extra/comment hops, local-header offsets), then
+  * Decode: EOCD located by scanning back from the end for its
+  * signature (comment-tolerant), central-directory walk (signatures,
+  * name/extra/comment hops, local-header offsets), then
   * per-SELECTED-entry random access — local-header name cross-checked
-  * against the directory, payload inflated via [[PngCodec.inflateEx]]
-  * in its exact-size mode (the directory declares usize), CRC-32
-  * verified. Encode (fixture side) uses the JVM's own Deflater; the
-  * codec spec additionally cross-checks the archives against
-  * java.util.zip.ZipInputStream as an independent reader.
+  * against the directory, payload inflated by [[Bytes.inflate]] in its
+  * exact-size mode (the directory declares usize), CRC-32 verified.
+  * Encode (fixture side) uses the JVM's own Deflater; the codec spec
+  * cross-checks the archives against java.util.zip.ZipInputStream as an
+  * independent reader.
   */
 object ZipCodec {
   import Bytes.{le16, le32}
@@ -164,8 +164,8 @@ object ZipCodec {
         if (e.csize != e.usize) return Left("stored entry size mismatch")
         Right(java.util.Arrays.copyOfRange(b, dataStart, dataStart + e.usize))
       case 8 =>
-        PngCodec.inflateEx(b, dataStart, dataStart + e.csize, e.usize,
-          e.usize).map(_._1)
+        Bytes.inflate(b, dataStart, dataStart + e.csize, e.usize, e.usize)
+          .map(_._1)
       case m => Left(s"unsupported compression method $m")
     }
     raw.flatMap { data =>

@@ -121,19 +121,36 @@ object Layout {
         // fragment pile this lane models) must contribute every leaf
         // fragment, exactly as the replaced _metadata.file_path scan's
         // recursive discovery did; hidden (_/.) entries skipped at
-        // every level, as the reader does
+        // every level, as the reader does. The local filesystem reports
+        // a directory symlink as a plain directory, so a link back up
+        // the tree would list the same files once per level: each
+        // entered directory is keyed by its real path, and a revisit
+        // fails the lane instead of counting a file twice
         def walk(fs: org.apache.hadoop.fs.FileSystem,
-            st: org.apache.hadoop.fs.FileStatus)
+            st: org.apache.hadoop.fs.FileStatus,
+            seen: scala.collection.mutable.Set[String])
             : Seq[org.apache.hadoop.fs.Path] =
           if (st.isFile) Seq(st.getPath)
-          else fs.listStatus(st.getPath).toSeq
-            .filter(s => !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .flatMap(walk(fs, _))
+          else {
+            val dir = st.getPath
+            val real =
+              if (dir.toUri.getScheme == "file")
+                java.nio.file.Paths.get(dir.toUri).toRealPath().toString
+              else dir.toString
+            if (!seen.add(real))
+              throw new IllegalStateException(
+                s"layout walk reached $real again at $dir (a symlink cycle " +
+                  "or alias); its files would be counted more than once")
+            fs.listStatus(dir).toSeq
+              .filter(s => !s.getPath.getName.startsWith("_") &&
+                !s.getPath.getName.startsWith("."))
+              .flatMap(walk(fs, _, seen))
+          }
         paths.flatMap { p =>
           val root = new org.apache.hadoop.fs.Path(p)
           val fs = root.getFileSystem(conf)
-          walk(fs, fs.getFileStatus(root)).map { f =>
+          walk(fs, fs.getFileStatus(root),
+              scala.collection.mutable.Set.empty[String]).map { f =>
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromPath(f, conf)
             val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)

@@ -705,8 +705,7 @@ object Multimodal {
     * 8-bit grayscale PNG whose pixels follow a fixed formula of
     * (index, doc_id); each scanline is filtered with a DIFFERENT
     * filter type (row % 5) and the zlib stream comes from the JVM's
-    * own Deflater — dynamic-Huffman blocks, so the hand-written
-    * inflate's full RFC 1951 path runs on every payload.
+    * own Deflater (dynamic-Huffman blocks).
     */
   private val pngPixelContainer = udf { (docId: Long, bytes: Array[Byte]) =>
     val n = bytes.length
@@ -718,10 +717,10 @@ object Multimodal {
 
   /** Content-level decode of the DICTIONARY-CODED format — PNG
     * completes the family's compression arc (BMP raw walk, GIF LZW,
-    * JPEG Huffman+IDCT, PNG = full RFC 1951 inflate + the five
-    * scanline filters): chunk walk with CRC-32 checks, zlib unwrap
-    * with Adler-32, stored/fixed/dynamic-Huffman blocks with LZ77
-    * back-references, then per-row unfiltering (the fixture cycles all
+    * JPEG Huffman+IDCT, PNG = RFC 1951 inflate + the five scanline
+    * filters): chunk walk with CRC-32 checks, zlib unwrap with
+    * Adler-32, the raw DEFLATE body inflated by the JDK's `Inflater`,
+    * then per-row unfiltering (the fixture cycles all
     * five filter types, so None/Sub/Up/Average/Paeth all run on every
     * image). The oracle replays the pixel formula and never touches
     * DEFLATE — one wrong bit anywhere in the inflate or one wrong
@@ -904,7 +903,7 @@ object Multimodal {
     // CONTENT replay for the DEFLATE tier: the oracle regenerates every
     // pixel from the synthesis formula ((i*13 + 29*doc_id) mod 256) and
     // recomputes the stats; Spark earns them only by a correct chunk
-    // walk + CRC/Adler verification + full RFC 1951 inflate + all five
+    // walk + CRC/Adler verification + RFC 1951 inflate + all five
     // scanline unfilters (the fixture cycles filter types per row, and
     // filters are cumulative — one wrong branch corrupts every row below)
     QueryDef("mm_png_pixels", mmPngPixels _,

@@ -12,18 +12,18 @@ import graft.functions.WarcCodec
   * shards (the Common Crawl layout: multi-member gzip, ONE member per
   * WARC record, so shards are splittable at member boundaries without
   * a central index). This tier decodes that stack end-to-end with the
-  * repo's own codecs: gzip member walk → hand-written RFC 1951 inflate
-  * ([[graft.functions.PngCodec.inflateEx]]) → CRC-32/ISIZE trailer
-  * verification → WARC/1.0 record parse → HTTP response parse → the
+  * repo's own codecs: gzip member walk → raw DEFLATE inflate through
+  * the JDK's `Inflater` ([[graft.functions.Bytes.inflate]]) → CRC-32/
+  * ISIZE trailer verification → WARC/1.0 record parse → HTTP response
+  * parse → the
   * SAME main-text extraction chain `text_html_extract` runs
   * ([[TextAnalysis4.mainTextOf]]), so ingestion and extraction provably
   * compose.
   *
   * Fixture: each document's page (the `text_html_extract` HTML wrapper)
   * is wrapped in an HTTP/1.1 response, a WARC response record, and a
-  * gzip member compressed by the JVM's OWN Deflater — the PNG-fixture
-  * discipline: the hand-written inflate runs on a stream it did not
-  * shape. Records are grouped into [[WarcShards]] shard archives (the
+  * gzip member compressed by the JVM's own Deflater, as the PNG
+  * fixture is. Records are grouped into [[WarcShards]] shard archives (the
   * stand-in for reading real `.warc.gz` objects off storage).
   *
   * Oracle: replays the synthesis formulas — the HTML wrap, the HTTP

@@ -80,6 +80,12 @@ private[graft] object Rounds {
   /** The observed row, or [[ObservationTimeout]]: an unbounded
     * `Observation.get` hangs forever if the listener never fires, and a
     * bench watchdog can only cancel jobs.
+    *
+    * A timeout leaves no listener behind: Spark 4.1 registers one
+    * `ObservationManager` listener per session, not one per
+    * `Observation`. It does leave the observation's entry in the
+    * manager's `observations` map. A round waits once, so the rounds
+    * per [[iterate]] call bound those entries.
     */
   def awaitObserved(obs: Observation): Row =
     try Await.result(obs.future, ObserveWait)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
-import graft.functions.{GifPixels, JpegCodec, PngCodec}
+import graft.functions.{Bytes, GifPixels, JpegCodec, PngCodec}
 
 /** Property tests for the three content codecs: byte-exact round trips
   * under ARBITRARY geometry/content — the hand fixtures pin known
@@ -86,7 +86,7 @@ object CodecPropertySpec extends Properties("codecs") {
       }
     }
 
-  property("inflate agrees with java.util.zip on arbitrary byte streams") =
+  property("inflate round-trips java.util.zip.Deflater output on arbitrary byte streams") =
     forAll(Gen.choose(0, 4000), Gen.choose(0L, Long.MaxValue / 2),
       Gen.choose(0, 9)) { (n, seed, level) =>
       val rnd = new scala.util.Random(seed)
@@ -101,9 +101,29 @@ object CodecPropertySpec extends Properties("codecs") {
       while (!d.finished()) zb.write(tmp, 0, d.deflate(tmp))
       d.end()
       val z = zb.toByteArray
-      PngCodec.inflate(z, 2, z.length - 4, n) match {
-        case Right(got) => got.sameElements(data)
+      Bytes.inflate(z, 2, z.length - 4, n, n) match {
+        case Right((got, _)) => got.sameElements(data)
         case Left(e) => false
+      }
+    }
+
+  property("inflate's consumed offset is the raw stream's end, whatever follows") =
+    forAll(Gen.choose(0, 4000), Gen.choose(0, 16), Gen.choose(0L, Long.MaxValue / 2),
+      Gen.choose(0, 9)) { (n, pad, seed, level) =>
+      val rnd = new scala.util.Random(seed)
+      val data = Array.tabulate(n)(i =>
+        (if ((i / 37) % 2 == 0) i % 13 else rnd.nextInt(256)).toByte)
+      val d = new java.util.zip.Deflater(level, true)
+      d.setInput(data); d.finish()
+      val zb = new java.io.ByteArrayOutputStream()
+      val tmp = new Array[Byte](4096)
+      while (!d.finished()) zb.write(tmp, 0, d.deflate(tmp))
+      d.end()
+      val trail = Array.fill(pad)(rnd.nextInt(256).toByte)
+      val z = zb.toByteArray
+      Bytes.inflate(z ++ trail, 0, z.length + pad, -1, 1 << 16) match {
+        case Right((got, end)) => got.sameElements(data) && end == z.length
+        case Left(_) => false
       }
     }
 

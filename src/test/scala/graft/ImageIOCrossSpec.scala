@@ -5,12 +5,11 @@ import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 import graft.functions.{GifPixels, JpegCodec, MediaHeaders, PngCodec}
 
-/** Cross-validation of every hand-written image codec against the
-  * JDK's OWN independent decoders (javax.imageio) — the image-side
-  * twin of CodecPropertySpec's inflate-vs-java.util.zip check. The
-  * value over round-trip tests: a symmetric bug (encoder and decoder
-  * wrong the same way) survives a round trip but cannot survive an
-  * independent implementation reading the same bytes.
+/** Cross-validation of every image codec against the JDK's OWN
+  * independent decoders (javax.imageio). The value over round-trip
+  * tests: a symmetric bug (encoder and decoder wrong the same way)
+  * survives a round trip but cannot survive an independent
+  * implementation reading the same bytes.
   *
   * Directions per format:
   *  - PNG: ours→ImageIO exact, AND ImageIO's encoder→our decoder

@@ -87,4 +87,36 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(got.toSeq === expect)
   }
+
+  test("compaction plan fails loudly on a directory symlink cycle") {
+    // a temp data dir: nation is one partition directory holding a copy
+    // of its sf0.001 file plus `loop -> ..`; every other table links
+    // to its sf0.001 file
+    val tmp = java.nio.file.Files.createTempDirectory("layout_cycle")
+    Tables.names.foreach { t =>
+      val src = java.nio.file.Paths.get(s"$sf0001/$t.parquet")
+      val dst = tmp.resolve(s"$t.parquet")
+      if (t != "nation") java.nio.file.Files.createSymbolicLink(dst, src)
+      else {
+        val part = java.nio.file.Files.createDirectories(dst.resolve("date=1"))
+        java.nio.file.Files.copy(src, part.resolve("part-0.parquet"))
+        java.nio.file.Files.createSymbolicLink(part.resolve("loop"),
+          java.nio.file.Paths.get(".."))
+      }
+    }
+    try {
+      val e = intercept[Exception](
+        Layout.compactionPlan(spark, tmp.toString).collect())
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(msg.contains("symlink cycle"), msg)
+      assert(msg.contains(tmp.toRealPath().resolve("nation.parquet").toString), msg)
+    } finally {
+      // Files.walk does not follow links: deepest entries go first
+      val all = java.nio.file.Files.walk(tmp)
+      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally all.close()
+    }
+  }
 }

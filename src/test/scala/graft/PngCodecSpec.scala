@@ -1,15 +1,39 @@
 package graft
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.PngCodec
+import graft.functions.{Bytes, PngCodec}
 
 /** Driver-level contract of the PNG/DEFLATE codec: pixel round trips
-  * (every filter type runs on every image), the hand-written inflate
-  * cross-checked against the JVM's own Inflater on arbitrary streams,
-  * per-block-type coverage, checksum enforcement, and quarantine. No
-  * Spark needed — pure byte arithmetic.
+  * (every filter type runs on every image), the [[Bytes.inflate]]
+  * wrapper over the JDK's Inflater (its chunk loop, its exact-size and
+  * growing bounds, truncation, and the consumed offset), checksum
+  * enforcement, and quarantine. No Spark needed — pure byte arithmetic.
   */
 class PngCodecSpec extends AnyFunSuite {
+
+  /** Raw DEFLATE (no zlib wrapper) of `data` fed `reps` times. */
+  private def deflateRaw(data: Array[Byte], reps: Int = 1,
+      dict: Array[Byte] = null): Array[Byte] = {
+    val d = new java.util.zip.Deflater(6, true)
+    if (dict != null) d.setDictionary(dict)
+    val zb = new java.io.ByteArrayOutputStream()
+    val tmp = new Array[Byte](4096)
+    (0 until reps).foreach { _ =>
+      d.setInput(data)
+      while (!d.needsInput()) zb.write(tmp, 0, d.deflate(tmp))
+    }
+    d.finish()
+    while (!d.finished()) zb.write(tmp, 0, d.deflate(tmp))
+    d.end()
+    zb.toByteArray
+  }
+
+  private val text: Array[Byte] =
+    Array.tabulate(100000)(i => "the quick brown fox "(i % 20).toByte)
 
   private def roundTrip(w: Int, h: Int, gen: Int => Int): Unit = {
     val px = Array.tabulate(w * h)(i => gen(i).toByte)
@@ -32,7 +56,7 @@ class PngCodecSpec extends AnyFunSuite {
     roundTrip(64, 40, i => (i / 97) % 256)                         // long runs
   }
 
-  test("hand-written inflate equals java.util.zip.Inflater on arbitrary data") {
+  test("inflate round-trips java.util.zip.Deflater output on arbitrary data") {
     val rnd = new scala.util.Random(42)
     (0 until 20).foreach { trial =>
       val n = 1 + rnd.nextInt(5000)
@@ -47,8 +71,8 @@ class PngCodecSpec extends AnyFunSuite {
       while (!d.finished()) zb.write(tmp, 0, d.deflate(tmp))
       d.end()
       val z = zb.toByteArray
-      val got = PngCodec.inflate(z, 2, z.length - 4, n)
-        .fold(e => fail(s"trial $trial: $e"), identity)
+      val got = Bytes.inflate(z, 2, z.length - 4, n, n)
+        .fold(e => fail(s"trial $trial: $e"), _._1)
       assert(got.toSeq === data.toSeq, s"trial $trial inflate mismatch")
     }
   }
@@ -62,9 +86,51 @@ class PngCodecSpec extends AnyFunSuite {
     while (!d.finished()) zb.write(tmp, 0, d.deflate(tmp))
     d.end()
     val z = zb.toByteArray
-    val got = PngCodec.inflate(z, 2, z.length - 4, data.length)
-      .fold(e => fail(e), identity)
+    val got = Bytes.inflate(z, 2, z.length - 4, data.length, data.length)
+      .fold(e => fail(e), _._1)
     assert(got.toSeq === data.toSeq)
+  }
+
+  test("inflate: a raw stream cut in half is Left and returns promptly") {
+    val z = deflateRaw(text)
+    // a truncated stream leaves the Inflater asking for input forever;
+    // the wrapper must stop, not spin
+    val r = Await.result(Future(Bytes.inflate(z, 0, z.length / 2, -1, 1 << 20)),
+      30.seconds)
+    assert(r === Left("deflate stream truncated"))
+    assert(Bytes.inflate(z, 0, z.length / 2, text.length, text.length).isLeft)
+  }
+
+  test("inflate: growing mode stops at its cap (64 MiB of zeros, cap 1 MiB)") {
+    val z = deflateRaw(new Array[Byte](1 << 20), reps = 64)
+    assert(z.length < (1 << 17), s"64 MiB of zeros deflated to ${z.length} bytes")
+    val r = Bytes.inflate(z, 0, z.length, -1, 1 << 20)
+    assert(r === Left(s"deflate stream inflates past ${1 << 20} bytes"))
+  }
+
+  test("inflate: exact mode is Left one byte short and one byte over") {
+    val z = deflateRaw(text)
+    val n = text.length
+    assert(Bytes.inflate(z, 0, z.length, n, n).map(_._1.toSeq) ===
+      Right(text.toSeq))
+    assert(Bytes.inflate(z, 0, z.length, n - 1, n - 1).isLeft)
+    assert(Bytes.inflate(z, 0, z.length, n + 1, n + 1).isLeft)
+  }
+
+  test("inflate: a stream deflated against a preset dictionary is Left") {
+    // its back-references reach before the stream start
+    val z = deflateRaw(text, dict = text.take(4096))
+    assert(Bytes.inflate(z, 0, z.length, -1, 1 << 20).isLeft)
+    assert(Bytes.inflate(z, 0, z.length, text.length, text.length).isLeft)
+  }
+
+  test("inflate: trailing bytes leave the consumed offset at the stream's end") {
+    val z = deflateRaw(text)
+    val padded = Array[Byte](7, 7, 7) ++ z ++ Array.fill[Byte](8)(0x55)
+    val (got, end) = Bytes.inflate(padded, 3, padded.length, -1, 1 << 20)
+      .fold(e => fail(e), identity)
+    assert(got.toSeq === text.toSeq)
+    assert(end === 3 + z.length)
   }
 
   test("corruption quarantines: chunk CRC, zlib Adler, truncation") {
