@@ -86,7 +86,7 @@ object CodecPropertySpec extends Properties("codecs") {
       }
     }
 
-  property("inflate round-trips java.util.zip.Deflater output on arbitrary byte streams") =
+  property("inflate agrees with java.util.zip on arbitrary byte streams") =
     forAll(Gen.choose(0, 4000), Gen.choose(0L, Long.MaxValue / 2),
       Gen.choose(0, 9)) { (n, seed, level) =>
       val rnd = new scala.util.Random(seed)
